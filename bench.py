@@ -141,7 +141,6 @@ def run_replay(
     n_events: int,
     files_per_batch: int = REPLAY_FILES_PER_BATCH,
     compact_every: int = 0,
-    storage: str = "mor",
 ) -> dict:
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
     from data_pipeline_spark.cdc.stream import replay_batches
@@ -153,10 +152,8 @@ def run_replay(
         spark,
         base,
         n_buckets=REPLAY_BUCKETS,
-        salt_buckets=32,
         enable_history=True,
         compact_every=compact_every,
-        storage=storage,
         # observed lineage: per-batch metrics ride the merge action and
         # the lineage row is a driver-side pyarrow micro-append — zero
         # extra Spark jobs per epoch (the per-batch Amdahl constant is
@@ -180,7 +177,6 @@ def run_replay(
     return {
         "events": n_events,
         "batches": n_batches,
-        "storage": storage,
         "elapsed_sec": round(elapsed, 3),
         "events_per_sec": round(n_events / elapsed, 1),
         "steady_state_events_per_sec": (
@@ -188,9 +184,8 @@ def run_replay(
         ),
         "compaction_sec_total": compaction_sec,
         # write amplification: bytes materialised per applied event,
-        # steady-state batches, compaction excluded / included — the
-        # metric where merge-on-read vs copy-on-write actually diverges
-        # (tmpfs walls hide what S3/disk walls would not)
+        # steady-state batches, compaction included (tmpfs walls hide
+        # what S3/disk walls would not)
         "steady_state_bytes_per_event": (
             round(sum(p.get("bytes_written", 0) for p in ss) / ss_rows, 1)
             if ss_rows
@@ -275,12 +270,12 @@ def _stage_straggler(spark, seen: set) -> tuple[dict, set]:
     )
 
 
-def run_skew(n_docs: int = 40_000, storages=("mor", "cow")) -> dict:
+def run_skew(n_docs: int = 40_000) -> dict:
     """Same replay, two key distributions: uniform vs one pathological
-    hot doc carrying ~1.25% of ALL events (hot_multiplier=500), under
-    BOTH storage modes — the hot key's thousands of duplicate versions
-    stress merge-on-read's read-side per-key reduce (table/mor.py) in a
-    way the write side never does.  The defense being measured is the
+    hot doc carrying ~1.25% of ALL events (hot_multiplier=500) — the
+    hot key's thousands of duplicate versions stress merge-on-read's
+    read-side per-key reduce (table/mor.py) in a way the write side
+    never does.  The defense being measured is the
     merge/LWW's map-side partial aggregation (duplicate versions of the
     hot key collapse per input partition BEFORE the shuffle) plus the
     history kernel's hash-group batching — the straggler ratio and the
@@ -328,30 +323,24 @@ def run_skew(n_docs: int = 40_000, storages=("mor", "cow")) -> dict:
                 ),
             )
             logs[variant] = (log_dir, stats["total_events"])
-        for storage in storages:
-            res: dict = {}
-            for variant, (log_dir, n_events) in logs.items():
-                replay = run_replay(
-                    spark, log_dir,
-                    os.path.join(tmp, f"work-{storage}-{variant}"),
-                    n_events,
-                    files_per_batch=REPLAY_BATCH_FILES,
-                    compact_every=REPLAY_COMPACT_EVERY,
-                    storage=storage,
-                )
-                straggler, seen = _stage_straggler(spark, seen)
-                res[variant] = {
-                    "events": n_events,
-                    "events_per_sec": replay["events_per_sec"],
-                    "steady_state_events_per_sec": replay[
-                        "steady_state_events_per_sec"
-                    ],
-                    "straggler": straggler,
-                }
-            u = res["uniform"]["steady_state_events_per_sec"]
-            h = res["hot_1pct"]["steady_state_events_per_sec"]
-            res["hot_vs_uniform_throughput"] = round(h / u, 3) if u else None
-            out[storage] = res
+        for variant, (log_dir, n_events) in logs.items():
+            replay = run_replay(
+                spark, log_dir, os.path.join(tmp, f"work-{variant}"), n_events,
+                files_per_batch=REPLAY_BATCH_FILES,
+                compact_every=REPLAY_COMPACT_EVERY,
+            )
+            straggler, seen = _stage_straggler(spark, seen)
+            out[variant] = {
+                "events": n_events,
+                "events_per_sec": replay["events_per_sec"],
+                "steady_state_events_per_sec": replay[
+                    "steady_state_events_per_sec"
+                ],
+                "straggler": straggler,
+            }
+        u = out["uniform"]["steady_state_events_per_sec"]
+        h = out["hot_1pct"]["steady_state_events_per_sec"]
+        out["hot_vs_uniform_throughput"] = round(h / u, 3) if u else None
     finally:
         spark.stop()
         shutil.rmtree(tmp, ignore_errors=True)

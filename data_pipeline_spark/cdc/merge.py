@@ -12,35 +12,23 @@ The lsn guard makes replays and late/duplicate batches no-ops (T4),
 which is what makes the whole pipeline idempotent and exactly-once
 composable with the commit manifest.
 
-Scale design — ONE full-width shuffle per merge:
-changes are reduced to one row per key BEFORE this step (lww_reduce,
-salted), then the merge is expressed as union + per-key max_by instead
-of a full-outer join:
+Write design — merge-on-read, ONE batch-sized shuffle per merge: the
+reduced batch lands as an upsert DELTA commit (one full row version or
+tombstone per changed key) and nothing existing is rewritten, so
+per-batch write volume is O(batch) however the keys hash — rewriting
+every touched bucket (copy-on-write) is O(table) at uniformly-hashed
+keys.  The read side (``LakeTable.read``, table/mor.py) applies the
+same lsn-guarded LWW at scan time and compaction folds the lane, so
+the late/duplicate no-op guarantee (T4) holds at read time:
 
-    (target rows of affected buckets) ∪ (change rows)
+    (change rows) ∪ (touched buckets' base keys, narrow scan)
       → repartition by storage bucket            [the only wide shuffle]
-      → groupBy(bucket, key).max_by(row, (lsn, target-wins-ties))
-      → drop winners whose op = 'D'
-      → write, already partitioned by bucket     [no second shuffle]
+      → groupBy(bucket, key).max_by(row, (change-over-key, lsn, ingest_ts))
+      → write as the bucket's delta files        [no second shuffle]
 
 ``groupBy(bucket, key)`` reuses the bucket repartition exchange (hash
 partitioning on a subset of the grouping keys satisfies the clustered
-distribution), and the bucketed write skips its own repartition — the
-full-outer-join formulation costs two wide shuffles (join + write),
-this costs one.
-
-Storage modes (selected by the table's ``merge_on_read`` config):
-
-* **merge-on-read** (CdcPipeline default, round 4): the reduced batch
-  lands as an upsert DELTA commit (:func:`_merge_into_mor`) — nothing
-  existing is rewritten, per-batch write volume O(batch); the read
-  side applies the same lsn-guarded LWW at scan time and compaction
-  folds the lane.
-* **copy-on-write**: the tail of :func:`merge_into` — only the
-  hash-buckets containing affected keys are read and rewritten; cheap
-  reads, but per-batch write volume ∝ touched buckets' full contents
-  (at uniformly-hashed keys, the whole table — the round-3 review's
-  scale-killer, which MoR removes).
+distribution), and the bucketed delta write skips its own repartition.
 """
 
 from __future__ import annotations
@@ -55,18 +43,33 @@ from ..table.laketable import (
     DORD_COL,
     LakeTable,
 )
+from ..table.mor import require_mode
 from .schema import stamp_batch_id
+
+
+def reduce_partitions(table: LakeTable, spark) -> int:
+    """Partition count of a writer's repartition-by-bucket reduce.
+
+    2× the bucket count so (with high probability) no two buckets
+    hash-collide into one partition: a collision halves effective
+    parallelism (a straggler task carries two buckets' rows) and at
+    64 buckets / 32 partitions some task WILL carry 3-4 buckets.
+    Empty partitions cost ~nothing."""
+    return max(
+        2 * table.n_buckets,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
 
 
 def merge_into(
     table: LakeTable,
     changes: DataFrame,
     batch_id: int | str,
-    shuffle_partitions: int | None = None,
     observation=None,
     affected: list[int] | None = None,
 ) -> dict:
-    """Apply a change set to the table; returns metrics.
+    """Apply a change set to an upsert-mode merge-on-read table as one
+    delta commit; returns metrics.
 
     `changes` carries doc_id, lsn, op, and the table's payload columns.
     It MAY contain multiple versions per doc_id: the per-(bucket, key)
@@ -77,16 +80,24 @@ def merge_into(
     affected: the precomputed set of touched storage buckets (the
     caller's fused planning probe, CdcPipeline.apply_batch).  None →
     one bucket-set probe job here.  Passing it wrong (a superset is
-    fine — extra buckets are rewritten unchanged; a SUBSET would drop
-    target rows) is on the caller.
+    fine — extra buckets only widen the base-key scan; a SUBSET would
+    flag stored keys of the missing buckets as not-in-base) is on the
+    caller.
+
+    The ``_in_base`` stamp (insert-vs-update disambiguation for the
+    shuffle-free broadcast read path) is FUSED into the reduce: the
+    touched buckets' base keys ride the same exchange as the change
+    rows, so no join stage exists.  When those buckets have NO base
+    files yet (fresh table, or every prior batch still in the delta
+    lane) even that scan is skipped — every key is not-in-base.
     """
+    require_mode(table, "upsert")
     key = table.key_col
     payload_cols = [
         f
         for f in table.schema.fields
         if f.name not in (key, "lsn") and not f.name.startswith("_")
     ]
-    meta_cols = [f for f in table.schema.fields if f.name.startswith("_")]
 
     d = changes.withColumn(BUCKET_COL, table.bucket_of(key))
     if affected is None:
@@ -97,145 +108,16 @@ def merge_into(
         table.record_batch(str(batch_id), {"rows": 0})
         return {"buckets": []}
 
-    mor = table.merge_on_read
-    if mor is not None and mor.get("mode") == "upsert":
-        return _merge_into_mor(
-            table, d, batch_id, payload_cols, meta_cols,
-            shuffle_partitions, observation, affected,
-        )
-
-    t = table.read(buckets=affected).withColumn(BUCKET_COL, table.bucket_of(key))
-
-    # align both sides on [key, _bucket, lsn, op, _prio, payload..., meta...]
     batch_stamp = F.lit(stamp_batch_id(batch_id)).cast("long")
-    d_side = d.select(
-        F.col(key),
-        F.col(BUCKET_COL),
-        F.col("lsn"),
-        F.col("op"),
-        F.lit(0).alias("_prio"),
-        # deterministic tie-break for malformed upstreams: two DISTINCT
-        # change rows with the same (key, lsn) pick the last arrival by
-        # ingest_ts instead of an arbitrary winner (payload-identical
-        # at-least-once duplicates are unaffected either way)
-        (
-            F.col("ingest_ts")
-            if "ingest_ts" in changes.columns
-            else F.lit(None).cast("timestamp")
-        ).alias("_ord_ts"),
-        *[
-            (F.col(f.name) if f.name in changes.columns else F.lit(None)).cast(
-                f.dataType
-            ).alias(f.name)
-            for f in payload_cols
-        ],
-        batch_stamp.alias("_batch_id"),
-        F.current_timestamp().alias("_applied_at"),
-    )
-    if observation is not None:
-        # per-batch metrics ride the merge scan (SURVEY.md §2.4
-        # observe()): no extra Spark job — the aggregates accumulate as
-        # the write action streams past this node
-        d_side = d_side.observe(
-            observation,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
-        )
-    t_side = t.select(
-        F.col(key),
-        F.col(BUCKET_COL),
-        F.col("lsn"),
-        # pseudo-op: target rows always survive unless outranked by a
-        # strictly-newer delete
-        F.lit("T").alias("op"),
-        F.lit(1).alias("_prio"),
-        # _prio already outranks any change at equal lsn, so the target
-        # side never reaches the ts component of the order key
-        F.lit(None).cast("timestamp").alias("_ord_ts"),
-        *[F.col(f.name) for f in payload_cols],
-        *[F.col(f.name) for f in meta_cols],
-    )
-    combined = t_side.unionByName(d_side)
-
-    value_cols = [c for c in combined.columns if c not in (key, BUCKET_COL)]
-    packed = F.struct(*[F.col(c) for c in value_cols])
-    # ties on lsn → target wins (replay / late duplicate is a no-op,
-    # matching MERGE's `s.lsn > t.lsn` guard); ties among change rows →
-    # last arrival by ingest_ts (deterministic LWW)
-    order_key = F.struct(
-        F.col("lsn").alias("o1"),
-        F.col("_prio").alias("o2"),
-        F.col("_ord_ts").alias("o3"),
-    )
-
-    # 2× the bucket count so (with high probability) no two buckets
-    # hash-collide into one partition: a collision halves effective
-    # parallelism (a straggler task carries two buckets' rows) and at
-    # 64 buckets / 32 partitions some task WILL carry 3-4 buckets.
-    # Empty partitions cost ~nothing.
-    nparts = shuffle_partitions or max(
-        2 * table.n_buckets,
-        int(changes.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-    )
-    merged = (
-        combined.repartition(nparts, BUCKET_COL)
-        .groupBy(BUCKET_COL, key)
-        .agg(F.max_by(packed, order_key).alias("_row"))
-        .filter(F.col("_row.op") != "D")
-        .select(F.col(key), F.col(BUCKET_COL), "_row.*")
-        .drop("op", "_prio", "_ord_ts")
-    )
-
-    table.replace_buckets(
-        merged,
-        affected,
-        batch_key=str(batch_id),
-        batch_info={"buckets": sorted(affected)},
-        prepartitioned=True,
-    )
-    return {"buckets": sorted(affected)}
-
-
-def _merge_into_mor(
-    table: LakeTable,
-    d: DataFrame,
-    batch_id: int | str,
-    payload_cols,
-    meta_cols,
-    shuffle_partitions: int | None,
-    observation,
-    affected: list[int],
-) -> dict:
-    """Merge-on-read MERGE: the batch lands as an UPSERT DELTA commit —
-    one full row version (or tombstone) per changed key — and nothing
-    existing is rewritten.  ``LakeTable.read`` applies the same
-    lsn-guarded LWW at scan time (strictly-newer delta replaces/deletes,
-    base wins ties); ``compact()`` folds the lane back into base files.
-
-    Per-batch cost: ONE batch-sized shuffle and ONE aggregate — the
-    ``_in_base`` stamp (insert-vs-update disambiguation for the
-    shuffle-free broadcast read path) is FUSED into the merge reduce:
-    the touched buckets' base keys ride the same union → repartition →
-    per-(bucket, key) aggregate as the change rows (a narrow
-    key-column scan, padded to the change shape), so no second
-    exchange and no join stage exist at all.  When the touched
-    buckets have NO base files yet (fresh table, or every prior batch
-    still in the delta lane) even that scan is skipped — every key is
-    trivially not-in-base.  Vs copy-on-write's full-width read+rewrite
-    of every touched bucket.  The late/duplicate no-op guarantee (T4)
-    moves intact from write to read: a stale delta loses the read-time
-    order comparison instead of the write-time one.
-    """
-    key = table.key_col
-    batch_stamp = F.lit(stamp_batch_id(batch_id)).cast("long")
-    changes = d
     d_side = d.select(
         F.col(key),
         F.col(BUCKET_COL),
         F.col("lsn"),
         F.col("op").alias(DOP_COL),
+        # deterministic tie-break for malformed upstreams: two DISTINCT
+        # change rows with the same (key, lsn) pick the last arrival by
+        # ingest_ts instead of an arbitrary winner (payload-identical
+        # at-least-once duplicates are unaffected either way)
         (
             F.col("ingest_ts")
             if "ingest_ts" in changes.columns
@@ -251,6 +133,9 @@ def _merge_into_mor(
         F.current_timestamp().alias("_applied_at"),
     )
     if observation is not None:
+        # per-batch metrics ride the merge scan (SURVEY.md §2.4
+        # observe()): no extra Spark job — the aggregates accumulate as
+        # the write action streams past this node
         d_side = d_side.observe(
             observation,
             F.count(F.lit(1)).alias("rows_in"),
@@ -286,17 +171,13 @@ def _merge_into_mor(
 
     packed = F.struct(*[F.col(c) for c in value_cols])
     # change rows outrank base-key marker rows (o0); within the batch:
-    # highest lsn wins, last arrival by ingest_ts breaks ties —
-    # identical to the CoW change-side ordering
+    # highest lsn wins, last arrival by ingest_ts breaks ties
     order_key = F.struct(
         (~F.col("_inb")).alias("o0"),
         F.col("lsn").alias("o1"),
         F.col(DORD_COL).alias("o2"),
     )
-    nparts = shuffle_partitions or max(
-        2 * table.n_buckets,
-        int(d.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-    )
+    nparts = reduce_partitions(table, changes.sparkSession)
     flagged = (
         combined.repartition(nparts, BUCKET_COL)
         .groupBy(BUCKET_COL, key)

@@ -27,12 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..table.laketable import LakeTable
+from ..table.mor import require_mode
 from .merge import merge_into
 from .scd2 import apply_history
 from .schema import (
     DEAD_LETTER_SCHEMA,
+    HISTORY_MOR,
     HISTORY_SCHEMA_BASE,
     LINEAGE_SCHEMA,
+    TARGET_MOR,
     TARGET_SCHEMA_BASE,
     parse_ddl,
     stamp_batch_id as _stamp,
@@ -47,7 +50,6 @@ class CdcPipeline:
         spark: SparkSession,
         base_dir: str,
         n_buckets: int = 16,
-        salt_buckets: int = 16,
         enable_history: bool = True,
         collect_metrics: bool = True,
         compact_every: int = 8,
@@ -56,12 +58,10 @@ class CdcPipeline:
         expire_snapshots: bool = False,
         scd2_check_cols: list[str] | None = None,
         lineage_mode: str = "partition",
-        storage: str = "mor",
         table_format=None,
     ):
         self.spark = spark
         self.base_dir = os.path.abspath(base_dir)
-        self.salt_buckets = salt_buckets
         self.enable_history = enable_history
         self.collect_metrics = collect_metrics
         self.compact_every = compact_every
@@ -85,15 +85,6 @@ class CdcPipeline:
         # and no count_distinct), so rows_deduped is null there.
         assert lineage_mode in ("partition", "observed")
         self.lineage_mode = lineage_mode
-        # storage: "mor" (default) = merge-on-read — batches commit as
-        # base-append + delta files, per-batch write volume O(batch),
-        # compaction folds the lane; "cow" = copy-on-write — touched
-        # buckets are rewritten wholesale per batch (simpler reads, the
-        # round-3 review's write-amplification scale-killer at uniform
-        # key batches).  A table's mode is fixed at creation; loading an
-        # existing warehouse keeps whatever its metadata says.
-        assert storage in ("mor", "cow")
-        self.storage = storage
         # table_format: the TableFormat binding backing the warehouse —
         # LakeTable (Iceberg-style snapshots, default) or DeltaLogTable
         # (Delta-style action log); the pipeline drives either through
@@ -110,23 +101,30 @@ class CdcPipeline:
 
         def tbl(name: str, schema, key: str, nb: int, mor=None):
             path = os.path.join(self.base_dir, name)
-            if fmt.exists(path):
-                return fmt.load(spark, path)
-            return fmt.create(
-                spark, path, schema, key_col=key, n_buckets=nb,
-                merge_on_read=mor if storage == "mor" else None,
-            )
+            if not fmt.exists(path):
+                return fmt.create(
+                    spark, path, schema, key_col=key, n_buckets=nb,
+                    merge_on_read=mor,
+                )
+            t = fmt.load(spark, path)
+            if mor is not None:
+                # target and history are merge-on-read only: a warehouse
+                # written by the removed copy-on-write mode fails here,
+                # not mid-batch
+                require_mode(t, mor["mode"])
+            return t
 
+        # target takes whole-row upserts / tombstones (batch commits as
+        # delta files, compaction folds the lane); history takes base
+        # appends of new versions + validity patches of stored ones —
+        # per-batch write volume O(batch) for both
         self.target = tbl(
-            "target", TARGET_SCHEMA_BASE, "doc_id", n_buckets,
-            mor={"mode": "upsert", "row_id_cols": ["doc_id"],
-                 "order_cols": ["lsn"]},
+            "target", TARGET_SCHEMA_BASE, "doc_id", n_buckets, mor=TARGET_MOR
         )
         self.history = (
             tbl(
                 "history", HISTORY_SCHEMA_BASE, "doc_id", n_buckets,
-                mor={"mode": "patch", "row_id_cols": ["doc_id", "lsn"],
-                     "patch_cols": ["valid_to_utc", "is_current"]},
+                mor=HISTORY_MOR,
             )
             if enable_history
             else None
@@ -376,64 +374,68 @@ class CdcPipeline:
 
         def _hot_buckets(t) -> list[int]:
             # manifest-carried byte totals — a dict sum, zero Spark jobs
-            if t is None:
-                return []
             return [
                 b
                 for b, nbytes in t.delta_bytes().items()
                 if nbytes > self.max_delta_bytes_per_bucket
             ]
 
-        hot = [
-            (t, bs)
-            for t in (self.target, self.history)
+        maintained = {
+            name: t
+            for name, t in (("target", self.target), ("history", self.history))
+            if t is not None
+        }
+        hot = {
+            name: bs
+            for name, t in maintained.items()
             for bs in [_hot_buckets(t)]
             if bs
-        ]
+        }
         if cadence_due or hot:
             _tc = _time.perf_counter()
+            # per table: the buckets each maintenance op rewrote
+            folded: dict = {}
+            compacted: dict = {}
             if hot and not cadence_due:
                 # lane-BYTES trigger between cadences: try the O(lane)
                 # MINOR fold first (hot keys collapse to one survivor
                 # per id, no base rewrite); escalate to a full bucket
                 # rewrite only for buckets still over the threshold —
                 # i.e. lanes of genuinely distinct keys
-                for t, bs in hot:
-                    t.fold_delta_lane(buckets=bs)
-                    still = _hot_buckets(t)
-                    if still:
-                        t.compact(
+                for name, bs in hot.items():
+                    t = maintained[name]
+                    folded[name] = t.fold_delta_lane(buckets=bs)
+                    if _hot_buckets(t):
+                        compacted[name] = t.compact(
                             10**9,
                             max_delta_bytes_per_bucket=(
                                 self.max_delta_bytes_per_bucket
                             ),
                         )
             if cadence_due:
-                stats["compacted"] = self.target.compact(
-                    self.max_files_per_bucket,
-                    max_delta_bytes_per_bucket=self.max_delta_bytes_per_bucket,
-                )
-                if self.history is not None:
-                    self.history.compact(
+                for name, t in maintained.items():
+                    compacted[name] = t.compact(
                         self.max_files_per_bucket,
                         max_delta_bytes_per_bucket=(
                             self.max_delta_bytes_per_bucket
                         ),
                     )
                 if self.expire_snapshots:
-                    self.target.expire_snapshots(keep_last=2)
-                    if self.history is not None:
-                        self.history.expire_snapshots(keep_last=2)
+                    for t in maintained.values():
+                        t.expire_snapshots(keep_last=2)
             # compaction wall is reported separately: it is the MoR
             # lane's amortized rewrite cost, paid every compact_every
             # batches instead of every batch (BENCH.md steady-state)
             _ph["compact"] = round(_time.perf_counter() - _tc, 3)
+            if folded:
+                stats["folded"] = folded
+            if compacted:
+                stats["compacted"] = compacted
 
         _ph["total"] = round(_time.perf_counter() - _t0, 3)
         # write-amplification instrument: bytes materialised this batch
-        # across all four tables (applies + compaction).  O(batch) under
-        # merge-on-read; grows toward a full-table rewrite per batch
-        # under copy-on-write at uniformly-hashed keys.
+        # across all four tables (applies + compaction) — O(batch)
+        # between compactions.
         _ph["bytes_written"] = (
             sum(getattr(t, "bytes_written_total", 0) for t in _tables) - _bytes0
         )

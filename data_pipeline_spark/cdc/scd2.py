@@ -35,17 +35,14 @@ the full-width data is shuffled exactly once per batch:
      frame — thousands of keys per Arrow batch, vectorized pandas, no
      per-row Python;
   5. the closure delta (changed rows only, flagged insert-vs-stored)
-     drives the write:
-
-     * merge-on-read history (default): new versions append as base
-       files already carrying final validity; stored-row validity
-       changes become per-bucket PATCH delta files
-       (:func:`_apply_history_mor`) — per-batch write volume O(batch);
-     * copy-on-write: the delta joins back onto the full-width union
-       with zero extra exchange and the touched buckets are rewritten.
+     drives a merge-on-read write: new versions append as base files
+     already carrying final validity, and validity changes of STORED
+     rows become per-bucket PATCH delta files — per-batch write volume
+     O(batch), where rewriting every touched bucket (copy-on-write) is
+     O(history) at uniformly-hashed CDC keys.
 
 For enormous batches (more changed keys than is broadcastable) the
-``broadcast_max_docs`` gate falls back to a shuffle-based variant of
+``BROADCAST_MAX_DOCS`` gate falls back to a shuffle-based variant of
 the same algorithm.
 """
 
@@ -65,9 +62,18 @@ from pyspark.sql.types import (
 )
 
 from ..table.laketable import BUCKET_COL, LakeTable
+from ..table.mor import require_mode
+from .merge import reduce_partitions
 from .schema import END_OF_TIME
 
 _END_OF_TIME_TS = pd.Timestamp(END_OF_TIME).as_unit("us")
+
+#: distinct changed keys up to which the per-key planning frames
+#: (min incoming lsn, insertion predecessor) are broadcast
+BROADCAST_MAX_DOCS = 500_000
+#: hash groups of the closure kernel's applyInPandas — each group holds
+#: many keys, so Arrow batch + pandas-vector costs amortize
+CLOSURE_GROUPS = 64
 
 
 def _make_close_kernel(key: str, group_col: str):
@@ -226,15 +232,13 @@ def apply_history(
     history: LakeTable,
     new_versions: DataFrame,
     batch_id: int | str,
-    broadcast_max_docs: int = 500_000,
-    closure_groups: int = 64,
-    shuffle_partitions: int | None = None,
     check_cols: list[str] | None = None,
     affected: list[int] | None = None,
     n_docs: int | None = None,
     plan_out: dict | None = None,
 ) -> dict:
-    """Append this batch's versions and re-close affected keys.
+    """Append this batch's versions and re-close affected keys, as one
+    merge-on-read commit on a patch-mode history table.
 
     affected/n_docs: precomputed planning inputs (touched buckets +
     distinct-key count) from the caller's fused probe — when given, no
@@ -254,7 +258,28 @@ def apply_history(
     tracked attributes hash-match the version it would succeed opens NO
     new history row (the reference's check-cols SCD2).  Off by default:
     the lsn-versioned mode keeps every distinct (key, lsn).
+
+    The write (Iceberg v2 equality-delete / Hudi MoR analogue;
+    reference analogue: the dbt incremental merge never rewrites the
+    table per run, trades_enriched.sql:2-5):
+
+    * the batch's genuinely-new versions (closure rows flagged
+      ``is_insert``) are appended as base files, already carrying their
+      final validity;
+    * validity changes to STORED rows (close-on-insert, bi-temporal
+      corrections) become a small (key, lsn, valid_to, is_current)
+      PATCH delta per bucket;
+    * ``LakeTable.read`` resolves patches at scan time (latest _dseq
+      per (key, lsn)); ``compact()`` folds them back into the base on
+      the small-file trigger, amortising the rewrite.
+
+    Plan shape: ONE batch-sized wide shuffle (the repartition-by-bucket
+    reduce, whose exchange the (bucket, key, lsn) groupBy and the
+    bucketed write both reuse) + the narrow closure join, which adds no
+    exchange on the wide side (pinned by tests/test_plans.py via the
+    ``plan_out["mor_new_rows"]`` hook).
     """
+    require_mode(history, "patch")
     key = history.key_col
     derived = (key, "lsn", "op", "valid_from_utc", "valid_to_utc", "is_current")
     payload_cols = [
@@ -285,11 +310,9 @@ def apply_history(
         history.record_batch(str(batch_id), {"versions": 0})
         return {"buckets": []}
 
-    small = n_docs <= broadcast_max_docs
+    small = n_docs <= BROADCAST_MAX_DOCS
     maybe_bcast = F.broadcast if small else (lambda df: df)
 
-    mor_cfg = history.merge_on_read
-    patch_mor = mor_cfg is not None and mor_cfg.get("mode") == "patch"
     # Under patch-mode merge-on-read the kernel input can skip the
     # delta-lane resolution join entirely: patches only ever rewrite
     # DERIVED columns (valid_to_utc/is_current), and the kernel
@@ -301,13 +324,8 @@ def apply_history(
     # folded at the next compaction) and saves a per-batch reduce +
     # broadcast-exchange of the whole un-folded lane.  check_cols mode
     # keeps the resolution: its gate reads is_current semantically.
-    existing = history.read(
-        buckets=affected,
-        with_deltas=bool(check_cols) or not patch_mor,
-    )
+    existing = history.read(buckets=affected, with_deltas=bool(check_cols))
     if check_cols:
-        # pre-gate `affected` stays the bucket superset (a fully-gated
-        # bucket is rewritten unchanged — correct, just not pruned)
         nv = _change_gate(existing, nv, key, check_cols)
 
     # CHAIN-SUFFIX pruning (round 4): the closure of a stored version
@@ -359,142 +377,18 @@ def apply_history(
             F.lit(False).alias("_stored_ic"),
             F.lit(True).alias("_is_new"),
         )
-    ).withColumn("_g", F.pmod(F.xxhash64(F.col(key)), F.lit(closure_groups)))
-
-    closure = all_narrow.groupBy("_g").applyInPandas(
-        _make_close_kernel(key, "_g"), schema=_closure_schema(key)
-    )
-
-    nparts = shuffle_partitions or max(
-        2 * history.n_buckets,
-        int(new_versions.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-    )
-    mor = history.merge_on_read
-    if mor is not None and mor.get("mode") == "patch":
-        try:
-            return _apply_history_mor(
-                history, nv, closure, affected, n_docs, batch_id, nparts,
-                plan_out,
-            )
-        finally:
-            ex_aff.unpersist()
-
-    # full-width union (duplicates still present), reduced to one row
-    # per (key, lsn) on the write's bucket exchange: stored row wins,
-    # else first-arrival copy — the same pick as the kernel's dedup
-    nv_full = nv.drop(BUCKET_COL)
-    for f in history.schema.fields:
-        if f.name not in nv_full.columns:
-            nv_full = nv_full.withColumn(f.name, F.lit(None).cast(f.dataType))
-    width_cols = [f.name for f in history.schema.fields]
-    combined = (
-        existing.withColumn("_is_new", F.lit(False))
-        .select(*width_cols, "_is_new")
-        .unionByName(
-            nv_full.withColumn("_is_new", F.lit(True)).select(*width_cols, "_is_new")
-        )
-        .withColumn(BUCKET_COL, history.bucket_of(key))
-    )
-    rest_cols = [c for c in combined.columns if c not in (key, "lsn", BUCKET_COL)]
-    packed = F.struct(*[F.col(c) for c in rest_cols])
-    order_key = F.struct(F.col("_is_new").alias("o1"), F.col("valid_from_utc").alias("o2"))
-    reduced = (
-        combined.repartition(nparts, BUCKET_COL)
-        .groupBy(BUCKET_COL, key, "lsn")
-        .agg(F.min_by(packed, order_key).alias("_row"))
-        .select(F.col(BUCKET_COL), F.col(key), F.col("lsn"), "_row.*")
-        .drop("_is_new")
-    )
-
-    # join-back of the closure delta WITHOUT a driver broadcast (the
-    # delta is batch-sized — collecting it would be data-proportional
-    # serial time): both sides are hash-partitioned by bucket with the
-    # same partition count, and the reduce's sort-aggregate output is
-    # already ordered by (bucket, key, lsn), so joining on
-    # [bucket, key, lsn] adds NO exchange and no re-sort of the wide
-    # side — only the narrow delta shuffles.
-    x = (
-        closure.drop("is_insert")
-        .withColumnsRenamed(
-            {"valid_to_utc": "_new_vt", "is_current": "_new_ic"}
-        )
-        .withColumn(BUCKET_COL, history.bucket_of(key))
-        .repartition(nparts, F.col(BUCKET_COL))
-    )
-    closed = reduced.join(x, [BUCKET_COL, key, "lsn"], "left").select(
-        *[
-            F.coalesce(F.col("_new_vt"), F.col("valid_to_utc")).alias("valid_to_utc")
-            if f.name == "valid_to_utc"
-            else F.coalesce(F.col("_new_ic"), F.col("is_current")).alias("is_current")
-            if f.name == "is_current"
-            else F.col(f.name)
-            for f in history.schema.fields
-        ],
-        F.col(BUCKET_COL),
-    )
-
-    if plan_out is not None:
-        # plan-audit hook (tests/test_plans.py): expose the pre-write
-        # frame so the zero-extra-exchange / no-wide-re-sort claim above
-        # is pinned against the actual executed plan, not the docstring
-        plan_out["closed"] = closed
-
-    try:
-        history.replace_buckets(
-            closed,
-            affected,
-            batch_key=str(batch_id),
-            batch_info={"buckets": sorted(affected)},
-            prepartitioned=True,
-        )
-    finally:
-        ex_aff.unpersist()
-    # changed_docs is an HLL estimate (±2%) when derived from the probe
-    return {"buckets": sorted(affected), "changed_docs": n_docs}
-
-
-def _apply_history_mor(
-    history: LakeTable,
-    nv: DataFrame,
-    closure: DataFrame,
-    affected: list[int],
-    n_docs: int,
-    batch_id: int | str,
-    nparts: int,
-    plan_out: dict | None,
-) -> dict:
-    """Merge-on-read history apply: per-batch WRITE volume is O(batch).
-
-    Copy-on-write (`apply_history`'s default tail) reads and rewrites
-    every touched bucket wholesale — at uniformly-hashed CDC keys that
-    is the whole, monotonically-growing history table per micro-batch
-    (the round-3 review's one remaining scale-killer).  Here instead:
-
-    * the batch's genuinely-new versions (closure rows flagged
-      ``is_insert``) are appended as base files, already carrying their
-      final validity;
-    * validity changes to STORED rows (close-on-insert, bi-temporal
-      corrections) become a small (key, lsn, valid_to, is_current)
-      PATCH delta per bucket — Iceberg v2 equality-delete / Hudi MoR
-      analogue (reference analogue: the dbt incremental merge never
-      rewrites the table per run, trades_enriched.sql:2-5);
-    * ``LakeTable.read`` resolves patches at scan time (latest _dseq
-      per (key, lsn)); ``compact()`` folds them back into the base on
-      the small-file trigger, amortising the rewrite.
-
-    Plan shape: ONE batch-sized wide shuffle (the repartition-by-bucket
-    reduce, whose exchange the (bucket, key, lsn) groupBy and the
-    bucketed write both reuse) + the narrow closure join — the same
-    zero-extra-exchange join-back as the CoW path, minus the full-width
-    table rewrite.
-    """
-    key = history.key_col
+    ).withColumn("_g", F.pmod(F.xxhash64(F.col(key)), F.lit(CLOSURE_GROUPS)))
 
     # the closure feeds BOTH writes (new base rows + patch deltas);
     # without a persist the second write re-executes the entire narrow
     # scan + kernel DAG — measured as ~2× the history wall.  The frame
     # is narrow and batch-sized: memory-only cache, freed in `finally`.
-    closure = closure.persist()
+    closure = (
+        all_narrow.groupBy("_g")
+        .applyInPandas(_make_close_kernel(key, "_g"), schema=_closure_schema(key))
+        .persist()
+    )
+    nparts = reduce_partitions(history, new_versions.sparkSession)
 
     # full width, deduped to one row per (key, lsn): first arrival wins
     # (same pick as the kernel), on the write's bucket exchange
@@ -554,6 +448,8 @@ def _apply_history_mor(
         )
     finally:
         closure.unpersist()
+        ex_aff.unpersist()
+    # changed_docs is an HLL estimate (±2%) when derived from the probe
     return {"buckets": sorted(affected), "changed_docs": n_docs}
 
 

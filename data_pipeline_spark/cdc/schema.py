@@ -79,6 +79,17 @@ HISTORY_SCHEMA = StructType(
     + HISTORY_SCHEMA_BASE.fields[5:]
 )
 
+# Merge-on-read layouts of the two CDC tables (table/mor.py): the target
+# takes whole-row upserts / tombstones per doc_id, newest lsn wins; the
+# history takes patches of the derived validity columns of a stored
+# (doc_id, lsn) version.
+TARGET_MOR = {"mode": "upsert", "row_id_cols": ["doc_id"], "order_cols": ["lsn"]}
+HISTORY_MOR = {
+    "mode": "patch",
+    "row_id_cols": ["doc_id", "lsn"],
+    "patch_cols": ["valid_to_utc", "is_current"],
+}
+
 # Per-(batch, kafka-partition) lineage + metrics (reference
 # control.load_metadata / validation_runs; FIXTURES.md §5).
 LINEAGE_SCHEMA = StructType(

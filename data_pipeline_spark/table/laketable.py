@@ -9,11 +9,11 @@ implements the subset of Iceberg semantics the CDC pipeline needs
   POSIX); readers resolve the CURRENT pointer and never observe a
   partial commit.  Mirrors Iceberg's snapshot + root-pointer protocol.
 * **Hash-bucket partitioning on the merge key** — data lives under
-  ``data/bucket=K/``; a MERGE only reads and rewrites the buckets that
-  contain affected keys (copy-on-write at bucket granularity).  At
-  10^10 rows this is the difference between rewriting gigabytes and
-  rewriting the whole table: per-batch cost is proportional to touched
-  buckets, not table size.  Analogue of the reference's
+  ``data/bucket=K/``; a MERGE only touches the buckets that contain
+  affected keys, and ``replace_buckets`` (compaction) rewrites whole
+  buckets.  At 10^10 rows this is the difference between rewriting
+  gigabytes and rewriting the whole table: per-commit cost is
+  proportional to touched buckets, not table size.  Analogue of the reference's
   ``partition_by``/``cluster_by`` layout (trades_enriched.sql:6-11).
 * **Additive schema evolution by metadata rewrite** — ``add_columns``
   touches only the schema in the next metadata version; old parquet

@@ -72,6 +72,22 @@ def validate_mor(cfg: dict, schema: StructType, key_col: str) -> None:
             raise ValueError(f"merge_on_read.order_cols invalid: {ocols}")
 
 
+def require_mode(table, mode: str) -> None:
+    """Raise unless ``table`` is a ``mode``-mode merge-on-read table.
+
+    The CDC writers have one write path each (upsert for the target,
+    patch for history).  A table without that config — one created by
+    the removed copy-on-write storage mode — is refused before any
+    Spark job runs."""
+    mor = table.merge_on_read
+    if mor is None or mor.get("mode") != mode:
+        raise ValueError(
+            f"table {table.path} is not {mode}-mode merge-on-read "
+            f"(merge_on_read={mor!r}); copy-on-write storage was removed — "
+            "rebuild the table by replaying its change log"
+        )
+
+
 def delta_schema(schema: StructType, mor: dict) -> StructType:
     """On-disk schema of a delta file for the given table schema/mode.
 
@@ -120,6 +136,8 @@ def read_delta_lane(
     """Scan a delta lane with its manifest ``_dseq`` attached: one scan
     per commit group (group count bounded by the compaction cadence),
     the stamp as a literal column."""
+    if not dfiles:
+        raise ValueError("read_delta_lane needs at least one delta file")
     dschema = delta_schema(schema, mor)
     by_seq: dict[int, list[str]] = {}
     for p, _sz, dseq in dfiles:
@@ -244,8 +262,8 @@ def resolve_deltas(
     ocols = list(mor["order_cols"])
     # one surviving delta row per id: highest order key wins; at an
     # equal order key the EARLIEST commit wins (it became "the target"
-    # first — identical to copy-on-write target-wins-ties), then last
-    # arrival by ingest tie-break within a commit
+    # first, so a replayed or late duplicate version is a no-op), then
+    # last arrival by ingest tie-break within a commit
     pick = F.struct(
         *[F.col(c).alias(f"o{i}") for i, c in enumerate(ocols)],
         (-F.col(DSEQ_COL)).alias("oseq"),

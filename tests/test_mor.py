@@ -596,7 +596,7 @@ def test_pipeline_lane_bytes_trigger_minor_folds_then_escalates(spark, tmp_path)
     mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
         "ingest_ts", SF.current_timestamp()
     )
-    pipe.apply_batch(
+    stats = pipe.apply_batch(
         mk([(f"d{i}", i, "I", [1, i], 2, None, None, 0, None) for i in range(20)]), 0
     )
     # hot lane: fold ran, then escalation compacted (threshold 1 byte
@@ -604,4 +604,31 @@ def test_pipeline_lane_bytes_trigger_minor_folds_then_escalates(spark, tmp_path)
     assert not pipe.target.delta_stats()
     assert {r.doc_id for r in pipe.target.read().select("doc_id").collect()} == {
         f"d{i}" for i in range(20)
+    }
+    # both decisions land in the batch stats: one commit per bucket
+    # leaves the fold nothing to collapse, so escalation rewrote both
+    assert stats["folded"] == {"target": []}
+    assert stats["compacted"] == {"target": [0, 1]}
+    # a lane of two commits per bucket that turns hot on the third: the
+    # fold collapses it, and the survivor (still over 1 byte) escalates
+    cold = CdcPipeline(
+        spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
+        enable_history=False, collect_metrics=False,
+    )
+    for b in (1, 2):
+        cold.apply_batch(
+            mk([(f"d{i}", 100 * b + i, "U", [b, i], 2, None, None, 0, None)
+                for i in range(20)]), b,
+        )
+    assert cold.target.delta_stats() == {0: 2, 1: 2}
+    pipe.target.refresh()
+    stats = pipe.apply_batch(
+        mk([(f"d{i}", 300 + i, "U", [3, i], 2, None, None, 0, None)
+            for i in range(20)]), 3,
+    )
+    assert stats["folded"] == {"target": [0, 1]}
+    assert stats["compacted"] == {"target": [0, 1]}
+    assert not pipe.target.delta_stats()
+    assert {r.lsn for r in pipe.target.read().collect()} == {
+        300 + i for i in range(20)
     }

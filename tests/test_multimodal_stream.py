@@ -78,13 +78,13 @@ def test_stream_crash_resume_matches_oracle(spark, tmp_path):
 
     wh = str(tmp_path / "wh")
     ckpt = str(tmp_path / "ckpt")
-    pipe = CdcPipeline(spark, wh, n_buckets=4, salt_buckets=4, compact_every=0)
+    pipe = CdcPipeline(spark, wh, n_buckets=4, compact_every=0)
     n1 = run_stream(
         spark, log_dir, pipe, ckpt, max_files_per_trigger=2, stop_after_batches=1
     )
     assert n1 == 1
     # fresh pipeline object — state must come from disk, not memory
-    pipe2 = CdcPipeline(spark, wh, n_buckets=4, salt_buckets=4, compact_every=0)
+    pipe2 = CdcPipeline(spark, wh, n_buckets=4, compact_every=0)
     run_stream(spark, log_dir, pipe2, ckpt, max_files_per_trigger=2)
 
     actual = (

@@ -125,7 +125,11 @@ def test_observed_merge_same_result(spark, tmp_path):
     from pyspark.sql import Observation
 
     from data_pipeline_spark.cdc.merge import merge_into
-    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA, TARGET_SCHEMA_BASE
+    from data_pipeline_spark.cdc.schema import (
+        CHANGE_EVENT_SCHEMA,
+        TARGET_MOR,
+        TARGET_SCHEMA_BASE,
+    )
     from data_pipeline_spark.table.laketable import LakeTable
 
     rows = [("d%d" % i, i, "I", [1, i], 2, None, None, 0, None) for i in range(50)]
@@ -138,6 +142,7 @@ def test_observed_merge_same_result(spark, tmp_path):
             TARGET_SCHEMA_BASE,
             key_col="doc_id",
             n_buckets=4,
+            merge_on_read=TARGET_MOR,
         )
         o = Observation("m") if obs else None
         merge_into(t, changes, 0, observation=o)
@@ -150,70 +155,19 @@ def test_observed_merge_same_result(spark, tmp_path):
     )
 
 
-def test_scd2_joinback_no_extra_exchange_no_wide_resort(spark, tmp_path):
-    """Pins cdc/scd2.py's claim: the closure-delta join-back adds NO
-    exchange and NO re-sort on the wide (reduced-history) side — the
-    SortMergeJoin reuses the reduce's bucket partitioning and its
-    SortAggregate's (bucket, key, lsn) order.  Requires
-    spark.sql.requireAllClusterKeysForCoPartition=false (build_session
-    sets it): Spark 3.3+'s default silently re-shuffles BOTH sides
-    full-width when the co-partitioning is on a prefix of the join keys.
-    """
-    from data_pipeline_spark.cdc.pipeline import CdcPipeline
-    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
-    from data_pipeline_spark.cdc.scd2 import apply_history
-
-    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, storage="cow")
-    mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
-        "ingest_ts", F.current_timestamp()
-    )
-    apply_history(
-        pipe.history,
-        mk([(f"d{i}", i, "I", [1, i], 2, None, None, 0, None) for i in range(50)]),
-        0,
-    )
-    po = {}
-    apply_history(
-        pipe.history,
-        mk([(f"d{i}", 100 + i, "U", [2, i], 2, None, None, 0, None) for i in range(20)]),
-        1,
-        plan_out=po,
-    )
-    plan = _plan(po["closed"])
-    # carve out the wide side: everything between SortMergeJoin and the
-    # reduce's own REPARTITION_BY_NUM exchange
-    m = re.search(
-        r"SortMergeJoin.*?\n(.*?)Exchange hashpartitioning\(_bucket#\d+, \d+\), "
-        r"REPARTITION_BY_NUM",
-        plan,
-        re.S,
-    )
-    assert m, plan
-    wide = m.group(1)
-    assert "SortAggregate" in wide  # we captured the reduce side
-    # between the join and the reduce aggregate: nothing may shuffle or
-    # re-sort (the aggregate's OWN input sort sits below it and is fine)
-    join_to_agg = wide.split("SortAggregate")[0]
-    assert "Exchange" not in join_to_agg, f"extra exchange on wide side:\n{plan}"
-    assert "Sort " not in join_to_agg, f"re-sort of the wide side:\n{plan}"
-    # exactly 2 shuffled exchanges feed the join: the reduce's and the
-    # narrow delta's (the closure's _g exchange + semi-join build are
-    # upstream of the delta's repartition)
-    head = plan.split("FlatMapGroupsInPandas")[0]
-    assert len(re.findall(r"Exchange hashpartitioning", head)) == 2, plan
-
-
 def test_mor_history_apply_no_extra_exchange(spark, tmp_path):
-    """Merge-on-read history apply (the round-4 write path): the
-    insert-filter join-back must reuse the batch reduce's bucket
-    partitioning and sort order exactly like the CoW pin above — one
+    """Merge-on-read history apply: the insert-filter join-back must
+    reuse the batch reduce's bucket partitioning and sort order — one
     batch-sized wide exchange on the full-width side, the narrow
-    closure side shuffling alone."""
+    closure side shuffling alone.  Requires
+    spark.sql.requireAllClusterKeysForCoPartition=false (build_session
+    sets it): Spark 3.3+'s default re-shuffles BOTH sides full-width
+    when the co-partitioning is on a prefix of the join keys."""
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.cdc.scd2 import apply_history
 
-    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, storage="mor")
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4)
     mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
         "ingest_ts", F.current_timestamp()
     )
