@@ -58,7 +58,6 @@ class CdcPipeline:
         expire_snapshots: bool = False,
         scd2_check_cols: list[str] | None = None,
         lineage_mode: str = "partition",
-        table_format=None,
     ):
         self.spark = spark
         self.base_dir = os.path.abspath(base_dir)
@@ -85,11 +84,6 @@ class CdcPipeline:
         # and no count_distinct), so rows_deduped is null there.
         assert lineage_mode in ("partition", "observed")
         self.lineage_mode = lineage_mode
-        # table_format: the TableFormat binding backing the warehouse —
-        # LakeTable (Iceberg-style snapshots, default) or DeltaLogTable
-        # (Delta-style action log); the pipeline drives either through
-        # the same protocol (table/format.py)
-        self.table_format = table_format or LakeTable
         self._batches_applied = 0
         # per-batch phase walls (seconds), appended by apply_batch.
         # Cost: a handful of perf_counter calls — always on.  This is
@@ -97,16 +91,14 @@ class CdcPipeline:
         # shrink with executors are the pipeline's Amdahl constant.
         self.phase_times: list[dict] = []
 
-        fmt = self.table_format
-
         def tbl(name: str, schema, key: str, nb: int, mor=None):
             path = os.path.join(self.base_dir, name)
-            if not fmt.exists(path):
-                return fmt.create(
+            if not LakeTable.exists(path):
+                return LakeTable.create(
                     spark, path, schema, key_col=key, n_buckets=nb,
                     merge_on_read=mor,
                 )
-            t = fmt.load(spark, path)
+            t = LakeTable.load(spark, path)
             if mor is not None:
                 # target and history are merge-on-read only: a warehouse
                 # written by the removed copy-on-write mode fails here,
@@ -312,7 +304,7 @@ class CdcPipeline:
             t for t in (self.target, self.history, self.lineage, self.dead_letter)
             if t is not None
         ]
-        _bytes0 = sum(getattr(t, "bytes_written_total", 0) for t in _tables)
+        _bytes0 = sum(t.bytes_written_total for t in _tables)
 
         def _timed(fn):
             def run():
@@ -437,7 +429,7 @@ class CdcPipeline:
         # across all four tables (applies + compaction) — O(batch)
         # between compactions.
         _ph["bytes_written"] = (
-            sum(getattr(t, "bytes_written_total", 0) for t in _tables) - _bytes0
+            sum(t.bytes_written_total for t in _tables) - _bytes0
         )
         self.phase_times.append(_ph)
         # bounded for continuous deployments: a months-long query must

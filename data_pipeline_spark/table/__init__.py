@@ -1,5 +1,3 @@
-from .deltalog import DeltaLogTable
-from .format import TableFormat
 from .laketable import LakeTable
 
-__all__ = ["DeltaLogTable", "LakeTable", "TableFormat"]
+__all__ = ["LakeTable"]

@@ -145,7 +145,47 @@ _BATCH_KEY_RE = re.compile(r"(.*?)(\d+)")
 
 
 class LakeTable:
-    """A bucketed, snapshot-versioned parquet table with atomic commits."""
+    """A bucketed, snapshot-versioned parquet table with atomic commits.
+
+    The engine's writers (``cdc.merge.merge_into``,
+    ``cdc.scd2.apply_history``, ``CdcPipeline``) never touch files; they
+    drive the table only through the methods below.  A real-Iceberg
+    deployment implements the same surface over a catalog — the table
+    gives the Iceberg equivalent of each method:
+
+    =================  =================================================
+    Method             Iceberg equivalent
+    =================  =================================================
+    read               ``spark.table(name)`` (+ ``VERSION AS OF`` for
+                       time travel); bucket pruning comes free from the
+                       ``bucket(N, key)`` partition transform + predicate
+    replace_buckets    copy-on-write ``MERGE INTO``/``REPLACE WHERE``
+                       over the bucket predicate (one atomic snapshot
+                       commit)
+    append             ``df.writeTo(name).append()``
+    merge_append       merge-on-read commit: new data files + equality-
+                       delete/patch delta files in one snapshot (Iceberg
+                       v2 row-level deletes / Hudi MoR delta commit)
+    append_rows        driver-side small append (Iceberg writers commit
+                       tiny metadata-lane rows the same way)
+    record_batch       snapshot summary properties on an empty commit
+                       (``snapshot.summary['batch-key']``)
+    has_batch          scan snapshot summaries / a watermark table
+    add_columns        ``ALTER TABLE name ADD COLUMNS (...)``
+    compact            ``CALL catalog.system.rewrite_data_files(name)``
+    fold_delta_lane    minor compaction: ``rewrite_position_delete_files``
+                       (Iceberg) / log compaction (Hudi) — collapse the
+                       delta lane without rewriting base files
+    expire_snapshots   ``CALL catalog.system.expire_snapshots(name)``
+    =================  =================================================
+
+    Concurrency contract: commits are optimistic — the writer rebases
+    over concurrent commits where semantics allow (appends,
+    manifest-only commits, disjoint bucket replacements) and raises
+    :class:`CommitConflict` on true conflicts (same-bucket replacement),
+    mirroring Iceberg's validation-failure semantics.
+    ``has_batch``/``batch_key`` give cross-writer exactly-once.
+    """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -223,6 +263,10 @@ class LakeTable:
         return v
 
     def _load_snapshot(self, version: int) -> Snapshot:
+        """Each ``delta_files`` entry is ``[rel_path, size_bytes, dseq]``.
+        Tables written before 563b8b7, whose entries were bare path
+        strings, are not readable: replay the log into a fresh
+        directory."""
         with open(os.path.join(self._meta_dir, f"v{version}.json")) as f:
             m = json.load(f)
         return Snapshot(
@@ -1101,18 +1145,11 @@ def _batch_applied(snap: Snapshot, k: str) -> bool:
     prefix's compaction watermark.  Used by has_batch and re-checked
     against the HEAD snapshot inside the commit loop, so the guard
     holds across concurrent writers, not just restarts."""
-    return _batch_applied_kv(snap.applied_batches, snap.watermarks or {}, k)
-
-
-def _batch_applied_kv(
-    applied: dict[str, Any], watermarks: dict[str, int], k: str
-) -> bool:
-    """State-shape-independent form (shared with DeltaLogTable)."""
-    if k in applied:
+    if k in snap.applied_batches:
         return True
     m = _BATCH_KEY_RE.fullmatch(k)
     if m:
-        return int(m.group(2)) <= watermarks.get(m.group(1), -1)
+        return int(m.group(2)) <= (snap.watermarks or {}).get(m.group(1), -1)
     return False
 
 

@@ -1,13 +1,9 @@
-"""Merge-on-read delta resolution — shared by every TableFormat binding.
+"""Merge-on-read delta resolution — LakeTable's merge-on-read scan.
 
-The STORAGE protocol (how commits are published, how state is
-reconstructed, where files live) is what distinguishes one table format
-from another — :class:`~.laketable.LakeTable` (Iceberg-style snapshots
-+ CAS pointer) and :class:`~.deltalog.DeltaLogTable` (Delta-style
-ordered action log + checkpoints) each implement their own.  The
-SCAN-side semantics of a delta lane, however, are format-independent
-(Iceberg v2 readers and Hudi MoR readers agree on them), so both
-bindings delegate here:
+:class:`~.laketable.LakeTable` owns the STORAGE protocol (how commits
+are published, how state is reconstructed, where files live).  The
+SCAN-side semantics of a delta lane live here; they follow what
+Iceberg v2 readers and Hudi MoR readers agree on:
 
 * ``patch`` mode — delta rows overwrite ``patch_cols`` of the base row
   identified by ``row_id_cols``; the latest commit (``_dseq``) wins.

@@ -35,26 +35,14 @@ def _final_pandas(pipeline):
     return df.toPandas()
 
 
-@pytest.mark.parametrize(
-    "fmt",
-    ["lake", "delta"],  # second TableFormat binding (seam proof)
-    ids=["lake-mor", "delta-mor"],
-)
-def test_replay_matches_oracle(spark, log_dir, tmp_path, fmt):
-    from data_pipeline_spark.table import DeltaLogTable, LakeTable
-
-    cls = {"lake": LakeTable, "delta": DeltaLogTable}[fmt]
+def test_replay_matches_oracle(spark, log_dir, tmp_path):
     # compact_every=2: a mid-replay lane fold
-    pipe = CdcPipeline(
-        spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2,
-        table_format=cls,
-    )
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2)
     n = replay_batches(spark, log_dir, pipe, files_per_batch=2)
     assert n == 3
     expected = expected_final_state(load_log(log_dir))
     assert_tokens_equal(_final_pandas(pipe), expected)
-    # history closure invariant holds across formats: exactly
-    # one current row per live doc
+    # history closure invariant: exactly one current row per live doc
     cur = pipe.history_df().filter("is_current").groupBy("doc_id").count()
     assert cur.filter("count > 1").count() == 0
 
@@ -429,9 +417,6 @@ _LOST_DELETE_XFAIL = pytest.mark.xfail(
         pytest.param(
             "fold-lake", marks=_LOST_DELETE_XFAIL
         ),
-        pytest.param(
-            "fold-delta", marks=_LOST_DELETE_XFAIL
-        ),
     ],
 )
 def test_late_duplicate_after_delete_stays_deleted(spark, tmp_path, between):
@@ -446,10 +431,9 @@ def test_late_duplicate_after_delete_stays_deleted(spark, tmp_path, between):
         TARGET_MOR,
         TARGET_SCHEMA_BASE,
     )
-    from data_pipeline_spark.table import DeltaLogTable, LakeTable
+    from data_pipeline_spark.table import LakeTable
 
-    cls = DeltaLogTable if between == "fold-delta" else LakeTable
-    t = cls.create(
+    t = LakeTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA_BASE, key_col="doc_id",
         n_buckets=1, merge_on_read=TARGET_MOR,
     )

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -34,6 +35,8 @@ def test_create_append_read(spark, tmp_path):
     got = {r.doc_id: r.tokens for r in t.read().collect()}
     assert got == {"a": [1, 2], "b": [3]}
     assert t.version == 1
+    with pytest.raises(FileNotFoundError):
+        LakeTable.load(spark, str(tmp_path / "nope"))
 
 
 def test_bucket_pruned_read(spark, tmp_path):
@@ -119,10 +122,14 @@ def test_expire_snapshots_removes_unreachable_files(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, "doc_id", n_buckets=1)
     for i in range(5):
         t.append(_mk(spark, [(f"d{i}", [i], 1)]))
+    pre_compact = t.version
     t.compact(max_files_per_bucket=2)
     removed = t.expire_snapshots(keep_last=1)
     assert removed > 0
     assert t.read().count() == 5  # current snapshot intact
+    # time travel into expired files fails at read(), before any job
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        t.read(version=pre_compact)
 
 
 def test_exactly_once_guard(spark, tmp_path):
@@ -404,9 +411,3 @@ def test_expire_snapshots_removed_files_delta(spark, tmp_path):
     )
     assert not os.path.exists(orphan)
 
-
-def test_laketable_satisfies_tableformat_protocol(spark, tmp_path):
-    from data_pipeline_spark.table.format import TableFormat
-
-    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, "doc_id", n_buckets=2)
-    assert isinstance(t, TableFormat)

@@ -1,9 +1,8 @@
-"""Merge-on-read delta lane + second TableFormat binding (round 4).
+"""Merge-on-read delta lane of LakeTable.
 
 Pins the storage-level semantics the MoR write paths depend on:
-patch/upsert resolution, compaction folding, time travel through the
-lane, the compaction-vs-writer races, and LakeTable/DeltaLogTable
-protocol equivalence on the same operation sequence.
+patch/upsert resolution, compaction folding, minor (delta-lane) folds,
+time travel through the lane, and the compaction-vs-writer races.
 """
 
 from __future__ import annotations
@@ -22,7 +21,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from data_pipeline_spark.table import DeltaLogTable, LakeTable, TableFormat
+from data_pipeline_spark.table import LakeTable
 from data_pipeline_spark.table.laketable import CommitConflict
 from data_pipeline_spark.table.mor import DINBASE_COL, DOP_COL, DORD_COL
 
@@ -49,7 +48,8 @@ PATCH_MOR = {
 }
 UPSERT_MOR = {"mode": "upsert", "row_id_cols": ["doc_id"], "order_cols": ["lsn"]}
 
-FORMATS = {"lake": LakeTable, "delta": DeltaLogTable}
+# one-value parametrization: keeps these tests' `[lake]` ids stable
+LAKE = pytest.mark.parametrize("fmt", ["lake"])
 
 
 def _upsert_delta(spark, rows, in_base):
@@ -61,10 +61,9 @@ def _upsert_delta(spark, rows, in_base):
     )
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_patch_mode_resolution_and_fold(spark, tmp_path, fmt):
-    cls = FORMATS[fmt]
-    t = cls.create(
+    t = LakeTable.create(
         spark, str(tmp_path / "h"), HIST, "doc_id", n_buckets=4,
         merge_on_read=PATCH_MOR,
     )
@@ -105,10 +104,9 @@ def test_patch_mode_resolution_and_fold(spark, tmp_path, fmt):
     assert got2[("a", 1)] == closed2 and len(got2) == 3
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_upsert_mode_lww_guard_and_fold(spark, tmp_path, fmt):
-    cls = FORMATS[fmt]
-    u = cls.create(
+    u = LakeTable.create(
         spark, str(tmp_path / "t"), TGT, "doc_id", n_buckets=4,
         merge_on_read=UPSERT_MOR,
     )
@@ -148,22 +146,21 @@ def test_upsert_mode_lww_guard_and_fold(spark, tmp_path, fmt):
     }
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_compaction_racing_upsert_writer_conflicts(spark, tmp_path, fmt):
     """The realistic race (round-3 review ask): a pipeline merge_append
     planned BEFORE a compaction commits must not land stale _in_base
     flags — the rebase detects the fold and raises; re-planning from the
     fresh state converges with no lost update."""
-    cls = FORMATS[fmt]
     path = str(tmp_path / "t")
-    cls.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
-    w1 = cls.load(spark, path)
+    LakeTable.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
+    w1 = LakeTable.load(spark, path)
     w1.merge_append(
         None, _upsert_delta(spark, [("a", "a1", 1)], False),
         buckets=[0], batch_key="0",
     )
     # writer plans an update against the un-compacted state…
-    w2 = cls.load(spark, path)
+    w2 = LakeTable.load(spark, path)
     # …compaction folds the lane first
     w1.refresh().compact(max_files_per_bucket=0)
     with pytest.raises(CommitConflict):
@@ -177,7 +174,7 @@ def test_compaction_racing_upsert_writer_conflicts(spark, tmp_path, fmt):
         None, _upsert_delta(spark, [("a", "a2", 5)], True),
         buckets=[0], batch_key="1",
     )
-    head = cls.load(spark, path)
+    head = LakeTable.load(spark, path)
     assert {r.doc_id: r.v for r in head.read().collect()} == {"a": "a2"}
     assert head.has_batch("0") and head.has_batch("1")
 
@@ -231,53 +228,6 @@ def test_compaction_trigger_counts_delta_files(spark, tmp_path):
     assert not t.delta_stats()
 
 
-def test_deltalog_satisfies_protocol_and_checkpoints(spark, tmp_path):
-    t = DeltaLogTable.create(
-        spark, str(tmp_path / "t"), TGT, "doc_id", n_buckets=2
-    )
-    assert isinstance(t, TableFormat)
-    for i in range(12):  # crosses CHECKPOINT_EVERY
-        t.append(
-            spark.createDataFrame([(f"d{i}", f"v{i}", i)], TGT),
-            batch_key=str(i),
-        )
-    assert any(
-        n.startswith("checkpoint-") for n in os.listdir(str(tmp_path / "t" / "_log"))
-    )
-    # reload reconstructs from checkpoint + tail
-    t2 = DeltaLogTable.load(spark, str(tmp_path / "t"))
-    assert t2.read().count() == 12
-    assert t2.has_batch("0") and t2.has_batch("11") and not t2.has_batch("12")
-    # time travel by log-prefix replay
-    assert t2.read(version=3).count() == 3
-    # schema evolution is a metaData action
-    assert t2.add_columns([StructField("extra", StringType())])
-    assert t2.read().filter(F.col("extra").isNull()).count() == 12
-    # vacuum after compaction: the retention window protects young
-    # unreferenced files by default (they may be a concurrent writer's
-    # in-flight commit, staged before its log entry)…
-    t2.compact(max_files_per_bucket=1)
-    assert t2.expire_snapshots() == 0
-    # …and removes them once aged past the window (retention=0 here)
-    assert t2.expire_snapshots(keep_last=1, retention_seconds=0) > 0
-    assert t2.read().count() == 12
-
-
-def test_deltalog_concurrent_writers_cas(spark, tmp_path):
-    path = str(tmp_path / "t")
-    DeltaLogTable.create(spark, path, TGT, "doc_id", n_buckets=2)
-    w1 = DeltaLogTable.load(spark, path)
-    w2 = DeltaLogTable.load(spark, path)
-    w1.append(spark.createDataFrame([("a", "x", 1)], TGT), batch_key="a-1")
-    w2.append(spark.createDataFrame([("b", "y", 1)], TGT), batch_key="b-1")
-    head = DeltaLogTable.load(spark, path)
-    assert {r.doc_id for r in head.read().collect()} == {"a", "b"}
-    assert head.has_batch("a-1") and head.has_batch("b-1")
-    # duplicate batch key across writers is skipped
-    w2.append(spark.createDataFrame([("a", "x", 1)], TGT), batch_key="a-1")
-    assert DeltaLogTable.load(spark, path).read().count() == 2
-
-
 def test_mor_read_resolves_deltas_without_base_shuffle(spark, tmp_path):
     """Scan-side scale pin: resolving the delta lane must BROADCAST the
     reduced delta side — the base scan never shuffles at read (the lane
@@ -329,7 +279,7 @@ def test_mor_read_resolves_deltas_without_base_shuffle(spark, tmp_path):
     assert "SortMergeJoin" not in p, p
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_dseq_assigned_at_commit_time_lost_race_keeps_order(spark, tmp_path, fmt):
     """Round-5 advice fix: the commit-order stamp must be assigned
     INSIDE the optimistic retry loop (per-file in the manifest / add
@@ -337,18 +287,17 @@ def test_dseq_assigned_at_commit_time_lost_race_keeps_order(spark, tmp_path, fmt
     that loses the CAS race and retries at a higher version must carry
     the higher stamp, so 'latest _dseq wins' resolves same-row patches
     from two racing writers deterministically in COMMIT order."""
-    cls = FORMATS[fmt]
     path = str(tmp_path / "h")
-    cls.create(spark, path, HIST, "doc_id", n_buckets=1, merge_on_read=PATCH_MOR)
-    w1 = cls.load(spark, path)
+    LakeTable.create(spark, path, HIST, "doc_id", n_buckets=1, merge_on_read=PATCH_MOR)
+    w1 = LakeTable.load(spark, path)
     w1.merge_append(
         spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
         buckets=[0], batch_key="seed",
     )
     # both writers plan at the same head version → both would have
     # stamped version+1 under write-time stamping
-    wa = cls.load(spark, path)
-    wb = cls.load(spark, path)
+    wa = LakeTable.load(spark, path)
+    wb = LakeTable.load(spark, path)
     t_first = datetime.datetime(2024, 1, 1)
     t_second = datetime.datetime(2025, 6, 1)
     wa.merge_append(
@@ -361,24 +310,20 @@ def test_dseq_assigned_at_commit_time_lost_race_keeps_order(spark, tmp_path, fmt
         None, spark.createDataFrame([("a", 1, t_second, False)], HIST),
         buckets=[0], batch_key="p-second",
     )
-    head = cls.load(spark, path)
+    head = LakeTable.load(spark, path)
     assert head.read().filter("doc_id='a' and lsn=1").first().valid_to_utc == t_second
     # manifest stamps are unique and strictly increasing in commit order
-    entries = (
-        head.snapshot.delta_files[0] if fmt == "lake" else head.state.delta_files[0]
-    )
-    dseqs = [e[2] for e in entries]
+    dseqs = [e[2] for e in head.snapshot.delta_files[0]]
     assert len(dseqs) == len(set(dseqs)) == 2
     assert dseqs == sorted(dseqs)
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_schema_evolution_across_uncompacted_delta_lane(spark, tmp_path, fmt):
     """Round-4 judge ask #6: add_columns BETWEEN two merge_appends —
     pre-evolution delta files must surface NULL for the new column when
     read both BEFORE and AFTER compaction folds the lane."""
-    cls = FORMATS[fmt]
-    u = cls.create(
+    u = LakeTable.create(
         spark, str(tmp_path / "t"), TGT, "doc_id", n_buckets=2,
         merge_on_read=UPSERT_MOR,
     )
@@ -399,8 +344,7 @@ def test_schema_evolution_across_uncompacted_delta_lane(spark, tmp_path, fmt):
 
 
 def test_laketable_expire_removes_folded_delta_files(spark, tmp_path):
-    """Round-4 judge ask #7 (symmetric to the deltalog pin): after
-    compaction folds the lane, expire_snapshots deletes the folded
+    """After compaction folds the lane, expire_snapshots deletes the folded
     delta files from disk — and never live ones."""
     t = LakeTable.create(
         spark, str(tmp_path / "h"), HIST, "doc_id", n_buckets=1,
@@ -427,12 +371,11 @@ def test_laketable_expire_removes_folded_delta_files(spark, tmp_path):
     assert row.valid_to_utc == closed
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_lane_bytes_compaction_trigger(spark, tmp_path, fmt):
     """Round-4 judge ask #4: compaction triggers on manifest-carried
     delta-lane BYTES, independent of the file-count threshold."""
-    cls = FORMATS[fmt]
-    t = cls.create(
+    t = LakeTable.create(
         spark, str(tmp_path / "h"), HIST, "doc_id", n_buckets=1,
         merge_on_read=PATCH_MOR,
     )
@@ -456,18 +399,17 @@ def test_lane_bytes_compaction_trigger(spark, tmp_path, fmt):
     assert not t.delta_stats() and not t.delta_bytes()
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_upsert_concurrent_base_append_conflicts(spark, tmp_path, fmt):
     """Round-5 advice fix: a concurrent plain append() of NEW keys into
     a touched bucket changes base row-id membership, so an in-flight
     upsert merge_append's _in_base=False flags are stale — it must
     raise CommitConflict (prefix-compare used to let it rebase, which
     read back duplicate rows)."""
-    cls = FORMATS[fmt]
     path = str(tmp_path / "t")
-    cls.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
-    w1 = cls.load(spark, path)
-    w2 = cls.load(spark, path)  # plans against the pre-append state
+    LakeTable.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
+    w1 = LakeTable.load(spark, path)
+    w2 = LakeTable.load(spark, path)  # plans against the pre-append state
     w1.append(spark.createDataFrame([("a", "base", 1)], TGT))
     with pytest.raises(CommitConflict):
         w2.merge_append(
@@ -480,45 +422,18 @@ def test_upsert_concurrent_base_append_conflicts(spark, tmp_path, fmt):
         None, _upsert_delta(spark, [("a", "a2", 5)], True),
         buckets=[0], batch_key="1",
     )
-    rows = cls.load(spark, path).read().collect()
+    rows = LakeTable.load(spark, path).read().collect()
     assert [(r.doc_id, r.v) for r in rows] == [("a", "a2")]
 
 
-def test_deltalog_load_missing_table_fails_fast(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
-        DeltaLogTable.load(spark, str(tmp_path / "nope"))
-
-
-def test_deltalog_time_travel_uses_checkpoint_and_guards_vacuum(spark, tmp_path):
-    """Round-5 advice fix: VERSION AS OF replays from the newest
-    checkpoint <= version (not from v0), and a time travel whose state
-    references vacuumed data files raises a clear error instead of a
-    mid-job FileNotFoundException."""
-    t = DeltaLogTable.create(spark, str(tmp_path / "t"), TGT, "doc_id", n_buckets=1)
-    for i in range(13):  # crosses CHECKPOINT_EVERY=10
-        t.append(spark.createDataFrame([(f"d{i}", f"v{i}", i)], TGT), batch_key=str(i))
-    # checkpoint-bounded replay: state at v12 must come from ckpt-10 + tail
-    st = t._state_at(12)
-    assert st.version == 12
-    assert t.read(version=12).count() == 12
-    pre_compact = t.version
-    t.compact(max_files_per_bucket=1)
-    t.expire_snapshots(keep_last=1, retention_seconds=0)
-    with pytest.raises(FileNotFoundError, match="vacuum"):
-        t.read(version=pre_compact)
-    # head still reads fine
-    assert t.read().count() == 13
-
-
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_fold_delta_lane_upsert_semantics_and_tie_order(spark, tmp_path, fmt):
     """Minor (delta-lane) compaction: N delta files per bucket collapse
     to ONE survivor file per bucket WITHOUT touching base — and the
     folded file's manifest _dseq is the MAX of the folded stamps, so
     earliest-commit-wins ties against commits appended AFTER the fold
     still resolve in true commit order."""
-    cls = FORMATS[fmt]
-    u = cls.create(
+    u = LakeTable.create(
         spark, str(tmp_path / "t"), TGT, "doc_id", n_buckets=1,
         merge_on_read=UPSERT_MOR,
     )
@@ -553,10 +468,9 @@ def test_fold_delta_lane_upsert_semantics_and_tie_order(spark, tmp_path, fmt):
     assert u.read().filter("doc_id = 'd'").count() == 0
 
 
-@pytest.mark.parametrize("fmt", ["lake", "delta"])
+@LAKE
 def test_fold_delta_lane_patch_mode(spark, tmp_path, fmt):
-    cls = FORMATS[fmt]
-    t = cls.create(
+    t = LakeTable.create(
         spark, str(tmp_path / "h"), HIST, "doc_id", n_buckets=1,
         merge_on_read=PATCH_MOR,
     )
