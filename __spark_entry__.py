@@ -64,7 +64,7 @@ def _q_gap_detection(spark, sf):
 
 
 def _q_scd2_intervals(spark, sf):
-    from data_pipeline_spark.operators.windows import scd2_close_windowed
+    from data_pipeline_spark.cdc.scd2 import scd2_close_windowed
 
     ev = _load(spark, sf, "events").select(
         "user_id", "event_id", F.col("ts").alias("valid_from_utc")

@@ -66,6 +66,19 @@ def expected_history(log: pd.DataFrame) -> pd.DataFrame:
     return ev[cols].reset_index(drop=True)
 
 
+def _assert_token_arrays_equal(a: pd.DataFrame, e: pd.DataFrame, what: str) -> None:
+    """EXACT token-array equality, row by row, of two aligned frames."""
+    for i, (ta, te) in enumerate(zip(a["tokens"], e["tokens"])):
+        ta = np.asarray(ta, dtype=np.int64) if ta is not None else None
+        te = np.asarray(te, dtype=np.int64) if te is not None else None
+        if ta is None or te is None:
+            assert ta is te, f"tokens null mismatch at row {i} ({a['doc_id'][i]})"
+        else:
+            assert ta.shape == te.shape and (ta == te).all(), (
+                f"token arrays differ for {what} {a['doc_id'][i]}"
+            )
+
+
 def assert_tokens_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> None:
     """Row-by-row equivalence with EXACT token-array equality per doc_id
     (BASELINE.json invariant)."""
@@ -78,12 +91,28 @@ def assert_tokens_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> None:
             av = a[col].where(pd.notna(a[col]), None).tolist()
             ev_ = e[col].where(pd.notna(e[col]), None).tolist()
             assert av == ev_, f"column {col} differs"
-    for i, (ta, te) in enumerate(zip(a["tokens"], e["tokens"])):
-        ta = np.asarray(ta, dtype=np.int64) if ta is not None else None
-        te = np.asarray(te, dtype=np.int64) if te is not None else None
-        if ta is None or te is None:
-            assert ta is te, f"tokens null mismatch at row {i} ({a['doc_id'][i]})"
-        else:
-            assert ta.shape == te.shape and (ta == te).all(), (
-                f"token arrays differ for doc {a['doc_id'][i]}"
-            )
+    _assert_token_arrays_equal(a, e, "doc")
+
+
+def assert_history_equal(pipeline, log: pd.DataFrame) -> None:
+    """The pipeline's SCD2 history equals ``expected_history(log)`` row
+    for row: (doc_id, lsn, op, tokens, valid_from, valid_to, is_current).
+    Timestamps compare as epoch µs — the 9999-12-31 open bound overflows
+    pandas' datetime64[ns]."""
+    cols = ["doc_id", "lsn", "op", "is_current", "valid_from_us", "valid_to_us"]
+    actual = pipeline.history_df().selectExpr(
+        "doc_id", "lsn", "op", "tokens", "is_current",
+        "unix_micros(valid_from_utc) AS valid_from_us",
+        "unix_micros(valid_to_utc) AS valid_to_us",
+    ).toPandas()
+    exp = expected_history(log)
+    expected = exp.assign(
+        valid_from_us=exp["valid_from_utc"].astype("datetime64[us]").astype(np.int64),
+        valid_to_us=exp["valid_to_utc"].astype("datetime64[us]").astype(np.int64),
+    )
+    a = actual.sort_values(["doc_id", "lsn"]).reset_index(drop=True)
+    e = expected.sort_values(["doc_id", "lsn"]).reset_index(drop=True)
+    assert len(a) == len(e), f"history rows {len(a)} != expected {len(e)}"
+    for col in cols:
+        assert a[col].tolist() == e[col].tolist(), f"history column {col} differs"
+    _assert_token_arrays_equal(a, e, "version of doc")

@@ -51,18 +51,15 @@ class CdcPipeline:
         base_dir: str,
         n_buckets: int = 16,
         enable_history: bool = True,
-        collect_metrics: bool = True,
         compact_every: int = 8,
         max_files_per_bucket: int = 8,
         max_delta_bytes_per_bucket: int = 128 * 1024 * 1024,
-        expire_snapshots: bool = False,
         scd2_check_cols: list[str] | None = None,
         lineage_mode: str = "partition",
     ):
         self.spark = spark
         self.base_dir = os.path.abspath(base_dir)
         self.enable_history = enable_history
-        self.collect_metrics = collect_metrics
         self.compact_every = compact_every
         self.max_files_per_bucket = max_files_per_bucket
         # lane-SIZE compaction trigger, checked EVERY batch (a manifest
@@ -71,7 +68,6 @@ class CdcPipeline:
         # compact_every — is folded on bytes before its read-side
         # resolution degrades toward mor.py's forced-broadcast ceiling
         self.max_delta_bytes_per_bucket = max_delta_bytes_per_bucket
-        self.expire_snapshots = expire_snapshots
         # optional check-cols SCD2 (C4): only attr-hash-changed updates
         # open history versions; None = version every distinct lsn
         self.scd2_check_cols = scd2_check_cols
@@ -202,7 +198,7 @@ class CdcPipeline:
 
         # NOTE: no separate arrival-dedup pass — at-least-once duplicate
         # deliveries collapse inside the merge's max_by reduce (payload-
-        # identical copies) and inside the history apply's kernel +
+        # identical copies) and inside the history apply's closure +
         # bucket-exchange reduce (first arrival wins), so the batch is
         # scanned rather than materialized into a 3×-copied cache.
 
@@ -214,9 +210,7 @@ class CdcPipeline:
         # stays per-table (each commit carries the batch manifest).
         stats: dict = {"batch_id": batch_id}
 
-        observed = (
-            self.collect_metrics and self.lineage_mode == "observed"
-        )
+        observed = self.lineage_mode == "observed"
 
         def _merge():
             # the merge's per-(bucket, key) max_by reduce IS the LWW:
@@ -267,7 +261,7 @@ class CdcPipeline:
             self.dead_letter.append(dl, batch_key=bkey)
 
         def _lineage():
-            if not self.collect_metrics or self.lineage_mode == "observed":
+            if observed:
                 return
             if self.lineage.has_batch(bkey):
                 return
@@ -412,9 +406,6 @@ class CdcPipeline:
                             self.max_delta_bytes_per_bucket
                         ),
                     )
-                if self.expire_snapshots:
-                    for t in maintained.values():
-                        t.expire_snapshots(keep_last=2)
             # compaction wall is reported separately: it is the MoR
             # lane's amortized rewrite cost, paid every compact_every
             # batches instead of every batch (BENCH.md steady-state)

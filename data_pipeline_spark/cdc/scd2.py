@@ -14,26 +14,31 @@ previously-current row, and a late-arriving older version slots into the
 middle of the chain (bi-temporal correction) — so closure is recomputed
 for every affected key.
 
-Scale design — the closure kernel is NARROW and its input is the
-CHAIN SUFFIX.  Token payloads never cross the JVM↔Python boundary and
-the full-width data is shuffled exactly once per batch:
+Scale design — the closure runs on a NARROW frame holding only the
+CHAIN SUFFIX.  Token payloads never enter the closure, and the
+full-width data is shuffled exactly once per batch:
 
   1. per-key ``min(incoming lsn)`` (batch-sized, broadcast);
   2. existing versions projected to (key, lsn, op, valid_from, stored
      validity) — a column-pruned scan — PRUNED to rows with
      lsn >= min(incoming lsn) plus the single insertion-predecessor
      row per key (round 4): closure is invariant for anything older,
-     so per-batch kernel volume is O(batch) for in-order streams
+     so per-batch closure volume is O(batch) for in-order streams
      instead of O(full history of affected keys);
   3. replay guard: cross-batch re-deliveries of versions already in
-     the table collapse inside the reduces — the narrow kernel and the
-     full-width min_by both pick the STORED row over a re-delivered
-     copy (``_is_new`` sorts stored-first), so no anti-join pass is
-     needed;
-  4. **groupBy().applyInPandas over Arrow batches** (north_star
-     requirement) computes lead(valid_from)-1s per key on the narrow
-     frame — thousands of keys per Arrow batch, vectorized pandas, no
-     per-row Python;
+     the table collapse inside the closure and the full-width reduce —
+     both pick the STORED row over a re-delivered copy (``_is_new``
+     sorts stored-first), so no anti-join pass is needed;
+  4. the closure is ONE Spark window over (key ORDER BY lsn, _is_new,
+     valid_from): ``lag(lsn)`` drops duplicate copies of a version,
+     then ``scd2_close_windowed`` — the same rule the ``scd2_intervals``
+     query runs — sets lead(valid_from)-1s; both windows share one
+     exchange and one sort.  This departs from BASELINE, which names
+     ``groupBy().applyInPandas`` for this step: the closure is a Spark
+     window, a compiled JVM operator, and the CDC apply path starts no
+     Python worker.  The engine's other Arrow UDFs are unchanged
+     (``applyInPandasWithState`` in cdc/stateful.py, ``mapInPandas`` in
+     sources/xml.py and operators/multimodal.py);
   5. the closure delta (changed rows only, flagged insert-vs-stored)
      drives a merge-on-read write: new versions append as base files
      already carrying final validity, and validity changes of STORED
@@ -48,112 +53,17 @@ the same algorithm.
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..table.laketable import BUCKET_COL, LakeTable
 from ..table.mor import require_mode
 from .merge import reduce_partitions
 from .schema import END_OF_TIME
 
-_END_OF_TIME_TS = pd.Timestamp(END_OF_TIME).as_unit("us")
-
 #: distinct changed keys up to which the per-key planning frames
 #: (min incoming lsn, insertion predecessor) are broadcast
 BROADCAST_MAX_DOCS = 500_000
-#: hash groups of the closure kernel's applyInPandas — each group holds
-#: many keys, so Arrow batch + pandas-vector costs amortize
-CLOSURE_GROUPS = 64
-
-
-def _make_close_kernel(key: str, group_col: str):
-    """Vectorized validity-range closure over a narrow (key, lsn, op,
-    valid_from) frame — one group = many keys (kept large by grouping on
-    a hash of the key, so Arrow batch + pandas-vector costs amortize).
-
-    valid_to = lead(valid_from) over (partition by key order by lsn)
-    minus 1s (close_prior_versions.sql:22,44); last version stays open at
-    END_OF_TIME and is current unless it is a delete tombstone.
-
-    Timestamps are microsecond-unit throughout: Spark timestamps are µs
-    and the 9999-12-31 sentinel overflows pandas' datetime64[ns].
-    """
-    import numpy as np
-
-    def _close(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=[group_col])
-        # dedup inside the kernel: at-least-once delivery duplicates of
-        # the same (key, lsn) — and replay re-deliveries of rows already
-        # in the table — collapse to ONE version: the stored row when
-        # present (_is_new=False sorts first), else the first-arrival
-        # copy (min valid_from = min ingest_ts).  The full-width reduce
-        # in apply_history makes the identical pick.
-        pdf = pdf.sort_values(
-            [key, "lsn", "_is_new", "valid_from_utc"], kind="mergesort"
-        )
-        pdf = pdf.drop_duplicates([key, "lsn"], keep="first")
-        pdf["valid_from_utc"] = pdf["valid_from_utc"].astype("datetime64[us]")
-        nxt = (
-            pdf.groupby(key)["valid_from_utc"]
-            .shift(-1)
-            .to_numpy(dtype="datetime64[us]")
-        )
-        missing = pd.isna(nxt)
-        valid_to = nxt - np.timedelta64(1, "s")
-        valid_to[missing] = np.datetime64(END_OF_TIME.replace(" ", "T"), "us")
-        is_current = missing & (pdf["op"] != "D").to_numpy()
-        # DELTA output: only rows whose validity actually changed — new
-        # versions and neighbours of inserts.  In an append-mostly
-        # stream that is O(batch), not O(history of affected keys),
-        # which keeps the join-back broadcast small.  Stored validity
-        # arrives as exact int64 µs (-1 for new rows): the 9999-12-31
-        # sentinel overflows a ns-datetime and loses precision in
-        # float64, int64 µs does neither.
-        stored_vt_us = pdf["_stored_vt_us"].to_numpy(dtype="int64")
-        stored_ic = pdf["_stored_ic"].to_numpy(dtype="bool")
-        valid_to_us = valid_to.astype("datetime64[us]").astype("int64")
-        changed = (
-            pdf["_is_new"].to_numpy(dtype="bool")
-            | (stored_vt_us != valid_to_us)
-            | (stored_ic != is_current)
-        )
-        return pd.DataFrame(
-            {
-                key: pdf[key].to_numpy()[changed],
-                "lsn": pdf["lsn"].to_numpy()[changed],
-                "valid_to_utc": valid_to[changed],
-                "is_current": is_current[changed],
-                # is_insert: the surviving copy is NEW (not stored) — the
-                # merge-on-read path appends these as base rows and turns
-                # the rest (changed validity of STORED rows) into patch
-                # deltas; re-delivered stored rows are never re-inserted
-                "is_insert": pdf["_is_new"].to_numpy(dtype="bool")[changed],
-            }
-        )
-
-    return _close
-
-
-def _closure_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("lsn", LongType()),
-            StructField("valid_to_utc", TimestampType()),
-            StructField("is_current", BooleanType()),
-            StructField("is_insert", BooleanType()),
-        ]
-    )
 
 
 def _change_gate(
@@ -172,7 +82,6 @@ def _change_gate(
     they match the current row's hash position in lsn order) — the
     reference merge has no bi-temporal path at all, so matching its
     gate on the sequential case is the parity target."""
-    from pyspark.sql.window import Window
 
     def _attr_hash(df: DataFrame):
         # a check column missing on one side (pre-schema-evolution
@@ -250,9 +159,9 @@ def apply_history(
     at-least-once duplicate deliveries of a (doc_id, lsn) and replays of
     versions already in the table; both collapse here (first arrival /
     stored row wins) with no separate dedup pass: the narrow closure
-    kernel dedups in pandas, and the full-width reduce rides the write's
-    repartition-by-bucket exchange, so the whole apply still costs ONE
-    full-width shuffle.
+    window drops duplicate copies by ``lag(lsn)``, and the full-width
+    reduce rides the write's repartition-by-bucket exchange, so the
+    whole apply still costs ONE full-width shuffle.
 
     check_cols: optional attr-change gate — when set, an update whose
     tracked attributes hash-match the version it would succeed opens NO
@@ -313,9 +222,9 @@ def apply_history(
     small = n_docs <= BROADCAST_MAX_DOCS
     maybe_bcast = F.broadcast if small else (lambda df: df)
 
-    # Under patch-mode merge-on-read the kernel input can skip the
+    # Under patch-mode merge-on-read the closure input can skip the
     # delta-lane resolution join entirely: patches only ever rewrite
-    # DERIVED columns (valid_to_utc/is_current), and the kernel
+    # DERIVED columns (valid_to_utc/is_current), and the closure
     # recomputes those from the immutable (lsn, valid_from) chain — the
     # stored values are used solely to filter UNCHANGED rows out of the
     # delta output.  Reading the un-patched base makes that filter
@@ -330,11 +239,11 @@ def apply_history(
 
     # CHAIN-SUFFIX pruning (round 4): the closure of a stored version
     # can only change if a version is inserted at-or-before it in lsn
-    # order, so the kernel needs, per key, only the rows with
+    # order, so the closure needs, per key, only the rows with
     # lsn >= min(incoming lsn) PLUS the single insertion predecessor
     # (the largest stored lsn below it — for in-order streams that is
     # exactly the stored current row).  Everything older is closure-
-    # invariant and skipped.  This turns per-batch kernel volume from
+    # invariant and skipped.  This turns per-batch closure volume from
     # O(full history of affected keys) — which at uniformly-hashed CDC
     # batches is the whole table — into O(batch) for in-order streams,
     # while staying exact for mid-chain (bi-temporal) late arrivals.
@@ -377,21 +286,43 @@ def apply_history(
             F.lit(False).alias("_stored_ic"),
             F.lit(True).alias("_is_new"),
         )
-    ).withColumn("_g", F.pmod(F.xxhash64(F.col(key)), F.lit(CLOSURE_GROUPS)))
+    )
 
-    # the closure feeds BOTH writes (new base rows + patch deltas);
-    # without a persist the second write re-executes the entire narrow
-    # scan + kernel DAG — measured as ~2× the history wall.  The frame
-    # is narrow and batch-sized: memory-only cache, freed in `finally`.
+    # at-least-once duplicates of a (key, lsn) — and re-deliveries of
+    # stored versions — collapse to ONE version: the stored row when
+    # present (_is_new=False sorts first), else the first arrival (min
+    # valid_from; nulls last).  The full-width reduce below makes the
+    # identical pick.  The closure window reuses this window's exchange
+    # and sort: the filter between them keeps both.
+    order = ["lsn", "_is_new", F.col("valid_from_utc").asc_nulls_last()]
+    w = Window.partitionBy(key).orderBy(order)
+    versions = all_narrow.withColumn("_prev_lsn", F.lag("lsn").over(w)).filter(
+        ~F.col("_prev_lsn").eqNullSafe(F.col("lsn"))
+    )
+    # DELTA output: only rows whose validity actually changed — new
+    # versions and neighbours of inserts, O(batch) in an append-mostly
+    # stream.  Stored validity is exact int64 µs (-1 for new rows).
+    # The closure feeds BOTH writes (new base rows + patch deltas);
+    # without a persist the second write re-executes the narrow scan +
+    # closure DAG.  The frame is narrow and batch-sized: memory-only
+    # cache, freed in `finally`.
     closure = (
-        all_narrow.groupBy("_g")
-        .applyInPandas(_make_close_kernel(key, "_g"), schema=_closure_schema(key))
+        scd2_close_windowed(versions, key, order, "valid_from_utc", "op")
+        .filter(
+            F.col("_is_new")
+            | (F.unix_micros("valid_to_utc") != F.col("_stored_vt_us"))
+            | (F.col("is_current") != F.col("_stored_ic"))
+        )
+        # is_insert: the surviving copy is NEW — appended as a base row;
+        # the rest become patch deltas (stored rows are never re-inserted)
+        .select(key, "lsn", "valid_to_utc", "is_current",
+                F.col("_is_new").alias("is_insert"))
         .persist()
     )
     nparts = reduce_partitions(history, new_versions.sparkSession)
 
     # full width, deduped to one row per (key, lsn): first arrival wins
-    # (same pick as the kernel), on the write's bucket exchange
+    # (same pick as the closure), on the write's bucket exchange
     nv_full = nv
     for f in history.schema.fields:
         if f.name not in nv_full.columns:
@@ -451,6 +382,36 @@ def apply_history(
         ex_aff.unpersist()
     # changed_docs is an HLL estimate (±2%) when derived from the probe
     return {"buckets": sorted(affected), "changed_docs": n_docs}
+
+
+def scd2_close_windowed(
+    df: DataFrame,
+    key_col: str,
+    order_col: str | Column | list,
+    valid_from_col: str,
+    op_col: str | None = None,
+) -> DataFrame:
+    """The SCD2 closure rule (close_prior_versions.sql:22,44,55-71), as
+    a plain window — used by ``apply_history`` and the ``scd2_intervals``
+    query (SURVEY.md W8):
+
+        valid_to   = lead(valid_from) - 1s, else END_OF_TIME
+        is_current = last version && op != 'D'
+
+    ``order_col`` is one column or a list (Window.orderBy's argument)."""
+    w = Window.partitionBy(key_col).orderBy(order_col)
+    nxt = F.lead(F.col(valid_from_col)).over(w)
+    out = df.withColumn(
+        "valid_to_utc",
+        F.coalesce(
+            nxt - F.expr("INTERVAL 1 SECOND"),
+            F.lit(END_OF_TIME).cast("timestamp"),
+        ),
+    )
+    cur = nxt.isNull()
+    if op_col is not None:
+        cur = cur & (F.col(op_col) != "D")
+    return out.withColumn("is_current", cur)
 
 
 def as_of(history_df: DataFrame, ts) -> DataFrame:

@@ -1,8 +1,8 @@
+from ..cdc.scd2 import scd2_close_windowed
 from .windows import (
     dedup_first_arrival,
     latest_per_key,
     detect_sequence_gaps,
-    scd2_close_windowed,
 )
 from .joins import pit_join, date_spine, two_stage_fallback_join
 from .dedupe import (

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cdc.schema import END_OF_TIME
+# W8, the SCD2 closure, lives beside the history writer that also runs it
+from ..cdc.scd2 import scd2_close_windowed  # noqa: F401
 
 
 def dedup_first_arrival(
@@ -88,31 +89,6 @@ def gap_severity(
         .when(gap_size <= hi, "HIGH")
         .otherwise("CRITICAL")
     )
-
-
-def scd2_close_windowed(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    valid_from_col: str,
-    op_col: str | None = None,
-) -> DataFrame:
-    """W8 — pure-window SCD2 closure (the SQL-expressible twin of
-    cdc/scd2.py's applyInPandas kernel; close_prior_versions.sql:55-71):
-    valid_to = lead(valid_from) - 1s else end_of_time."""
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col).asc())
-    nxt = F.lead(F.col(valid_from_col)).over(w)
-    out = df.withColumn(
-        "valid_to_utc",
-        F.coalesce(
-            nxt - F.expr("INTERVAL 1 SECOND"),
-            F.lit(END_OF_TIME).cast("timestamp"),
-        ),
-    )
-    cur = nxt.isNull()
-    if op_col is not None:
-        cur = cur & (F.col(op_col) != "D")
-    return out.withColumn("is_current", cur)
 
 
 def consecutive_missing_streaks(

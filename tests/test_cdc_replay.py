@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_spark.cdc.oracle import (
+    assert_history_equal,
     assert_tokens_equal,
     expected_final_state,
     load_log,
@@ -40,11 +41,12 @@ def test_replay_matches_oracle(spark, log_dir, tmp_path):
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2)
     n = replay_batches(spark, log_dir, pipe, files_per_batch=2)
     assert n == 3
-    expected = expected_final_state(load_log(log_dir))
-    assert_tokens_equal(_final_pandas(pipe), expected)
+    log = load_log(log_dir)
+    assert_tokens_equal(_final_pandas(pipe), expected_final_state(log))
     # history closure invariant: exactly one current row per live doc
     cur = pipe.history_df().filter("is_current").groupBy("doc_id").count()
     assert cur.filter("count > 1").count() == 0
+    assert_history_equal(pipe, log)
 
 
 def test_replay_single_big_batch_same_result(spark, log_dir, tmp_path):
@@ -52,8 +54,9 @@ def test_replay_single_big_batch_same_result(spark, log_dir, tmp_path):
     across batches agree)."""
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=8, compact_every=0)
     replay_batches(spark, log_dir, pipe, files_per_batch=100)
-    expected = expected_final_state(load_log(log_dir))
-    assert_tokens_equal(_final_pandas(pipe), expected)
+    log = load_log(log_dir)
+    assert_tokens_equal(_final_pandas(pipe), expected_final_state(log))
+    assert_history_equal(pipe, log)
 
 
 def test_idempotent_replay_of_same_batch(spark, log_dir, tmp_path):
@@ -64,8 +67,9 @@ def test_idempotent_replay_of_same_batch(spark, log_dir, tmp_path):
     v_before = pipe.target.version
     # replay every batch a second time with the same epoch ids
     replay_batches(spark, log_dir, pipe, files_per_batch=2, start_batch_id=0)
-    expected = expected_final_state(load_log(log_dir))
-    assert_tokens_equal(_final_pandas(pipe), expected)
+    log = load_log(log_dir)
+    assert_tokens_equal(_final_pandas(pipe), expected_final_state(log))
+    assert_history_equal(pipe, log)
     # manifest guard: no new data commits for target merges
     applied = pipe.target.snapshot.applied_batches
     assert set(applied.keys()) == {"0", "1", "2"}
@@ -176,9 +180,14 @@ def test_same_lsn_distinct_payload_tiebreak_is_deterministic(spark, tmp_path):
 def test_bitemporal_midchain_late_arrival_closure(spark, tmp_path):
     """C6 pin for the round-4 chain-suffix pruning: a LATE version whose
     lsn slots mid-chain must re-close its predecessor (which the pruned
-    kernel only sees via the insertion-predecessor row) and itself close
+    closure only sees via the insertion-predecessor row) and itself close
     at the successor's valid_from.  Exercised across batches so the
-    predecessor is a STORED row patched through the MoR delta lane."""
+    predecessor is a STORED row patched through the MoR delta lane.
+
+    Also pins the closure's duplicate rule: a second copy of lsn 10 in
+    the same batch loses to the earliest arrival, and a re-delivery of
+    the stored lsn 30 leaves the stored row (and the valid_to it gives
+    its predecessor) untouched."""
     import datetime
 
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA, END_OF_TIME
@@ -193,28 +202,33 @@ def test_bitemporal_midchain_late_arrival_closure(spark, tmp_path):
         spark.createDataFrame(
             [
                 ("k", 10, "I", [1], 1, None, None, 0, ts(1)),
+                ("k", 10, "I", [1], 1, None, None, 0, ts(2)),  # later copy
                 ("k", 30, "U", [3], 1, None, None, 0, ts(3)),
             ],
             CHANGE_EVENT_SCHEMA,
         ),
         0,
     )
-    # late mid-chain arrival: lsn 20 lands AFTER lsn 30 was applied
+    # late mid-chain arrival: lsn 20 lands AFTER lsn 30 was applied,
+    # beside a re-delivery of the stored lsn 30
     pipe.apply_batch(
         spark.createDataFrame(
-            [("k", 20, "U", [2], 1, None, None, 0, ts(99))], CHANGE_EVENT_SCHEMA
+            [
+                ("k", 20, "U", [2], 1, None, None, 0, ts(99)),
+                ("k", 30, "U", [3], 1, None, None, 0, ts(120)),  # re-delivery
+            ],
+            CHANGE_EVENT_SCHEMA,
         ),
         1,
     )
-    hist = {
-        r.lsn: (r.valid_to_utc, r.is_current)
-        for r in pipe.history_df().collect()
-    }
+    rows = pipe.history_df().collect()
+    hist = {r.lsn: (r.valid_from_utc, r.valid_to_utc, r.is_current) for r in rows}
     eot = datetime.datetime.fromisoformat(END_OF_TIME)
+    assert len(rows) == 3
     assert hist == {
-        10: (ts(99) - datetime.timedelta(seconds=1), False),
-        20: (ts(3) - datetime.timedelta(seconds=1), False),
-        30: (eot, True),
+        10: (ts(1), ts(99) - datetime.timedelta(seconds=1), False),
+        20: (ts(99), ts(3) - datetime.timedelta(seconds=1), False),
+        30: (ts(3), eot, True),
     }
 
 

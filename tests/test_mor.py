@@ -505,7 +505,7 @@ def test_pipeline_lane_bytes_trigger_minor_folds_then_escalates(spark, tmp_path)
     pipe = CdcPipeline(
         spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
         max_delta_bytes_per_bucket=1,  # everything is hot
-        enable_history=False, collect_metrics=False,
+        enable_history=False,
     )
     mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
         "ingest_ts", SF.current_timestamp()
@@ -527,7 +527,7 @@ def test_pipeline_lane_bytes_trigger_minor_folds_then_escalates(spark, tmp_path)
     # fold collapses it, and the survivor (still over 1 byte) escalates
     cold = CdcPipeline(
         spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
-        enable_history=False, collect_metrics=False,
+        enable_history=False,
     )
     for b in (1, 2):
         cold.apply_batch(
