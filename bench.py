@@ -152,13 +152,7 @@ def run_replay(
         spark,
         base,
         n_buckets=REPLAY_BUCKETS,
-        enable_history=True,
         compact_every=compact_every,
-        # observed lineage: per-batch metrics ride the merge action and
-        # the lineage row is a driver-side pyarrow micro-append — zero
-        # extra Spark jobs per epoch (the per-batch Amdahl constant is
-        # what caps N→4N scaling efficiency)
-        lineage_mode="observed",
     )
     t0 = time.perf_counter()
     n_batches = replay_batches(

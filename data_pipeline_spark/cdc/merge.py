@@ -65,7 +65,6 @@ def merge_into(
     table: LakeTable,
     changes: DataFrame,
     batch_id: int | str,
-    observation=None,
     affected: list[int] | None = None,
 ) -> dict:
     """Apply a change set to an upsert-mode merge-on-read table as one
@@ -131,19 +130,8 @@ def merge_into(
         ],
         batch_stamp.alias("_batch_id"),
         F.current_timestamp().alias("_applied_at"),
+        F.lit(False).alias("_inb"),
     )
-    if observation is not None:
-        # per-batch metrics ride the merge scan (SURVEY.md §2.4
-        # observe()): no extra Spark job — the aggregates accumulate as
-        # the write action streams past this node
-        d_side = d_side.observe(
-            observation,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-            F.sum(F.when(F.col(DOP_COL) == "D", 1).otherwise(0)).alias("deletes"),
-        )
-    d_side = d_side.withColumn("_inb", F.lit(False))
 
     value_cols = [c for c in d_side.columns if c not in (key, BUCKET_COL, "_inb")]
     # base-key side: a narrow bucket-pruned single-column scan, padded

@@ -45,21 +45,33 @@ VALID_OPS = ("I", "U", "D")
 
 
 class CdcPipeline:
+    """The four tables of one CDC replay under ``base_dir``, and the
+    per-batch apply that writes all of them:
+
+    * ``target`` — current state, merge-on-read upsert (``merge_into``);
+    * ``history`` — every SCD2 version, merge-on-read patch
+      (``apply_history``), bucketed like the target so one probe plans
+      both;
+    * ``lineage`` — one row per (batch, kafka partition): rows in,
+      deduped and dead-lettered, and the applied lsn span — the input of
+      ``control.jobs.ControlRunner``;
+    * ``dead_letter`` — the rows that failed validation, with reasons.
+
+    ``scd2_check_cols`` switches history to check-cols SCD2 (an update
+    whose tracked columns are unchanged opens no version)."""
+
     def __init__(
         self,
         spark: SparkSession,
         base_dir: str,
         n_buckets: int = 16,
-        enable_history: bool = True,
         compact_every: int = 8,
         max_files_per_bucket: int = 8,
         max_delta_bytes_per_bucket: int = 128 * 1024 * 1024,
         scd2_check_cols: list[str] | None = None,
-        lineage_mode: str = "partition",
     ):
         self.spark = spark
         self.base_dir = os.path.abspath(base_dir)
-        self.enable_history = enable_history
         self.compact_every = compact_every
         self.max_files_per_bucket = max_files_per_bucket
         # lane-SIZE compaction trigger, checked EVERY batch (a manifest
@@ -71,15 +83,6 @@ class CdcPipeline:
         # optional check-cols SCD2 (C4): only attr-hash-changed updates
         # open history versions; None = version every distinct lsn
         self.scd2_check_cols = scd2_check_cols
-        # lineage granularity: "partition" = per-kafka-partition rows
-        # via a (column-pruned) aggregation job per batch; "observed" =
-        # one global row whose metrics ride the merge / dead-letter
-        # actions via observe() — zero extra aggregation jobs
-        # (SURVEY.md §2.4).  Observed mode cannot produce per-partition
-        # breakdowns or exact distinct counts (observe() has no groupBy
-        # and no count_distinct), so rows_deduped is null there.
-        assert lineage_mode in ("partition", "observed")
-        self.lineage_mode = lineage_mode
         self._batches_applied = 0
         # per-batch phase walls (seconds), appended by apply_batch.
         # Cost: a handful of perf_counter calls — always on.  This is
@@ -109,14 +112,18 @@ class CdcPipeline:
         self.target = tbl(
             "target", TARGET_SCHEMA_BASE, "doc_id", n_buckets, mor=TARGET_MOR
         )
-        self.history = (
-            tbl(
-                "history", HISTORY_SCHEMA_BASE, "doc_id", n_buckets,
-                mor=HISTORY_MOR,
-            )
-            if enable_history
-            else None
+        self.history = tbl(
+            "history", HISTORY_SCHEMA_BASE, "doc_id", n_buckets, mor=HISTORY_MOR
         )
+        # the fused probe computes one touched-bucket set for both
+        # tables, so both must hash keys into the same buckets
+        h, t = self.history, self.target
+        if (h.n_buckets, h.key_col) != (t.n_buckets, t.key_col):
+            raise ValueError(
+                f"history at {h.path} is bucketed by {h.n_buckets} x "
+                f"{h.key_col} but the target by {t.n_buckets} x "
+                f"{t.key_col}; both must be bucketed alike"
+            )
         self.lineage = tbl("lineage", LINEAGE_SCHEMA, "batch_id", 1)
         self.dead_letter = tbl("dead_letter", DEAD_LETTER_SCHEMA, "batch_id", 1)
 
@@ -168,8 +175,6 @@ class CdcPipeline:
                 F.when(~is_schema & failure.isNotNull(), 1).otherwise(0)
             ).alias("n_dead"),
             F.sum(F.when(valid, 1).otherwise(0)).alias("n_valid"),
-            F.min(F.when(valid, F.col("lsn"))).alias("min_lsn"),
-            F.max(F.when(valid, F.col("lsn"))).alias("max_lsn"),
         ).first()
         _ph["probe"] = round(_time.perf_counter() - _t0, 3)
         _ph["rows"] = int((probe["n_valid"] or 0) + (probe["n_dead"] or 0))
@@ -177,24 +182,16 @@ class CdcPipeline:
         affected = [int(b) for b in probe["bs"]]
         n_docs = int(probe["nd"] or 0)
         n_dead = int(probe["n_dead"] or 0)
-        n_valid = int(probe["n_valid"] or 0)
 
         # -- 2. additive schema evolution (metadata-only) ----------
         for ddl in ddls:
             fields = list(parse_ddl(ddl))
             self.target.add_columns(fields)
-            if self.history is not None:
-                self.history.add_columns(fields)
+            self.history.add_columns(fields)
 
         non_schema = df.filter(~is_schema)
         events = non_schema.filter(failure.isNull())
         dead = non_schema.filter(failure.isNotNull())
-        # the fused probe's bucket set is valid for the history table
-        # only when its bucket function matches the target's
-        history_probe_ok = self.history is not None and (
-            self.history.n_buckets == self.target.n_buckets
-            and self.history.key_col == self.target.key_col
-        )
 
         # NOTE: no separate arrival-dedup pass — at-least-once duplicate
         # deliveries collapse inside the merge's max_by reduce (payload-
@@ -210,34 +207,23 @@ class CdcPipeline:
         # stays per-table (each commit carries the batch manifest).
         stats: dict = {"batch_id": batch_id}
 
-        observed = self.lineage_mode == "observed"
-
         def _merge():
             # the merge's per-(bucket, key) max_by reduce IS the LWW:
             # multiple versions of a key collapse map-side (partial
             # aggregation = natural salting for hot keys) before the one
             # merge shuffle — no separate lww_reduce pass needed.
             if not self.target.has_batch(bkey):
-                obs = None
-                if observed:
-                    from pyspark.sql import Observation
-
-                    obs = Observation(f"merge-{bkey}")
                 stats["merge"] = merge_into(
-                    self.target, events, batch_id, observation=obs,
-                    affected=affected,
+                    self.target, events, batch_id, affected=affected
                 )
-                if obs is not None and stats["merge"]["buckets"]:
-                    # the merge action has completed → get() is immediate
-                    stats["observed_merge"] = obs.get
 
         def _history():
-            if self.history is not None and not self.history.has_batch(bkey):
+            if not self.history.has_batch(bkey):
                 stats["history"] = apply_history(
                     self.history, events, batch_id,
                     check_cols=self.scd2_check_cols,
-                    affected=affected if history_probe_ok else None,
-                    n_docs=n_docs if history_probe_ok else None,
+                    affected=affected,
+                    n_docs=n_docs,
                 )
 
         def _dead_letter():
@@ -261,16 +247,11 @@ class CdcPipeline:
             self.dead_letter.append(dl, batch_key=bkey)
 
         def _lineage():
-            if observed:
-                return
             if self.lineage.has_batch(bkey):
                 return
-            # min/max_lsn span VALID rows only — same definition in both
-            # lineage modes (observed mode can only see rows that reach
-            # the merge), so gap checks don't report phantom gaps when a
-            # deployment switches modes.  Valid-only is also the right
-            # semantic for continuity: a quarantined row was not applied,
-            # so its lsn must not extend the applied span.
+            # one row per kafka partition; min/max_lsn span VALID rows
+            # only: a quarantined row was not applied, so its lsn must
+            # not extend the applied span the gap checks read
             per_part = non_schema.groupBy("partition").agg(
                 F.count("*").alias("_all"),
                 F.sum(F.when(failure.isNotNull(), 1).otherwise(0)).alias(
@@ -294,10 +275,7 @@ class CdcPipeline:
 
         from concurrent.futures import ThreadPoolExecutor
 
-        _tables = [
-            t for t in (self.target, self.history, self.lineage, self.dead_letter)
-            if t is not None
-        ]
+        _tables = [self.target, self.history, self.lineage, self.dead_letter]
         _bytes0 = sum(t.bytes_written_total for t in _tables)
 
         def _timed(fn):
@@ -320,37 +298,6 @@ class CdcPipeline:
                 f.result()  # re-raise the first failure
         _ph["applies"] = round(_time.perf_counter() - _t0, 3)
 
-        # observed-mode lineage: one global row per batch, built from
-        # the fused probe (identical numbers ride the merge action via
-        # observe() — stats["observed_merge"] — but the probe is always
-        # available, including on crash-replay where the merge commit is
-        # manifest-skipped).  The write is a driver-side pyarrow
-        # micro-append: ZERO Spark jobs for lineage in this mode.
-        if observed and not self.lineage.has_batch(bkey):
-            rows_in = n_valid + n_dead
-            if rows_in == 0:
-                # empty batch: record the epoch without a zero row
-                # (matches partition mode, whose groupBy emits no rows)
-                self.lineage.record_batch(bkey, {"rows": 0})
-            else:
-                from datetime import datetime, timezone
-
-                self.lineage.append_rows(
-                    [
-                        {
-                            "batch_id": _stamp(batch_id),
-                            "partition": -1,
-                            "rows_in": rows_in,
-                            "rows_deduped": None,
-                            "rows_dead_letter": n_dead,
-                            "min_lsn": probe["min_lsn"],
-                            "max_lsn": probe["max_lsn"],
-                            "applied_at": datetime.now(timezone.utc),
-                        }
-                    ],
-                    batch_key=bkey,
-                )
-
         # -- 7. maintenance ----------------------------------------
         self._batches_applied += 1
         cadence_due = bool(
@@ -366,11 +313,7 @@ class CdcPipeline:
                 if nbytes > self.max_delta_bytes_per_bucket
             ]
 
-        maintained = {
-            name: t
-            for name, t in (("target", self.target), ("history", self.history))
-            if t is not None
-        }
+        maintained = {"target": self.target, "history": self.history}
         hot = {
             name: bs
             for name, t in maintained.items()
@@ -435,5 +378,4 @@ class CdcPipeline:
         return self.target.refresh().read()
 
     def history_df(self) -> DataFrame:
-        assert self.history is not None
         return self.history.refresh().read()

@@ -400,18 +400,21 @@ def scd2_close_windowed(
 
     ``order_col`` is one column or a list (Window.orderBy's argument)."""
     w = Window.partitionBy(key_col).orderBy(order_col)
-    nxt = F.lead(F.col(valid_from_col)).over(w)
-    out = df.withColumn(
-        "valid_to_utc",
-        F.coalesce(
-            nxt - F.expr("INTERVAL 1 SECOND"),
-            F.lit(END_OF_TIME).cast("timestamp"),
-        ),
-    )
+    # lead() is evaluated once, into a column both outputs read
+    out = df.withColumn("_next_from", F.lead(F.col(valid_from_col)).over(w))
+    nxt = F.col("_next_from")
     cur = nxt.isNull()
     if op_col is not None:
         cur = cur & (F.col(op_col) != "D")
-    return out.withColumn("is_current", cur)
+    return out.withColumns(
+        {
+            "valid_to_utc": F.coalesce(
+                nxt - F.expr("INTERVAL 1 SECOND"),
+                F.lit(END_OF_TIME).cast("timestamp"),
+            ),
+            "is_current": cur,
+        }
+    ).drop("_next_from")
 
 
 def as_of(history_df: DataFrame, ts) -> DataFrame:

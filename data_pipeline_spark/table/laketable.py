@@ -166,8 +166,6 @@ class LakeTable:
     merge_append       merge-on-read commit: new data files + equality-
                        delete/patch delta files in one snapshot (Iceberg
                        v2 row-level deletes / Hudi MoR delta commit)
-    append_rows        driver-side small append (Iceberg writers commit
-                       tiny metadata-lane rows the same way)
     record_batch       snapshot summary properties on an empty commit
                        (``snapshot.summary['batch-key']``)
     has_batch          scan snapshot summaries / a watermark table
@@ -184,7 +182,10 @@ class LakeTable:
     manifest-only commits, disjoint bucket replacements) and raises
     :class:`CommitConflict` on true conflicts (same-bucket replacement),
     mirroring Iceberg's validation-failure semantics.
-    ``has_batch``/``batch_key`` give cross-writer exactly-once.
+    ``has_batch``/``batch_key`` give cross-writer exactly-once.  A
+    write whose commit does not happen (conflict, lost races, batch
+    already applied) deletes the files it wrote, so no unreferenced
+    file is left for ``expire_snapshots`` to miss.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -394,7 +395,7 @@ class LakeTable:
         the batch-count cadence is folded on BYTES before its read-side
         resolution cost degrades toward the broadcast ceiling."""
         return {
-            b: sum(int(e[1] or 0) for e in fs)
+            b: sum(e[1] for e in fs)
             for b, fs in self.snapshot.delta_files.items()
             if fs
         }
@@ -572,6 +573,7 @@ class LakeTable:
         apply_fn,
         batch_key: str | None,
         batch_info: dict[str, Any] | None,
+        written: Iterable[dict[int, list]] = (),
     ) -> bool:
         """Optimistic-concurrency commit loop.
 
@@ -589,50 +591,62 @@ class LakeTable:
         turned out to be already applied by a concurrent writer (the
         exactly-once guard holds across writers, not just restarts).
 
+        ``written`` holds the files this writer wrote for the commit
+        (``{bucket: entries}`` per lane); when the commit does not
+        happen — batch already applied, conflict, lost races, any error
+        — they are dropped here, since no snapshot references them.
+
         Every snapshot stores ``removed_files`` — the parent files no
         longer referenced — so expire_snapshots is O(delta commits),
         not O(files on disk)."""
-        for _ in range(MAX_COMMIT_RETRIES):
-            snap = self._load_snapshot(self.current_version())
-            self._snapshot = snap
-            if batch_key is not None and _batch_applied(snap, str(batch_key)):
-                return False
-            files, schema, delta_files = apply_fn(snap)
-            parent_set = {f for fs in snap.files.values() for f in fs} | {
-                e[0] for fs in snap.delta_files.values() for e in fs
-            }
-            new_set = {f for fs in files.values() for f in fs} | {
-                e[0] for fs in delta_files.values() for e in fs
-            }
-            meta = {
-                "version": snap.version + 1,
-                "schema": (schema or snap.schema).json(),
-                "n_buckets": snap.n_buckets,
-                "key_col": snap.key_col,
-                "files": {str(b): fs for b, fs in files.items() if fs},
-                "delta_files": {
-                    str(b): fs for b, fs in delta_files.items() if fs
-                },
-                "merge_on_read": snap.merge_on_read,
-                "applied_batches": dict(snap.applied_batches),
-                "parent": snap.version,
-                "committed_at": _utcnow_iso(),
-                "watermarks": dict(snap.watermarks or {}),
-                "removed_files": sorted(parent_set - new_set),
-            }
-            if batch_key is not None:
-                meta["applied_batches"][str(batch_key)] = {
-                    "committed_at": meta["committed_at"],
-                    **(batch_info or {}),
+        committed = False
+        try:
+            for _ in range(MAX_COMMIT_RETRIES):
+                snap = self._load_snapshot(self.current_version())
+                self._snapshot = snap
+                if batch_key is not None and _batch_applied(snap, str(batch_key)):
+                    return False
+                files, schema, delta_files = apply_fn(snap)
+                parent_set = {f for fs in snap.files.values() for f in fs} | {
+                    e[0] for fs in snap.delta_files.values() for e in fs
                 }
-            _compact_applied_batches(meta["applied_batches"], meta["watermarks"])
-            if self._publish_cas(meta):
-                self._snapshot = self._load_snapshot(meta["version"])
-                return True
-        raise CommitConflict(
-            f"commit on {self.path} lost the CAS race {MAX_COMMIT_RETRIES} "
-            "times — pathological writer contention"
-        )
+                new_set = {f for fs in files.values() for f in fs} | {
+                    e[0] for fs in delta_files.values() for e in fs
+                }
+                meta = {
+                    "version": snap.version + 1,
+                    "schema": (schema or snap.schema).json(),
+                    "n_buckets": snap.n_buckets,
+                    "key_col": snap.key_col,
+                    "files": {str(b): fs for b, fs in files.items() if fs},
+                    "delta_files": {
+                        str(b): fs for b, fs in delta_files.items() if fs
+                    },
+                    "merge_on_read": snap.merge_on_read,
+                    "applied_batches": dict(snap.applied_batches),
+                    "parent": snap.version,
+                    "committed_at": _utcnow_iso(),
+                    "watermarks": dict(snap.watermarks or {}),
+                    "removed_files": sorted(parent_set - new_set),
+                }
+                if batch_key is not None:
+                    meta["applied_batches"][str(batch_key)] = {
+                        "committed_at": meta["committed_at"],
+                        **(batch_info or {}),
+                    }
+                _compact_applied_batches(meta["applied_batches"], meta["watermarks"])
+                if self._publish_cas(meta):
+                    committed = True
+                    self._snapshot = self._load_snapshot(meta["version"])
+                    return True
+            raise CommitConflict(
+                f"commit on {self.path} lost the CAS race {MAX_COMMIT_RETRIES} "
+                "times — pathological writer contention"
+            )
+        finally:
+            if not committed:
+                for new_files in written:
+                    self._drop_orphans(new_files)
 
     def _drop_orphans(self, new_files: dict[int, list]) -> None:
         """Remove just-written data files whose commit did not happen
@@ -695,13 +709,7 @@ class LakeTable:
             }
             return merged, None, deltas
 
-        try:
-            committed = self._commit(apply, batch_key, batch_info)
-        except Exception:
-            self._drop_orphans(new_files)
-            raise
-        if not committed:
-            self._drop_orphans(new_files)
+        self._commit(apply, batch_key, batch_info, written=[new_files])
 
     def append(
         self,
@@ -720,8 +728,7 @@ class LakeTable:
                 merged.setdefault(b, []).extend(fs)
             return merged, None, dict(snap.delta_files)
 
-        if not self._commit(apply, batch_key, batch_info):
-            self._drop_orphans(new_files)
+        self._commit(apply, batch_key, batch_info, written=[new_files])
 
     def merge_append(
         self,
@@ -816,15 +823,9 @@ class LakeTable:
                 )
             return merged, None, deltas
 
-        try:
-            committed = self._commit(apply, batch_key, batch_info)
-        except Exception:
-            self._drop_orphans(new_files)
-            self._drop_orphans(delta_new)
-            raise
-        if not committed:
-            self._drop_orphans(new_files)
-            self._drop_orphans(delta_new)
+        self._commit(
+            apply, batch_key, batch_info, written=[new_files, delta_new]
+        )
 
     def _dual_frame(
         self, new_rows: DataFrame, delta: DataFrame, prepartitioned: bool
@@ -860,51 +861,6 @@ class LakeTable:
             F.col(BUCKET_COL),
         )
         return d.unionByName(x)
-
-    def append_rows(
-        self,
-        rows: list[dict[str, Any]],
-        batch_key: str | None = None,
-        batch_info: dict[str, Any] | None = None,
-    ) -> None:
-        """Driver-side micro-append for metadata-lane tables (lineage,
-        control epochs): writes ONE parquet file via pyarrow directly —
-        zero Spark jobs — then commits it like any append.  Restricted
-        to single-bucket tables so no JVM hash is needed for placement
-        (pmod(x, 1) == 0 for every key).
-
-        This is the per-batch Amdahl cut: a 1-row lineage append as a
-        Spark job costs a full plan/schedule/commit round-trip per
-        epoch — constant driver time that does NOT shrink with more
-        executors (real Iceberg writers commit small metadata the same
-        driver-side way)."""
-        if self.n_buckets != 1:
-            raise ValueError("append_rows requires a single-bucket table")
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        arrow_fields = []
-        for f in self.schema.fields:
-            arrow_fields.append(pa.field(f.name, _arrow_type(f.dataType)))
-        cols = {
-            f.name: [r.get(f.name) for r in rows] for f in self.schema.fields
-        }
-        tbl = pa.Table.from_pydict(cols, schema=pa.schema(arrow_fields))
-        bdir = os.path.join(self._data_dir, "bucket=0")
-        os.makedirs(bdir, exist_ok=True)
-        fname = f"{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(bdir, f".tmp-{fname}")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(bdir, fname))
-        rel = os.path.join("data", "bucket=0", fname)
-
-        def apply(snap: Snapshot):
-            merged = {b: list(fs) for b, fs in snap.files.items()}
-            merged.setdefault(0, []).append(rel)
-            return merged, None, dict(snap.delta_files)
-
-        if not self._commit(apply, batch_key, batch_info):
-            self._drop_orphans({0: [rel]})
 
     def record_batch(
         self, batch_key: str, batch_info: dict[str, Any] | None = None
@@ -1047,13 +1003,7 @@ class LakeTable:
                 ] + head[len(planned):]
             return dict(snap.files), None, deltas
 
-        try:
-            committed = self._commit(apply, None, {"delta_fold": True})
-        except Exception:
-            self._drop_orphans(new)
-            raise
-        if not committed:
-            self._drop_orphans(new)
+        self._commit(apply, None, {"delta_fold": True}, written=[new])
         return victims
 
     def expire_snapshots(
@@ -1179,31 +1129,6 @@ def _compact_applied_batches(
         for n, k in items:
             if n <= cutoff:
                 del applied[k]
-
-
-def _arrow_type(dt):
-    """Spark type → pyarrow type for the metadata-lane schemas
-    (append_rows).  Timestamps are µs-UTC (isAdjustedToUTC=true) so
-    Spark's parquet reader surfaces TimestampType, matching what a
-    Spark-side write of the same schema produces."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    mapping = {
-        T.LongType: pa.int64(),
-        T.IntegerType: pa.int32(),
-        T.StringType: pa.string(),
-        T.BooleanType: pa.bool_(),
-        T.DoubleType: pa.float64(),
-        T.FloatType: pa.float32(),
-        T.TimestampType: pa.timestamp("us", tz="UTC"),
-        T.DateType: pa.date32(),
-    }
-    for k, v in mapping.items():
-        if isinstance(dt, k):
-            return v
-    raise TypeError(f"append_rows has no arrow mapping for {dt}")
 
 
 def _utcnow_iso() -> str:

@@ -37,16 +37,6 @@ DORD_COL = "_ord_ts"      # upsert mode: arrival tie-break at equal order key
 DINBASE_COL = "_in_base"  # upsert mode: row id existed in base at write
 
 
-def _stat_bytes(os_mod, paths: list[str]) -> int | None:
-    """Fallback for manifests written without sizes (never produced by
-    this engine's writers; kept so a hand-edited manifest degrades to a
-    stat instead of a crash)."""
-    try:
-        return sum(os_mod.path.getsize(p) for p in paths)
-    except OSError:
-        return None
-
-
 def validate_mor(cfg: dict, schema: StructType, key_col: str) -> None:
     mode = cfg.get("mode")
     if mode not in ("patch", "upsert"):
@@ -127,7 +117,7 @@ def read_delta_lane(
     spark: SparkSession,
     schema: StructType,
     mor: dict,
-    dfiles: list[tuple[str, int | None, int]],
+    dfiles: list[tuple[str, int, int]],
 ) -> DataFrame:
     """Scan a delta lane with its manifest ``_dseq`` attached: one scan
     per commit group (group count bounded by the compaction cadence),
@@ -203,7 +193,7 @@ def resolve_deltas(
     schema: StructType,
     mor: dict,
     base: DataFrame,
-    dfiles: list[tuple[str, int | None, int]],
+    dfiles: list[tuple[str, int, int]],
 ) -> DataFrame:
     """Merge a delta lane into a base scan; returns exactly `schema`.
 
@@ -213,20 +203,11 @@ def resolve_deltas(
     the compaction cadence) with the sequence number attached as a
     literal — the stamp lives in table metadata, never in the file, so
     an optimistic-commit retry can never publish a stale one."""
-    import os
-
     ids = list(mor["row_id_cols"])
     delta = read_delta_lane(spark, schema, mor, dfiles)
-    sizes = [sz for _p, sz, _d in dfiles]
-    dbytes = (
-        sum(sizes)
-        if all(sz is not None for sz in sizes)
-        else _stat_bytes(os, [p for p, _sz, _d in dfiles])
-    )
+    dbytes = sum(sz for _p, sz, _d in dfiles)
     bcast = (
-        F.broadcast
-        if dbytes is not None and dbytes < BROADCAST_DELTA_MAX_BYTES
-        else (lambda df: df)
+        F.broadcast if dbytes < BROADCAST_DELTA_MAX_BYTES else (lambda df: df)
     )
     if mor["mode"] == "patch":
         pcols = list(mor["patch_cols"])

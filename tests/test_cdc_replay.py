@@ -118,6 +118,44 @@ def test_dead_letter_and_lineage(spark, tmp_path):
     assert lin["rows_dead_letter"].sum() == 4
 
 
+def test_lineage_rows_are_per_partition(spark, tmp_path):
+    """Every batch writes one lineage row per kafka partition, with
+    exact duplicate counts and the applied lsn span of that partition
+    (the shape ControlRunner's gap/completeness/freshness jobs group
+    by)."""
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    rows = [
+        ("d1", 1, "I", [1], 1, None, None, 0, None),
+        ("d1", 1, "I", [1], 1, None, None, 0, None),  # redelivery
+        ("d1", 2, "U", [2], 1, None, None, 0, None),
+        ("d2", 5, "I", [9], 1, None, None, 3, None),
+        ("d2", 6, "D", None, None, None, None, 3, None),
+    ]
+    df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, compact_every=0)
+    pipe.apply_batch(df, 0)
+    pipe.apply_batch(df, 0)  # replayed epoch: no second set of rows
+    got = sorted(
+        (r.partition, r.rows_in, r.rows_deduped, r.rows_dead_letter,
+         r.min_lsn, r.max_lsn)
+        for r in pipe.lineage.refresh().read().collect()
+    )
+    assert got == [(0, 3, 1, 0, 1, 2), (3, 2, 0, 0, 5, 6)]
+
+
+def test_history_bucketed_unlike_target_is_refused(spark, tmp_path):
+    """One probe plans both tables, so a loaded history whose buckets
+    differ from the target's fails at construction, not mid-batch."""
+    import shutil
+
+    wh = str(tmp_path / "wh")
+    pipe = CdcPipeline(spark, wh, n_buckets=4)
+    shutil.rmtree(pipe.target.path)  # a new 8-bucket target beside it
+    with pytest.raises(ValueError, match="bucketed alike"):
+        CdcPipeline(spark, wh, n_buckets=8)
+
+
 def test_lww_and_delete_semantics(spark, tmp_path):
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
 
@@ -309,40 +347,6 @@ def test_scd2_check_cols_gate(spark, tmp_path):
     # target table is UNaffected by the gate (merge keeps lsn-LWW)
     tgt = {r.doc_id: r.lsn for r in pipe.current_state().collect()}
     assert tgt == {"a": 4}
-
-
-def test_observed_lineage_mode(spark, tmp_path):
-    """lineage_mode='observed': per-batch metrics ride the merge and
-    dead-letter actions via observe() — no aggregation job — and land
-    as one global lineage row per batch."""
-    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
-
-    rows = [
-        ("d1", 1, "I", [1, 2], 2, None, None, 0, None),
-        ("d1", 2, "U", [3], 1, None, None, 0, None),
-        ("d2", 5, "I", [9], 1, None, None, 1, None),
-        ("d2", 6, "D", None, None, None, None, 1, None),
-        (None, 7, "I", [1], 1, None, None, 1, None),     # dead: null key
-    ]
-    df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-    pipe = CdcPipeline(
-        spark, str(tmp_path / "wh"), n_buckets=4, compact_every=0,
-        lineage_mode="observed",
-    )
-    stats = pipe.apply_batch(df, 0)
-    assert stats["observed_merge"]["rows_in"] == 4
-    assert stats["observed_merge"]["min_lsn"] == 1
-    assert stats["observed_merge"]["max_lsn"] == 6
-    assert stats["observed_merge"]["deletes"] == 1
-    (lin,) = pipe.lineage.read().collect()
-    assert lin.partition == -1
-    assert lin.rows_in == 5           # 4 valid + 1 dead
-    assert lin.rows_dead_letter == 1
-    assert (lin.min_lsn, lin.max_lsn) == (1, 6)
-    assert lin.rows_deduped is None
-    # idempotent replay of the same epoch: no duplicate lineage row
-    pipe.apply_batch(df, 0)
-    assert pipe.lineage.refresh().read().count() == 1
 
 
 def test_check_cols_gate_reinsert_after_delete(spark, tmp_path):

@@ -180,52 +180,6 @@ def test_applied_batches_metadata_stays_bounded(spark, tmp_path):
     assert t2.has_batch("5") and t2.has_batch("control-7")
 
 
-def test_append_rows_driver_side_micro_append(spark, tmp_path):
-    """append_rows writes via pyarrow (no Spark job) yet must be
-    indistinguishable from a Spark append on read: schema, timestamp
-    semantics (µs UTC), nulls, manifest exactly-once."""
-    from datetime import datetime, timezone
-
-    from data_pipeline_spark.cdc.schema import LINEAGE_SCHEMA
-    from data_pipeline_spark.table.laketable import LakeTable
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "lin"), LINEAGE_SCHEMA, key_col="batch_id", n_buckets=1
-    )
-    ts = datetime(2026, 8, 17, 12, 0, 0, tzinfo=timezone.utc)
-    t.append_rows(
-        [
-            {
-                "batch_id": 7,
-                "partition": -1,
-                "rows_in": 10,
-                "rows_deduped": None,
-                "rows_dead_letter": 0,
-                "min_lsn": 1,
-                "max_lsn": 9,
-                "applied_at": ts,
-            }
-        ],
-        batch_key="7",
-    )
-    assert t.has_batch("7")
-    (row,) = t.read().collect()
-    assert (row.batch_id, row.rows_in, row.rows_deduped) == (7, 10, None)
-    assert row.applied_at == ts.replace(tzinfo=None)  # UTC session, naive repr
-    assert [f.name for f in t.read().schema.fields] == [
-        f.name for f in LINEAGE_SCHEMA.fields
-    ]
-    # a Spark-side append next to it reads back uniformly
-    t.append(t.read().withColumn("batch_id", row.batch_id + F.lit(1)), batch_key="8")
-    assert t.refresh().read().count() == 2
-
-    multi = LakeTable.create(
-        spark, str(tmp_path / "multi"), LINEAGE_SCHEMA, key_col="batch_id", n_buckets=4
-    )
-    with pytest.raises(ValueError, match="single-bucket"):
-        multi.append_rows([{"batch_id": 1}])
-
-
 # ---------------------------------------------------------------------------
 # multi-writer CAS (round-3: optimistic concurrency on the CURRENT pointer)
 # ---------------------------------------------------------------------------
@@ -273,12 +227,17 @@ def test_cas_replace_same_bucket_conflicts(spark, tmp_path):
     w1.replace_buckets(_mk(spark, [("a", [9], 1)]), [0])
     with pytest.raises(CommitConflict, match="rewritten concurrently"):
         w2.replace_buckets(_mk(spark, [("a", [7], 1)]), [0])
+    # an append that loses every CAS attempt must not strand its file
+    w3 = LakeTable.load(spark, path)
+    w3._publish_cas = lambda meta: False
+    with pytest.raises(CommitConflict, match="lost the CAS race"):
+        w3.append(_mk(spark, [("c", [5], 1)]))
     head = LakeTable.load(spark, path)
     (row,) = head.read().collect()
     assert row.tokens == [9]  # the first replacement won, nothing lost
-    # conflict left no stray files: every on-disk file is referenced by
-    # SOME snapshot (older versions keep their files for time travel;
-    # only w2's never-committed write must be gone)
+    # neither failed write left stray files: every on-disk file is
+    # referenced by SOME snapshot (older versions keep their files for
+    # time travel; only w2's and w3's never-committed writes must go)
     live = {
         os.path.basename(f)
         for v in range(head.version + 1)

@@ -505,7 +505,6 @@ def test_pipeline_lane_bytes_trigger_minor_folds_then_escalates(spark, tmp_path)
     pipe = CdcPipeline(
         spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
         max_delta_bytes_per_bucket=1,  # everything is hot
-        enable_history=False,
     )
     mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
         "ingest_ts", SF.current_timestamp()
@@ -520,29 +519,33 @@ def test_pipeline_lane_bytes_trigger_minor_folds_then_escalates(spark, tmp_path)
         f"d{i}" for i in range(20)
     }
     # both decisions land in the batch stats: one commit per bucket
-    # leaves the fold nothing to collapse, so escalation rewrote both
+    # leaves the fold nothing to collapse, so escalation rewrote both;
+    # a fresh history takes its first versions as base files, so its
+    # lane stays empty and cold
     assert stats["folded"] == {"target": []}
     assert stats["compacted"] == {"target": [0, 1]}
     # a lane of two commits per bucket that turns hot on the third: the
     # fold collapses it, and the survivor (still over 1 byte) escalates
-    cold = CdcPipeline(
-        spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
-        enable_history=False,
-    )
+    cold = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0)
     for b in (1, 2):
         cold.apply_batch(
             mk([(f"d{i}", 100 * b + i, "U", [b, i], 2, None, None, 0, None)
                 for i in range(20)]), b,
         )
     assert cold.target.delta_stats() == {0: 2, 1: 2}
+    # each update closes the stored version: one validity patch commit
+    # per bucket per batch in the history lane too
+    assert cold.history.delta_stats() == {0: 2, 1: 2}
     pipe.target.refresh()
+    pipe.history.refresh()
     stats = pipe.apply_batch(
         mk([(f"d{i}", 300 + i, "U", [3, i], 2, None, None, 0, None)
             for i in range(20)]), 3,
     )
-    assert stats["folded"] == {"target": [0, 1]}
-    assert stats["compacted"] == {"target": [0, 1]}
+    both = {"target": [0, 1], "history": [0, 1]}
+    assert stats["folded"] == stats["compacted"] == both
     assert not pipe.target.delta_stats()
+    assert not pipe.history.delta_stats()
     assert {r.lsn for r in pipe.target.read().collect()} == {
         300 + i for i in range(20)
     }

@@ -119,40 +119,17 @@ def test_ivf_cluster_cap_is_broadcast_anti_join(spark):
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan)
 
 
-def test_observed_merge_same_result(spark, tmp_path):
-    """observe() metrics ride the existing merge action — the merged
-    table must be identical with and without the observation node."""
-    from pyspark.sql import Observation
+def test_scd2_close_windowed_evaluates_lead_once(spark):
+    """valid_to_utc and is_current both derive from ONE lead() — the
+    window node must not compute the same lead twice."""
+    from data_pipeline_spark.cdc.scd2 import scd2_close_windowed
 
-    from data_pipeline_spark.cdc.merge import merge_into
-    from data_pipeline_spark.cdc.schema import (
-        CHANGE_EVENT_SCHEMA,
-        TARGET_MOR,
-        TARGET_SCHEMA_BASE,
-    )
-    from data_pipeline_spark.table.laketable import LakeTable
-
-    rows = [("d%d" % i, i, "I", [1, i], 2, None, None, 0, None) for i in range(50)]
-    changes = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-
-    def run(obs):
-        t = LakeTable.create(
-            spark,
-            str(tmp_path / ("t-obs" if obs else "t-plain")),
-            TARGET_SCHEMA_BASE,
-            key_col="doc_id",
-            n_buckets=4,
-            merge_on_read=TARGET_MOR,
-        )
-        o = Observation("m") if obs else None
-        merge_into(t, changes, 0, observation=o)
-        return t
-
-    plain = run(False)
-    observed = run(True)
-    assert (
-        plain.read().count() == observed.read().count() == 50
-    )
+    df = spark.createDataFrame(
+        [("a", 1, "I"), ("a", 2, "U")], "k string, lsn long, op string"
+    ).withColumn("valid_from_utc", F.current_timestamp())
+    out = scd2_close_windowed(df, "k", "lsn", "valid_from_utc", "op")
+    assert _plan(out).count("lead(") == 1
+    assert {r.lsn: r.is_current for r in out.collect()} == {1: False, 2: True}
 
 
 def test_mor_history_apply_no_extra_exchange(spark, tmp_path):
