@@ -8,7 +8,7 @@ from .schema import (
     DEAD_LETTER_SCHEMA,
     END_OF_TIME,
 )
-from .dedup import lww_reduce, dedup_arrivals
+from .dedup import lww_reduce
 from .merge import merge_into
 from .pipeline import CdcPipeline
 from .scd2 import apply_history, as_of, current
@@ -31,7 +31,6 @@ __all__ = [
     "DEAD_LETTER_SCHEMA",
     "END_OF_TIME",
     "lww_reduce",
-    "dedup_arrivals",
     "merge_into",
     "CdcPipeline",
     "apply_history",

@@ -1,10 +1,11 @@
-"""Dedup operators: at-least-once arrival dedup + last-writer-wins reduce.
+"""Last-writer-wins reduce (W2): one row per key, the latest version.
 
-Reference semantics:
-* W1 first-arrival dedup — `row_number() over (partition by rfq_id order
-  by _ingestion_time) = 1` (dbt_project/models/staging/stg_rfqs.sql:17-27);
-* W2 last-writer-wins — `row_number() over (partition by trade_id order
-  by amendment_version desc) = 1` (docs/identity.md:168-177).
+Reference semantics: `row_number() over (partition by trade_id order by
+amendment_version desc) = 1` (docs/identity.md:168-177).  Its sibling,
+W1 first-arrival dedup, is the window
+:func:`data_pipeline_spark.operators.windows.dedup_first_arrival`; the
+CDC apply path runs neither — its merge reduce collapses duplicate
+deliveries itself (``cdc/merge.py``).
 
 Scale design: the LWW reduce is the shuffle that precedes the MERGE, and
 hot doc_ids (zipf skew) would funnel into single reduce tasks.  We salt:
@@ -20,30 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def dedup_arrivals(
-    df: DataFrame,
-    key_cols: list[str] = ["doc_id", "lsn"],
-    arrival_col: str = "ingest_ts",
-) -> DataFrame:
-    """Collapse duplicate deliveries of the same (doc_id, lsn): first
-    arrival wins.  Payloads of true duplicates are identical, so this is
-    a correctness-neutral, deterministic pick (min arrival_col).
-
-    Implemented as min_by aggregation rather than a row_number window:
-    an aggregate gets map-side partial combine (no full sort per key),
-    which matters when duplicates are rare and keys are many.
-    """
-    others = [c for c in df.columns if c not in key_cols]
-    packed = F.struct(*[F.col(c) for c in others])
-    # min_by skips rows whose ordering value is NULL — coalesce to the
-    # epoch floor so records without an ingest timestamp still survive
-    order = F.coalesce(
-        F.col(arrival_col), F.lit("1900-01-01 00:00:00").cast("timestamp")
-    )
-    out = df.groupBy(*key_cols).agg(F.min_by(packed, order).alias("_row"))
-    return out.select(*key_cols, "_row.*")
 
 
 def lww_reduce(

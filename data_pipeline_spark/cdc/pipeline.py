@@ -257,7 +257,11 @@ class CdcPipeline:
                 F.sum(F.when(failure.isNotNull(), 1).otherwise(0)).alias(
                     "rows_dead_letter"
                 ),
-                F.count_distinct(F.col("doc_id"), F.col("lsn")).alias("_distinct"),
+                # duplicates among VALID rows only: count_distinct
+                # skips null keys/lsns, so a dead row must not count
+                F.count_distinct(
+                    F.when(failure.isNull(), F.col("doc_id")), F.col("lsn")
+                ).alias("_distinct"),
                 F.min(F.when(failure.isNull(), F.col("lsn"))).alias("min_lsn"),
                 F.max(F.when(failure.isNull(), F.col("lsn"))).alias("max_lsn"),
             )
@@ -265,7 +269,9 @@ class CdcPipeline:
                 F.lit(_stamp(batch_id)).cast("long").alias("batch_id"),
                 F.col("partition"),
                 F.col("_all").cast("long").alias("rows_in"),
-                (F.col("_all") - F.col("_distinct")).cast("long").alias("rows_deduped"),
+                (F.col("_all") - F.col("rows_dead_letter") - F.col("_distinct"))
+                .cast("long")
+                .alias("rows_deduped"),
                 F.col("rows_dead_letter").cast("long"),
                 "min_lsn",
                 "max_lsn",

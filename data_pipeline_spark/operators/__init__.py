@@ -1,7 +1,6 @@
 from ..cdc.scd2 import scd2_close_windowed
 from .windows import (
     dedup_first_arrival,
-    latest_per_key,
     detect_sequence_gaps,
 )
 from .joins import pit_join, date_spine, two_stage_fallback_join
@@ -22,7 +21,6 @@ from .multimodal import extract_features, sample_frames
 
 __all__ = [
     "dedup_first_arrival",
-    "latest_per_key",
     "detect_sequence_gaps",
     "scd2_close_windowed",
     "pit_join",

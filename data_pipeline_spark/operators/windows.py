@@ -3,14 +3,15 @@
 Each mirrors a reference pattern; all are plain Spark windows (Catalyst
 handles them natively; no UDFs).  At scale the window partition key is
 the shuffle key — these are used on (key) or (partition) columns that
-are high-cardinality, so the shuffle is well-spread; the LWW path in
-cdc/dedup.py uses salted aggregation instead of a window precisely
-because aggregation gets map-side partial combine.
+are high-cardinality, so the shuffle is well-spread.  W2, last-writer-
+wins per key, is not a window: ``cdc/dedup.py:lww_reduce`` uses salted
+aggregation precisely because aggregation gets map-side partial
+combine.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # W8, the SCD2 closure, lives beside the history writer that also runs it
@@ -26,19 +27,6 @@ def dedup_first_arrival(
     if isinstance(arrival_cols, str):
         arrival_cols = [arrival_cols]
     w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).asc() for c in arrival_cols])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def latest_per_key(
-    df: DataFrame, key_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """W2/W5 — last-writer-wins per key (docs/identity.md:168-177):
-    row_number() over (partition by key order by ord desc) = 1."""
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -8,10 +8,9 @@ orchestrator/orchestrator/validator.py:314-328).  This module loads
 that spec shape into the engine's FieldSpec/Rule model so a user
 declares sources in YAML instead of hand-building specs in Python.
 
-PyYAML is not guaranteed in the runtime, so a small YAML-subset parser
-(indentation maps, lists of maps, inline lists, quoted scalars,
-comments — everything the spec shape uses) is built in; when the real
-`yaml` module is importable it is preferred.
+Specs are parsed with PyYAML (``yaml.safe_load``): it must be installed
+wherever ``data_pipeline_spark.sources`` is imported (the package
+``__init__`` imports this module).
 """
 
 from __future__ import annotations
@@ -20,200 +19,15 @@ import fnmatch
 import os
 from dataclasses import dataclass, field
 
+import yaml
+
 from .readers import FieldSpec, ValidatedRead, read_csv_validated, read_json_validated
 from .rules import Rule
 
-# ----------------------------------------------------------------------
-# Minimal YAML subset parser
-# ----------------------------------------------------------------------
-
-
-def _strip_comment(line: str) -> str:
-    out = []
-    quote = None
-    for ch in line:
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in "\"'":
-            quote = ch
-            out.append(ch)
-        elif ch == "#":
-            break
-        else:
-            out.append(ch)
-    return "".join(out)
-
-
-def _scalar(s: str):
-    s = s.strip()
-    if not s:
-        return None
-    if s[0] in "\"'" and s.endswith(s[0]) and len(s) >= 2:
-        return s[1:-1]
-    if s.startswith("[") and s.endswith("]"):
-        inner = s[1:-1].strip()
-        if not inner:
-            return []
-        return [_scalar(p) for p in _split_inline(inner)]
-    low = s.lower()
-    if low in ("null", "~"):
-        return None
-    if low == "true":
-        return True
-    if low == "false":
-        return False
-    try:
-        return int(s)
-    except ValueError:
-        pass
-    try:
-        return float(s)
-    except ValueError:
-        pass
-    return s
-
-
-def _split_inline(inner: str) -> list[str]:
-    parts, buf, quote = [], [], None
-    for ch in inner:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in "\"'":
-            quote = ch
-            buf.append(ch)
-        elif ch == ",":
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
-    return parts
-
-
-def _indent(line: str) -> int:
-    return len(line) - len(line.lstrip(" "))
-
-
-def _split_kv(s: str) -> tuple[str, str] | None:
-    """Split `key: value` respecting quotes; None if not a mapping."""
-    quote = None
-    for i, ch in enumerate(s):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "\"'":
-            quote = ch
-        elif ch == ":" and (i + 1 == len(s) or s[i + 1] in " \t"):
-            return s[:i].strip(), s[i + 1 :].strip()
-        elif ch == ":" and i + 1 == len(s) - 0:
-            return s[:i].strip(), ""
-    if s.endswith(":"):
-        return s[:-1].strip(), ""
-    return None
-
-
-def _parse_block(lines: list[str], i: int, indent: int):
-    if lines[i].lstrip().startswith("- "):
-        return _parse_list(lines, i, indent)
-    return _parse_map(lines, i, indent)
-
-
-def _parse_map(lines: list[str], i: int, indent: int):
-    out: dict = {}
-    while i < len(lines):
-        line = lines[i]
-        if _indent(line) != indent or line.lstrip().startswith("- "):
-            break
-        kv = _split_kv(line.strip())
-        if kv is None:
-            raise ValueError(f"unparseable line: {line!r}")
-        k, v = kv
-        if v:
-            out[k] = _scalar(v)
-            i += 1
-        else:
-            i += 1
-            if i < len(lines) and _indent(lines[i]) > indent:
-                out[k], i = _parse_block(lines, i, _indent(lines[i]))
-            elif i < len(lines) and lines[i].lstrip().startswith("- ") and _indent(
-                lines[i]
-            ) == indent:
-                # lists are commonly indented at the SAME level as their key
-                out[k], i = _parse_list(lines, i, indent)
-            else:
-                out[k] = None
-    return out, i
-
-
-def _parse_list(lines: list[str], i: int, indent: int):
-    out: list = []
-    while i < len(lines):
-        line = lines[i]
-        if _indent(line) != indent or not line.lstrip().startswith("-"):
-            break
-        item = line.lstrip()[1:].strip()
-        if not item:
-            i += 1
-            if i < len(lines) and _indent(lines[i]) > indent:
-                val, i = _parse_block(lines, i, _indent(lines[i]))
-                out.append(val)
-            else:
-                out.append(None)
-            continue
-        kv = _split_kv(item)
-        if kv is None:
-            out.append(_scalar(item))
-            i += 1
-            continue
-        # list item that is a map: `- name: x` then continuation keys
-        # at a deeper indent than the dash
-        d: dict = {}
-        k, v = kv
-        item_indent = _indent(line) + (len(line.lstrip()) - len(item))
-        if v:
-            d[k] = _scalar(v)
-            i += 1
-        else:
-            i += 1
-            if i < len(lines) and _indent(lines[i]) > item_indent:
-                d[k], i = _parse_block(lines, i, _indent(lines[i]))
-            else:
-                d[k] = None
-        while (
-            i < len(lines)
-            and _indent(lines[i]) > indent
-            and not lines[i].lstrip().startswith("- ")
-        ):
-            cont, i = _parse_map(lines, i, _indent(lines[i]))
-            d.update(cont)
-        out.append(d)
-    return out, i
-
 
 def parse_yaml(text: str) -> dict:
-    """Parse the spec-shaped YAML subset (PyYAML when available)."""
-    try:
-        import yaml  # type: ignore
-
-        return yaml.safe_load(text)
-    except ImportError:
-        pass
-    lines = [
-        _strip_comment(raw).rstrip()
-        for raw in text.splitlines()
-    ]
-    lines = [ln for ln in lines if ln.strip() and ln.strip() != "---"]
-    if not lines:
-        return {}
-    val, idx = _parse_block(lines, 0, _indent(lines[0]))
-    if idx != len(lines):
-        raise ValueError(f"trailing unparsed content at line {idx}: {lines[idx]!r}")
-    return val
+    """Parse a spec document (an empty document reads as ``{}``)."""
+    return yaml.safe_load(text) or {}
 
 
 # ----------------------------------------------------------------------

@@ -4,10 +4,12 @@ The target environment has no Iceberg/Delta runtime jar, so the engine
 implements the subset of Iceberg semantics the CDC pipeline needs
 (SURVEY.md §2.10, §4) over public Spark APIs:
 
-* **Atomic snapshot commits** — data files are written first, then a new
-  versioned metadata JSON is published with ``os.replace`` (atomic on
-  POSIX); readers resolve the CURRENT pointer and never observe a
-  partial commit.  Mirrors Iceberg's snapshot + root-pointer protocol.
+* **Atomic snapshot commits** — a commit's data files are written
+  first (one Spark write), then a new versioned metadata JSON is
+  claimed by an exclusive-create hard link (atomic on POSIX; table
+  creation claims ``v0`` the same way); readers resolve the CURRENT
+  pointer and never observe a partial commit.  Mirrors Iceberg's
+  snapshot + root-pointer protocol.
 * **Hash-bucket partitioning on the merge key** — data lives under
   ``data/bucket=K/``; a MERGE only touches the buckets that contain
   affected keys, and ``replace_buckets`` (compaction) rewrites whole
@@ -64,6 +66,7 @@ implements the subset of Iceberg semantics the CDC pipeline needs
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -186,6 +189,11 @@ class LakeTable:
     write whose commit does not happen (conflict, lost races, batch
     already applied) deletes the files it wrote, so no unreferenced
     file is left for ``expire_snapshots`` to miss.
+
+    One write path: every writer stages its files through ``_stage``
+    (one Spark write, both lanes), rebases inside ``_commit`` under one
+    rule, ``_require_planned``, and publishes through ``_publish_cas``
+    — ``create`` too, which raises ``FileExistsError`` if it loses v0.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -235,7 +243,8 @@ class LakeTable:
             "committed_at": _utcnow_iso(),
             "merge_on_read": merge_on_read,
         }
-        tbl._publish(meta)
+        if not tbl._publish_cas(meta):  # another creator claimed v0
+            raise FileExistsError(f"LakeTable already exists at {path}")
         tbl._snapshot = tbl._load_snapshot(0)
         return tbl
 
@@ -283,16 +292,6 @@ class LakeTable:
             delta_files={int(k): v for k, v in m.get("delta_files", {}).items()},
             merge_on_read=m.get("merge_on_read"),
         )
-
-    def _publish(self, meta: dict[str, Any]) -> None:
-        """Unconditional publish — table creation only (v0)."""
-        v = meta["version"]
-        mpath = os.path.join(self._meta_dir, f"v{v}.json")
-        tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, mpath)
-        self._advance_current(v)
 
     def _publish_cas(self, meta: dict[str, Any]) -> bool:
         """Compare-and-swap publish: claim v{N}.json by hard link, which
@@ -442,15 +441,6 @@ class LakeTable:
         ]
         if not dfiles or not with_deltas:
             return base
-        return self._resolve_deltas(snap, base, dfiles)
-
-    def _resolve_deltas(self, snap: Snapshot, base: DataFrame, dfiles) -> DataFrame:
-        """Merge the delta lane into the base scan (Iceberg v2 / Hudi
-        MoR read path) — format-independent semantics live in
-        :func:`data_pipeline_spark.table.mor.resolve_deltas`."""
-        assert snap.merge_on_read is not None, (
-            "delta files on a table without merge_on_read"
-        )
         return resolve_deltas(
             self.spark, snap.schema, snap.merge_on_read, base, dfiles
         )
@@ -458,115 +448,100 @@ class LakeTable:
     # ------------------------------------------------------------------
     # write / commit
     # ------------------------------------------------------------------
-    def _write_data_files(
-        self, df: DataFrame, prepartitioned: bool = False
-    ) -> dict[int, list[str]]:
-        """Materialise df (bucketed on the key) as parquet; return
-        bucket -> new relative file paths.  Files land in a staging dir
-        first and are renamed into data/ (same-filesystem rename, cheap);
-        they become visible only via the subsequent metadata publish.
-
-        prepartitioned=True asserts the caller's df already carries
-        BUCKET_COL and is hash-partitioned by it (e.g. the output of a
-        repartition-by-bucket merge), so the write needs no shuffle and
-        still produces few files per bucket."""
-        df = self._coerce_data(df, prepartitioned)
-        return {
-            b: [rel for rel, _sz in entries]
-            for b, entries in self._stage_and_move(df, "data").items()
-        }
-
-    def _coerce_data(self, df: DataFrame, prepartitioned: bool) -> DataFrame:
-        keep_bucket = prepartitioned and BUCKET_COL in df.columns
-        for field in self.schema.fields:
-            if field.name not in df.columns:
-                df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-        cols = [F.col(f.name).cast(f.dataType) for f in self.schema.fields]
-        if keep_bucket:
-            return df.select(*cols, F.col(BUCKET_COL))
-        # repartition by bucket so each bucket's rows coalesce into
-        # few files (one writer task per bucket at sandbox scale; at
-        # 100 TB you'd allow several files per bucket per commit —
-        # still fine, compaction bounds the count).  2× bucket count
-        # partitions so buckets don't hash-collide into a straggler
-        # task (see merge.py).
-        df = df.select(*cols).withColumn(BUCKET_COL, self.bucket_of())
-        return df.repartition(2 * self.n_buckets, F.col(BUCKET_COL))
-
-    def _coerce_delta(self, df: DataFrame) -> DataFrame:
-        """Delta frames are batch-sized; no extra repartition is imposed
-        when the caller's frame already carries BUCKET_COL."""
-        if BUCKET_COL not in df.columns:
-            df = df.withColumn(BUCKET_COL, self.bucket_of())
-            df = df.repartition(2 * self.n_buckets, F.col(BUCKET_COL))
-        return df
-
-    def _write_delta_files(self, df: DataFrame) -> dict[int, list[list]]:
-        """Materialise a delta frame (already carrying BUCKET_COL and the
-        delta-lane system columns) under delta/bucket=K/; returns
-        bucket -> [rel_path, size_bytes] pairs (``_dseq`` is appended by
-        the commit loop, never written into the file)."""
-        return self._stage_and_move(self._coerce_delta(df), "delta")
-
-    def _stage_and_move(self, df: DataFrame, lane: str) -> dict[int, list[list]]:
-        """Write df partitioned by BUCKET_COL into a staging dir, then
-        rename the parquet files under <lane>/bucket=K/ (same-filesystem
-        rename, cheap); returns bucket -> [rel_path, size_bytes] pairs.
-        Files become visible only via the subsequent metadata publish."""
-        stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
-        df.write.partitionBy(BUCKET_COL).parquet(stage)
-        new_files: dict[int, list[list]] = {}
-        for b, src in self._stage_entries(stage, (f"{BUCKET_COL}=",)):
-            rel, size = self._place(src, lane, b)
-            new_files.setdefault(b, []).append([rel, size])
-        shutil.rmtree(stage)
-        return new_files
-
-    def _stage_dual(
-        self, df: DataFrame
+    def _stage(
+        self,
+        data: DataFrame | None = None,
+        delta: DataFrame | None = None,
+        prepartitioned: bool = False,
+        allowed: Iterable[int] | None = None,
     ) -> tuple[dict[int, list[str]], dict[int, list[list]]]:
-        """ONE Spark write action for a two-lane merge-on-read commit:
-        df carries ``_lane`` ('data'|'delta') + BUCKET_COL and is written
-        ``partitionBy(_lane, bucket)``.  Union-of-prepartitioned-frames
-        execution concatenates child partitions, so each side keeps its
-        bucket clustering and per-bucket file counts stay as low as two
-        separate writes — minus one whole job round-trip per batch (the
-        per-batch driver constant is what caps N→4N scaling)."""
+        """The one file writer.  Materialises ``data`` as base files
+        under ``data/bucket=K/`` and ``delta`` (carrying the lane's
+        system columns) under ``delta/bucket=K/`` in ONE Spark write;
+        returns bucket -> relative paths and bucket -> ``[rel_path,
+        size_bytes]`` (``_dseq`` is added by the commit loop, never
+        written into a file).  Files are staged, then renamed into place
+        (same filesystem, cheap); only the metadata publish makes them
+        visible.
+
+        Each lane's table columns are cast to the table's types.  A lane
+        carrying BUCKET_COL is taken as hash-partitioned by it — the data
+        lane only with ``prepartitioned=True`` — so it needs no shuffle;
+        any other lane is repartitioned by bucket (2× the bucket count,
+        so buckets do not hash-collide into a straggler task).  The lanes
+        are unioned by name and written ``partitionBy(_lane, bucket)``:
+        each file keeps a superset of its lane's read schema (parquet
+        projects by name) and union execution concatenates child
+        partitions, so each side keeps its bucket clustering.
+
+        A bucket outside ``allowed`` (the caller's planned set) drops
+        every file written and raises ``ValueError``."""
+        types = {f.name: f.dataType for f in self.schema.fields}
+
+        def bucketed(df: DataFrame) -> DataFrame:
+            if BUCKET_COL in df.columns:
+                return df
+            df = df.withColumn(BUCKET_COL, self.bucket_of())
+            return df.repartition(2 * self.n_buckets, F.col(BUCKET_COL))
+
+        lanes: dict[str, DataFrame] = {}
+        if data is not None:
+            if not prepartitioned:
+                data = data.drop(BUCKET_COL)
+            have = set(data.columns)
+            lanes["data"] = bucketed(
+                data.select(
+                    *[
+                        (F.col(c) if c in have else F.lit(None)).cast(t).alias(c)
+                        for c, t in types.items()
+                    ],
+                    *([BUCKET_COL] if BUCKET_COL in have else []),
+                )
+            )
+        if delta is not None:
+            lanes["delta"] = bucketed(
+                delta.select(
+                    *[
+                        F.col(c).cast(types[c]).alias(c) if c in types else c
+                        for c in delta.columns
+                    ]
+                )
+            )
+        files: dict[str, dict[int, list]] = {"data": {}, "delta": {}}
         stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
-        df.write.partitionBy("_lane", BUCKET_COL).parquet(stage)
-        data_files: dict[int, list[str]] = {}
-        delta_files: dict[int, list[list]] = {}
-        for lane in ("data", "delta"):
-            lane_stage = os.path.join(stage, f"_lane={lane}")
-            if not os.path.isdir(lane_stage):
-                continue
-            for b, src in self._stage_entries(lane_stage, (f"{BUCKET_COL}=",)):
-                rel, size = self._place(src, lane, b)
-                if lane == "data":
-                    data_files.setdefault(b, []).append(rel)
-                else:
-                    delta_files.setdefault(b, []).append([rel, size])
-        shutil.rmtree(stage)
-        return data_files, delta_files
-
-    @staticmethod
-    def _stage_entries(stage: str, prefixes) -> Iterable[tuple[int, str]]:
-        for entry in sorted(os.listdir(stage)):
-            if not entry.startswith(prefixes):
-                continue
-            b = int(entry.split("=", 1)[1])
-            for fname in sorted(os.listdir(os.path.join(stage, entry))):
-                if fname.endswith(".parquet"):
-                    yield b, os.path.join(stage, entry, fname)
-
-    def _place(self, src: str, lane: str, b: int) -> tuple[str, int]:
-        bdir = os.path.join(self.path, lane, f"bucket={b}")
-        os.makedirs(bdir, exist_ok=True)
-        new_name = f"{uuid.uuid4().hex}.parquet"
-        size = os.path.getsize(src)
-        self.bytes_written_total += size
-        os.replace(src, os.path.join(bdir, new_name))
-        return os.path.join(lane, f"bucket={b}", new_name), size
+        try:
+            if lanes:
+                d, *x = [df.withColumn("_lane", F.lit(n)) for n, df in lanes.items()]
+                if x:
+                    d = d.unionByName(x[0], allowMissingColumns=True)
+                d.write.partitionBy("_lane", BUCKET_COL).parquet(stage)
+            # <stage>/_lane=<lane>/_bucket=<b>/part-*.parquet
+            for src in sorted(glob.glob(os.path.join(stage, "*", "*", "*.parquet"))):
+                lane_dir, bucket_dir = src.split(os.sep)[-3:-1]
+                lane = lane_dir.split("=", 1)[1]
+                b = int(bucket_dir.split("=", 1)[1])
+                bdir = os.path.join(lane, f"bucket={b}")
+                os.makedirs(os.path.join(self.path, bdir), exist_ok=True)
+                rel = os.path.join(bdir, f"{uuid.uuid4().hex}.parquet")
+                size = os.path.getsize(src)
+                os.replace(src, os.path.join(self.path, rel))
+                self.bytes_written_total += size
+                files[lane].setdefault(b, []).append(
+                    rel if lane == "data" else [rel, size]
+                )
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        if allowed is not None:
+            planned = {int(b) for b in allowed}
+            stray = sorted((set(files["data"]) | set(files["delta"])) - planned)
+            if stray:
+                self._drop_orphans(files["data"])
+                self._drop_orphans(files["delta"])
+                raise ValueError(
+                    f"write produced rows for buckets {stray} outside the "
+                    f"planned set {sorted(planned)}"
+                )
+        return files["data"], files["delta"]
 
     def _commit(
         self,
@@ -661,6 +636,31 @@ class LakeTable:
                 except OSError:
                     pass
 
+    def _require_planned(
+        self,
+        base: Snapshot,
+        snap: Snapshot,
+        buckets: Iterable[int],
+        lane_appends_ok: bool,
+        base_files: bool,
+    ) -> None:
+        """The one rebase rule: raise :class:`CommitConflict` unless each
+        planned bucket's delta lane is as at planning (``base``), or only
+        appended to if ``lane_appends_ok``, and — if ``base_files`` — its
+        base files are too."""
+        for b in buckets:
+            planned = base.delta_files.get(b, [])
+            head = snap.delta_files.get(b, [])
+            lane = head[: len(planned)] if lane_appends_ok else head
+            if lane != planned or (
+                base_files and snap.files.get(b, []) != base.files.get(b, [])
+            ):
+                raise CommitConflict(
+                    f"bucket {b} of {self.path} was rewritten concurrently "
+                    f"(planned at v{base.version}, head moved); recompute "
+                    "from the fresh snapshot and retry the operation"
+                )
+
     def replace_buckets(
         self,
         df: DataFrame,
@@ -683,24 +683,14 @@ class LakeTable:
         planned (its df was computed from stale bucket contents)."""
         replaced = set(int(b) for b in buckets)
         base = self.snapshot
-        new_files = self._write_data_files(df, prepartitioned=prepartitioned)
-        for b in new_files:
-            if b not in replaced:
-                self._drop_orphans(new_files)
-                raise ValueError(
-                    f"write produced rows for bucket {b} outside replace set {replaced}"
-                )
+        new_files, _ = self._stage(
+            df, prepartitioned=prepartitioned, allowed=replaced
+        )
 
         def apply(snap: Snapshot):
-            for b in replaced:
-                if snap.files.get(b, []) != base.files.get(b, []) or (
-                    snap.delta_files.get(b, []) != base.delta_files.get(b, [])
-                ):
-                    raise CommitConflict(
-                        f"bucket {b} of {self.path} was rewritten concurrently "
-                        f"(planned at v{base.version}, head moved); recompute "
-                        "from the fresh snapshot and retry the operation"
-                    )
+            self._require_planned(
+                base, snap, replaced, lane_appends_ok=False, base_files=True
+            )
             merged = {b: fs for b, fs in snap.files.items() if b not in replaced}
             for b, fs in new_files.items():
                 merged[b] = fs
@@ -720,7 +710,7 @@ class LakeTable:
         """Append-only commit (used by history/lineage tables).
         Multi-writer: always rebaseable — new files merge into whatever
         the head snapshot holds."""
-        new_files = self._write_data_files(df)
+        new_files, _ = self._stage(df)
 
         def apply(snap: Snapshot):
             merged = {b: list(fs) for b, fs in snap.files.items()}
@@ -755,11 +745,7 @@ class LakeTable:
         way).  Written buckets must fall inside `buckets` (the
         caller's planned touch set).
 
-        When BOTH lanes are present the two frames are written in ONE
-        Spark action (``partitionBy(_lane, bucket)``) — union execution
-        concatenates child partitions, so the prepartitioned data side
-        keeps its bucket clustering and file counts, minus one whole
-        job round-trip per batch.
+        Both lanes are written in ONE Spark action (:meth:`_stage`).
 
         Multi-writer: appends rebase over concurrent DELTA appends and
         manifest commits.  In upsert mode ANY change to a touched
@@ -781,37 +767,15 @@ class LakeTable:
             raise ValueError("merge_append requires a merge_on_read table")
         touched = set(int(b) for b in buckets)
         base = self.snapshot
-        if new_rows is not None and delta is not None:
-            new_files, delta_new = self._stage_dual(
-                self._dual_frame(new_rows, delta, prepartitioned)
-            )
-        elif new_rows is not None:
-            new_files = self._write_data_files(new_rows, prepartitioned)
-            delta_new = {}
-        else:
-            new_files = {}
-            delta_new = self._write_delta_files(delta) if delta is not None else {}
-        for b in set(new_files) | set(delta_new):
-            if b not in touched:
-                self._drop_orphans(new_files)
-                self._drop_orphans(delta_new)
-                raise ValueError(
-                    f"write produced rows for bucket {b} outside touch set {touched}"
-                )
+        new_files, delta_new = self._stage(
+            new_rows, delta, prepartitioned, allowed=touched
+        )
 
         def apply(snap: Snapshot):
             if mor["mode"] == "upsert":
-                for b in touched:
-                    planned = base.delta_files.get(b, [])
-                    head = snap.delta_files.get(b, [])
-                    if head[: len(planned)] != planned or (
-                        snap.files.get(b, []) != base.files.get(b, [])
-                    ):
-                        raise CommitConflict(
-                            f"bucket {b} of {self.path} was compacted/rewritten/"
-                            f"appended concurrently (planned at v{base.version}); "
-                            "_in_base flags are stale — recompute and retry"
-                        )
+                self._require_planned(
+                    base, snap, touched, lane_appends_ok=True, base_files=True
+                )
             merged = {b: list(fs) for b, fs in snap.files.items()}
             for b, fs in new_files.items():
                 merged.setdefault(b, []).extend(fs)
@@ -826,41 +790,6 @@ class LakeTable:
         self._commit(
             apply, batch_key, batch_info, written=[new_files, delta_new]
         )
-
-    def _dual_frame(
-        self, new_rows: DataFrame, delta: DataFrame, prepartitioned: bool
-    ) -> DataFrame:
-        """Union the two merge_append lanes under one harmonised schema
-        (+ ``_lane`` tag).  Each lane's file keeps a SUPERSET of its
-        read schema — parquet projection by name ignores the extra
-        all-null columns, so the per-lane read paths are unchanged."""
-        d = self._coerce_data(new_rows, prepartitioned)
-        x = self._coerce_delta(delta)
-        extras = [
-            (c, x.schema[c].dataType)
-            for c in x.columns
-            if c != BUCKET_COL and c not in {f.name for f in self.schema.fields}
-        ]
-        d = d.select(
-            *[F.col(f.name) for f in self.schema.fields],
-            *[F.lit(None).cast(t).alias(c) for c, t in extras],
-            F.lit("data").alias("_lane"),
-            F.col(BUCKET_COL),
-        )
-        x = x.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in x.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in self.schema.fields
-            ],
-            *[F.col(c) for c, _t in extras],
-            F.lit("delta").alias("_lane"),
-            F.col(BUCKET_COL),
-        )
-        return d.unionByName(x)
 
     def record_batch(
         self, batch_key: str, batch_info: dict[str, Any] | None = None
@@ -978,29 +907,22 @@ class LakeTable:
         folded = folded.withColumn(
             BUCKET_COL, self.bucket_of(mor["row_id_cols"][0])
         ).repartition(max(1, len(victims)), F.col(BUCKET_COL))
-        new = self._write_delta_files(folded)
-        for b in new:
-            if b not in set(victims):
-                self._drop_orphans(new)
-                raise ValueError(f"fold produced rows for non-victim bucket {b}")
+        _, new = self._stage(delta=folded, allowed=victims)
         maxd = {b: max(e[2] for e in base.delta_files[b]) for b in victims}
 
         def apply(snap: Snapshot):
+            self._require_planned(
+                base,
+                snap,
+                victims,
+                lane_appends_ok=True,
+                base_files=mor["mode"] == "upsert",
+            )
             deltas = {b: list(fs) for b, fs in snap.delta_files.items()}
             for b in victims:
-                planned = base.delta_files.get(b, [])
-                head = deltas.get(b, [])
-                if head[: len(planned)] != planned or (
-                    mor["mode"] == "upsert"
-                    and snap.files.get(b, []) != base.files.get(b, [])
-                ):
-                    raise CommitConflict(
-                        f"bucket {b} of {self.path} changed concurrently; "
-                        "delta fold is stale — refresh and retry"
-                    )
                 deltas[b] = [
                     [rel, size, maxd[b]] for rel, size in new.get(b, [])
-                ] + head[len(planned):]
+                ] + deltas.get(b, [])[len(base.delta_files[b]):]
             return dict(snap.files), None, deltas
 
         self._commit(apply, None, {"delta_fold": True}, written=[new])

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -142,10 +141,10 @@ def read_delta_lane(
 
 def fold_survivors(delta: DataFrame, mor: dict) -> DataFrame:
     """Minor (delta-lane) compaction kernel: reduce a lane scan (from
-    :func:`read_delta_lane`) to ONE surviving row per row id — the
-    exact row :func:`resolve_deltas` would pick — WITHOUT touching the
-    base (Hudi log-compaction / Iceberg delete-file-compaction
-    analogue).  Cost is O(lane), not O(table): the right maintenance
+    :func:`read_delta_lane`) to ONE surviving row per row id — the row
+    every read applies, since :func:`resolve_deltas` reduces its lane
+    with this same kernel — WITHOUT touching the base (Hudi
+    log-compaction / Iceberg delete-file-compaction analogue).  Cost is O(lane), not O(table): the right maintenance
     for hot keys and bursty lanes at 100 TB, where a full bucket
     rewrite per fold is the expensive path.
 
@@ -155,10 +154,10 @@ def fold_survivors(delta: DataFrame, mor: dict) -> DataFrame:
     earliest-commit-wins, and the folded rows ARE the earlier commits.
     Intra-lane ties are resolved here using the original per-commit
     stamps.  Upsert tombstones for rows that were never in base are
-    dropped outright (they mask nothing and ``resolve_deltas`` ignores
-    them).  ``_in_base`` flags are preserved verbatim, so the fold is
-    only valid while the base files are unchanged — the committing
-    table enforces that (same conflict rule as merge_append)."""
+    dropped outright (they mask nothing).  ``_in_base`` flags are
+    preserved verbatim, so the fold is only valid while the base files
+    are unchanged — the committing table enforces that (same conflict
+    rule as merge_append)."""
     ids = list(mor["row_id_cols"])
     if mor["mode"] == "patch":
         pcols = list(mor["patch_cols"])
@@ -172,18 +171,23 @@ def fold_survivors(delta: DataFrame, mor: dict) -> DataFrame:
             .select(*ids, *[F.col(f"_p.{c}").alias(c) for c in pcols])
         )
     ocols = list(mor["order_cols"])
+    # highest order key wins; at an equal order key the EARLIEST commit
+    # wins (it became "the target" first, so a replayed or late
+    # duplicate version is a no-op), then last arrival within a commit
     pick = F.struct(
         *[F.col(c).alias(f"o{i}") for i, c in enumerate(ocols)],
         (-F.col(DSEQ_COL)).alias("oseq"),
         F.col(DORD_COL).alias("ots"),
     )
-    payload = F.struct(
-        *[F.col(c) for c in delta.columns if c not in ids and c != DSEQ_COL]
-    )
+    # the row ids are read back from the survivor row, not the grouping
+    # key: a join on them then cannot push a null filter below the
+    # aggregate, so resolve_deltas' update and insert sides keep one
+    # plan and share one shuffle
+    payload = F.struct(*[F.col(c) for c in delta.columns if c != DSEQ_COL])
     return (
         delta.groupBy(*ids)
         .agg(F.max_by(payload, pick).alias("_row"))
-        .select(*ids, "_row.*")
+        .select("_row.*")
         .filter(F.col(DINBASE_COL) | (F.col(DOP_COL) != "D"))
     )
 
@@ -209,20 +213,15 @@ def resolve_deltas(
     bcast = (
         F.broadcast if dbytes < BROADCAST_DELTA_MAX_BYTES else (lambda df: df)
     )
+    # one surviving delta row per id — the same kernel the minor
+    # compaction folds with, so a fold never changes what a read sees
+    dr = fold_survivors(delta, mor)
     if mor["mode"] == "patch":
         pcols = list(mor["patch_cols"])
-        latest = (
-            delta.groupBy(*ids)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in pcols]), F.col(DSEQ_COL)
-                ).alias("_p")
-            )
-            .select(
-                *ids,
-                *[F.col(f"_p.{c}").alias(f"_patch_{c}") for c in pcols],
-                F.lit(True).alias("_patched"),
-            )
+        latest = dr.select(
+            *ids,
+            *[F.col(c).alias(f"_patch_{c}") for c in pcols],
+            F.lit(True).alias("_patched"),
         )
         return base.join(bcast(latest), ids, "left").select(
             *[
@@ -235,33 +234,15 @@ def resolve_deltas(
             ]
         )
 
-    # upsert mode: delta rows are whole row versions / tombstones.
+    # upsert mode: delta rows are whole row versions / tombstones;
+    # fold_survivors already dropped tombstones of keys never in base
     ocols = list(mor["order_cols"])
-    # one surviving delta row per id: highest order key wins; at an
-    # equal order key the EARLIEST commit wins (it became "the target"
-    # first, so a replayed or late duplicate version is a no-op), then
-    # last arrival by ingest tie-break within a commit
-    pick = F.struct(
-        *[F.col(c).alias(f"o{i}") for i, c in enumerate(ocols)],
-        (-F.col(DSEQ_COL)).alias("oseq"),
-        F.col(DORD_COL).alias("ots"),
-    )
-    payload = F.struct(
-        *[F.col(f.name) for f in schema.fields],
-        F.col(DOP_COL),
-        F.col(DINBASE_COL),
-    )
-    dr = (
-        delta.groupBy(*ids)
-        .agg(F.max_by(payload, pick).alias("_row"))
-        .select("_row.*")
-    )
     upd = dr.filter(F.col(DINBASE_COL)).select(
         *[F.col(f.name).alias(f"_u_{f.name}") for f in schema.fields],
         F.col(DOP_COL).alias("_u_op"),
         *[F.col(f"_u_{c}").alias(c) for c in ids],
     )
-    ins = dr.filter(~F.col(DINBASE_COL) & (F.col(DOP_COL) != "D")).select(
+    ins = dr.filter(~F.col(DINBASE_COL)).select(
         *[F.col(f.name) for f in schema.fields]
     )
     newer = F.col("_u_op").isNotNull() & (

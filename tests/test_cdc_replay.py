@@ -122,7 +122,9 @@ def test_lineage_rows_are_per_partition(spark, tmp_path):
     """Every batch writes one lineage row per kafka partition, with
     exact duplicate counts and the applied lsn span of that partition
     (the shape ControlRunner's gap/completeness/freshness jobs group
-    by)."""
+    by).  Dead-lettered rows are never counted as duplicates, even
+    when their null key or lsn makes them invisible to a distinct
+    count."""
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
 
     rows = [
@@ -131,6 +133,9 @@ def test_lineage_rows_are_per_partition(spark, tmp_path):
         ("d1", 2, "U", [2], 1, None, None, 0, None),
         ("d2", 5, "I", [9], 1, None, None, 3, None),
         ("d2", 6, "D", None, None, None, None, 3, None),
+        (None, 7, "I", [1], 1, None, None, 5, None),  # null key
+        ("d3", None, "I", [1], 1, None, None, 5, None),  # null lsn
+        ("d4", 8, "I", None, None, None, None, 5, None),  # null payload
     ]
     df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, compact_every=0)
@@ -141,7 +146,11 @@ def test_lineage_rows_are_per_partition(spark, tmp_path):
          r.min_lsn, r.max_lsn)
         for r in pipe.lineage.refresh().read().collect()
     )
-    assert got == [(0, 3, 1, 0, 1, 2), (3, 2, 0, 0, 5, 6)]
+    assert got == [
+        (0, 3, 1, 0, 1, 2),
+        (3, 2, 0, 0, 5, 6),
+        (5, 3, 0, 3, None, None),
+    ]
 
 
 def test_history_bucketed_unlike_target_is_refused(spark, tmp_path):

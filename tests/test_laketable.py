@@ -252,6 +252,30 @@ def test_cas_replace_same_bucket_conflicts(spark, tmp_path):
     assert on_disk == live
 
 
+def test_create_losing_the_v0_claim_raises(spark, tmp_path, monkeypatch):
+    """Two creators race past the existence check; the one whose v0
+    claim loses raises FileExistsError instead of replacing the
+    winner's table."""
+    path = str(tmp_path / "t")
+    winner = StructType(SCHEMA.fields + [StructField("extra", StringType())])
+    claim = LakeTable._publish_cas
+
+    def racing_claim(self, meta):
+        # the other creator claims v0 first
+        assert claim(LakeTable(spark, path), dict(meta, schema=winner.json()))
+        return claim(self, meta)
+
+    monkeypatch.setattr(LakeTable, "_publish_cas", racing_claim)
+    with pytest.raises(FileExistsError):
+        LakeTable.create(spark, path, SCHEMA, "doc_id", n_buckets=2)
+    monkeypatch.undo()
+    assert LakeTable.load(spark, path).schema == winner
+    assert sorted(os.listdir(os.path.join(path, "metadata"))) == [
+        "CURRENT",
+        "v0.json",
+    ]
+
+
 def test_cas_disjoint_bucket_replace_rebases(spark, tmp_path):
     """Replacements over DIFFERENT buckets from equally-stale snapshots
     both commit (automatic rebase, like Iceberg's disjoint-partition

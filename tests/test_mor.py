@@ -179,6 +179,39 @@ def test_compaction_racing_upsert_writer_conflicts(spark, tmp_path, fmt):
     assert head.has_batch("0") and head.has_batch("1")
 
 
+@pytest.mark.parametrize("lanes", ["data", "delta", "both"])
+def test_merge_append_outside_planned_buckets_leaves_no_files(
+    spark, tmp_path, lanes
+):
+    """A merge_append whose frames hold rows for a bucket outside its
+    planned ``buckets`` is refused with ValueError, and every file the
+    write staged, in either lane, is dropped."""
+    path = str(tmp_path / "t")
+    t = LakeTable.create(
+        spark, path, TGT, "doc_id", n_buckets=4, merge_on_read=UPSERT_MOR
+    )
+    keys = [f"d{i}" for i in range(16)]  # spread over all four buckets
+    new_rows = spark.createDataFrame([(k, "v", 1) for k in keys], TGT)
+    delta = _upsert_delta(spark, [(k, "w", 2) for k in keys], True)
+    with pytest.raises(ValueError, match="outside the planned set"):
+        t.merge_append(
+            new_rows if lanes != "delta" else None,
+            delta if lanes != "data" else None,
+            buckets=[0],
+            batch_key="0",
+        )
+    parquet = [
+        f
+        for lane in ("data", "delta")
+        for _dir, _sub, files in os.walk(os.path.join(path, lane))
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert parquet == []
+    assert not [e for e in os.listdir(path) if e.startswith("_stage")]
+    assert t.refresh().version == 0 and not t.has_batch("0")
+
+
 def test_compaction_racing_patch_writer_rebases(spark, tmp_path):
     """Patch deltas target rows by id, so a patch merge_append planned
     before a concurrent compaction commits REBASES safely (no conflict,

@@ -173,3 +173,41 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path):
     join_to_agg = re.split(r"SortAggregate|HashAggregate", wide)[0]
     assert "Exchange" not in join_to_agg, f"extra exchange on wide side:\n{plan}"
     assert "Sort " not in join_to_agg, f"re-sort of the wide side:\n{plan}"
+
+
+def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
+    """The resolved upsert read uses the lane's survivor rows twice —
+    updates join the base, inserts are unioned in — and both sides must
+    share ONE shuffle of the lane (a reused exchange).  A plan change
+    that lets either side diverge (e.g. a null filter pushed below one
+    side's aggregate) silently shuffles the whole lane twice per read."""
+    from data_pipeline_spark.table import LakeTable
+    from data_pipeline_spark.table.mor import DINBASE_COL, DOP_COL, DORD_COL
+
+    def batch(lo, hi, in_base):
+        return (
+            spark.range(lo, hi)
+            .select(
+                F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
+                F.lit("v").alias("v"),
+                F.col("id").alias("lsn"),
+            )
+            .withColumn(DOP_COL, F.lit("U"))
+            .withColumn(DORD_COL, F.current_timestamp())
+            .withColumn(DINBASE_COL, F.lit(in_base))
+        )
+
+    rows = batch(0, 50, False).drop(DOP_COL, DORD_COL, DINBASE_COL)
+    mor = {"mode": "upsert", "row_id_cols": ["doc_id"], "order_cols": ["lsn"]}
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), rows.schema, "doc_id", n_buckets=2,
+        merge_on_read=mor,
+    )
+    t.merge_append(rows, None, buckets=[0, 1])
+    t.merge_append(None, batch(0, 20, True), buckets=[0, 1])  # updates
+    t.merge_append(None, batch(50, 60, False), buckets=[0, 1])  # inserts
+    df = t.read()
+    assert len(df.collect()) == 60
+    plan = _plan(df)  # the adaptive plan after execution
+    assert plan.count("ReusedExchange") == 1, plan
+
