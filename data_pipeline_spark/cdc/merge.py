@@ -33,6 +33,8 @@ distribution), and the bucketed delta write skips its own repartition.
 
 from __future__ import annotations
 
+from typing import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -65,7 +67,7 @@ def merge_into(
     table: LakeTable,
     changes: DataFrame,
     batch_id: int | str,
-    affected: list[int] | None = None,
+    affected: Iterable[int],
 ) -> dict:
     """Apply a change set to an upsert-mode merge-on-read table as one
     delta commit; returns metrics.
@@ -76,12 +78,11 @@ def merge_into(
     aggregation is the hot-key salting), so a pre-reduced input
     (lww_reduce) is supported but not required.
 
-    affected: the precomputed set of touched storage buckets (the
-    caller's fused planning probe, CdcPipeline.apply_batch).  None →
-    one bucket-set probe job here.  Passing it wrong (a superset is
-    fine — extra buckets only widen the base-key scan; a SUBSET would
-    flag stored keys of the missing buckets as not-in-base) is on the
-    caller.
+    affected: the batch plan's set of touched storage buckets (the
+    caller's fused planning probe, CdcPipeline.apply_batch); no probe
+    job runs here.  Passing it wrong (a superset is fine — extra
+    buckets only widen the base-key scan; a SUBSET would flag stored
+    keys of the missing buckets as not-in-base) is on the caller.
 
     The ``_in_base`` stamp (insert-vs-update disambiguation for the
     shuffle-free broadcast read path) is FUSED into the reduce: the
@@ -99,10 +100,7 @@ def merge_into(
     ]
 
     d = changes.withColumn(BUCKET_COL, table.bucket_of(key))
-    if affected is None:
-        affected = list(d.agg(F.collect_set(BUCKET_COL).alias("bs")).first()["bs"])
-    else:
-        affected = [int(b) for b in affected]
+    affected = [int(b) for b in affected]
     if not affected:
         table.record_batch(str(batch_id), {"rows": 0})
         return {"buckets": []}
@@ -184,6 +182,6 @@ def merge_into(
         flagged,
         buckets=affected,
         batch_key=str(batch_id),
-        batch_info={"buckets": sorted(affected), "mor": True},
+        batch_info={"buckets": sorted(affected)},
     )
     return {"buckets": sorted(affected)}

@@ -31,9 +31,10 @@ full-width data is shuffled exactly once per batch:
      sorts stored-first), so no anti-join pass is needed;
   4. the closure is ONE Spark window over (key ORDER BY lsn, _is_new,
      valid_from): ``lag(lsn)`` drops duplicate copies of a version,
-     then ``scd2_close_windowed`` — the same rule the ``scd2_intervals``
-     query runs — sets lead(valid_from)-1s; both windows share one
-     exchange and one sort.  This departs from BASELINE, which names
+     the check-cols gate's ``lag(_h)`` drops unchanged ones, then
+     ``scd2_close_windowed`` — the same rule the ``scd2_intervals``
+     query runs — sets lead(valid_from)-1s; all share one exchange and
+     one sort.  This departs from BASELINE, which names
      ``groupBy().applyInPandas`` for this step: the closure is a Spark
      window, a compiled JVM operator, and the CDC apply path starts no
      Python worker.  The engine's other Arrow UDFs are unchanged
@@ -53,6 +54,8 @@ the same algorithm.
 
 from __future__ import annotations
 
+from typing import Iterable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -66,94 +69,36 @@ from .schema import END_OF_TIME
 BROADCAST_MAX_DOCS = 500_000
 
 
-def _change_gate(
-    existing: DataFrame, nv: DataFrame, key: str, check_cols: list[str]
-) -> DataFrame:
-    """Attr-hash change detection (C4/J5 check-cols variant, reference
-    basic_orchestrator/dbt/macros/scd2/scd2_merge.sql:46-50): a new
-    version opens ONLY when xxhash64(check_cols) differs from the
-    version it would succeed — the stored current row for the first
-    incoming version of a key, the previous incoming version after
-    that (lag over lsn; hash equality is transitive so lag-over-all
-    equals lag-over-survivors).  Delete tombstones always pass (they
-    close chains), and only incoming rows are ever dropped.
-
-    Mid-chain late arrivals are compared conservatively (kept unless
-    they match the current row's hash position in lsn order) — the
-    reference merge has no bi-temporal path at all, so matching its
-    gate on the sequential case is the parity target."""
-
-    def _attr_hash(df: DataFrame):
-        # a check column missing on one side (pre-schema-evolution
-        # history rows) hashes as null — identical to a present-but-
-        # null value, so evolution does not spuriously open versions
-        return F.xxhash64(
-            *[
-                F.col(c) if c in df.columns else F.lit(None).cast("string")
-                for c in check_cols
-            ]
-        )
-
-    # bound the window input to the batch's keys: without the semi-join
-    # every current row of every touched bucket would ride the shuffle
-    # (bucket-sized, not batch-sized)
-    batch_keys = nv.select(key).distinct()
-    cur = (
-        existing.filter(F.col("is_current"))
-        .join(batch_keys, key, "semi")
-        .select(
-            F.col(key),
-            F.col("lsn"),
-            _attr_hash(existing).alias("_h"),
-            F.lit("C").alias("_gop"),
-            F.lit(False).alias("_gnew"),
-        )
-    )
-    inc = nv.select(
-        F.col(key),
-        F.col("lsn"),
-        _attr_hash(nv).alias("_h"),
-        F.col("op").alias("_gop"),
-        F.lit(True).alias("_gnew"),
-    )
-    w = Window.partitionBy(key).orderBy("lsn", "_gnew", "_h")
-    lagged = (
-        cur.unionByName(inc)
-        .withColumn("_prev_h", F.lag("_h").over(w))
-        .withColumn("_prev_op", F.lag("_gop").over(w))
-    )
-    keep = lagged.filter(
-        F.col("_gnew")
-        & (
-            (F.col("_gop") == "D")
-            # a row succeeding a tombstone ALWAYS opens a version: the
-            # delete closed the chain, so "unchanged attrs" vs the
-            # tombstone's (all-null) hash must not suppress a re-insert
-            | (F.col("_prev_op") == "D")
-            | F.col("_prev_h").isNull()
-            | (F.col("_prev_h") != F.col("_h"))
-        )
-    ).select(key, "lsn")
-    return nv.join(keep, [key, "lsn"], "semi")
+def _attr_hash(df: DataFrame, check_cols: list[str] | None) -> list[Column]:
+    """The check-cols gate's attribute hash as ``[_h]`` (``[]`` when
+    the gate is off; C4/J5, reference
+    basic_orchestrator/dbt/macros/scd2/scd2_merge.sql:46-50).  A check
+    column missing on one side (pre-schema-evolution history rows)
+    hashes as null — identical to a present-but-null value, so
+    evolution does not spuriously open versions."""
+    if not check_cols:
+        return []
+    null = F.lit(None).cast("string")
+    cols = [F.col(c) if c in df.columns else null for c in check_cols]
+    return [F.xxhash64(*cols).alias("_h")]
 
 
 def apply_history(
     history: LakeTable,
     new_versions: DataFrame,
     batch_id: int | str,
+    affected: Iterable[int],
+    n_docs: int,
     check_cols: list[str] | None = None,
-    affected: list[int] | None = None,
-    n_docs: int | None = None,
-    plan_out: dict | None = None,
 ) -> dict:
     """Append this batch's versions and re-close affected keys, as one
     merge-on-read commit on a patch-mode history table.
 
-    affected/n_docs: precomputed planning inputs (touched buckets +
-    distinct-key count) from the caller's fused probe — when given, no
+    affected/n_docs: the batch plan from the caller's fused probe —
+    touched buckets (a superset is fine) and distinct-key count; no
     probe job runs here.  Only valid when the caller's bucket function
     matches this table's (same key_col + n_buckets); CdcPipeline checks
-    that before passing them.
+    that at construction.
 
     `new_versions` is the RAW validated event stream — it may contain
     at-least-once duplicate deliveries of a (doc_id, lsn) and replays of
@@ -163,10 +108,12 @@ def apply_history(
     reduce rides the write's repartition-by-bucket exchange, so the
     whole apply still costs ONE full-width shuffle.
 
-    check_cols: optional attr-change gate — when set, an update whose
-    tracked attributes hash-match the version it would succeed opens NO
-    new history row (the reference's check-cols SCD2).  Off by default:
-    the lsn-versioned mode keeps every distinct (key, lsn).
+    check_cols: optional attr-change gate — when set, a new version
+    whose tracked attributes hash-match its lsn predecessor (stored or
+    new, late mid-chain arrivals included) opens NO history row (the
+    reference's check-cols SCD2); deletes and versions following a
+    delete always open one, and stored rows are never dropped.  Off by
+    default: the lsn-versioned mode keeps every distinct (key, lsn).
 
     The write (Iceberg v2 equality-delete / Hudi MoR analogue;
     reference analogue: the dbt incremental merge never rewrites the
@@ -185,8 +132,8 @@ def apply_history(
     Plan shape: ONE batch-sized wide shuffle (the repartition-by-bucket
     reduce, whose exchange the (bucket, key, lsn) groupBy and the
     bucketed write both reuse) + the narrow closure join, which adds no
-    exchange on the wide side (pinned by tests/test_plans.py via the
-    ``plan_out["mor_new_rows"]`` hook).
+    exchange on the wide side (pinned by tests/test_plans.py).  Dedup,
+    gate and closure share the narrow side's one exchange and sort.
     """
     require_mode(history, "patch")
     key = history.key_col
@@ -204,38 +151,23 @@ def apply_history(
         *payload_cols,
         F.col("ingest_ts").alias("valid_from_utc"),
     ).withColumn(BUCKET_COL, history.bucket_of(key))
-    if affected is None or n_docs is None:
-        # one driver job for both planning inputs: buckets + key count
-        # (HLL — nd only gates the broadcast decision, and exact
-        # count_distinct hash-sets every key per partition)
-        probe = nv.agg(
-            F.collect_set(BUCKET_COL).alias("bs"),
-            F.approx_count_distinct(F.col(key), 0.02).alias("nd"),
-        ).first()
-        affected, n_docs = list(probe["bs"]), int(probe["nd"])
-    else:
-        affected, n_docs = [int(b) for b in affected], int(n_docs)
+    affected = [int(b) for b in affected]
     if not affected:
         history.record_batch(str(batch_id), {"versions": 0})
         return {"buckets": []}
 
-    small = n_docs <= BROADCAST_MAX_DOCS
-    maybe_bcast = F.broadcast if small else (lambda df: df)
+    maybe_bcast = F.broadcast if n_docs <= BROADCAST_MAX_DOCS else (lambda df: df)
 
-    # Under patch-mode merge-on-read the closure input can skip the
-    # delta-lane resolution join entirely: patches only ever rewrite
-    # DERIVED columns (valid_to_utc/is_current), and the closure
-    # recomputes those from the immutable (lsn, valid_from) chain — the
-    # stored values are used solely to filter UNCHANGED rows out of the
-    # delta output.  Reading the un-patched base makes that filter
-    # conservative (a predecessor row whose patch already landed
-    # re-emits an identical-value patch at a higher _dseq — harmless,
-    # folded at the next compaction) and saves a per-batch reduce +
-    # broadcast-exchange of the whole un-folded lane.  check_cols mode
-    # keeps the resolution: its gate reads is_current semantically.
-    existing = history.read(buckets=affected, with_deltas=bool(check_cols))
-    if check_cols:
-        nv = _change_gate(existing, nv, key, check_cols)
+    # The closure input skips the delta-lane resolution join: patches
+    # only ever rewrite DERIVED columns (valid_to_utc/is_current), and
+    # the closure recomputes those from the immutable (lsn, valid_from)
+    # chain — the stored values are used solely to filter UNCHANGED
+    # rows out of the delta output.  Reading the un-patched base makes
+    # that filter conservative (a predecessor row whose patch already
+    # landed re-emits an identical-value patch at a higher _dseq —
+    # harmless, folded at the next compaction) and saves a per-batch
+    # reduce + broadcast-exchange of the whole un-folded lane.
+    existing = history.read(buckets=affected, with_deltas=False)
 
     # CHAIN-SUFFIX pruning (round 4): the closure of a stored version
     # can only change if a version is inserted at-or-before it in lsn
@@ -248,8 +180,10 @@ def apply_history(
     # batches is the whole table — into O(batch) for in-order streams,
     # while staying exact for mid-chain (bi-temporal) late arrivals.
     min_new = nv.groupBy(key).agg(F.min("lsn").alias("_min_new"))
+    # stored rows hash after the join: only the batch keys' rows do
     ex_aff = (
-        existing.select(
+        existing.join(maybe_bcast(min_new), key, "inner")
+        .select(
             key,
             "lsn",
             "op",
@@ -258,8 +192,9 @@ def apply_history(
                 "_stored_vt_us"
             ),
             F.coalesce(F.col("is_current"), F.lit(False)).alias("_stored_ic"),
+            "_min_new",
+            *_attr_hash(existing, check_cols),
         )
-        .join(maybe_bcast(min_new), key, "inner")
         .persist()
     )
     pred = (
@@ -285,6 +220,7 @@ def apply_history(
             F.lit(-1).cast("long").alias("_stored_vt_us"),
             F.lit(False).alias("_stored_ic"),
             F.lit(True).alias("_is_new"),
+            *_attr_hash(nv, check_cols),
         )
     )
 
@@ -292,13 +228,25 @@ def apply_history(
     # stored versions — collapse to ONE version: the stored row when
     # present (_is_new=False sorts first), else the first arrival (min
     # valid_from; nulls last).  The full-width reduce below makes the
-    # identical pick.  The closure window reuses this window's exchange
-    # and sort: the filter between them keeps both.
+    # identical pick.  The gate and closure windows reuse this window's
+    # exchange and sort: the filters between them keep both.
     order = ["lsn", "_is_new", F.col("valid_from_utc").asc_nulls_last()]
     w = Window.partitionBy(key).orderBy(order)
     versions = all_narrow.withColumn("_prev_lsn", F.lag("lsn").over(w)).filter(
         ~F.col("_prev_lsn").eqNullSafe(F.col("lsn"))
     )
+    if check_cols:
+        # the gate (rule in the docstring): a delete closed the chain,
+        # so a re-insert matching the tombstone's all-null hash stays.
+        # Equality is transitive: lag over all rows = over survivors
+        versions = versions.withColumns(
+            {"_prev_h": F.lag("_h").over(w), "_prev_op": F.lag("op").over(w)}
+        ).filter(
+            ~F.col("_is_new")
+            | (F.col("op") == "D")
+            | (F.col("_prev_op") == "D")
+            | ~F.col("_prev_h").eqNullSafe(F.col("_h"))
+        )
     # DELTA output: only rows whose validity actually changed — new
     # versions and neighbours of inserts, O(batch) in an append-mostly
     # stream.  Stored validity is exact int64 µs (-1 for new rows).
@@ -365,22 +313,19 @@ def apply_history(
         key, "lsn", "valid_to_utc", "is_current"
     )
 
-    if plan_out is not None:
-        plan_out["mor_new_rows"] = new_rows
-
     try:
         history.merge_append(
             new_rows,
             patches,
             buckets=affected,
             batch_key=str(batch_id),
-            batch_info={"buckets": sorted(affected), "mor": True},
+            batch_info={"buckets": sorted(affected)},
             prepartitioned=True,
         )
     finally:
         closure.unpersist()
         ex_aff.unpersist()
-    # changed_docs is an HLL estimate (±2%) when derived from the probe
+    # changed_docs is an HLL estimate (±2%) from the caller's probe
     return {"buckets": sorted(affected), "changed_docs": n_docs}
 
 

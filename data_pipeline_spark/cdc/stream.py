@@ -189,7 +189,6 @@ def run_stream(
     pipeline: CdcPipeline,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    available_now: bool = True,
     stop_after_batches: int | None = None,
 ) -> int:
     """Replay the log through Structured Streaming; returns batches run.
@@ -219,13 +218,12 @@ def run_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(log_dir)
     )
-    writer = (
+    q = (
         reader.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
     try:
         q.awaitTermination()
     except Exception:  # noqa: BLE001 — surface real errors, swallow the probe

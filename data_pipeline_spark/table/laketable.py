@@ -220,14 +220,11 @@ class LakeTable:
         schema: StructType,
         key_col: str,
         n_buckets: int = 16,
-        overwrite: bool = False,
         merge_on_read: dict[str, Any] | None = None,
     ) -> "LakeTable":
         tbl = cls(spark, path)
         if os.path.exists(tbl._meta_dir):
-            if not overwrite:
-                raise FileExistsError(f"LakeTable already exists at {path}")
-            shutil.rmtree(tbl.path)
+            raise FileExistsError(f"LakeTable already exists at {path}")
         if merge_on_read is not None:
             validate_mor(merge_on_read, schema, key_col)
         os.makedirs(tbl._meta_dir, exist_ok=True)
@@ -667,7 +664,6 @@ class LakeTable:
         buckets: Iterable[int],
         batch_key: str | None = None,
         batch_info: dict[str, Any] | None = None,
-        prepartitioned: bool = False,
     ) -> None:
         """Copy-on-write commit: new content for `buckets`, all other
         buckets' files carried forward untouched.  Data for the replaced
@@ -683,9 +679,7 @@ class LakeTable:
         planned (its df was computed from stale bucket contents)."""
         replaced = set(int(b) for b in buckets)
         base = self.snapshot
-        new_files, _ = self._stage(
-            df, prepartitioned=prepartitioned, allowed=replaced
-        )
+        new_files, _ = self._stage(df, allowed=replaced)
 
         def apply(snap: Snapshot):
             self._require_planned(
@@ -842,7 +836,12 @@ class LakeTable:
         that outruns the batch-count cadence degrades every read toward
         the forced-broadcast ceiling, so it is folded on bytes too; the
         bytes come from the commit manifest, no filesystem stat).
-        Returns the compacted buckets."""
+
+        Each victim bucket is rewritten from its delta-resolved read as
+        ONE base file (``_stage`` repartitions the read by bucket: the
+        file source packs many buckets' small files into one split, so
+        the read is not bucket-pure), and its lane is dropped in the
+        same commit.  Returns the compacted buckets."""
         victims = {
             b for b, n in self.file_stats().items() if n > max_files_per_bucket
         }
@@ -855,21 +854,12 @@ class LakeTable:
         victims = sorted(victims)
         if not victims:
             return []
-        # the resolved read is already bucket-PURE per input partition:
-        # base and delta files live under bucket=K/ and the resolution
-        # joins are map-side (broadcast), so stamping BUCKET_COL and
-        # writing prepartitioned skips a full-width shuffle of every
-        # victim bucket's contents — compaction becomes read + merge +
-        # write with no exchange at all
-        df = self.read(buckets=victims).withColumn(BUCKET_COL, self.bucket_of())
         self.replace_buckets(
-            df, victims, batch_info={"compaction": True}, prepartitioned=True
+            self.read(buckets=victims), victims, batch_info={"compaction": True}
         )
         return victims
 
-    def fold_delta_lane(
-        self, buckets: Iterable[int] | None = None, min_files: int = 2
-    ) -> list[int]:
+    def fold_delta_lane(self, buckets: Iterable[int] | None = None) -> list[int]:
         """MINOR compaction: collapse each victim bucket's delta files
         into ONE survivor file per bucket WITHOUT rewriting any base
         file — O(lane) instead of compact()'s O(bucket contents).  The
@@ -892,7 +882,7 @@ class LakeTable:
         victims = sorted(
             b
             for b, fs in base.delta_files.items()
-            if len(fs) >= min_files and (sel is None or b in sel)
+            if len(fs) >= 2 and (sel is None or b in sel)
         )
         if not victims:
             return []
@@ -904,9 +894,6 @@ class LakeTable:
         folded = fold_survivors(
             read_delta_lane(self.spark, base.schema, mor, dfiles), mor
         )
-        folded = folded.withColumn(
-            BUCKET_COL, self.bucket_of(mor["row_id_cols"][0])
-        ).repartition(max(1, len(victims)), F.col(BUCKET_COL))
         _, new = self._stage(delta=folded, allowed=victims)
         maxd = {b: max(e[2] for e in base.delta_files[b]) for b in victims}
 

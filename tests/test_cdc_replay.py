@@ -358,6 +358,60 @@ def test_scd2_check_cols_gate(spark, tmp_path):
     assert tgt == {"a": 4}
 
 
+def test_check_cols_gate_compares_late_arrival_with_lsn_predecessor(
+    spark, tmp_path
+):
+    """The gate compares a new version with its lsn predecessor — the
+    version it would succeed — also for a late mid-chain arrival whose
+    successor is already stored: a@3 equals a@1 and opens no version
+    (even though it differs from the stored current a@5), b@3 differs
+    from b@1 and slots into the chain, re-closing b@1."""
+    import datetime
+
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def ts(s):
+        return t0 + datetime.timedelta(seconds=s)
+
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
+        scd2_check_cols=["tokens"],
+    )
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                ("a", 1, "I", [1], 1, None, None, 0, ts(1)),
+                ("a", 5, "U", [2], 1, None, None, 0, ts(5)),
+                ("b", 1, "I", [1], 1, None, None, 0, ts(1)),
+                ("b", 5, "U", [2], 1, None, None, 0, ts(5)),
+            ],
+            CHANGE_EVENT_SCHEMA,
+        ),
+        0,
+    )
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                ("a", 3, "U", [1], 1, None, None, 0, ts(3)),  # = a@1: gated
+                ("b", 3, "U", [2], 1, None, None, 0, ts(3)),  # != b@1: kept
+            ],
+            CHANGE_EVENT_SCHEMA,
+        ),
+        1,
+    )
+    hist = {
+        (r.doc_id, r.lsn): (r.valid_from_utc, r.valid_to_utc)
+        for r in pipe.history_df().collect()
+    }
+    assert set(hist) == {("a", 1), ("a", 5), ("b", 1), ("b", 3), ("b", 5)}
+    sec = datetime.timedelta(seconds=1)
+    assert hist[("b", 1)][1] == hist[("b", 3)][0] - sec
+    assert hist[("b", 3)][1] == hist[("b", 5)][0] - sec
+    assert hist[("a", 1)][1] == hist[("a", 5)][0] - sec
+
+
 def test_check_cols_gate_reinsert_after_delete(spark, tmp_path):
     """A version following a tombstone must ALWAYS open a history row,
     even when its tracked attrs hash equals the tombstone's all-null
@@ -408,7 +462,7 @@ def test_string_batch_id_stamps_deterministic_hash(spark, tmp_path):
         spark, str(tmp_path / "t"), TARGET_SCHEMA_BASE, key_col="doc_id",
         n_buckets=2, merge_on_read=TARGET_MOR,
     )
-    merge_into(t, changes, "epoch-2026-08-17T00")
+    merge_into(t, changes, "epoch-2026-08-17T00", range(2))
     (row,) = t.read().collect()
     assert row._batch_id is not None
     assert t.has_batch("epoch-2026-08-17T00")
@@ -417,7 +471,7 @@ def test_string_batch_id_stamps_deterministic_hash(spark, tmp_path):
         spark, str(tmp_path / "t2"), TARGET_SCHEMA_BASE, key_col="doc_id",
         n_buckets=2, merge_on_read=TARGET_MOR,
     )
-    merge_into(t2, changes, "epoch-2026-08-17T00")
+    merge_into(t2, changes, "epoch-2026-08-17T00", range(2))
     (row2,) = t2.read().collect()
     assert row2._batch_id == row._batch_id
 
@@ -469,13 +523,13 @@ def test_late_duplicate_after_delete_stays_deleted(spark, tmp_path, between):
         [("k", lsn, op, None if op == "D" else [1], 1, None, None, 0, ts(h))],
         CHANGE_EVENT_SCHEMA,
     )
-    merge_into(t, ev(1, "I", 0), 0)
-    merge_into(t, ev(2, "D", 1), 1)
+    merge_into(t, ev(1, "I", 0), 0, range(1))
+    merge_into(t, ev(2, "D", 1), 1, range(1))
     if between == "compact":
         assert t.compact(max_files_per_bucket=0) == [0]
     elif between.startswith("fold"):
         assert t.fold_delta_lane() == [0]
-    merge_into(t, ev(1, "I", 3), 2)  # duplicate delivered two hours late
+    merge_into(t, ev(1, "I", 3), 2, range(1))  # duplicate delivered two hours late
     assert t.read().count() == 0
 
 
@@ -509,6 +563,6 @@ def test_non_mor_tables_are_refused(spark, tmp_path):
         [("d1", 1, "I", [1], 1, None, None, 0, None)], CHANGE_EVENT_SCHEMA
     )
     with pytest.raises(ValueError, match="upsert-mode merge-on-read"):
-        merge_into(target, changes, 0)
+        merge_into(target, changes, 0, range(2))
     with pytest.raises(ValueError, match="patch-mode merge-on-read"):
-        apply_history(history, changes, 0)
+        apply_history(history, changes, 0, range(2), 1)

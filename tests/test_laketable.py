@@ -118,6 +118,20 @@ def test_compaction_trigger(spark, tmp_path):
     assert t.read().count() == 6
 
 
+def test_compaction_writes_one_file_per_bucket(spark, tmp_path):
+    """A compacted bucket holds ONE base file.  The resolved read is not
+    bucket-pure per input partition (the file source packs many
+    buckets' small files into one split), so writing it without a
+    bucket repartition leaves a file per (task, bucket)."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, "doc_id", n_buckets=4)
+    for i in range(6):
+        t.append(_mk(spark, [(f"d{i}-{j}", [j], j) for j in range(20)]))
+    assert t.file_stats() == {0: 6, 1: 6, 2: 6, 3: 6}
+    assert t.compact(max_files_per_bucket=1) == [0, 1, 2, 3]
+    assert t.file_stats() == {0: 1, 1: 1, 2: 1, 3: 1}
+    assert t.read().count() == 120
+
+
 def test_expire_snapshots_removes_unreachable_files(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, "doc_id", n_buckets=1)
     for i in range(5):

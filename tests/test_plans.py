@@ -132,7 +132,7 @@ def test_scd2_close_windowed_evaluates_lead_once(spark):
     assert {r.lsn: r.is_current for r in out.collect()} == {1: False, 2: True}
 
 
-def test_mor_history_apply_no_extra_exchange(spark, tmp_path):
+def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
     """Merge-on-read history apply: the insert-filter join-back must
     reuse the batch reduce's bucket partitioning and sort order — one
     batch-sized wide exchange on the full-width side, the narrow
@@ -143,6 +143,7 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path):
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.cdc.scd2 import apply_history
+    from data_pipeline_spark.table import LakeTable
 
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4)
     mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
@@ -152,15 +153,26 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path):
         pipe.history,
         mk([(f"d{i}", i, "I", [1, i], 2, None, None, 0, None) for i in range(50)]),
         0,
+        range(4),
+        50,
     )
-    po = {}
+    # capture the base rows the apply hands to its commit
+    seen = {}
+    merge_append = LakeTable.merge_append
+
+    def capture(self, new_rows, *args, **kwargs):
+        seen["new_rows"] = new_rows
+        return merge_append(self, new_rows, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "merge_append", capture)
     apply_history(
         pipe.history,
         mk([(f"d{i}", 100 + i, "U", [2, i], 2, None, None, 0, None) for i in range(20)]),
         1,
-        plan_out=po,
+        range(4),
+        20,
     )
-    plan = _plan(po["mor_new_rows"])
+    plan = _plan(seen["new_rows"])
     m = re.search(
         r"SortMergeJoin.*?\n(.*?)Exchange hashpartitioning\(_bucket#\d+, \d+\), "
         r"REPARTITION_BY_NUM",
