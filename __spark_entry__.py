@@ -792,7 +792,12 @@ def _lsh_sql(num_hashes: int, band_size: int) -> str:
     return f"""
 WITH {_SHINGLES_CTE},
 sigs AS (SELECT doc_id, {_minhash_aggs(num_hashes)} FROM sh GROUP BY doc_id),
-bands AS ({band_rows})
+raw_bands AS ({band_rows}),
+-- the operator's max_bucket skew guard (default 1000 docs per bucket)
+kept AS (SELECT band_idx, band_key FROM raw_bands
+         GROUP BY band_idx, band_key HAVING count(*) <= 1000),
+bands AS (SELECT r.* FROM raw_bands r
+          JOIN kept k ON r.band_idx = k.band_idx AND r.band_key = k.band_key)
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 FROM bands a JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id

@@ -12,11 +12,15 @@ ANSI-SQL oracle (DuckDB) can reproduce every value bit-for-bit:
 * LSH: K/r bands, band key = md5 of the band's signature slice;
   candidate pairs share any (band_idx, band_key) bucket.
 
-Scale notes: everything is explode → hash → groupBy-min, i.e. one
-shuffle on doc_id with map-side partial mins; the LSH self-join is on
-(band_idx, band_key) which is high-cardinality and therefore well
-distributed.  At 100 TB you'd salt mega-buckets (boilerplate pages) by
-capping bucket size before the pair join — `max_bucket` does this.
+Scale notes: shingling is linear in a document's words (the word
+array is bound once per row, not re-split per shingle).  MinHash is
+explode → hash → groupBy-min, i.e. one shuffle on doc_id with map-side
+partial mins.  The LSH is one aggregation on (band_idx, band_key), a
+high-cardinality and therefore well-distributed key: each bucket's ids
+are collected once and its pairs expanded in place, with no join.
+Mega-buckets (boilerplate pages) are dropped before any pair is made —
+`max_bucket` caps the bucket size, bounding both the collected id array
+and the quadratic expansion.
 """
 
 from __future__ import annotations
@@ -40,16 +44,26 @@ def normalize_text(c: Column | str) -> Column:
 
 
 def word_shingles(c: Column | str, n: int = 3) -> Column:
-    """Array of n-word shingles; whole text if fewer than n words."""
-    words = F.split(normalize_text(c), " ")
-    k = F.size(words)
-    make = F.transform(
-        F.sequence(F.lit(0), k - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(k >= n, make).otherwise(F.array(normalize_text(c)))
+    """Array of n-word shingles; whole text if fewer than n words.
+
+    Linear in words: the split is bound once per row as the one element
+    of an array, and the shingle builder runs as a lambda over it.  An
+    expression used inside a ``transform`` lambda is evaluated per
+    element, so splitting there would re-split the whole document for
+    every shingle."""
+    norm = normalize_text(c)
+
+    def grams(words: Column) -> Column:
+        k = F.size(words)
+        make = F.transform(
+            F.sequence(F.lit(0), k - n),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]
+            ),
+        )
+        return F.when(k >= n, make).otherwise(F.array(norm))
+
+    return F.element_at(F.transform(F.array(F.split(norm, " ")), grams), 1)
 
 
 def exact_duplicates(
@@ -76,11 +90,12 @@ def minhash_signatures(
     """doc → MinHash signature (one column per hash, sig_0..sig_{K-1}).
 
     explode(shingles) → K hash exprs → groupBy(doc).min() — a single
-    shuffle with map-side combine; no UDFs."""
+    shuffle with map-side combine; no UDFs.  A document's repeated
+    shingles need no dedup: min ignores them."""
     sh = df.select(
         F.col(id_col),
         F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-    ).dropDuplicates([id_col, "shingle"])
+    )
     aggs = [
         F.min(
             _hash15(
@@ -118,40 +133,28 @@ def lsh_candidate_pairs(
     text_col: str,
     num_hashes: int = 16,
     band_size: int = 4,
-    max_bucket: int | None = 1000,
+    max_bucket: int = 1000,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: docs sharing any band bucket.
 
+    One aggregation on (band_idx, band_key) collects each bucket's ids;
+    buckets of 2..max_bucket docs expand in place to their id_a < id_b
+    pairs, so the band frame is read once and no join is planned.
     max_bucket drops degenerate mega-buckets (boilerplate) before the
     quadratic pair expansion — the skew guard that matters at 100 TB."""
     sigs = minhash_signatures(df, id_col, text_col, num_hashes)
-    bands = lsh_bands(sigs, id_col, num_hashes, band_size)
-    if max_bucket is not None:
-        sized = bands.groupBy("band_idx", "band_key").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        bands = bands.join(
-            sized.filter(F.col("_n") <= max_bucket).drop("_n"),
-            on=["band_idx", "band_key"],
-            how="inner",
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_key") == F.col("b.band_key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+    buckets = (
+        lsh_bands(sigs, id_col, num_hashes, band_size)
+        .groupBy("band_idx", "band_key")
+        .agg(F.collect_list(id_col).alias("_ids"))
+        .filter(F.size("_ids").between(2, max_bucket))
+    )
+    return (
+        buckets.select(F.explode("_ids").alias("id_a"), "_ids")
+        .select("id_a", F.explode("_ids").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(

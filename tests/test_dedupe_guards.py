@@ -1,4 +1,5 @@
-"""Scale guards on the dedup stack: the hot-shingle df-cap.
+"""Scale guards on the dedup stack: the hot-shingle df-cap and the
+LSH bucket cap.
 
 A boilerplate shingle shared by d documents contributes d² rows to the
 Jaccard intersection self-join; the df-cap must drop it from every
@@ -10,7 +11,10 @@ from __future__ import annotations
 
 import pytest
 
-from data_pipeline_spark.operators.dedupe import ngram_jaccard_pairs
+from data_pipeline_spark.operators.dedupe import (
+    lsh_candidate_pairs,
+    ngram_jaccard_pairs,
+)
 
 
 @pytest.fixture(scope="module")
@@ -56,6 +60,22 @@ def test_df_cap_above_fixture_df_is_a_noop(spark, boilerplate_docs):
         boilerplate_docs, "doc_id", "text", threshold=0.5, max_doc_freq=100
     )
     assert sorted(map(tuple, lo.collect())) == sorted(map(tuple, hi.collect()))
+
+
+@pytest.mark.parametrize("max_bucket,n_pairs", [(7, 57), (6, 15), (5, 0)])
+def test_lsh_max_bucket_boundary(spark, max_bucket, n_pairs):
+    # 20 docs in three groups of identical text (7, 7 and 6 docs): each
+    # group fills its own buckets, and any band two groups share makes
+    # a bucket of 13+ docs.  A bucket exactly at the cap stays, one
+    # above it is dropped before any pair is made.
+    docs = spark.createDataFrame(
+        [(f"d{i:02d}", f"a b c d e f {i % 3} g h") for i in range(20)],
+        "doc_id string, text string",
+    )
+    pairs = lsh_candidate_pairs(
+        docs, "doc_id", "text", num_hashes=8, band_size=2, max_bucket=max_bucket
+    )
+    assert pairs.count() == n_pairs
 
 
 def test_ivf_self_contained_and_cluster_cap(spark):

@@ -108,6 +108,29 @@ def test_jaccard_df_cap_is_broadcast_anti_join(spark):
     )
 
 
+def test_word_shingles_splits_each_document_once(spark):
+    """The word array is bound once per row.  An expression inside a
+    transform lambda is evaluated per element, so a split referenced
+    from the shingle lambda re-splits the whole document per shingle
+    (quadratic in words); the plan must hold exactly one split."""
+    from data_pipeline_spark.operators.dedupe import word_shingles
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    plan = _plan(docs.select("doc_id", word_shingles("text").alias("sh")))
+    assert plan.count("split(") == 1, plan
+
+
+def test_lsh_candidates_plan_no_join(spark):
+    """Bucket pairs come from one aggregation on (band_idx, band_key):
+    the band frame is read once, with no size join and no self-join."""
+    from data_pipeline_spark.operators.dedupe import lsh_candidate_pairs
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    plan = _plan(lsh_candidate_pairs(docs, "doc_id", "text", 8, 2))
+    assert "Join" not in plan, plan
+    assert plan.count("split(") == 1, plan
+
+
 def test_ivf_cluster_cap_is_broadcast_anti_join(spark):
     from data_pipeline_spark.operators.similarity import ivf_threshold_pairs
 
