@@ -22,13 +22,16 @@ same lsn-guarded LWW at scan time and compaction folds the lane, so
 the late/duplicate no-op guarantee (T4) holds at read time:
 
     (change rows) ∪ (touched buckets' base keys, narrow scan)
-      → repartition by storage bucket            [the only wide shuffle]
+      → repartition(bucket)                      [the only wide shuffle]
       → groupBy(bucket, key).max_by(row, (change-over-key, lsn, ingest_ts))
       → write as the bucket's delta files        [no second shuffle]
 
 ``groupBy(bucket, key)`` reuses the bucket repartition exchange (hash
 partitioning on a subset of the grouping keys satisfies the clustered
 distribution), and the bucketed delta write skips its own repartition.
+The exchange takes no partition count: ``spark.sql.shuffle.partitions``
+sets it and AQE may coalesce it, since a bucket is one hash key and so
+stays in one task — one delta file per touched bucket.
 """
 
 from __future__ import annotations
@@ -43,24 +46,11 @@ from ..table.laketable import (
     DINBASE_COL,
     DOP_COL,
     DORD_COL,
+    LANE_COL,
     LakeTable,
 )
 from ..table.mor import require_mode
 from .schema import stamp_batch_id
-
-
-def reduce_partitions(table: LakeTable, spark) -> int:
-    """Partition count of a writer's repartition-by-bucket reduce.
-
-    2× the bucket count so (with high probability) no two buckets
-    hash-collide into one partition: a collision halves effective
-    parallelism (a straggler task carries two buckets' rows) and at
-    64 buckets / 32 partitions some task WILL carry 3-4 buckets.
-    Empty partitions cost ~nothing."""
-    return max(
-        2 * table.n_buckets,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
 
 
 def merge_into(
@@ -163,9 +153,8 @@ def merge_into(
         F.col("lsn").alias("o1"),
         F.col(DORD_COL).alias("o2"),
     )
-    nparts = reduce_partitions(table, changes.sparkSession)
     flagged = (
-        combined.repartition(nparts, BUCKET_COL)
+        combined.repartition(BUCKET_COL)
         .groupBy(BUCKET_COL, key)
         .agg(
             F.max_by(packed, order_key).alias("_row"),
@@ -175,10 +164,10 @@ def merge_into(
         # winner — nothing to write for them
         .filter(F.col(f"_row.{DOP_COL}").isNotNull())
         .select(F.col(BUCKET_COL), F.col(key), "_row.*", F.col(DINBASE_COL))
+        .withColumn(LANE_COL, F.lit("delta"))
     )
 
     table.merge_append(
-        None,
         flagged,
         buckets=affected,
         batch_key=str(batch_id),

@@ -84,10 +84,11 @@ class CdcPipeline:
         # open history versions; None = version every distinct lsn
         self.scd2_check_cols = scd2_check_cols
         self._batches_applied = 0
-        # per-batch phase walls (seconds), appended by apply_batch.
-        # Cost: a handful of perf_counter calls — always on.  This is
-        # the N→4N decomposition instrument: phases whose wall does NOT
-        # shrink with executors are the pipeline's Amdahl constant.
+        # per-batch phase walls (seconds), rows and bytes written,
+        # appended by apply_batch.  Cost: a handful of perf_counter
+        # calls — always on.  perfbench reads rows and bytes from it
+        # (events/s, write amplification); per-layer Spark stage
+        # metrics come from perfbench's job tags, not from here.
         self.phase_times: list[dict] = []
 
         def tbl(name: str, schema, key: str, nb: int, mor=None):
@@ -195,9 +196,10 @@ class CdcPipeline:
 
         # NOTE: no separate arrival-dedup pass — at-least-once duplicate
         # deliveries collapse inside the merge's max_by reduce (payload-
-        # identical copies) and inside the history apply's closure +
-        # bucket-exchange reduce (first arrival wins), so the batch is
-        # scanned rather than materialized into a 3×-copied cache.
+        # identical copies) and inside the history apply's closure
+        # window on its one bucket exchange (first arrival wins), so the
+        # batch is scanned rather than materialized into a 3×-copied
+        # cache.
 
         # -- 4-6. four independent table applies, submitted from
         # concurrent driver threads: each is its own chain of Spark jobs

@@ -14,9 +14,10 @@ previously-current row, and a late-arriving older version slots into the
 middle of the chain (bi-temporal correction) — so closure is recomputed
 for every affected key.
 
-Scale design — the closure runs on a NARROW frame holding only the
-CHAIN SUFFIX.  Token payloads never enter the closure, and the
-full-width data is shuffled exactly once per batch:
+Scale design — the apply is ONE bucket exchange from the batch to the
+history files.  Stored rows enter it narrow (no payload) and only as
+the CHAIN SUFFIX, so the full-width data shuffled per batch is the
+batch's own new versions:
 
   1. per-key ``min(incoming lsn)`` (batch-sized, broadcast);
   2. existing versions projected to (key, lsn, op, valid_from, stored
@@ -26,26 +27,30 @@ full-width data is shuffled exactly once per batch:
      so per-batch closure volume is O(batch) for in-order streams
      instead of O(full history of affected keys);
   3. replay guard: cross-batch re-deliveries of versions already in
-     the table collapse inside the closure and the full-width reduce —
-     both pick the STORED row over a re-delivered copy (``_is_new``
-     sorts stored-first), so no anti-join pass is needed;
-  4. the closure is ONE Spark window over (key ORDER BY lsn, _is_new,
-     valid_from): ``lag(lsn)`` drops duplicate copies of a version,
-     the check-cols gate's ``lag(_h)`` drops unchanged ones, then
-     ``scd2_close_windowed`` — the same rule the ``scd2_intervals``
-     query runs — sets lead(valid_from)-1s; all share one exchange and
-     one sort.  This departs from BASELINE, which names
+     the table collapse inside the closure window, which picks the
+     STORED row over a re-delivered copy (``_is_new`` sorts
+     stored-first), so no anti-join pass is needed;
+  4. the pruned stored rows (null payload) and the new versions (full
+     width) are unioned and ``repartition(bucket)``-ed once.  The
+     closure is ONE Spark window over ((bucket, key) ORDER BY lsn,
+     _is_new, valid_from), whose distribution that bucket exchange
+     already satisfies: ``lag(lsn)`` drops duplicate copies of a
+     version, the check-cols gate's ``lag(_h)`` drops unchanged ones,
+     then ``scd2_close_windowed`` — the same rule the ``scd2_intervals``
+     query runs — sets lead(valid_from)-1s; all share the one exchange
+     and one sort.  This departs from BASELINE, which names
      ``groupBy().applyInPandas`` for this step: the closure is a Spark
      window, a compiled JVM operator, and the CDC apply path starts no
      Python worker.  The engine's other Arrow UDFs are unchanged
      (``applyInPandasWithState`` in cdc/stateful.py, ``mapInPandas`` in
      sources/xml.py and operators/multimodal.py);
-  5. the closure delta (changed rows only, flagged insert-vs-stored)
-     drives a merge-on-read write: new versions append as base files
-     already carrying final validity, and validity changes of STORED
-     rows become per-bucket PATCH delta files — per-batch write volume
-     O(batch), where rewriting every touched bucket (copy-on-write) is
-     O(history) at uniformly-hashed CDC keys.
+  5. the window's changed rows go straight to a merge-on-read write,
+     with no second exchange: surviving new versions (payload and
+     validity from the same copy) append as base files already carrying
+     final validity, and validity changes of STORED rows become
+     per-bucket PATCH delta files — per-batch write volume O(batch),
+     where rewriting every touched bucket (copy-on-write) is O(history)
+     at uniformly-hashed CDC keys.
 
 For enormous batches (more changed keys than is broadcastable) the
 ``BROADCAST_MAX_DOCS`` gate falls back to a shuffle-based variant of
@@ -59,9 +64,8 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..table.laketable import BUCKET_COL, LakeTable
+from ..table.laketable import BUCKET_COL, LANE_COL, LakeTable
 from ..table.mor import require_mode
-from .merge import reduce_partitions
 from .schema import END_OF_TIME
 
 #: distinct changed keys up to which the per-key planning frames
@@ -103,10 +107,9 @@ def apply_history(
     `new_versions` is the RAW validated event stream — it may contain
     at-least-once duplicate deliveries of a (doc_id, lsn) and replays of
     versions already in the table; both collapse here (first arrival /
-    stored row wins) with no separate dedup pass: the narrow closure
-    window drops duplicate copies by ``lag(lsn)``, and the full-width
-    reduce rides the write's repartition-by-bucket exchange, so the
-    whole apply still costs ONE full-width shuffle.
+    stored row wins) with no separate dedup pass: the closure window
+    drops duplicate copies by ``lag(lsn)``, and the surviving row is
+    the one written, payload included.
 
     check_cols: optional attr-change gate — when set, a new version
     whose tracked attributes hash-match its lsn predecessor (stored or
@@ -119,21 +122,22 @@ def apply_history(
     reference analogue: the dbt incremental merge never rewrites the
     table per run, trades_enriched.sql:2-5):
 
-    * the batch's genuinely-new versions (closure rows flagged
-      ``is_insert``) are appended as base files, already carrying their
-      final validity;
+    * the batch's genuinely-new versions (closure survivors with
+      ``_is_new``, lane ``data``) are appended as base files, already
+      carrying their final validity;
     * validity changes to STORED rows (close-on-insert, bi-temporal
       corrections) become a small (key, lsn, valid_to, is_current)
-      PATCH delta per bucket;
+      PATCH delta per bucket (lane ``delta``);
     * ``LakeTable.read`` resolves patches at scan time (latest _dseq
       per (key, lsn)); ``compact()`` folds them back into the base on
       the small-file trigger, amortising the rewrite.
 
-    Plan shape: ONE batch-sized wide shuffle (the repartition-by-bucket
-    reduce, whose exchange the (bucket, key, lsn) groupBy and the
-    bucketed write both reuse) + the narrow closure join, which adds no
-    exchange on the wide side (pinned by tests/test_plans.py).  Dedup,
-    gate and closure share the narrow side's one exchange and sort.
+    Plan shape: ONE ``repartition(bucket)`` exchange, over the union of
+    the pruned stored rows and the new versions; the dedup, gate and
+    closure window reuses its partitioning, and the write (one frame,
+    both lanes) adds no exchange — pinned by tests/test_plans.py.  The
+    exchange takes no partition count, so AQE may coalesce it; a bucket
+    is one hash key and stays in one task, one file per lane and bucket.
     """
     require_mode(history, "patch")
     key = history.key_col
@@ -209,30 +213,36 @@ def apply_history(
             | F.col("lsn").eqNullSafe(F.col("_pred"))
         )
         .drop("_min_new", "_pred")
-        .withColumn("_is_new", F.lit(False))
+        .withColumns(
+            {"_is_new": F.lit(False), BUCKET_COL: history.bucket_of(key)}
+        )
     )
-    all_narrow = ex_narrow.unionByName(
+    # ONE exchange carries the batch to the history files: new versions
+    # at full width, stored rows narrow (null payload from the union)
+    rows = (
         nv.select(
-            key,
-            "lsn",
-            "op",
-            "valid_from_utc",
+            "*",
             F.lit(-1).cast("long").alias("_stored_vt_us"),
             F.lit(False).alias("_stored_ic"),
             F.lit(True).alias("_is_new"),
             *_attr_hash(nv, check_cols),
         )
+        .unionByName(ex_narrow, allowMissingColumns=True)
+        .repartition(BUCKET_COL)
     )
 
     # at-least-once duplicates of a (key, lsn) — and re-deliveries of
     # stored versions — collapse to ONE version: the stored row when
     # present (_is_new=False sorts first), else the first arrival (min
-    # valid_from; nulls last).  The full-width reduce below makes the
-    # identical pick.  The gate and closure windows reuse this window's
-    # exchange and sort: the filters between them keep both.
+    # valid_from; nulls last).  The surviving row carries the payload
+    # too, so payload and validity come from the same copy.  The
+    # window's (bucket, key) partitioning is satisfied by the bucket
+    # exchange, and the gate and closure windows reuse its sort: the
+    # filters between them keep both.
     order = ["lsn", "_is_new", F.col("valid_from_utc").asc_nulls_last()]
-    w = Window.partitionBy(key).orderBy(order)
-    versions = all_narrow.withColumn("_prev_lsn", F.lag("lsn").over(w)).filter(
+    part = [BUCKET_COL, key]
+    w = Window.partitionBy(*part).orderBy(order)
+    versions = rows.withColumn("_prev_lsn", F.lag("lsn").over(w)).filter(
         ~F.col("_prev_lsn").eqNullSafe(F.col("lsn"))
     )
     if check_cols:
@@ -247,83 +257,31 @@ def apply_history(
             | (F.col("_prev_op") == "D")
             | ~F.col("_prev_h").eqNullSafe(F.col("_h"))
         )
-    # DELTA output: only rows whose validity actually changed — new
-    # versions and neighbours of inserts, O(batch) in an append-mostly
-    # stream.  Stored validity is exact int64 µs (-1 for new rows).
-    # The closure feeds BOTH writes (new base rows + patch deltas);
-    # without a persist the second write re-executes the narrow scan +
-    # closure DAG.  The frame is narrow and batch-sized: memory-only
-    # cache, freed in `finally`.
-    closure = (
-        scd2_close_windowed(versions, key, order, "valid_from_utc", "op")
-        .filter(
-            F.col("_is_new")
-            | (F.unix_micros("valid_to_utc") != F.col("_stored_vt_us"))
-            | (F.col("is_current") != F.col("_stored_ic"))
-        )
-        # is_insert: the surviving copy is NEW — appended as a base row;
-        # the rest become patch deltas (stored rows are never re-inserted)
-        .select(key, "lsn", "valid_to_utc", "is_current",
-                F.col("_is_new").alias("is_insert"))
-        .persist()
-    )
-    nparts = reduce_partitions(history, new_versions.sparkSession)
-
-    # full width, deduped to one row per (key, lsn): first arrival wins
-    # (same pick as the closure), on the write's bucket exchange
-    nv_full = nv
-    for f in history.schema.fields:
-        if f.name not in nv_full.columns:
-            nv_full = nv_full.withColumn(f.name, F.lit(None).cast(f.dataType))
-    width_cols = [f.name for f in history.schema.fields]
-    nv_full = nv_full.select(*width_cols, BUCKET_COL)
-    rest_cols = [c for c in width_cols if c not in (key, "lsn")]
-    packed = F.struct(*[F.col(c) for c in rest_cols])
-    reduced = (
-        nv_full.repartition(nparts, BUCKET_COL)
-        .groupBy(BUCKET_COL, key, "lsn")
-        .agg(F.min_by(packed, F.col("valid_from_utc")).alias("_row"))
-        .select(F.col(BUCKET_COL), F.col(key), F.col("lsn"), "_row.*")
-    )
-
-    # genuinely-new versions keep only closure-flagged inserts (inner
-    # join drops cross-batch re-deliveries of stored rows) and pick up
-    # their final validity; the narrow side shuffles, the wide side
-    # reuses the reduce's partitioning and sort order
-    x = (
-        closure.filter(F.col("is_insert"))
-        .select(key, "lsn", F.col("valid_to_utc").alias("_new_vt"),
-                F.col("is_current").alias("_new_ic"))
-        .withColumn(BUCKET_COL, history.bucket_of(key))
-        .repartition(nparts, F.col(BUCKET_COL))
-    )
-    new_rows = reduced.join(x, [BUCKET_COL, key, "lsn"], "inner").select(
-        *[
-            F.col("_new_vt").alias("valid_to_utc")
-            if c == "valid_to_utc"
-            else F.col("_new_ic").alias("is_current")
-            if c == "is_current"
-            else F.col(c)
-            for c in width_cols
-        ],
-        F.col(BUCKET_COL),
-    )
-
-    patches = closure.filter(~F.col("is_insert")).select(
-        key, "lsn", "valid_to_utc", "is_current"
+    # write only rows whose validity actually changed — new versions
+    # and neighbours of inserts, O(batch) in an append-mostly stream.
+    # Stored validity is exact int64 µs (-1 for new rows).  A surviving
+    # NEW row is appended as a base row already carrying its final
+    # validity; a changed STORED row becomes a patch delta (stored rows
+    # are never re-inserted)
+    closure = scd2_close_windowed(versions, part, order, "valid_from_utc", "op")
+    out = closure.filter(
+        F.col("_is_new")
+        | (F.unix_micros("valid_to_utc") != F.col("_stored_vt_us"))
+        | (F.col("is_current") != F.col("_stored_ic"))
+    ).select(
+        *[f.name for f in history.schema.fields if f.name in closure.columns],
+        BUCKET_COL,
+        F.when(F.col("_is_new"), "data").otherwise("delta").alias(LANE_COL),
     )
 
     try:
         history.merge_append(
-            new_rows,
-            patches,
+            out,
             buckets=affected,
             batch_key=str(batch_id),
             batch_info={"buckets": sorted(affected)},
-            prepartitioned=True,
         )
     finally:
-        closure.unpersist()
         ex_aff.unpersist()
     # changed_docs is an HLL estimate (±2%) from the caller's probe
     return {"buckets": sorted(affected), "changed_docs": n_docs}
@@ -331,7 +289,7 @@ def apply_history(
 
 def scd2_close_windowed(
     df: DataFrame,
-    key_col: str,
+    key_col: str | list,
     order_col: str | Column | list,
     valid_from_col: str,
     op_col: str | None = None,
@@ -343,7 +301,8 @@ def scd2_close_windowed(
         valid_to   = lead(valid_from) - 1s, else END_OF_TIME
         is_current = last version && op != 'D'
 
-    ``order_col`` is one column or a list (Window.orderBy's argument)."""
+    ``key_col`` (the window's partition) and ``order_col`` are each one
+    column or a list (``apply_history`` partitions by (bucket, key))."""
     w = Window.partitionBy(key_col).orderBy(order_col)
     # lead() is evaluated once, into a column both outputs read
     out = df.withColumn("_next_from", F.lead(F.col(valid_from_col)).over(w))

@@ -134,13 +134,12 @@ def build_session(
             str(_agg_fallback_threshold(heap, ncores)),
         )
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # co-partitioned joins on a PREFIX of the join keys: the SCD2
-        # join-back joins on [bucket, key, lsn] with both sides already
-        # hash-partitioned by bucket alone.  Spark 3.3+ defaults this to
-        # true, which silently re-shuffles BOTH sides full-width (and
-        # re-sorts the wide side) — the exact anti-pattern the engine's
-        # single-exchange story forbids.  Subset co-partitioning is safe
-        # here: bucket counts are sized so per-bucket skew is bounded.
+        # co-partitioned joins on a PREFIX of the join keys: a join on
+        # [bucket, key, ...] whose sides are already hash-partitioned by
+        # bucket alone reuses that partitioning.  Spark 3.3+ defaults
+        # this to true, which silently re-shuffles BOTH sides
+        # full-width.  The SCD2 apply plans no such join (one bucket
+        # exchange and a window), so it does not depend on this.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # file-source partition sizing: at 100 TB this is the knob that
         # keeps scan tasks ~128 MB; harmless at sandbox scale.

@@ -92,6 +92,8 @@ from .mor import (  # noqa: F401 — system cols re-exported for writers
 )
 
 BUCKET_COL = "_bucket"
+# routes each row a write stages: "data" -> base files, "delta" -> the lane
+LANE_COL = "_lane"
 
 # CAS retry bound: every retry means another writer actually committed
 # (system-wide progress), so this only trips on pathological contention.
@@ -446,72 +448,43 @@ class LakeTable:
     # write / commit
     # ------------------------------------------------------------------
     def _stage(
-        self,
-        data: DataFrame | None = None,
-        delta: DataFrame | None = None,
-        prepartitioned: bool = False,
-        allowed: Iterable[int] | None = None,
+        self, rows: DataFrame, allowed: Iterable[int] | None = None
     ) -> tuple[dict[int, list[str]], dict[int, list[list]]]:
-        """The one file writer.  Materialises ``data`` as base files
-        under ``data/bucket=K/`` and ``delta`` (carrying the lane's
-        system columns) under ``delta/bucket=K/`` in ONE Spark write;
-        returns bucket -> relative paths and bucket -> ``[rel_path,
+        """The one file writer.  Materialises ``rows`` in ONE Spark
+        write; its ``LANE_COL`` routes each row: ``"data"`` rows become
+        base files under ``data/bucket=K/``, ``"delta"`` rows (carrying
+        the lane's system columns) delta files under ``delta/bucket=K/``.
+        Returns bucket -> relative paths and bucket -> ``[rel_path,
         size_bytes]`` (``_dseq`` is added by the commit loop, never
         written into a file).  Files are staged, then renamed into place
         (same filesystem, cheap); only the metadata publish makes them
         visible.
 
-        Each lane's table columns are cast to the table's types.  A lane
-        carrying BUCKET_COL is taken as hash-partitioned by it — the data
-        lane only with ``prepartitioned=True`` — so it needs no shuffle;
-        any other lane is repartitioned by bucket (2× the bucket count,
-        so buckets do not hash-collide into a straggler task).  The lanes
-        are unioned by name and written ``partitionBy(_lane, bucket)``:
-        each file keeps a superset of its lane's read schema (parquet
-        projects by name) and union execution concatenates child
-        partitions, so each side keeps its bucket clustering.
+        The table columns ``rows`` carries are cast to the table's types
+        (a missing one reads back null); every file keeps the frame's
+        columns, a superset of its lane's read schema (parquet projects
+        by name).  A frame carrying BUCKET_COL is taken as
+        hash-partitioned by it, so it needs no shuffle; any other is
+        repartitioned by bucket with no partition count, so AQE may
+        coalesce the stage's tasks.  A bucket is one hash key and lands
+        in one task either way, so the write, partitioned by (lane,
+        bucket), makes one file per lane and bucket.
 
         A bucket outside ``allowed`` (the caller's planned set) drops
         every file written and raises ``ValueError``."""
         types = {f.name: f.dataType for f in self.schema.fields}
-
-        def bucketed(df: DataFrame) -> DataFrame:
-            if BUCKET_COL in df.columns:
-                return df
-            df = df.withColumn(BUCKET_COL, self.bucket_of())
-            return df.repartition(2 * self.n_buckets, F.col(BUCKET_COL))
-
-        lanes: dict[str, DataFrame] = {}
-        if data is not None:
-            if not prepartitioned:
-                data = data.drop(BUCKET_COL)
-            have = set(data.columns)
-            lanes["data"] = bucketed(
-                data.select(
-                    *[
-                        (F.col(c) if c in have else F.lit(None)).cast(t).alias(c)
-                        for c, t in types.items()
-                    ],
-                    *([BUCKET_COL] if BUCKET_COL in have else []),
-                )
-            )
-        if delta is not None:
-            lanes["delta"] = bucketed(
-                delta.select(
-                    *[
-                        F.col(c).cast(types[c]).alias(c) if c in types else c
-                        for c in delta.columns
-                    ]
-                )
+        rows = rows.select(
+            *[F.col(c).cast(types[c]).alias(c) if c in types else c
+              for c in rows.columns]
+        )
+        if BUCKET_COL not in rows.columns:
+            rows = rows.withColumn(BUCKET_COL, self.bucket_of()).repartition(
+                BUCKET_COL
             )
         files: dict[str, dict[int, list]] = {"data": {}, "delta": {}}
         stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
         try:
-            if lanes:
-                d, *x = [df.withColumn("_lane", F.lit(n)) for n, df in lanes.items()]
-                if x:
-                    d = d.unionByName(x[0], allowMissingColumns=True)
-                d.write.partitionBy("_lane", BUCKET_COL).parquet(stage)
+            rows.write.partitionBy(LANE_COL, BUCKET_COL).parquet(stage)
             # <stage>/_lane=<lane>/_bucket=<b>/part-*.parquet
             for src in sorted(glob.glob(os.path.join(stage, "*", "*", "*.parquet"))):
                 lane_dir, bucket_dir = src.split(os.sep)[-3:-1]
@@ -679,7 +652,9 @@ class LakeTable:
         planned (its df was computed from stale bucket contents)."""
         replaced = set(int(b) for b in buckets)
         base = self.snapshot
-        new_files, _ = self._stage(df, allowed=replaced)
+        new_files, _ = self._stage(
+            df.withColumn(LANE_COL, F.lit("data")), allowed=replaced
+        )
 
         def apply(snap: Snapshot):
             self._require_planned(
@@ -704,7 +679,7 @@ class LakeTable:
         """Append-only commit (used by history/lineage tables).
         Multi-writer: always rebaseable — new files merge into whatever
         the head snapshot holds."""
-        new_files, _ = self._stage(df)
+        new_files, _ = self._stage(df.withColumn(LANE_COL, F.lit("data")))
 
         def apply(snap: Snapshot):
             merged = {b: list(fs) for b, fs in snap.files.items()}
@@ -716,18 +691,17 @@ class LakeTable:
 
     def merge_append(
         self,
-        new_rows: DataFrame | None,
-        delta: DataFrame | None,
+        rows: DataFrame,
         buckets: Iterable[int],
         batch_key: str | None = None,
         batch_info: dict[str, Any] | None = None,
-        prepartitioned: bool = False,
     ) -> None:
-        """Merge-on-read commit: append `new_rows` as base files and
-        `delta` as delta-lane files in ONE atomic snapshot — nothing
-        existing is rewritten, so the write volume is O(batch).
+        """Merge-on-read commit: append the ``rows`` whose ``LANE_COL``
+        is ``"data"`` as base files and those tagged ``"delta"`` as
+        delta-lane files in ONE atomic snapshot — nothing existing is
+        rewritten, so the write volume is O(batch).
 
-        `delta` must already carry the mode's system columns (patch:
+        Delta rows must already carry the mode's system columns (patch:
         row ids + patch cols; upsert: full row + _op/_ord_ts/_in_base).
         The commit-order stamp ``_dseq`` is NOT written into the files:
         it is assigned inside the commit retry loop (``snap.version+1``
@@ -761,9 +735,7 @@ class LakeTable:
             raise ValueError("merge_append requires a merge_on_read table")
         touched = set(int(b) for b in buckets)
         base = self.snapshot
-        new_files, delta_new = self._stage(
-            new_rows, delta, prepartitioned, allowed=touched
-        )
+        new_files, delta_new = self._stage(rows, allowed=touched)
 
         def apply(snap: Snapshot):
             if mor["mode"] == "upsert":
@@ -894,7 +866,9 @@ class LakeTable:
         folded = fold_survivors(
             read_delta_lane(self.spark, base.schema, mor, dfiles), mor
         )
-        _, new = self._stage(delta=folded, allowed=victims)
+        _, new = self._stage(
+            folded.withColumn(LANE_COL, F.lit("delta")), allowed=victims
+        )
         maxd = {b: max(e[2] for e in base.delta_files[b]) for b in victims}
 
         def apply(snap: Snapshot):

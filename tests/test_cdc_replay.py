@@ -279,6 +279,110 @@ def test_bitemporal_midchain_late_arrival_closure(spark, tmp_path):
     }
 
 
+def test_history_duplicate_pick_keeps_first_arrival_payload(spark, tmp_path):
+    """Two copies of (d1, lsn 5) with distinct tokens in one batch: the
+    history row carries the FIRST arrival's tokens, with the validity
+    of that same copy.  A re-delivery of a stored version with changed
+    tokens leaves the stored row as it was."""
+    import datetime
+
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def ts(s):
+        return t0 + datetime.timedelta(seconds=s)
+
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0)
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                ("d1", 3, "I", [3], 1, None, None, 0, ts(1)),
+                ("d1", 4, "U", [4], 1, None, None, 0, ts(2)),
+            ],
+            CHANGE_EVENT_SCHEMA,
+        ),
+        0,
+    )
+    stored = pipe.history_df().filter("lsn = 3").collect()
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                ("d1", 5, "U", [6, 6], 2, None, None, 0, ts(11)),  # later copy
+                ("d1", 5, "U", [5, 5], 2, None, None, 0, ts(10)),  # first arrival
+                ("d1", 3, "I", [9], 1, None, None, 1, ts(12)),  # changed re-delivery
+            ],
+            CHANGE_EVENT_SCHEMA,
+        ).repartition(3),
+        1,
+    )
+    hist = pipe.history_df()
+    (v5,) = hist.filter("lsn = 5").collect()
+    assert (v5.tokens, v5.valid_from_utc, v5.is_current) == ([5, 5], ts(10), True)
+    assert hist.filter("lsn = 3").collect() == stored
+    assert stored[0].tokens == [3]
+
+
+@pytest.mark.parametrize("shuffle_partitions", [4, 64])
+def test_one_file_per_bucket_whatever_the_shuffle_partitions(
+    spark, tmp_path, shuffle_partitions
+):
+    """The CDC write stages take their partition count from
+    spark.sql.shuffle.partitions, which AQE may coalesce; a bucket is
+    one hash key, so it lands in one task either way.  With fewer
+    partitions than buckets and with many more, each touched bucket
+    gains one target delta file, one history base file and at most one
+    history patch file per batch, and compaction leaves one base file
+    per bucket."""
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    def counts(table):
+        snap = table.refresh().snapshot
+        base = {b: len(fs) for b, fs in snap.files.items()}
+        delta = {b: len(fs) for b, fs in snap.delta_files.items()}
+        return base, delta
+
+    def gained(before, after):
+        return {b: n - before.get(b, 0) for b, n in after.items()
+                if n != before.get(b, 0)}
+
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(shuffle_partitions))
+    try:
+        pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=8, compact_every=0)
+        for batch_id in range(2):  # inserts, then an update of every key
+            rows = [
+                (f"d{i}", 10 * batch_id + 1, "IU"[batch_id], [i], 1, None, None,
+                 i % 3, None)
+                for i in range(64)
+            ]
+            t_base, t_delta = counts(pipe.target)
+            h_base, h_delta = counts(pipe.history)
+            pipe.apply_batch(
+                spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+                .withColumn("ingest_ts", F.current_timestamp())
+                .repartition(5),
+                batch_id,
+            )
+            t_base2, t_delta2 = counts(pipe.target)
+            h_base2, h_delta2 = counts(pipe.history)
+            every = {b: 1 for b in range(8)}  # 64 keys touch all 8 buckets
+            assert gained(t_base, t_base2) == {}
+            assert gained(t_delta, t_delta2) == every
+            assert gained(h_base, h_base2) == every
+            patches = gained(h_delta, h_delta2)
+            assert set(patches.values()) <= {1}
+            assert bool(patches) == (batch_id == 1)
+        for table in (pipe.target, pipe.history):
+            assert table.compact(max_files_per_bucket=0) == list(range(8))
+            assert counts(table) == ({b: 1 for b in range(8)}, {})
+        assert pipe.current_state().count() == 64
+        assert pipe.history_df().count() == 128
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_as_of_closed_interval_boundary(spark, tmp_path):
     """as_of uses a CLOSED valid_to (>=), diverging from the reference
     macro's strict `>` (time_travel.sql:22-24): with −1 s closure the

@@ -22,7 +22,7 @@ from pyspark.sql.types import (
 )
 
 from data_pipeline_spark.table import LakeTable
-from data_pipeline_spark.table.laketable import CommitConflict
+from data_pipeline_spark.table.laketable import LANE_COL, CommitConflict
 from data_pipeline_spark.table.mor import DINBASE_COL, DOP_COL, DORD_COL
 
 HIST = StructType(
@@ -52,6 +52,19 @@ UPSERT_MOR = {"mode": "upsert", "row_id_cols": ["doc_id"], "order_cols": ["lsn"]
 LAKE = pytest.mark.parametrize("fmt", ["lake"])
 
 
+def _lanes(data=None, delta=None):
+    """One merge_append frame: base rows and delta rows, lane-tagged."""
+    tagged = [
+        df.withColumn(LANE_COL, F.lit(lane))
+        for lane, df in (("data", data), ("delta", delta))
+        if df is not None
+    ]
+    out = tagged[0]
+    for df in tagged[1:]:
+        out = out.unionByName(df, allowMissingColumns=True)
+    return out
+
+
 def _upsert_delta(spark, rows, in_base):
     df = spark.createDataFrame(rows, TGT)
     return (
@@ -68,14 +81,20 @@ def test_patch_mode_resolution_and_fold(spark, tmp_path, fmt):
         merge_on_read=PATCH_MOR,
     )
     t.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True), ("b", 1, EOT, True)], HIST),
-        None, buckets=range(4), batch_key="0",
+        _lanes(
+            data=spark.createDataFrame(
+                [("a", 1, EOT, True), ("b", 1, EOT, True)], HIST
+            )
+        ),
+        buckets=range(4), batch_key="0",
     )
     closed = datetime.datetime(2024, 1, 1)
     t.merge_append(
-        spark.createDataFrame([("a", 2, EOT, True)], HIST),
-        spark.createDataFrame([("a", 1, closed, False)], HIST).select(
-            "doc_id", "lsn", "valid_to_utc", "is_current"
+        _lanes(
+            data=spark.createDataFrame([("a", 2, EOT, True)], HIST),
+            delta=spark.createDataFrame([("a", 1, closed, False)], HIST).select(
+                "doc_id", "lsn", "valid_to_utc", "is_current"
+            ),
         ),
         buckets=range(4), batch_key="1",
     )
@@ -88,7 +107,7 @@ def test_patch_mode_resolution_and_fold(spark, tmp_path, fmt):
     # later patch of the same row id wins (per-commit _dseq)
     closed2 = datetime.datetime(2024, 6, 1)
     t.merge_append(
-        None, spark.createDataFrame([("a", 1, closed2, False)], HIST),
+        _lanes(delta=spark.createDataFrame([("a", 1, closed2, False)], HIST)),
         buckets=range(4), batch_key="2",
     )
     prev = t.version - 1
@@ -111,32 +130,32 @@ def test_upsert_mode_lww_guard_and_fold(spark, tmp_path, fmt):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a1", 1), ("b", "b1", 1)], False),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1), ("b", "b1", 1)], False)),
         buckets=range(4), batch_key="0",
     )
     assert {r.doc_id: r.v for r in u.read().collect()} == {"a": "a1", "b": "b1"}
     u.compact(max_files_per_bucket=0)  # inserts become base rows
     # newer update replaces, tombstone deletes, fresh insert lands
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a2", 5), ("b", None, 9)], True),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5), ("b", None, 9)], True)),
         buckets=range(4), batch_key="1",
     )
     u.merge_append(
-        None, _upsert_delta(spark, [("c", "c1", 2)], False),
+        _lanes(delta=_upsert_delta(spark, [("c", "c1", 2)], False)),
         buckets=range(4), batch_key="2",
     )
     got = {r.doc_id: (r.v, r.lsn) for r in u.read().collect()}
     assert got == {"a": ("a2", 5), "c": ("c1", 2)}
     # STALE delta (lower lsn) loses the read-time order guard (T4)
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "stale", 3)], True),
+        _lanes(delta=_upsert_delta(spark, [("a", "stale", 3)], True)),
         buckets=range(4), batch_key="3",
     )
     assert {r.doc_id: r.v for r in u.read().collect()}["a"] == "a2"
     # equal order key across commits: earlier commit wins (== CoW
     # target-wins-ties)
     u.merge_append(
-        None, _upsert_delta(spark, [("c", "c-later", 2)], False),
+        _lanes(delta=_upsert_delta(spark, [("c", "c-later", 2)], False)),
         buckets=range(4), batch_key="4",
     )
     assert {r.doc_id: r.v for r in u.read().collect()}["c"] == "c1"
@@ -156,7 +175,7 @@ def test_compaction_racing_upsert_writer_conflicts(spark, tmp_path, fmt):
     LakeTable.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
     w1 = LakeTable.load(spark, path)
     w1.merge_append(
-        None, _upsert_delta(spark, [("a", "a1", 1)], False),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)], False)),
         buckets=[0], batch_key="0",
     )
     # writer plans an update against the un-compacted state…
@@ -165,13 +184,13 @@ def test_compaction_racing_upsert_writer_conflicts(spark, tmp_path, fmt):
     w1.refresh().compact(max_files_per_bucket=0)
     with pytest.raises(CommitConflict):
         w2.merge_append(
-            None, _upsert_delta(spark, [("a", "a2", 5)], False),
+            _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], False)),
             buckets=[0], batch_key="1",
         )
     # recompute from fresh state (a is now IN base) → converges
     w2.refresh()
     w2.merge_append(
-        None, _upsert_delta(spark, [("a", "a2", 5)], True),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], True)),
         buckets=[0], batch_key="1",
     )
     head = LakeTable.load(spark, path)
@@ -195,8 +214,10 @@ def test_merge_append_outside_planned_buckets_leaves_no_files(
     delta = _upsert_delta(spark, [(k, "w", 2) for k in keys], True)
     with pytest.raises(ValueError, match="outside the planned set"):
         t.merge_append(
-            new_rows if lanes != "delta" else None,
-            delta if lanes != "data" else None,
+            _lanes(
+                data=new_rows if lanes != "delta" else None,
+                delta=delta if lanes != "data" else None,
+            ),
             buckets=[0],
             batch_key="0",
         )
@@ -222,7 +243,7 @@ def test_compaction_racing_patch_writer_rebases(spark, tmp_path):
     )
     w1 = LakeTable.load(spark, path)
     w1.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=[0], batch_key="0",
     )
     closed = datetime.datetime(2024, 1, 1)
@@ -230,8 +251,10 @@ def test_compaction_racing_patch_writer_rebases(spark, tmp_path):
     w1.refresh().compact(max_files_per_bucket=0)
     # w2 plans against the pre-compaction state; patch rebases cleanly
     w2.merge_append(
-        spark.createDataFrame([("a", 2, EOT, True)], HIST),
-        spark.createDataFrame([("a", 1, closed, False)], HIST),
+        _lanes(
+            data=spark.createDataFrame([("a", 2, EOT, True)], HIST),
+            delta=spark.createDataFrame([("a", 1, closed, False)], HIST),
+        ),
         buckets=[0], batch_key="1",
     )
     head = LakeTable.load(spark, path)
@@ -245,15 +268,14 @@ def test_compaction_trigger_counts_delta_files(spark, tmp_path):
         merge_on_read=PATCH_MOR,
     )
     t.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=[0], batch_key="0",
     )
     for i in range(4):
         t.merge_append(
-            None,
-            spark.createDataFrame(
+            _lanes(delta=spark.createDataFrame(
                 [("a", 1, datetime.datetime(2024, 1, 1 + i), False)], HIST
-            ),
+            )),
             buckets=[0], batch_key=str(i + 1),
         )
     assert t.file_stats()[0] >= 5  # 1 base + 4 delta
@@ -277,12 +299,15 @@ def test_mor_read_resolves_deltas_without_base_shuffle(spark, tmp_path):
         merge_on_read=PATCH_MOR,
     )
     t.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=range(2), batch_key="0",
     )
     t.merge_append(
-        None,
-        spark.createDataFrame([("a", 1, datetime.datetime(2024, 1, 1), False)], HIST),
+        _lanes(
+            delta=spark.createDataFrame(
+                [("a", 1, datetime.datetime(2024, 1, 1), False)], HIST
+            )
+        ),
         buckets=range(2), batch_key="1",
     )
     p = plan(t.read())
@@ -299,12 +324,12 @@ def test_mor_read_resolves_deltas_without_base_shuffle(spark, tmp_path):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a1", 1)], False),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)], False)),
         buckets=range(2), batch_key="0",
     )
     u.compact(max_files_per_bucket=0)
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a2", 5)], True),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], True)),
         buckets=range(2), batch_key="1",
     )
     p = plan(u.read())
@@ -324,7 +349,7 @@ def test_dseq_assigned_at_commit_time_lost_race_keeps_order(spark, tmp_path, fmt
     LakeTable.create(spark, path, HIST, "doc_id", n_buckets=1, merge_on_read=PATCH_MOR)
     w1 = LakeTable.load(spark, path)
     w1.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=[0], batch_key="seed",
     )
     # both writers plan at the same head version → both would have
@@ -334,13 +359,13 @@ def test_dseq_assigned_at_commit_time_lost_race_keeps_order(spark, tmp_path, fmt
     t_first = datetime.datetime(2024, 1, 1)
     t_second = datetime.datetime(2025, 6, 1)
     wa.merge_append(
-        None, spark.createDataFrame([("a", 1, t_first, False)], HIST),
+        _lanes(delta=spark.createDataFrame([("a", 1, t_first, False)], HIST)),
         buckets=[0], batch_key="p-first",
     )
     # wb loses the version race, reloads, commits at a HIGHER version —
     # its patch must win resolution (latest commit), not tie
     wb.merge_append(
-        None, spark.createDataFrame([("a", 1, t_second, False)], HIST),
+        _lanes(delta=spark.createDataFrame([("a", 1, t_second, False)], HIST)),
         buckets=[0], batch_key="p-second",
     )
     head = LakeTable.load(spark, path)
@@ -361,14 +386,14 @@ def test_schema_evolution_across_uncompacted_delta_lane(spark, tmp_path, fmt):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a1", 1)], False),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)], False)),
         buckets=range(2), batch_key="0",
     )
     assert u.add_columns([StructField("extra", StringType())])
     wide = _upsert_delta(spark, [("b", "b1", 1)], False).withColumn(
         "extra", F.lit("x")
     )
-    u.merge_append(None, wide, buckets=range(2), batch_key="1")
+    u.merge_append(_lanes(delta=wide), buckets=range(2), batch_key="1")
     for label in ("uncompacted", "compacted"):
         got = {r.doc_id: (r.v, r.extra) for r in u.read().collect()}
         assert got == {"a": ("a1", None), "b": ("b1", "x")}, (label, got)
@@ -384,12 +409,12 @@ def test_laketable_expire_removes_folded_delta_files(spark, tmp_path):
         merge_on_read=PATCH_MOR,
     )
     t.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=[0], batch_key="0",
     )
     closed = datetime.datetime(2024, 1, 1)
     t.merge_append(
-        None, spark.createDataFrame([("a", 1, closed, False)], HIST),
+        _lanes(delta=spark.createDataFrame([("a", 1, closed, False)], HIST)),
         buckets=[0], batch_key="1",
     )
     delta_dir = os.path.join(t.path, "delta", "bucket=0")
@@ -413,12 +438,15 @@ def test_lane_bytes_compaction_trigger(spark, tmp_path, fmt):
         merge_on_read=PATCH_MOR,
     )
     t.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=[0], batch_key="0",
     )
     t.merge_append(
-        None,
-        spark.createDataFrame([("a", 1, datetime.datetime(2024, 1, 1), False)], HIST),
+        _lanes(
+            delta=spark.createDataFrame(
+                [("a", 1, datetime.datetime(2024, 1, 1), False)], HIST
+            )
+        ),
         buckets=[0], batch_key="1",
     )
     nbytes = t.delta_bytes()[0]
@@ -446,13 +474,13 @@ def test_upsert_concurrent_base_append_conflicts(spark, tmp_path, fmt):
     w1.append(spark.createDataFrame([("a", "base", 1)], TGT))
     with pytest.raises(CommitConflict):
         w2.merge_append(
-            None, _upsert_delta(spark, [("a", "a2", 5)], False),
+            _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], False)),
             buckets=[0], batch_key="1",
         )
     # recompute from fresh state → converges with ONE row per key
     w2.refresh()
     w2.merge_append(
-        None, _upsert_delta(spark, [("a", "a2", 5)], True),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], True)),
         buckets=[0], batch_key="1",
     )
     rows = LakeTable.load(spark, path).read().collect()
@@ -471,16 +499,16 @@ def test_fold_delta_lane_upsert_semantics_and_tie_order(spark, tmp_path, fmt):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a1", 1), ("c", "c1", 2)], False),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1), ("c", "c1", 2)], False)),
         buckets=[0], batch_key="0",
     )
     u.merge_append(
-        None, _upsert_delta(spark, [("a", "a2", 5), ("d", None, 1)], False),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5), ("d", None, 1)], False)),
         buckets=[0], batch_key="1",
     )
     # intra-lane equal order key: earlier commit must keep winning
     u.merge_append(
-        None, _upsert_delta(spark, [("c", "c-later", 2)], False),
+        _lanes(delta=_upsert_delta(spark, [("c", "c-later", 2)], False)),
         buckets=[0], batch_key="2",
     )
     before = {r.doc_id: (r.v, r.lsn) for r in u.read().collect()}
@@ -493,7 +521,7 @@ def test_fold_delta_lane_upsert_semantics_and_tie_order(spark, tmp_path, fmt):
     # post-fold commit at the same order key: the folded row is the
     # EARLIER commit and must still win the tie
     u.merge_append(
-        None, _upsert_delta(spark, [("c", "c-after-fold", 2)], False),
+        _lanes(delta=_upsert_delta(spark, [("c", "c-after-fold", 2)], False)),
         buckets=[0], batch_key="3",
     )
     assert {r.doc_id: r.v for r in u.read().collect()}["c"] == "c1"
@@ -508,15 +536,14 @@ def test_fold_delta_lane_patch_mode(spark, tmp_path, fmt):
         merge_on_read=PATCH_MOR,
     )
     t.merge_append(
-        spark.createDataFrame([("a", 1, EOT, True)], HIST), None,
+        _lanes(data=spark.createDataFrame([("a", 1, EOT, True)], HIST)),
         buckets=[0], batch_key="0",
     )
     for i in range(3):
         t.merge_append(
-            None,
-            spark.createDataFrame(
+            _lanes(delta=spark.createDataFrame(
                 [("a", 1, datetime.datetime(2024, 1, 1 + i), False)], HIST
-            ),
+            )),
             buckets=[0], batch_key=str(i + 1),
         )
     assert t.delta_stats()[0] == 3

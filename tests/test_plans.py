@@ -156,13 +156,12 @@ def test_scd2_close_windowed_evaluates_lead_once(spark):
 
 
 def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
-    """Merge-on-read history apply: the insert-filter join-back must
-    reuse the batch reduce's bucket partitioning and sort order — one
-    batch-sized wide exchange on the full-width side, the narrow
-    closure side shuffling alone.  Requires
-    spark.sql.requireAllClusterKeysForCoPartition=false (build_session
-    sets it): Spark 3.3+'s default re-shuffles BOTH sides full-width
-    when the co-partitioning is on a prefix of the join keys."""
+    """Merge-on-read history apply: ONE bucket exchange carries the
+    batch to the history files.  The union of the pruned stored rows
+    and the new versions is repartitioned by bucket once; the dedup,
+    gate and closure window reuses that partitioning, and nothing
+    between the exchange and the write shuffles again — no join-back,
+    no fixed-count (REPARTITION_BY_NUM) exchange."""
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.cdc.scd2 import apply_history
@@ -179,13 +178,13 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
         range(4),
         50,
     )
-    # capture the base rows the apply hands to its commit
+    # capture the frame the apply hands to its commit
     seen = {}
     merge_append = LakeTable.merge_append
 
-    def capture(self, new_rows, *args, **kwargs):
-        seen["new_rows"] = new_rows
-        return merge_append(self, new_rows, *args, **kwargs)
+    def capture(self, rows, *args, **kwargs):
+        seen["rows"] = rows
+        return merge_append(self, rows, *args, **kwargs)
 
     monkeypatch.setattr(LakeTable, "merge_append", capture)
     apply_history(
@@ -195,19 +194,14 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
         range(4),
         20,
     )
-    plan = _plan(seen["new_rows"])
-    m = re.search(
-        r"SortMergeJoin.*?\n(.*?)Exchange hashpartitioning\(_bucket#\d+, \d+\), "
-        r"REPARTITION_BY_NUM",
-        plan,
-        re.S,
-    )
-    assert m, plan
-    wide = m.group(1)
-    assert "SortAggregate" in wide or "HashAggregate" in wide
-    join_to_agg = re.split(r"SortAggregate|HashAggregate", wide)[0]
-    assert "Exchange" not in join_to_agg, f"extra exchange on wide side:\n{plan}"
-    assert "Sort " not in join_to_agg, f"re-sort of the wide side:\n{plan}"
+    plan = _plan(seen["rows"])
+    assert "SortMergeJoin" not in plan, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    bucket_ex = re.findall(r"Exchange hashpartitioning\(_bucket#\d+", plan)
+    assert len(bucket_ex) == 1, plan
+    above, below = re.split(r"Exchange hashpartitioning\(_bucket#\d+.*\n", plan)
+    assert "Exchange" not in above, f"exchange above the bucket exchange:\n{plan}"
+    assert below.lstrip(" +-").startswith("Union"), plan
 
 
 def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
@@ -217,6 +211,7 @@ def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
     that lets either side diverge (e.g. a null filter pushed below one
     side's aggregate) silently shuffles the whole lane twice per read."""
     from data_pipeline_spark.table import LakeTable
+    from data_pipeline_spark.table.laketable import LANE_COL
     from data_pipeline_spark.table.mor import DINBASE_COL, DOP_COL, DORD_COL
 
     def batch(lo, hi, in_base):
@@ -238,9 +233,10 @@ def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
         spark, str(tmp_path / "t"), rows.schema, "doc_id", n_buckets=2,
         merge_on_read=mor,
     )
-    t.merge_append(rows, None, buckets=[0, 1])
-    t.merge_append(None, batch(0, 20, True), buckets=[0, 1])  # updates
-    t.merge_append(None, batch(50, 60, False), buckets=[0, 1])  # inserts
+    data, delta = F.lit("data").alias(LANE_COL), F.lit("delta").alias(LANE_COL)
+    t.merge_append(rows.select("*", data), buckets=[0, 1])
+    t.merge_append(batch(0, 20, True).select("*", delta), buckets=[0, 1])  # updates
+    t.merge_append(batch(50, 60, False).select("*", delta), buckets=[0, 1])  # inserts
     df = t.read()
     assert len(df.collect()) == 60
     plan = _plan(df)  # the adaptive plan after execution
