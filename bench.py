@@ -1,33 +1,26 @@
 #!/usr/bin/env python
 """bench.py — headline benchmark for the PySpark CDC engine.
 
-Default mode (what the driver runs):
-  * times the headline queries from ``__spark_entry__.queries()`` at
-    ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-    ``local[$SPARK_GRAFT_CPUS]`` (default local[*]);
-  * measures end-to-end CDC replay throughput (the engine's primary
-    metric, BASELINE.json): synthesize a deterministic change log, replay
-    it through CdcPipeline (dedup → LWW → bucket-pruned MERGE → SCD2
-    history → lineage), report change-events/sec applied;
-  * prints ONE JSON line:
+    python bench.py [--sf-dir DIR]
+
+* times the headline queries from ``__spark_entry__.queries()`` at
+  ``--sf-dir`` (default ``$SPARK_GRAFT_SF_DIR``, else the sf0.1 test
+  corpus) on ``local[$SPARK_GRAFT_CPUS]`` (default local[*]);
+* measures end-to-end CDC replay throughput (the engine's primary
+  metric, BASELINE.json): synthesize a deterministic change log and
+  drain it through Structured Streaming (``cdc/stream.py:run_stream``:
+  file source, foreachBatch → CdcPipeline, offsets checkpointed after
+  each batch commits), reporting change-events/sec applied;
+* after the timed replay, untimed, checks the final state and the SCD2
+  history against the pandas oracle (``cdc/oracle.py``) and exits
+  non-zero (AssertionError) on a mismatch;
+* prints ONE JSON line:
       {"metric": ..., "value": N, "unit": "sec",
        "queries": {...}, "sf": ..., "cdc_replay": {...}}
+  and writes the per-batch detail to BENCH_DETAIL.json.
 
-Scaling mode (evidence for the north_rule's N→4N criterion):
-  python bench.py --scaling [--levels 2,8] [--repeats 3] [--n-docs N]
-  runs the identical replay job on the identical input at two local
-  parallelism levels in separate, taskset-confined JVMs and reports
-  throughput at both plus efficiency = median_tput(4N) /
-  (4 × median_tput(N)) over --repeats back-to-back pairs (median-of-N
-  because the shared-host numbers wobble; every raw run is reported).
-  Default levels are 2,8 — cores 8→32 on this VM hit the single-host
-  memory-bandwidth ceiling (see BENCH.md), which a real 4× cluster
-  does not.  --scaling defaults to the documented headline input
-  (600k docs ≈ 8.3M events); plain bench mode uses the smaller
-  REPLAY_CFG so the per-round driver run stays fast.
-
-Internal worker mode (used by --scaling):
-  python bench.py --replay-only --cpus 8 --log-dir ... --work-dir ...
+``perfbench/`` (BENCHMARK.json) is the benchmark with per-layer
+metrics; it imports ``HEADLINE_QUERIES`` from this module.
 """
 
 from __future__ import annotations
@@ -36,7 +29,6 @@ import argparse
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
@@ -72,11 +64,10 @@ HEADLINE_QUERIES = [
 ]
 
 # replay-bench log shape: big enough that compute dominates JVM/job
-# overhead, small enough to synthesize in seconds.  24 files at 2 per
-# batch = a 12-batch replay with compaction ON (round-3 judge ask #2):
-# the headline now sees steady state — per-batch walls as the table
-# grows, plus the amortized compaction cost a continuous deployment
-# actually pays — instead of 2 warm-up-dominated batches.
+# overhead, small enough to synthesize in seconds.  24 files at 3 per
+# trigger = an 8-batch replay with compaction ON: the headline sees
+# steady state — per-batch walls as the table grows, plus the amortized
+# compaction cost a continuous deployment actually pays.
 REPLAY_CFG = dict(
     n_docs=60_000,
     seed=7,
@@ -87,19 +78,6 @@ REPLAY_CFG = dict(
 )
 REPLAY_BATCH_FILES = 3     # 8 batches
 REPLAY_COMPACT_EVERY = 4   # 2 lane folds across the replay
-
-# the documented headline input for --scaling (BENCH.md): ~8.3M events
-# over 600k docs, tokens 64-256 — the exact config behind the reported
-# N→4N numbers, reproducible via `python bench.py --scaling`.
-SCALING_CFG = dict(
-    n_docs=600_000,
-    seed=7,
-    n_partitions=32,
-    n_files=16,
-    min_tok=64,
-    max_tok=256,
-)
-REPLAY_FILES_PER_BATCH = 8
 # bucket count is a deployment knob sized to data volume (~1 bucket per
 # few GB of table); 16 at this scale keeps shuffle width and per-commit
 # file counts proportionate — 64 was modeling a table 100× this size
@@ -134,32 +112,42 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
     return timings
 
 
-def run_replay(
-    spark,
-    log_dir: str,
-    work_dir: str,
-    n_events: int,
-    files_per_batch: int = REPLAY_FILES_PER_BATCH,
-    compact_every: int = 0,
-) -> dict:
+def run_replay(spark, log_dir: str, work_dir: str, n_events: int) -> dict:
+    from data_pipeline_spark.cdc.oracle import (
+        assert_history_equal,
+        assert_tokens_equal,
+        expected_final_state,
+        load_log,
+    )
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
-    from data_pipeline_spark.cdc.stream import replay_batches
+    from data_pipeline_spark.cdc.stream import run_stream
 
-    base = os.path.join(work_dir, "lake")
-    if os.path.exists(base):
-        shutil.rmtree(base)
     pipeline = CdcPipeline(
         spark,
-        base,
+        os.path.join(work_dir, "lake"),
         n_buckets=REPLAY_BUCKETS,
-        compact_every=compact_every,
+        compact_every=REPLAY_COMPACT_EVERY,
     )
     t0 = time.perf_counter()
-    n_batches = replay_batches(
-        spark, log_dir, pipeline, files_per_batch=files_per_batch
+    n_batches = run_stream(
+        spark,
+        log_dir,
+        pipeline,
+        os.path.join(work_dir, "checkpoint"),
+        max_files_per_trigger=REPLAY_BATCH_FILES,
     )
     elapsed = time.perf_counter() - t0
-    final_rows = pipeline.current_state().count()
+
+    # untimed: the replay must equal the oracle, state and every version
+    log = load_log(log_dir)
+    state = (
+        pipeline.current_state()
+        .select("doc_id", "tokens", "n_tok", "source")
+        .toPandas()
+    )
+    assert_tokens_equal(state, expected_final_state(log))
+    assert_history_equal(pipeline, log)
+
     ph = pipeline.phase_times
     # steady state = batches 1..N (batch 0 carries JVM/codegen warm-up),
     # compaction INCLUDED — this is the throughput a continuous
@@ -186,394 +174,30 @@ def run_replay(
             else None
         ),
         "bytes_written_total": sum(p.get("bytes_written", 0) for p in ph),
-        "final_rows": final_rows,
+        "final_rows": len(state),
         # per-batch phase walls (probe / merge / history / dead_letter /
-        # lineage / applies / compact / total): the phases whose wall
-        # stays flat from N to 4N cores are the Amdahl constant the
-        # scaling efficiency is paying for; a history wall that stays
-        # ~flat as batches accumulate is the merge-on-read O(batch)
-        # write-cost claim, measured
+        # lineage / applies / compact / total); a history wall that
+        # stays ~flat as batches accumulate is the merge-on-read
+        # O(batch) write-cost claim, measured
         "phases": ph,
     }
 
 
-def synth_log(log_dir: str, cfg: dict | None = None) -> dict:
+def synth_log(log_dir: str) -> dict:
     from data_pipeline_spark.cdc.synth import generate_change_log
 
-    return generate_change_log(log_dir, **(cfg or REPLAY_CFG))
-
-
-# ---------------------------------------------------------------------------
-# --skew: adversarial hot-key bench (round-3 judge ask #5)
-# ---------------------------------------------------------------------------
-
-def _stage_straggler(spark, seen: set) -> tuple[dict, set]:
-    """Task-duration straggler stats for stages completed since `seen`,
-    via the Spark UI REST API: for the heaviest stages, ratio of the
-    slowest task to the median task.  A hot key that defeats the
-    map-side partial aggregation would show up here as one task
-    carrying the hot key's entire shuffle load."""
-    import json as _json
-    import urllib.request
-
-    sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        return {"available": False}, seen
-
-    def get(path):
-        with urllib.request.urlopen(f"{base}/api/v1{path}", timeout=10) as r:
-            return _json.loads(r.read())
-
-    app = sc.applicationId
-    stages = [
-        s for s in get(f"/applications/{app}/stages?status=COMPLETE")
-        if s["stageId"] not in seen
-    ]
-    new_ids = {s["stageId"] for s in stages}
-    heavy = sorted(stages, key=lambda s: -s.get("executorRunTime", 0))[:10]
-    per_stage = []
-    for s in heavy:
-        try:
-            q = get(
-                f"/applications/{app}/stages/{s['stageId']}/"
-                f"{s['attemptId']}/taskSummary?quantiles=0.5,1.0"
-            )
-        except Exception:
-            continue
-        p50, p100 = q["duration"]
-        if p50 > 0:
-            per_stage.append(
-                {
-                    "stage": s["stageId"],
-                    "name": s.get("name", "")[:60],
-                    "tasks": s.get("numCompleteTasks"),
-                    "p50_ms": round(p50, 1),
-                    "p100_ms": round(p100, 1),
-                    "straggler_ratio": round(p100 / p50, 2),
-                }
-            )
-    ratios = [x["straggler_ratio"] for x in per_stage if x["p100_ms"] > 500]
-    return (
-        {
-            "available": True,
-            "max_straggler_ratio_heavy_stages": max(ratios) if ratios else None,
-            "stages": per_stage,
-        },
-        seen | new_ids,
-    )
-
-
-def run_skew(n_docs: int = 40_000) -> dict:
-    """Same replay, two key distributions: uniform vs one pathological
-    hot doc carrying ~1.25% of ALL events (hot_multiplier=500) — the
-    hot key's thousands of duplicate versions stress merge-on-read's
-    read-side per-key reduce (table/mor.py) in a way the write side
-    never does.  The defense being measured is the
-    merge/LWW's map-side partial aggregation (duplicate versions of the
-    hot key collapse per input partition BEFORE the shuffle) plus the
-    history kernel's hash-group batching — the straggler ratio and the
-    wall should stay bounded.
-
-    NOTE (round-4 judge): absolute throughput here (n_docs=40k default)
-    is NOT comparable to the headline replay (60k docs) — the claim is
-    the hot/uniform RATIO and the straggler spread, not the level."""
-    from data_pipeline_spark.session import build_session
-
-    spark = build_session(
-        "bench-skew", extra_conf={"spark.ui.enabled": "true"}
-    )
-    out: dict = {
-        "note": (
-            "absolute ev/s not comparable to the headline replay "
-            f"(n_docs={n_docs} here); the claims are the hot/uniform "
-            "ratio and the straggler spread"
-        )
-    }
-    seen: set = set()
-    tmp = tempfile.mkdtemp(prefix="bench-skew-")
-    try:
-        # warm-up replay (unreported): JVM/codegen warm-up otherwise
-        # lands entirely on the FIRST variant's legs — measured as a
-        # phantom 15× "straggler" (the codegen task) and a 2.7×
-        # throughput skew between identical-shape runs
-        warm_log = os.path.join(tmp, "log-warm")
-        wstats = synth_log(warm_log, dict(REPLAY_CFG, n_docs=4_000, n_files=3))
-        run_replay(
-            spark, warm_log, os.path.join(tmp, "work-warm"),
-            wstats["total_events"], files_per_batch=3, compact_every=0,
-        )
-        _, seen = _stage_straggler(spark, seen)  # drop warm-up stages
-        logs: dict[str, tuple[str, int]] = {}
-        for variant, hot in (("uniform", 1), ("hot_1pct", 500)):
-            log_dir = os.path.join(tmp, f"log-{variant}")
-            stats = synth_log(
-                log_dir,
-                dict(
-                    REPLAY_CFG,
-                    n_docs=n_docs,
-                    hot_doc_frac=0.0,  # synth floors this to ONE hot doc
-                    hot_multiplier=hot,
-                ),
-            )
-            logs[variant] = (log_dir, stats["total_events"])
-        for variant, (log_dir, n_events) in logs.items():
-            replay = run_replay(
-                spark, log_dir, os.path.join(tmp, f"work-{variant}"), n_events,
-                files_per_batch=REPLAY_BATCH_FILES,
-                compact_every=REPLAY_COMPACT_EVERY,
-            )
-            straggler, seen = _stage_straggler(spark, seen)
-            out[variant] = {
-                "events": n_events,
-                "events_per_sec": replay["events_per_sec"],
-                "steady_state_events_per_sec": replay[
-                    "steady_state_events_per_sec"
-                ],
-                "straggler": straggler,
-            }
-        u = out["uniform"]["steady_state_events_per_sec"]
-        h = out["hot_1pct"]["steady_state_events_per_sec"]
-        out["hot_vs_uniform_throughput"] = round(h / u, 3) if u else None
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _worker(cpus: int, log_dir: str, work_dir: str, n_events: int) -> None:
-    from data_pipeline_spark.session import build_session
-
-    # Heap scales with cores (2 GB/core + 4 GB), mirroring a cluster
-    # where 4N executors bring 4× total memory: a FIXED heap under 4×
-    # the concurrent scan/shuffle buffers OOMs at the high level and
-    # would understate (or crash) the scaling measurement.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{2 * cpus + 4}g")
-    spark = build_session(f"bench-replay-{cpus}", cpus=cpus)
-    try:
-        stats = run_replay(spark, log_dir, work_dir, n_events)
-        stats["cpus"] = cpus
-        print(json.dumps(stats))
-    finally:
-        spark.stop()
-
-
-def _run_level(cpus: int, log_dir: str, n_events: int, have_taskset: bool) -> dict:
-    with tempfile.TemporaryDirectory(prefix=f"bench-scale-{cpus}-") as wd:
-        cmd = [
-            sys.executable, os.path.abspath(__file__),
-            "--replay-only", "--cpus", str(cpus),
-            "--log-dir", log_dir, "--work-dir", wd,
-            "--n-events", str(n_events),
-        ]
-        if have_taskset:
-            cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
-        out = subprocess.run(
-            cmd, capture_output=True, text=True, check=True, cwd=REPO_ROOT
-        )
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def _median(xs):
-    xs = sorted(xs)
-    n = len(xs)
-    return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
-
-
-def _cpu_probe(levels, have_taskset: bool, iters: int = 30_000_000) -> float:
-    """Pure-Python busy-loop scaling probe at the SAME confined core
-    counts as the engine pair about to run (tools/scaling_probe.py's
-    cpu worker).  Returns the substrate's own N→4N efficiency for this
-    window: if even independent no-memory-traffic loops can't scale,
-    the host is contended and the engine pair that follows measures the
-    neighbours, not the engine."""
-    probe = os.path.join(REPO_ROOT, "tools", "scaling_probe.py")
-    res = {}
-    for cpus in levels:
-        cmd = [
-            sys.executable, probe,
-            "--worker", "cpu", "--cpus", str(cpus), "--iters", str(iters),
-        ]
-        if have_taskset:
-            cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        res[cpus] = json.loads(out.stdout.strip().splitlines()[-1])
-    lo, hi = min(levels), max(levels)
-    return round(res[hi]["work_per_sec"] / (hi / lo * res[lo]["work_per_sec"]), 3)
-
-
-def _shuffle_probe(levels, have_taskset: bool, rows: int = 50_000_000) -> float:
-    """Spark range→hash→groupBy-sum at the same confined core counts —
-    the BYTE-MOVING substrate probe.  The cpu probe is cache-resident
-    and blind to DRAM-bandwidth contention (measured: cpu probe 0.98
-    in a window whose engine legs were visibly polluted); this probe
-    moves real shuffle bytes, so a co-tenant saturating memory
-    bandwidth shows up here.  Returns the window's N→4N efficiency for
-    a no-engine-code shuffle workload."""
-    probe = os.path.join(REPO_ROOT, "tools", "scaling_probe.py")
-    res = {}
-    for cpus in levels:
-        cmd = [
-            sys.executable, probe,
-            "--worker", "shuffle", "--cpus", str(cpus), "--rows", str(rows),
-        ]
-        if have_taskset:
-            cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        res[cpus] = json.loads(out.stdout.strip().splitlines()[-1])
-    lo, hi = min(levels), max(levels)
-    return round(res[hi]["rows_per_sec"] / (hi / lo * res[lo]["rows_per_sec"]), 3)
-
-
-def run_scaling(
-    log_dir: str,
-    n_events: int,
-    levels=(2, 8),
-    repeats: int = 3,
-    probe_threshold: float = 0.95,
-    shuffle_threshold: float = 0.75,
-    min_clean_pairs: int = 2,
-    max_repeats: int = 8,
-) -> dict:
-    """Same job, same input, two parallelism levels, separate JVMs,
-    back-to-back pairs; the headline efficiency uses the per-level
-    MEDIAN throughput (single-host numbers on a shared hypervisor
-    wobble ±20%) and every raw run is reported.
-
-    Probe-bracketing (round-2 judge ask): each pair is immediately
-    preceded by TWO substrate probes at the same confined core counts —
-    a pure-cpu probe (can the cores scale at all?) and a byte-moving
-    shuffle probe (is DRAM bandwidth free? — the round-2/3 data shows
-    the cpu probe alone reads clean in windows where a co-tenant is
-    saturating memory bandwidth).  A pair is CLEAN when cpu_probe >=
-    probe_threshold AND shuffle_probe >= shuffle_threshold — the host
-    could scale both a zero-bandwidth and a bandwidth-bound workload
-    in that window, so the pair measures the engine rather than the
-    neighbours.  The loop keeps adding pairs (up to max_repeats) until
-    `min_clean_pairs` clean pairs exist; the report carries the
-    all-pairs median AND the clean-window median, with every probe
-    value disclosed.
-
-    Each level is confined to exactly that many CPUs with taskset (when
-    available): an unconfined local[N] JVM still runs JIT-compiler, GC
-    and Python-worker processes on ALL host cores, which silently
-    inflates the small-N baseline and understates scaling.  Confinement
-    is the faithful model of an N-core vs 4N-core cluster."""
-    import shutil as _sh
-
-    have_taskset = _sh.which("taskset") is not None
-    runs: dict[int, list[dict]] = {c: [] for c in levels}
-    probes: list[float] = []
-    sprobes: list[float] = []
-    lo, hi = min(levels), max(levels)
-    ratio = hi / lo
-
-    def _is_clean(i: int) -> bool:
-        return probes[i] >= probe_threshold and sprobes[i] >= shuffle_threshold
-
-    def _clean_count() -> int:
-        return sum(1 for i in range(len(probes)) if _is_clean(i))
-
-    # alternate levels within each repeat so host drift hits both sides
-    n_pairs = 0
-    while n_pairs < max(1, repeats) or (
-        _clean_count() < min_clean_pairs and n_pairs < max_repeats
-    ):
-        probes.append(_cpu_probe(levels, have_taskset))
-        sprobes.append(_shuffle_probe(levels, have_taskset))
-        for cpus in levels:
-            runs[cpus].append(_run_level(cpus, log_dir, n_events, have_taskset))
-        n_pairs += 1
-
-    med = {c: _median([r["events_per_sec"] for r in runs[c]]) for c in levels}
-    eff_each = [
-        round(h["events_per_sec"] / (ratio * l["events_per_sec"]), 3)
-        for l, h in zip(runs[lo], runs[hi])
-    ]
-    clean_effs = [e for i, e in enumerate(eff_each) if _is_clean(i)]
-    return {
-        f"local[{lo}]": {"median_events_per_sec": med[lo], "runs": runs[lo]},
-        f"local[{hi}]": {"median_events_per_sec": med[hi], "runs": runs[hi]},
-        "core_ratio": ratio,
-        "pairs": n_pairs,
-        "cpu_confinement": "taskset" if have_taskset else "none",
-        "per_pair_efficiency": eff_each,
-        "per_pair_cpu_probe": probes,
-        "per_pair_shuffle_probe": sprobes,
-        "probe_threshold": probe_threshold,
-        "shuffle_threshold": shuffle_threshold,
-        "clean_pairs": len(clean_effs),
-        "clean_window_median_efficiency": (
-            round(_median(clean_effs), 3) if clean_effs else None
-        ),
-        "scaling_efficiency": round(med[hi] / (ratio * med[lo]), 3),
-    }
+    return generate_change_log(log_dir, **REPLAY_CFG)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--skew", action="store_true",
-                    help="adversarial hot-key bench: uniform vs one doc "
-                         "at ~1.25%% of all events; reports throughput "
-                         "ratio + per-stage straggler task ratios")
-    ap.add_argument("--replay-only", action="store_true")
-    ap.add_argument("--skip-queries", action="store_true")
-    ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--log-dir", default=None)
-    ap.add_argument("--work-dir", default=None)
-    ap.add_argument("--n-events", type=int, default=0)
-    ap.add_argument("--n-docs", type=int, default=None,
-                    help="override the synthetic log's document count")
-    ap.add_argument("--levels", default="2,8",
-                    help="comma-separated core counts for --scaling")
-    ap.add_argument("--repeats", type=int, default=3,
-                    help="back-to-back pairs for --scaling (median reported)")
-    ap.add_argument("--probe-threshold", type=float, default=0.95,
-                    help="cpu-probe efficiency above which a pair's "
-                         "window counts as clean")
-    ap.add_argument("--shuffle-threshold", type=float, default=0.75,
-                    help="shuffle-probe (byte-moving) efficiency floor "
-                         "for a clean window; the cpu probe alone is "
-                         "blind to DRAM-bandwidth co-tenants")
-    ap.add_argument("--min-clean-pairs", type=int, default=2,
-                    help="keep adding pairs until this many clean "
-                         "windows are captured (bounded by --max-repeats)")
-    ap.add_argument("--max-repeats", type=int, default=8)
     args = ap.parse_args()
-
-    if args.replay_only:
-        _worker(args.cpus or 8, args.log_dir, args.work_dir, args.n_events)
-        return
-
-    if args.skew:
-        print(json.dumps({"skew": run_skew(args.n_docs or 40_000)}, indent=2))
-        return
-
-    cfg = dict(SCALING_CFG if args.scaling else REPLAY_CFG)
-    if args.n_docs:
-        cfg["n_docs"] = args.n_docs
 
     tmp = tempfile.mkdtemp(prefix="bench-cdc-")
     log_dir = os.path.join(tmp, "changelog")
     try:
-        log_stats = synth_log(log_dir, cfg)
-        n_events = log_stats["total_events"]
-
-        if args.scaling:
-            levels = tuple(int(x) for x in args.levels.split(","))
-            scaling = run_scaling(
-                log_dir, n_events, levels, args.repeats,
-                probe_threshold=args.probe_threshold,
-                shuffle_threshold=args.shuffle_threshold,
-                min_clean_pairs=args.min_clean_pairs,
-                max_repeats=args.max_repeats,
-            )
-            print(json.dumps(
-                {"scaling": scaling, "log": log_stats, "cfg": cfg}, indent=2
-            ))
-            return
+        n_events = synth_log(log_dir)["total_events"]
 
         from data_pipeline_spark.session import build_session
 
@@ -583,25 +207,16 @@ def main() -> None:
             # enough broadcast/GC debris to slow the subsequent replay
             # ~2× (measured 142.8 s vs 67.0 s for the identical replay);
             # the queries are much less sensitive to session age
-            replay = run_replay(
-                spark, log_dir, os.path.join(tmp, "work"), n_events,
-                files_per_batch=REPLAY_BATCH_FILES,
-                compact_every=REPLAY_COMPACT_EVERY,
-            )
+            replay = run_replay(spark, log_dir, os.path.join(tmp, "work"), n_events)
             spark.catalog.clearCache()
-            timings = (
-                {} if args.skip_queries else run_queries(spark, args.sf_dir)
-            )
+            timings = run_queries(spark, args.sf_dir)
         finally:
             spark.stop()
 
         total = round(sum(timings.values()) + replay["elapsed_sec"], 3)
-        # the driver tail-captures ONE compact JSON line; round 4 lost
-        # its machine-readable record because per-batch `phases` grew
-        # the line past the capture window.  The printed summary stays
-        # small and bounded; the full per-batch detail goes to a
-        # sidecar file next to this script (BENCH_DETAIL.json).
-        detail = {k: v for k, v in replay.items()}
+        # the summary line stays small and bounded (a tail-captured log
+        # keeps it whole); the full per-batch detail goes to a sidecar
+        # file next to this script (BENCH_DETAIL.json)
         summary_replay = {k: v for k, v in replay.items() if k != "phases"}
         out = {
             "metric": "headline_queries_plus_cdc_replay_total",
@@ -614,7 +229,7 @@ def main() -> None:
         }
         try:
             with open(os.path.join(REPO_ROOT, "BENCH_DETAIL.json"), "w") as f:
-                json.dump({"cdc_replay": detail, "queries": timings}, f, indent=1)
+                json.dump({"cdc_replay": replay, "queries": timings}, f, indent=1)
         except OSError:
             pass  # sidecar is best-effort; the summary line is the record
         print(json.dumps(out))

@@ -23,7 +23,7 @@ the late/duplicate no-op guarantee (T4) holds at read time:
 
     (change rows) ∪ (touched buckets' base keys, narrow scan)
       → repartition(bucket)                      [the only wide shuffle]
-      → groupBy(bucket, key).max_by(row, (change-over-key, lsn, ingest_ts))
+      → groupBy(bucket, key).max_by(row, (change-over-key, lsn, -ingest_ts))
       → write as the bucket's delta files        [no second shuffle]
 
 ``groupBy(bucket, key)`` reuses the bucket repartition exchange (hash
@@ -102,9 +102,10 @@ def merge_into(
         F.col("lsn"),
         F.col("op").alias(DOP_COL),
         # deterministic tie-break for malformed upstreams: two DISTINCT
-        # change rows with the same (key, lsn) pick the last arrival by
-        # ingest_ts instead of an arbitrary winner (payload-identical
-        # at-least-once duplicates are unaffected either way)
+        # change rows with the same (key, lsn) pick the first arrival by
+        # ingest_ts — the history apply's and the oracle's rule — instead
+        # of an arbitrary winner (payload-identical at-least-once
+        # duplicates are unaffected either way)
         (
             F.col("ingest_ts")
             if "ingest_ts" in changes.columns
@@ -147,11 +148,12 @@ def merge_into(
 
     packed = F.struct(*[F.col(c) for c in value_cols])
     # change rows outrank base-key marker rows (o0); within the batch:
-    # highest lsn wins, last arrival by ingest_ts breaks ties
+    # highest lsn wins, first arrival by ingest_ts breaks ties (a null
+    # ingest_ts loses)
     order_key = F.struct(
         (~F.col("_inb")).alias("o0"),
         F.col("lsn").alias("o1"),
-        F.col(DORD_COL).alias("o2"),
+        (-F.unix_micros(DORD_COL)).alias("o2"),
     )
     flagged = (
         combined.repartition(BUCKET_COL)

@@ -195,11 +195,10 @@ class CdcPipeline:
         dead = non_schema.filter(failure.isNotNull())
 
         # NOTE: no separate arrival-dedup pass — at-least-once duplicate
-        # deliveries collapse inside the merge's max_by reduce (payload-
-        # identical copies) and inside the history apply's closure
-        # window on its one bucket exchange (first arrival wins), so the
-        # batch is scanned rather than materialized into a 3×-copied
-        # cache.
+        # deliveries collapse inside the merge's max_by reduce and
+        # inside the history apply's closure window on its one bucket
+        # exchange (first arrival wins in both), so the batch is
+        # scanned rather than materialized into a 3×-copied cache.
 
         # -- 4-6. four independent table applies, submitted from
         # concurrent driver threads: each is its own chain of Spark jobs

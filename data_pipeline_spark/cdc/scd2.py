@@ -199,7 +199,6 @@ def apply_history(
             "_min_new",
             *_attr_hash(existing, check_cols),
         )
-        .persist()
     )
     pred = (
         ex_aff.filter(F.col("lsn") < F.col("_min_new"))
@@ -274,15 +273,12 @@ def apply_history(
         F.when(F.col("_is_new"), "data").otherwise("delta").alias(LANE_COL),
     )
 
-    try:
-        history.merge_append(
-            out,
-            buckets=affected,
-            batch_key=str(batch_id),
-            batch_info={"buckets": sorted(affected)},
-        )
-    finally:
-        ex_aff.unpersist()
+    history.merge_append(
+        out,
+        buckets=affected,
+        batch_key=str(batch_id),
+        batch_info={"buckets": sorted(affected)},
+    )
     # changed_docs is an HLL estimate (±2%) from the caller's probe
     return {"buckets": sorted(affected), "changed_docs": n_docs}
 

@@ -244,7 +244,8 @@ def replay_batches(
 ) -> int:
     """Batch-mode replay (no streaming machinery): group the log files
     into deterministic epochs and apply each through the same pipeline.
-    Used by bench.py — identical semantics, minus checkpoint overhead."""
+    Identical semantics to ``run_stream``, minus the checkpoint; the
+    tests use it to pick batch boundaries and batch ids directly."""
     files = sorted(glob.glob(os.path.join(log_dir, "*.parquet")))
     batch_id = start_batch_id
     for i in range(0, len(files), files_per_batch):

@@ -9,7 +9,7 @@ Iceberg v2 readers and Hudi MoR readers agree on:
   identified by ``row_id_cols``; the latest commit (``_dseq``) wins.
 * ``upsert`` mode — delta rows are whole row versions / tombstones;
   one survivor per row id (highest ``order_cols``, base-wins-ties via
-  earliest ``_dseq``, last arrival by ``_ord_ts`` within a commit),
+  earliest ``_dseq``, first arrival by ``_ord_ts`` within a commit),
   then an order-guarded LWW against the base scan.
 
 Plan shape in both modes: the delta side is reduced first and is
@@ -173,11 +173,12 @@ def fold_survivors(delta: DataFrame, mor: dict) -> DataFrame:
     ocols = list(mor["order_cols"])
     # highest order key wins; at an equal order key the EARLIEST commit
     # wins (it became "the target" first, so a replayed or late
-    # duplicate version is a no-op), then last arrival within a commit
+    # duplicate version is a no-op), then first arrival within a commit
+    # (merge_into's rule; a null _ord_ts loses)
     pick = F.struct(
         *[F.col(c).alias(f"o{i}") for i, c in enumerate(ocols)],
         (-F.col(DSEQ_COL)).alias("oseq"),
-        F.col(DORD_COL).alias("ots"),
+        (-F.unix_micros(DORD_COL)).alias("ots"),
     )
     # the row ids are read back from the survivor row, not the grouping
     # key: a join on them then cannot push a null filter below the

@@ -17,8 +17,10 @@ from data_pipeline_spark.cdc.oracle import (
     expected_final_state,
     load_log,
 )
+from data_pipeline_spark.cdc import scd2
 from data_pipeline_spark.cdc.pipeline import CdcPipeline
 from data_pipeline_spark.cdc.stream import replay_batches
+from data_pipeline_spark.table import mor
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +38,14 @@ def _final_pandas(pipeline):
     return df.toPandas()
 
 
-def test_replay_matches_oracle(spark, log_dir, tmp_path):
+@pytest.mark.parametrize("plan", ["broadcast", "shuffle"])
+def test_replay_matches_oracle(spark, log_dir, tmp_path, monkeypatch, plan):
+    # shuffle: no batch is small enough to broadcast, so the history
+    # apply's planning frames and the MoR read's delta lane take their
+    # non-broadcast fallbacks
+    if plan == "shuffle":
+        monkeypatch.setattr(scd2, "BROADCAST_MAX_DOCS", 0)
+        monkeypatch.setattr(mor, "BROADCAST_DELTA_MAX_BYTES", 0)
     # compact_every=2: a mid-replay lane fold
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2)
     n = replay_batches(spark, log_dir, pipe, files_per_batch=2)
@@ -200,9 +209,10 @@ def test_lww_and_delete_semantics(spark, tmp_path):
 
 def test_same_lsn_distinct_payload_tiebreak_is_deterministic(spark, tmp_path):
     """Malformed upstream: two DISTINCT payloads under the same
-    (doc_id, lsn).  The merge order key (lsn, _prio, ingest_ts) must
-    pick the LAST arrival by ingest_ts — deterministically, regardless
-    of partitioning or arrival order within the batch."""
+    (doc_id, lsn).  The merge and the history apply must both pick the
+    FIRST arrival by ingest_ts (the oracle's rule) — deterministically,
+    regardless of partitioning or arrival order within the batch — so
+    the target row and the history's current row agree."""
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
 
     base_ts = __import__("datetime").datetime(2024, 1, 1)
@@ -221,7 +231,9 @@ def test_same_lsn_distinct_payload_tiebreak_is_deterministic(spark, tmp_path):
         )
         pipe.apply_batch(df, 0)
         (row,) = pipe.current_state().collect()
-        assert row.tokens == [7, 7], "last writer by ingest_ts must win"
+        assert row.tokens == [1, 1], "first arrival by ingest_ts must win"
+        (cur,) = pipe.history_df().filter("is_current").collect()
+        assert cur.tokens == row.tokens, "history's current row != target row"
 
 
 def test_bitemporal_midchain_late_arrival_closure(spark, tmp_path):

@@ -7,6 +7,7 @@ column names and values aligned.
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import duckdb
@@ -14,7 +15,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 
@@ -76,3 +78,18 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert len(df.schema.fields) >= 3
+
+
+def test_bench_contract_with_perfbench():
+    """perfbench imports ``bench.HEADLINE_QUERIES``: importing bench
+    must load no pyspark (so it can start no SparkSession), and every
+    headline name must be a registered query."""
+    probe = "import sys, bench; print(sorted(m for m in sys.modules if m.startswith('pyspark')))"
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]", out.stdout
+    import bench
+
+    missing = [q for q in bench.HEADLINE_QUERIES if q not in ALL_QUERIES]
+    assert not missing, f"bench.HEADLINE_QUERIES not in queries(): {missing}"
