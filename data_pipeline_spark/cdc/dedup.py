@@ -32,17 +32,21 @@ def lww_reduce(
     """Last-writer-wins: one row per key — the one with max order_col.
 
     Two-phase salted max_by (see module docstring).  Ties on order_col
-    are broken by ingest_ts then deterministically by the packed struct
-    itself (duplicates carry identical payloads, so any pick is equal).
+    keep the first arrival by ingest_ts (a null ingest_ts loses) — the
+    rule of ``merge_into``, the history apply and the oracle, so an
+    input pre-reduced here leaves target and history the same copy.
     """
     others = [c for c in df.columns if c != key_col]
     packed = F.struct(*[F.col(c) for c in others])
-    tie = (
-        F.coalesce(F.col("ingest_ts"), F.lit("1900-01-01 00:00:00").cast("timestamp"))
-        if "ingest_ts" in df.columns
-        else F.col(order_col)
-    )
-    order_key = F.struct(F.col(order_col).alias("o1"), tie.alias("o2"))
+
+    # the one ordering, over a row's columns or its packed struct
+    def _order(row) -> F.Column:
+        tie = (
+            -F.unix_micros(row("ingest_ts"))
+            if "ingest_ts" in df.columns
+            else row(order_col)
+        )
+        return F.struct(row(order_col).alias("o1"), tie.alias("o2"))
 
     # Each phase aggregates with max_by ONLY: mixing max_by (typed-
     # imperative) with a declarative max(struct) forces SortAggregate —
@@ -50,24 +54,14 @@ def lww_reduce(
     # ObjectHashAggregate (hash-based, map-side combine); phase 2
     # recomputes the ordering from the packed struct instead of carrying
     # a second aggregate.
-    def _reorder(row: F.Column) -> F.Column:
-        tie2 = (
-            F.coalesce(
-                row["ingest_ts"], F.lit("1900-01-01 00:00:00").cast("timestamp")
-            )
-            if "ingest_ts" in df.columns
-            else row[order_col]
-        )
-        return F.struct(row[order_col].alias("o1"), tie2.alias("o2"))
-
     if salt_buckets and salt_buckets > 1:
         salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets))
         phase1 = df.groupBy(F.col(key_col), salt.alias("_salt")).agg(
-            F.max_by(packed, order_key).alias("_row")
+            F.max_by(packed, _order(F.col)).alias("_row")
         )
         out = phase1.groupBy(key_col).agg(
-            F.max_by(F.col("_row"), _reorder(F.col("_row"))).alias("_row")
+            F.max_by(F.col("_row"), _order(F.col("_row").getField)).alias("_row")
         )
     else:
-        out = df.groupBy(key_col).agg(F.max_by(packed, order_key).alias("_row"))
+        out = df.groupBy(key_col).agg(F.max_by(packed, _order(F.col)).alias("_row"))
     return out.select(key_col, "_row.*")

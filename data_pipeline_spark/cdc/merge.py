@@ -18,12 +18,14 @@ tombstone per changed key) and nothing existing is rewritten, so
 per-batch write volume is O(batch) however the keys hash — rewriting
 every touched bucket (copy-on-write) is O(table) at uniformly-hashed
 keys.  The read side (``LakeTable.read``, table/mor.py) applies the
-same lsn-guarded LWW at scan time and compaction folds the lane, so
-the late/duplicate no-op guarantee (T4) holds at read time:
+same lsn-guarded LWW at scan time, decides there which lane rows
+replace a base row, and compaction folds the lane, so the
+late/duplicate no-op guarantee (T4) holds at read time.  The merge
+scans no file of the table; its work is O(batch):
 
-    (change rows) ∪ (touched buckets' base keys, narrow scan)
+    (change rows)
       → repartition(bucket)                      [the only wide shuffle]
-      → groupBy(bucket, key).max_by(row, (change-over-key, lsn, -ingest_ts))
+      → groupBy(bucket, key).max_by(row, (lsn, -ingest_ts))
       → write as the bucket's delta files        [no second shuffle]
 
 ``groupBy(bucket, key)`` reuses the bucket repartition exchange (hash
@@ -41,14 +43,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..table.laketable import (
-    BUCKET_COL,
-    DINBASE_COL,
-    DOP_COL,
-    DORD_COL,
-    LANE_COL,
-    LakeTable,
-)
+from ..table.laketable import BUCKET_COL, DOP_COL, DORD_COL, LANE_COL, LakeTable
 from ..table.mor import require_mode
 from .schema import stamp_batch_id
 
@@ -70,16 +65,12 @@ def merge_into(
 
     affected: the batch plan's set of touched storage buckets (the
     caller's fused planning probe, CdcPipeline.apply_batch); no probe
-    job runs here.  Passing it wrong (a superset is fine — extra
-    buckets only widen the base-key scan; a SUBSET would flag stored
-    keys of the missing buckets as not-in-base) is on the caller.
+    job runs here.  A superset is fine; a change row outside it makes
+    the commit raise ``ValueError`` (``LakeTable._stage``).
 
-    The ``_in_base`` stamp (insert-vs-update disambiguation for the
-    shuffle-free broadcast read path) is FUSED into the reduce: the
-    touched buckets' base keys ride the same exchange as the change
-    rows, so no join stage exists.  When those buckets have NO base
-    files yet (fresh table, or every prior batch still in the delta
-    lane) even that scan is skipped — every key is not-in-base.
+    The reduce sees the batch's change rows only: whether a row
+    replaces a stored one or is an insert is decided at read time
+    (``table/mor.py:resolve_deltas``), so the merge scans no base file.
     """
     require_mode(table, "upsert")
     key = table.key_col
@@ -119,58 +110,26 @@ def merge_into(
         ],
         batch_stamp.alias("_batch_id"),
         F.current_timestamp().alias("_applied_at"),
-        F.lit(False).alias("_inb"),
     )
 
-    value_cols = [c for c in d_side.columns if c not in (key, BUCKET_COL, "_inb")]
-    # base-key side: a narrow bucket-pruned single-column scan, padded
-    # with null payload so it unions into the reduce.  Skipped entirely
-    # when the buckets' base lists are empty (driver-side manifest
-    # check — upsert targets have no base files until first compaction)
-    combined = d_side
-    base_stats = table.base_file_stats()
-    if any(base_stats.get(int(b)) for b in affected):
-        keys_side = (
-            table.read(buckets=affected, with_deltas=False)
-            .select(key)
-            .withColumn(BUCKET_COL, table.bucket_of(key))
-            .select(
-                F.col(key),
-                F.col(BUCKET_COL),
-                *[
-                    F.lit(None).cast(d_side.schema[c].dataType).alias(c)
-                    for c in value_cols
-                ],
-                F.lit(True).alias("_inb"),
-            )
-        )
-        combined = d_side.unionByName(keys_side)
-
-    packed = F.struct(*[F.col(c) for c in value_cols])
-    # change rows outrank base-key marker rows (o0); within the batch:
-    # highest lsn wins, first arrival by ingest_ts breaks ties (a null
+    packed = F.struct(
+        *[F.col(c) for c in d_side.columns if c not in (key, BUCKET_COL)]
+    )
+    # highest lsn wins; first arrival by ingest_ts breaks ties (a null
     # ingest_ts loses)
     order_key = F.struct(
-        (~F.col("_inb")).alias("o0"),
-        F.col("lsn").alias("o1"),
-        (-F.unix_micros(DORD_COL)).alias("o2"),
+        F.col("lsn").alias("o1"), (-F.unix_micros(DORD_COL)).alias("o2")
     )
-    flagged = (
-        combined.repartition(BUCKET_COL)
+    reduced = (
+        d_side.repartition(BUCKET_COL)
         .groupBy(BUCKET_COL, key)
-        .agg(
-            F.max_by(packed, order_key).alias("_row"),
-            F.max(F.col("_inb")).alias(DINBASE_COL),
-        )
-        # keys present only in base (no change row) surface a null-op
-        # winner — nothing to write for them
-        .filter(F.col(f"_row.{DOP_COL}").isNotNull())
-        .select(F.col(BUCKET_COL), F.col(key), "_row.*", F.col(DINBASE_COL))
+        .agg(F.max_by(packed, order_key).alias("_row"))
+        .select(F.col(BUCKET_COL), F.col(key), "_row.*")
         .withColumn(LANE_COL, F.lit("delta"))
     )
 
     table.merge_append(
-        flagged,
+        reduced,
         buckets=affected,
         batch_key=str(batch_id),
         batch_info={"buckets": sorted(affected)},

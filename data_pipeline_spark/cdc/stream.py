@@ -189,29 +189,19 @@ def run_stream(
     pipeline: CdcPipeline,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    stop_after_batches: int | None = None,
 ) -> int:
     """Replay the log through Structured Streaming; returns batches run.
 
-    stop_after_batches simulates a crash mid-replay (kill-and-resume
-    test): the query is stopped after N foreachBatch commits; restarting
-    with the same checkpoint_dir resumes from the next batch (and
-    re-delivers any in-flight one — idempotent under the manifests).
+    A failing batch stops the query and the error propagates; restarting
+    with the same checkpoint_dir resumes from the first uncommitted
+    batch (re-delivering an in-flight one is idempotent under the
+    manifests).
     """
-    n_batches = {"n": 0, "stopped": False}
-
-    class _StopEarly(Exception):
-        pass
+    n_batches = {"n": 0}
 
     def _apply(df, batch_id: int):
         pipeline.apply_batch(df, batch_id)
         n_batches["n"] += 1
-        if stop_after_batches is not None and n_batches["n"] >= stop_after_batches:
-            # flag BEFORE raising: Spark rewraps the exception (possibly
-            # losing the message), so detection must not depend on the
-            # exception text surviving the JVM round-trip
-            n_batches["stopped"] = True
-            raise _StopEarly()
 
     reader = (
         spark.readStream.schema(CHANGE_EVENT_SCHEMA)
@@ -226,9 +216,6 @@ def run_stream(
     )
     try:
         q.awaitTermination()
-    except Exception:  # noqa: BLE001 — surface real errors, swallow the probe
-        if not n_batches["stopped"]:
-            raise
     finally:
         if q.isActive:
             q.stop()

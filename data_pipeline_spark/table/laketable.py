@@ -80,8 +80,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .mor import (  # noqa: F401 — system cols re-exported for writers
-    DINBASE_COL,
+from .mor import (  # noqa: F401 — lane system cols re-exported for writers
     DOP_COL,
     DORD_COL,
     DSEQ_COL,
@@ -381,11 +380,6 @@ class LakeTable:
         """bucket -> un-folded delta file count."""
         return {b: len(fs) for b, fs in self.snapshot.delta_files.items()}
 
-    def base_file_stats(self) -> dict[int, int]:
-        """bucket -> BASE file count (planning input: the merge-on-read
-        writers skip the _in_base key scan when a bucket has no base)."""
-        return {b: len(fs) for b, fs in self.snapshot.files.items() if fs}
-
     def delta_bytes(self) -> dict[int, int]:
         """bucket -> un-folded delta-lane bytes, straight from the
         commit manifest (no filesystem stat — object-storage safe).
@@ -408,8 +402,8 @@ class LakeTable:
         with_deltas: bool = True,
     ) -> DataFrame:
         """Scan the table (optionally bucket-pruned / time-travelled).
-        ``with_deltas=False`` scans BASE files only (the merge-on-read
-        writers use it to stamp base-membership; not a consistent view).
+        ``with_deltas=False`` scans BASE files only (the history apply
+        prunes its stored rows with it; not a consistent view).
 
         Reading through the snapshot schema means files written before a
         schema evolution surface NULL for the added columns — no file
@@ -428,10 +422,7 @@ class LakeTable:
             if sel is None or b in sel
             for rel in fs
         ]
-        if not paths:
-            base = self.spark.createDataFrame([], snap.schema)
-        else:
-            base = self.spark.read.schema(snap.schema).parquet(*paths)
+        base = self.spark.read.schema(snap.schema).parquet(*paths) if paths else None
         dfiles = [
             (os.path.join(self.path, e[0]), e[1], e[2])
             for b, fs in snap.delta_files.items()
@@ -439,7 +430,7 @@ class LakeTable:
             for e in fs
         ]
         if not dfiles or not with_deltas:
-            return base
+            return base if paths else self.spark.createDataFrame([], snap.schema)
         return resolve_deltas(
             self.spark, snap.schema, snap.merge_on_read, base, dfiles
         )
@@ -612,19 +603,22 @@ class LakeTable:
         snap: Snapshot,
         buckets: Iterable[int],
         lane_appends_ok: bool,
-        base_files: bool,
     ) -> None:
         """The one rebase rule: raise :class:`CommitConflict` unless each
-        planned bucket's delta lane is as at planning (``base``), or only
-        appended to if ``lane_appends_ok``, and — if ``base_files`` — its
-        base files are too."""
+        planned bucket is as at planning (``base``).  With
+        ``lane_appends_ok`` (a fold) that means its delta lane was only
+        appended to; without it (a bucket replacement) its lane and its
+        base files are both unchanged."""
         for b in buckets:
             planned = base.delta_files.get(b, [])
             head = snap.delta_files.get(b, [])
-            lane = head[: len(planned)] if lane_appends_ok else head
-            if lane != planned or (
-                base_files and snap.files.get(b, []) != base.files.get(b, [])
-            ):
+            if lane_appends_ok:
+                moved = head[: len(planned)] != planned
+            else:
+                moved = head != planned or (
+                    snap.files.get(b, []) != base.files.get(b, [])
+                )
+            if moved:
                 raise CommitConflict(
                     f"bucket {b} of {self.path} was rewritten concurrently "
                     f"(planned at v{base.version}, head moved); recompute "
@@ -657,9 +651,7 @@ class LakeTable:
         )
 
         def apply(snap: Snapshot):
-            self._require_planned(
-                base, snap, replaced, lane_appends_ok=False, base_files=True
-            )
+            self._require_planned(base, snap, replaced, lane_appends_ok=False)
             merged = {b: fs for b, fs in snap.files.items() if b not in replaced}
             for b, fs in new_files.items():
                 merged[b] = fs
@@ -702,7 +694,7 @@ class LakeTable:
         rewritten, so the write volume is O(batch).
 
         Delta rows must already carry the mode's system columns (patch:
-        row ids + patch cols; upsert: full row + _op/_ord_ts/_in_base).
+        row ids + patch cols; upsert: full row + _op/_ord_ts).
         The commit-order stamp ``_dseq`` is NOT written into the files:
         it is assigned inside the commit retry loop (``snap.version+1``
         re-evaluated per attempt, i.e. AFTER winning the version race)
@@ -715,33 +707,20 @@ class LakeTable:
 
         Both lanes are written in ONE Spark action (:meth:`_stage`).
 
-        Multi-writer: appends rebase over concurrent DELTA appends and
-        manifest commits.  In upsert mode ANY change to a touched
-        bucket's base files — compaction, replace, or a plain
-        ``append()`` — raises CommitConflict: base-file membership is
-        what the batch's ``_in_base`` flags were planned against, and a
-        concurrent append of new keys would make an ``_in_base=False``
-        insert duplicate the appended base row at read.  (Plain
-        ``append()`` onto an upsert merge-on-read table is therefore
-        only safe when no merge_append is in flight; the CDC pipeline
-        never base-appends its upsert target outside compaction.)
-        Patch-mode deltas target rows by id and rebase over compaction
-        safely.  Two concurrent writers patching the SAME row id commit
+        Multi-writer: appends rebase over every concurrent commit —
+        delta appends, manifest commits, compaction, plain ``append()``.
+        Neither mode plans against the base files: patch deltas target
+        rows by id, and the read decides which upsert deltas replace a
+        base row.  Two concurrent writers patching the SAME row id commit
         in an undefined relative order (same as any optimistic lane) —
         the CDC pipeline serialises per-table applies, so its deltas
         are strictly ordered by ``_dseq``."""
-        mor = self.merge_on_read
-        if mor is None:
+        if self.merge_on_read is None:
             raise ValueError("merge_append requires a merge_on_read table")
         touched = set(int(b) for b in buckets)
-        base = self.snapshot
         new_files, delta_new = self._stage(rows, allowed=touched)
 
         def apply(snap: Snapshot):
-            if mor["mode"] == "upsert":
-                self._require_planned(
-                    base, snap, touched, lane_appends_ok=True, base_files=True
-                )
             merged = {b: list(fs) for b, fs in snap.files.items()}
             for b, fs in new_files.items():
                 merged.setdefault(b, []).extend(fs)
@@ -836,16 +815,15 @@ class LakeTable:
         into ONE survivor file per bucket WITHOUT rewriting any base
         file — O(lane) instead of compact()'s O(bucket contents).  The
         row surviving per id is exactly what read() would resolve
-        (kernel: :func:`~.mor.fold_survivors`); upsert tombstones of
-        never-based rows are dropped outright.  The folded entry's
-        manifest ``_dseq`` is the MAX of the folded commits' stamps, so
-        earliest-commit-wins ties against delta commits appended AFTER
-        this fold was planned still resolve in true commit order —
-        only possible because the stamp lives in the manifest, not the
-        files.  Concurrent delta appends REBASE (planned prefix
-        replaced, tail kept); a concurrent base change of a victim
-        bucket conflicts in upsert mode (same rule as merge_append).
-        Returns the folded buckets."""
+        (kernel: :func:`~.mor.fold_survivors`), tombstones included.
+        The folded entry's manifest ``_dseq`` is the MAX of the folded
+        commits' stamps, so earliest-commit-wins ties against delta
+        commits appended AFTER this fold was planned still resolve in
+        true commit order — only possible because the stamp lives in
+        the manifest, not the files.  Concurrent delta appends and base
+        changes REBASE (planned prefix replaced, tail kept); a
+        concurrent rewrite of a victim bucket's lane conflicts.  Returns
+        the folded buckets."""
         mor = self.merge_on_read
         if mor is None:
             return []
@@ -872,13 +850,7 @@ class LakeTable:
         maxd = {b: max(e[2] for e in base.delta_files[b]) for b in victims}
 
         def apply(snap: Snapshot):
-            self._require_planned(
-                base,
-                snap,
-                victims,
-                lane_appends_ok=True,
-                base_files=mor["mode"] == "upsert",
-            )
+            self._require_planned(base, snap, victims, lane_appends_ok=True)
             deltas = {b: list(fs) for b, fs in snap.delta_files.items()}
             for b in victims:
                 deltas[b] = [

@@ -8,9 +8,12 @@ Iceberg v2 readers and Hudi MoR readers agree on:
 * ``patch`` mode — delta rows overwrite ``patch_cols`` of the base row
   identified by ``row_id_cols``; the latest commit (``_dseq``) wins.
 * ``upsert`` mode — delta rows are whole row versions / tombstones;
-  one survivor per row id (highest ``order_cols``, base-wins-ties via
-  earliest ``_dseq``, first arrival by ``_ord_ts`` within a commit),
-  then an order-guarded LWW against the base scan.
+  one survivor per row id (highest ``order_cols``, earliest ``_dseq``
+  at a tie, first arrival by ``_ord_ts`` within a commit), then an
+  order-guarded LWW against the base scan (base wins ties).  The read
+  decides base membership: a newer survivor replaces or deletes the
+  base row holding its id, a live survivor whose id no base row holds
+  is an insert, and a tombstone of such an id masks nothing.
 
 Plan shape in both modes: the delta side is reduced first and is
 O(batches since last compaction), so Spark's size-based planning
@@ -22,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     StringType,
     StructField,
     StructType,
@@ -33,7 +35,6 @@ from pyspark.sql.types import (
 DSEQ_COL = "_dseq"        # commit-order stamp: later patches win per row id
 DOP_COL = "_op"           # upsert mode: I/U/D of the delta row
 DORD_COL = "_ord_ts"      # upsert mode: arrival tie-break at equal order key
-DINBASE_COL = "_in_base"  # upsert mode: row id existed in base at write
 
 
 def validate_mor(cfg: dict, schema: StructType, key_col: str) -> None:
@@ -83,7 +84,12 @@ def delta_schema(schema: StructType, mor: dict) -> StructType:
     Stamping it into the data file at write time would let a writer
     that loses the CAS race and retries publish a stale stamp (two
     commits sharing one ``_dseq`` → nondeterministic patch resolution).
-    :func:`resolve_deltas` re-attaches it at scan time as a literal."""
+    :func:`resolve_deltas` re-attaches it at scan time as a literal.
+
+    Upsert delta files written by older versions also carry a
+    base-membership flag column, which reads no longer use; they read
+    correctly, because the lane is read through this schema and parquet
+    projects columns by name."""
     by_name = {f.name: f for f in schema.fields}
     if mor["mode"] == "patch":
         return StructType(
@@ -95,7 +101,6 @@ def delta_schema(schema: StructType, mor: dict) -> StructType:
         + [
             StructField(DOP_COL, StringType()),
             StructField(DORD_COL, TimestampType()),
-            StructField(DINBASE_COL, BooleanType()),
         ]
     )
 
@@ -153,11 +158,11 @@ def fold_survivors(delta: DataFrame, mor: dict) -> DataFrame:
     ties against commits appended AFTER the fold was planned resolve
     earliest-commit-wins, and the folded rows ARE the earlier commits.
     Intra-lane ties are resolved here using the original per-commit
-    stamps.  Upsert tombstones for rows that were never in base are
-    dropped outright (they mask nothing).  ``_in_base`` flags are
-    preserved verbatim, so the fold is only valid while the base files
-    are unchanged — the committing table enforces that (same conflict
-    rule as merge_append)."""
+    stamps.  Every upsert tombstone is kept: it holds its key's delete
+    order key, so a later duplicate of an older version stays a no-op,
+    and a read hides it whether or not a base row holds its id.  The
+    survivors name no base row, so a fold stays valid whatever the base
+    files do meanwhile."""
     ids = list(mor["row_id_cols"])
     if mor["mode"] == "patch":
         pcols = list(mor["patch_cols"])
@@ -189,7 +194,6 @@ def fold_survivors(delta: DataFrame, mor: dict) -> DataFrame:
         delta.groupBy(*ids)
         .agg(F.max_by(payload, pick).alias("_row"))
         .select("_row.*")
-        .filter(F.col(DINBASE_COL) | (F.col(DOP_COL) != "D"))
     )
 
 
@@ -197,10 +201,12 @@ def resolve_deltas(
     spark: SparkSession,
     schema: StructType,
     mor: dict,
-    base: DataFrame,
+    base: DataFrame | None,
     dfiles: list[tuple[str, int, int]],
 ) -> DataFrame:
     """Merge a delta lane into a base scan; returns exactly `schema`.
+    ``base`` is None when the read's buckets hold no base file: then
+    the result is the lane's live survivors alone, with no join.
 
     ``dfiles`` is the manifest's delta-entry list: (absolute path,
     size-in-bytes, commit sequence number).  Files are scanned per
@@ -218,6 +224,8 @@ def resolve_deltas(
     # compaction folds with, so a fold never changes what a read sees
     dr = fold_survivors(delta, mor)
     if mor["mode"] == "patch":
+        if base is None:  # a patch of no base row patches nothing
+            return spark.createDataFrame([], schema)
         pcols = list(mor["patch_cols"])
         latest = dr.select(
             *ids,
@@ -235,35 +243,28 @@ def resolve_deltas(
             ]
         )
 
-    # upsert mode: delta rows are whole row versions / tombstones;
-    # fold_survivors already dropped tombstones of keys never in base
-    ocols = list(mor["order_cols"])
-    upd = dr.filter(F.col(DINBASE_COL)).select(
-        *[F.col(f.name).alias(f"_u_{f.name}") for f in schema.fields],
-        F.col(DOP_COL).alias("_u_op"),
-        *[F.col(f"_u_{c}").alias(c) for c in ids],
-    )
-    ins = dr.filter(~F.col(DINBASE_COL)).select(
+    # upsert mode: delta rows are whole row versions / tombstones, and
+    # the read decides which of them replace a base row.  One broadcast
+    # of the survivors' ids and order keys serves two base joins: a
+    # base row stays unless a newer survivor holds its id (which then
+    # replaces or deletes it), and a survivor loses if a base row with
+    # its id is at least as new (base wins ties; this second scan reads
+    # the base's ids and order keys only).  Every other live survivor is
+    # read, as an update or as an insert
+    live = dr.filter(F.col(DOP_COL) != "D").select(
         *[F.col(f.name) for f in schema.fields]
     )
-    newer = F.col("_u_op").isNotNull() & (
-        F.struct(*[F.col(f"_u_{c}") for c in ocols])
-        > F.struct(*[F.col(c) for c in ocols])
+    if base is None:
+        return live
+    ocols = list(mor["order_cols"])
+    keys = ids + [c for c in ocols if c not in ids]
+    lane = bcast(dr.select(*[F.col(c).alias(f"_u_{c}") for c in keys]))
+    same_id = [F.col(c) == F.col(f"_u_{c}") for c in ids]
+    newer = F.struct(*[F.col(f"_u_{c}") for c in ocols]) > F.struct(
+        *[F.col(c) for c in ocols]
     )
-    merged = (
-        base.join(bcast(upd), ids, "left")
-        .filter(~(newer & (F.col("_u_op") == "D")).eqNullSafe(F.lit(True)))
-        .select(
-            *[
-                (
-                    F.when(newer, F.col(f"_u_{f.name}"))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name not in ids
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ]
-        )
+    kept = base.join(lane, [*same_id, newer], "left_anti")
+    losers = (
+        base.select(*keys).join(lane, [*same_id, ~newer], "left_semi").select(*ids)
     )
-    return merged.unionByName(ins)
+    return kept.unionByName(live.join(bcast(losers), ids, "left_anti"))

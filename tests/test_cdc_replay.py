@@ -58,6 +58,32 @@ def test_replay_matches_oracle(spark, log_dir, tmp_path, monkeypatch, plan):
     assert_history_equal(pipe, log)
 
 
+@pytest.mark.parametrize("plan", ["broadcast", "shuffle"])
+def test_replay_over_compacted_target_matches_oracle(
+    spark, log_dir, tmp_path, monkeypatch, plan
+):
+    """Merges into a compacted target: with one file allowed per bucket,
+    the compaction after batch 2 writes the target's base files, so
+    batch 3 merges into 8 base files and the final read resolves base
+    plus lane (8 delta files)."""
+    if plan == "shuffle":
+        monkeypatch.setattr(scd2, "BROADCAST_MAX_DOCS", 0)
+        monkeypatch.setattr(mor, "BROADCAST_DELTA_MAX_BYTES", 0)
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2,
+        max_files_per_bucket=1,
+    )
+    assert replay_batches(spark, log_dir, pipe, files_per_batch=2) == 3
+    target = pipe.target.snapshot
+    assert sum(map(len, target.files.values())) == 8
+    assert sum(map(len, target.delta_files.values())) == 8
+    log = load_log(log_dir)
+    assert_tokens_equal(_final_pandas(pipe), expected_final_state(log))
+    cur = pipe.history_df().filter("is_current").groupBy("doc_id").count()
+    assert cur.filter("count > 1").count() == 0
+    assert_history_equal(pipe, log)
+
+
 def test_replay_single_big_batch_same_result(spark, log_dir, tmp_path):
     """Batch boundaries must not affect the final state (LWW within and
     across batches agree)."""
@@ -212,7 +238,10 @@ def test_same_lsn_distinct_payload_tiebreak_is_deterministic(spark, tmp_path):
     (doc_id, lsn).  The merge and the history apply must both pick the
     FIRST arrival by ingest_ts (the oracle's rule) — deterministically,
     regardless of partitioning or arrival order within the batch — so
-    the target row and the history's current row agree."""
+    the target row and the history's current row agree.  ``lww_reduce``
+    (salted or not) keeps that copy too, so a caller that pre-reduces
+    with it gets the same target."""
+    from data_pipeline_spark.cdc.dedup import lww_reduce
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
 
     base_ts = __import__("datetime").datetime(2024, 1, 1)
@@ -234,6 +263,9 @@ def test_same_lsn_distinct_payload_tiebreak_is_deterministic(spark, tmp_path):
         assert row.tokens == [1, 1], "first arrival by ingest_ts must win"
         (cur,) = pipe.history_df().filter("is_current").collect()
         assert cur.tokens == row.tokens, "history's current row != target row"
+        for salt_buckets in (1, 16):
+            (kept,) = lww_reduce(df, salt_buckets=salt_buckets).collect()
+            assert kept.tokens == row.tokens, "lww_reduce kept another copy"
 
 
 def test_bitemporal_midchain_late_arrival_closure(spark, tmp_path):
@@ -592,10 +624,10 @@ def test_string_batch_id_stamps_deterministic_hash(spark, tmp_path):
     assert row2._batch_id == row._batch_id
 
 
-# Every path that drops an upsert tombstone (compaction's rewrite, the
-# lane fold's never-in-base drop) forgets the key's delete lsn, so a
-# later at-least-once duplicate of an older version is re-inserted.
-# The fix needs tombstone retention (a table-format change).
+# Compaction's rewrite drops an upsert tombstone and so forgets the
+# key's delete lsn: a later at-least-once duplicate of an older version
+# is re-inserted.  The fix needs tombstones kept in base files (a
+# table-format change).  The lane fold keeps every tombstone.
 _LOST_DELETE_XFAIL = pytest.mark.xfail(
     strict=True,
     raises=AssertionError,
@@ -611,9 +643,7 @@ _LOST_DELETE_XFAIL = pytest.mark.xfail(
         pytest.param(
             "compact", marks=_LOST_DELETE_XFAIL
         ),
-        pytest.param(
-            "fold-lake", marks=_LOST_DELETE_XFAIL
-        ),
+        "fold-lake",
     ],
 )
 def test_late_duplicate_after_delete_stays_deleted(spark, tmp_path, between):

@@ -22,8 +22,8 @@ from pyspark.sql.types import (
 )
 
 from data_pipeline_spark.table import LakeTable
-from data_pipeline_spark.table.laketable import LANE_COL, CommitConflict
-from data_pipeline_spark.table.mor import DINBASE_COL, DOP_COL, DORD_COL
+from data_pipeline_spark.table.laketable import LANE_COL
+from data_pipeline_spark.table.mor import DOP_COL, DORD_COL
 
 HIST = StructType(
     [
@@ -65,13 +65,11 @@ def _lanes(data=None, delta=None):
     return out
 
 
-def _upsert_delta(spark, rows, in_base):
+def _upsert_delta(spark, rows):
     df = spark.createDataFrame(rows, TGT)
-    return (
-        df.withColumn(DOP_COL, F.when(F.col("v").isNull(), "D").otherwise("U"))
-        .withColumn(DORD_COL, F.current_timestamp())
-        .withColumn(DINBASE_COL, F.lit(in_base))
-    )
+    return df.withColumn(
+        DOP_COL, F.when(F.col("v").isNull(), "D").otherwise("U")
+    ).withColumn(DORD_COL, F.current_timestamp())
 
 
 @LAKE
@@ -130,32 +128,32 @@ def test_upsert_mode_lww_guard_and_fold(spark, tmp_path, fmt):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1), ("b", "b1", 1)], False)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1), ("b", "b1", 1)])),
         buckets=range(4), batch_key="0",
     )
     assert {r.doc_id: r.v for r in u.read().collect()} == {"a": "a1", "b": "b1"}
     u.compact(max_files_per_bucket=0)  # inserts become base rows
     # newer update replaces, tombstone deletes, fresh insert lands
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5), ("b", None, 9)], True)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5), ("b", None, 9)])),
         buckets=range(4), batch_key="1",
     )
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("c", "c1", 2)], False)),
+        _lanes(delta=_upsert_delta(spark, [("c", "c1", 2)])),
         buckets=range(4), batch_key="2",
     )
     got = {r.doc_id: (r.v, r.lsn) for r in u.read().collect()}
     assert got == {"a": ("a2", 5), "c": ("c1", 2)}
     # STALE delta (lower lsn) loses the read-time order guard (T4)
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "stale", 3)], True)),
+        _lanes(delta=_upsert_delta(spark, [("a", "stale", 3)])),
         buckets=range(4), batch_key="3",
     )
     assert {r.doc_id: r.v for r in u.read().collect()}["a"] == "a2"
     # equal order key across commits: earlier commit wins (== CoW
     # target-wins-ties)
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("c", "c-later", 2)], False)),
+        _lanes(delta=_upsert_delta(spark, [("c", "c-later", 2)])),
         buckets=range(4), batch_key="4",
     )
     assert {r.doc_id: r.v for r in u.read().collect()}["c"] == "c1"
@@ -166,31 +164,24 @@ def test_upsert_mode_lww_guard_and_fold(spark, tmp_path, fmt):
 
 
 @LAKE
-def test_compaction_racing_upsert_writer_conflicts(spark, tmp_path, fmt):
-    """The realistic race (round-3 review ask): a pipeline merge_append
-    planned BEFORE a compaction commits must not land stale _in_base
-    flags — the rebase detects the fold and raises; re-planning from the
-    fresh state converges with no lost update."""
+def test_compaction_racing_upsert_writer_rebases(spark, tmp_path, fmt):
+    """The realistic race: a pipeline merge_append planned BEFORE a
+    compaction commits rebases over it — its delta rows name no base
+    row, so the read decides that ``a`` is now a base row to update,
+    and no update is lost."""
     path = str(tmp_path / "t")
     LakeTable.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
     w1 = LakeTable.load(spark, path)
     w1.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)], False)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)])),
         buckets=[0], batch_key="0",
     )
     # writer plans an update against the un-compacted state…
     w2 = LakeTable.load(spark, path)
     # …compaction folds the lane first
     w1.refresh().compact(max_files_per_bucket=0)
-    with pytest.raises(CommitConflict):
-        w2.merge_append(
-            _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], False)),
-            buckets=[0], batch_key="1",
-        )
-    # recompute from fresh state (a is now IN base) → converges
-    w2.refresh()
     w2.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], True)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)])),
         buckets=[0], batch_key="1",
     )
     head = LakeTable.load(spark, path)
@@ -211,7 +202,7 @@ def test_merge_append_outside_planned_buckets_leaves_no_files(
     )
     keys = [f"d{i}" for i in range(16)]  # spread over all four buckets
     new_rows = spark.createDataFrame([(k, "v", 1) for k in keys], TGT)
-    delta = _upsert_delta(spark, [(k, "w", 2) for k in keys], True)
+    delta = _upsert_delta(spark, [(k, "w", 2) for k in keys])
     with pytest.raises(ValueError, match="outside the planned set"):
         t.merge_append(
             _lanes(
@@ -236,7 +227,7 @@ def test_merge_append_outside_planned_buckets_leaves_no_files(
 def test_compaction_racing_patch_writer_rebases(spark, tmp_path):
     """Patch deltas target rows by id, so a patch merge_append planned
     before a concurrent compaction commits REBASES safely (no conflict,
-    no lost update) — the asymmetry vs upsert mode is deliberate."""
+    no lost update), as upsert deltas do."""
     path = str(tmp_path / "h")
     LakeTable.create(
         spark, path, HIST, "doc_id", n_buckets=1, merge_on_read=PATCH_MOR
@@ -324,12 +315,12 @@ def test_mor_read_resolves_deltas_without_base_shuffle(spark, tmp_path):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)], False)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)])),
         buckets=range(2), batch_key="0",
     )
     u.compact(max_files_per_bucket=0)
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], True)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)])),
         buckets=range(2), batch_key="1",
     )
     p = plan(u.read())
@@ -386,11 +377,11 @@ def test_schema_evolution_across_uncompacted_delta_lane(spark, tmp_path, fmt):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)], False)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1)])),
         buckets=range(2), batch_key="0",
     )
     assert u.add_columns([StructField("extra", StringType())])
-    wide = _upsert_delta(spark, [("b", "b1", 1)], False).withColumn(
+    wide = _upsert_delta(spark, [("b", "b1", 1)]).withColumn(
         "extra", F.lit("x")
     )
     u.merge_append(_lanes(delta=wide), buckets=range(2), batch_key="1")
@@ -461,26 +452,18 @@ def test_lane_bytes_compaction_trigger(spark, tmp_path, fmt):
 
 
 @LAKE
-def test_upsert_concurrent_base_append_conflicts(spark, tmp_path, fmt):
-    """Round-5 advice fix: a concurrent plain append() of NEW keys into
-    a touched bucket changes base row-id membership, so an in-flight
-    upsert merge_append's _in_base=False flags are stale — it must
-    raise CommitConflict (prefix-compare used to let it rebase, which
-    read back duplicate rows)."""
+def test_upsert_concurrent_base_append_rebases(spark, tmp_path, fmt):
+    """A concurrent plain append() of a NEW key into a touched bucket
+    changes base row-id membership under an in-flight upsert
+    merge_append.  The merge rebases over it, and the read, which
+    decides base membership, returns one row per key."""
     path = str(tmp_path / "t")
     LakeTable.create(spark, path, TGT, "doc_id", n_buckets=1, merge_on_read=UPSERT_MOR)
     w1 = LakeTable.load(spark, path)
     w2 = LakeTable.load(spark, path)  # plans against the pre-append state
     w1.append(spark.createDataFrame([("a", "base", 1)], TGT))
-    with pytest.raises(CommitConflict):
-        w2.merge_append(
-            _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], False)),
-            buckets=[0], batch_key="1",
-        )
-    # recompute from fresh state → converges with ONE row per key
-    w2.refresh()
     w2.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)], True)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5)])),
         buckets=[0], batch_key="1",
     )
     rows = LakeTable.load(spark, path).read().collect()
@@ -499,16 +482,16 @@ def test_fold_delta_lane_upsert_semantics_and_tie_order(spark, tmp_path, fmt):
         merge_on_read=UPSERT_MOR,
     )
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1), ("c", "c1", 2)], False)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a1", 1), ("c", "c1", 2)])),
         buckets=[0], batch_key="0",
     )
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5), ("d", None, 1)], False)),
+        _lanes(delta=_upsert_delta(spark, [("a", "a2", 5), ("d", None, 1)])),
         buckets=[0], batch_key="1",
     )
     # intra-lane equal order key: earlier commit must keep winning
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("c", "c-later", 2)], False)),
+        _lanes(delta=_upsert_delta(spark, [("c", "c-later", 2)])),
         buckets=[0], batch_key="2",
     )
     before = {r.doc_id: (r.v, r.lsn) for r in u.read().collect()}
@@ -516,16 +499,17 @@ def test_fold_delta_lane_upsert_semantics_and_tie_order(spark, tmp_path, fmt):
     assert u.delta_stats()[0] == 3
     assert u.fold_delta_lane() == [0]
     assert u.delta_stats()[0] == 1  # one survivor file; base untouched
-    assert not u.base_file_stats()
+    assert not u.snapshot.files
     assert {r.doc_id: (r.v, r.lsn) for r in u.read().collect()} == before
     # post-fold commit at the same order key: the folded row is the
     # EARLIER commit and must still win the tie
     u.merge_append(
-        _lanes(delta=_upsert_delta(spark, [("c", "c-after-fold", 2)], False)),
+        _lanes(delta=_upsert_delta(spark, [("c", "c-after-fold", 2)])),
         buckets=[0], batch_key="3",
     )
     assert {r.doc_id: r.v for r in u.read().collect()}["c"] == "c1"
-    # dead tombstone (d: never in base) was dropped by the fold
+    # the tombstone of d (never in base) is kept in the lane and
+    # hidden at read time
     assert u.read().filter("doc_id = 'd'").count() == 0
 
 

@@ -79,10 +79,22 @@ def test_stream_crash_resume_matches_oracle(spark, tmp_path):
     wh = str(tmp_path / "wh")
     ckpt = str(tmp_path / "ckpt")
     pipe = CdcPipeline(spark, wh, n_buckets=4, compact_every=0)
-    n1 = run_stream(
-        spark, log_dir, pipe, ckpt, max_files_per_trigger=2, stop_after_batches=1
-    )
-    assert n1 == 1
+
+    class CrashAfterOne:
+        """Applies the first batch, then dies before the stream commits
+        it, so the resumed stream re-delivers that batch."""
+
+        n = 0
+
+        def apply_batch(self, df, batch_id):
+            pipe.apply_batch(df, batch_id)
+            self.n += 1
+            raise RuntimeError("simulated crash")
+
+    crashing = CrashAfterOne()
+    with pytest.raises(Exception):  # Spark rewraps the error
+        run_stream(spark, log_dir, crashing, ckpt, max_files_per_trigger=2)
+    assert crashing.n == 1
     # fresh pipeline object — state must come from disk, not memory
     pipe2 = CdcPipeline(spark, wh, n_buckets=4, compact_every=0)
     run_stream(spark, log_dir, pipe2, ckpt, max_files_per_trigger=2)

@@ -206,15 +206,18 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
 
 def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
     """The resolved upsert read uses the lane's survivor rows twice —
-    updates join the base, inserts are unioned in — and both sides must
-    share ONE shuffle of the lane (a reused exchange).  A plan change
-    that lets either side diverge (e.g. a null filter pushed below one
-    side's aggregate) silently shuffles the whole lane twice per read."""
+    their ids and order keys are broadcast against the base, the live
+    rows are unioned in — and both uses must share ONE shuffle of the
+    lane (a reused exchange).  The broadcast serves both base joins
+    (the rows it replaces, the survivors that lose), so it is built
+    once and reused too.  A plan change that lets either side diverge
+    (e.g. a null filter pushed below one side's aggregate) silently
+    shuffles or broadcasts the whole lane twice per read."""
     from data_pipeline_spark.table import LakeTable
     from data_pipeline_spark.table.laketable import LANE_COL
-    from data_pipeline_spark.table.mor import DINBASE_COL, DOP_COL, DORD_COL
+    from data_pipeline_spark.table.mor import DOP_COL, DORD_COL
 
-    def batch(lo, hi, in_base):
+    def batch(lo, hi):
         return (
             spark.range(lo, hi)
             .select(
@@ -224,10 +227,9 @@ def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
             )
             .withColumn(DOP_COL, F.lit("U"))
             .withColumn(DORD_COL, F.current_timestamp())
-            .withColumn(DINBASE_COL, F.lit(in_base))
         )
 
-    rows = batch(0, 50, False).drop(DOP_COL, DORD_COL, DINBASE_COL)
+    rows = batch(0, 50).drop(DOP_COL, DORD_COL)
     mor = {"mode": "upsert", "row_id_cols": ["doc_id"], "order_cols": ["lsn"]}
     t = LakeTable.create(
         spark, str(tmp_path / "t"), rows.schema, "doc_id", n_buckets=2,
@@ -235,10 +237,55 @@ def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
     )
     data, delta = F.lit("data").alias(LANE_COL), F.lit("delta").alias(LANE_COL)
     t.merge_append(rows.select("*", data), buckets=[0, 1])
-    t.merge_append(batch(0, 20, True).select("*", delta), buckets=[0, 1])  # updates
-    t.merge_append(batch(50, 60, False).select("*", delta), buckets=[0, 1])  # inserts
+    t.merge_append(batch(0, 20).select("*", delta), buckets=[0, 1])  # updates
+    t.merge_append(batch(50, 60).select("*", delta), buckets=[0, 1])  # inserts
     df = t.read()
     assert len(df.collect()) == 60
     plan = _plan(df)  # the adaptive plan after execution
-    assert plan.count("ReusedExchange") == 1, plan
+    final = plan.split("== Initial Plan ==")[0]
+    lane_ex = re.findall(r"\+- Exchange hashpartitioning\(doc_id", final)
+    assert len(lane_ex) == 1, plan
+    assert final.count("ReusedExchange") == 2, plan
+    assert re.search(r"ReusedExchange .*, Exchange hashpartitioning", final), plan
+    assert re.search(r"ReusedExchange .*, BroadcastExchange", final), plan
+
+
+def test_merge_into_over_compacted_target_scans_no_base_file(
+    spark, tmp_path, monkeypatch
+):
+    """The merge reduces its batch only: after compaction has written
+    the target's base files, the frame merge_into hands to the commit
+    scans no file under the target's data/ directory."""
+    from data_pipeline_spark.cdc.merge import merge_into
+    from data_pipeline_spark.cdc.schema import (
+        CHANGE_EVENT_SCHEMA,
+        TARGET_MOR,
+        TARGET_SCHEMA_BASE,
+    )
+    from data_pipeline_spark.table import LakeTable
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), TARGET_SCHEMA_BASE, key_col="doc_id",
+        n_buckets=2, merge_on_read=TARGET_MOR,
+    )
+    ev = lambda lsn: spark.createDataFrame(
+        [(f"d{i}", lsn, "U", [i], 1, None, None, 0, None) for i in range(20)],
+        CHANGE_EVENT_SCHEMA,
+    )
+    merge_into(t, ev(1), 0, range(2))
+    assert t.compact(max_files_per_bucket=0) == [0, 1]
+    assert t.snapshot.files and not t.snapshot.delta_files
+    seen = {}
+    merge_append = LakeTable.merge_append
+
+    def capture(self, rows, *args, **kwargs):
+        seen["rows"] = rows
+        return merge_append(self, rows, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "merge_append", capture)
+    merge_into(t, ev(2), 1, range(2))
+    plan = _plan(seen["rows"])
+    data_dir = os.path.join(t.path, "data")
+    assert "FileScan" not in plan and data_dir not in plan, plan
+    assert {r.lsn for r in t.read().collect()} == {2}
 
