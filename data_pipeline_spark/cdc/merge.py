@@ -38,7 +38,7 @@ stays in one task — one delta file per touched bucket.
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,20 +53,33 @@ def merge_into(
     changes: DataFrame,
     batch_id: int | str,
     affected: Iterable[int],
+    ready: Callable[[], int] | None = None,
 ) -> dict:
     """Apply a change set to an upsert-mode merge-on-read table as one
     delta commit; returns metrics.
 
-    `changes` carries doc_id, lsn, op, and the table's payload columns.
-    It MAY contain multiple versions per doc_id: the per-(bucket, key)
-    max_by collapses them map-side before the shuffle (partial
-    aggregation is the hot-key salting), so a pre-reduced input
-    (lww_reduce) is supported but not required.
+    `changes` carries doc_id, lsn, op, ingest_ts and payload columns:
+    every other column of the frame is carried as payload, the table's
+    own payload columns a frame lacks read back null.  It MAY contain
+    multiple versions per doc_id: the per-(bucket, key) max_by
+    collapses them map-side before the shuffle (partial aggregation is
+    the hot-key salting), so a pre-reduced input (lww_reduce) is
+    supported but not required.
 
-    affected: the batch plan's set of touched storage buckets (the
-    caller's fused planning probe, CdcPipeline.apply_batch); no probe
-    job runs here.  A superset is fine; a change row outside it makes
-    the commit raise ``ValueError`` (``LakeTable._stage``).
+    affected: the storage buckets the commit may write.  A superset is
+    fine (``CdcPipeline.apply_batch`` passes every bucket); a change
+    row outside it makes the commit raise ``ValueError``
+    (``LakeTable._stage``).  No probe job runs here.
+
+    ready: the wait for the caller's planning probe
+    (``CdcPipeline.apply_batch``).  It is called once the plan is
+    built, before the first Spark action, and returns the batch's
+    distinct-key count — 0 for a batch with no change row, which is
+    recorded without a write.  The caller applies the batch's schema
+    changes before it returns.  The write then drops the payload
+    columns the table still lacks, so a column's values from batches
+    before its DDL are never written, and a DDL batch is planned once,
+    like any other.  Without ``ready`` the plan is written at once.
 
     The reduce sees the batch's change rows only: whether a row
     replaces a stored one or is an insert is decided at read time
@@ -78,6 +91,12 @@ def merge_into(
         f
         for f in table.schema.fields
         if f.name not in (key, "lsn") and not f.name.startswith("_")
+    ]
+    carried = [
+        c
+        for c in changes.columns
+        if c not in (key, "lsn", "op", "ingest_ts", *[f.name for f in payload_cols])
+        and not c.startswith("_")
     ]
 
     d = changes.withColumn(BUCKET_COL, table.bucket_of(key))
@@ -108,6 +127,7 @@ def merge_into(
             ).alias(f.name)
             for f in payload_cols
         ],
+        *carried,
         batch_stamp.alias("_batch_id"),
         F.current_timestamp().alias("_applied_at"),
     )
@@ -128,8 +148,13 @@ def merge_into(
         .withColumn(LANE_COL, F.lit("delta"))
     )
 
+    if ready is not None and not ready():
+        table.record_batch(str(batch_id), {"rows": 0})
+        return {"buckets": []}
+    # write-time projection: only the columns the table holds now
+    have = {f.name for f in table.schema.fields}
     table.merge_append(
-        reduced,
+        reduced.drop(*[c for c in carried if c not in have]),
         buckets=affected,
         batch_key=str(batch_id),
         batch_info={"buckets": sorted(affected)},

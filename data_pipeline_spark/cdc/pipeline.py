@@ -4,17 +4,28 @@ One micro-batch of raw change events goes through (SURVEY.md §3.2
 re-expression):
 
   1. validation split → dead_letter (T9; parsers.py:114-158 analogue)
-  2. SCHEMA records → additive schema evolution on target+history (C8)
-  3. bucket-pruned MERGE (C1/C9) whose per-(bucket, key) max_by IS both
-     the arrival dedup (W1/T2) and the LWW reduce (W2) — map-side
-     partial aggregation salts hot keys
+  2. one planning probe (DDL set, distinct-key and dead-row counts)
+     whose SCHEMA records → additive schema evolution on
+     target+history (C8)
+  3. MERGE (C1/C9) whose per-(bucket, key) max_by IS both the arrival
+     dedup (W1/T2) and the LWW reduce (W2) — map-side partial
+     aggregation salts hot keys
   4. all versions → SCD2 history append + closure (C5/C6)
   5. per-partition lineage/metrics row (C10) + dead-letter append
-  6. periodic small-file compaction (north_rule)
+  6. periodic small-file compaction (north_rule), one thread per table
+
+Steps 2-5 run on one thread pool: the probe is not a serial step in
+front of the writers.  Merge and history plan against every bucket,
+build their plans while the probe runs, and wait for its verdict
+before their first Spark action; the probe applies the DDLs before it
+returns, so DDL commits still land before data commits, and each
+writer drops, at write time, the payload columns its table still
+lacks.  Only the dead-letter apply waits for the probe before it
+starts.
 
 Exactly-once: every table commit carries the batch epoch as its
 batch_key inside the atomic snapshot commit (commit manifest, C3).  On
-restart after a crash anywhere in 1-7, the replayed batch skips the
+restart after a crash anywhere in 1-6, the replayed batch skips the
 tables that already recorded the epoch and re-applies the rest —
 each step is idempotent, so the final state is identical.
 """
@@ -22,6 +33,7 @@ each step is idempotent, so the final state is identical.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,8 +62,8 @@ class CdcPipeline:
 
     * ``target`` — current state, merge-on-read upsert (``merge_into``);
     * ``history`` — every SCD2 version, merge-on-read patch
-      (``apply_history``), bucketed like the target so one probe plans
-      both;
+      (``apply_history``), bucketed like the target so both writers
+      plan against one bucket set;
     * ``lineage`` — one row per (batch, kafka partition): rows in,
       deduped and dead-lettered, and the applied lsn span — the input of
       ``control.jobs.ControlRunner``;
@@ -116,8 +128,8 @@ class CdcPipeline:
         self.history = tbl(
             "history", HISTORY_SCHEMA_BASE, "doc_id", n_buckets, mor=HISTORY_MOR
         )
-        # the fused probe computes one touched-bucket set for both
-        # tables, so both must hash keys into the same buckets
+        # apply_batch passes one bucket set, every target bucket, to
+        # both writers, so both must hash keys into the same buckets
         h, t = self.history, self.target
         if (h.n_buckets, h.key_col) != (t.n_buckets, t.key_col):
             raise ValueError(
@@ -151,48 +163,16 @@ class CdcPipeline:
             .when(F.col("op").isin("I", "U") & F.col("tokens").isNull(), "null_payload")
         )
 
-        # -- 1.5 fused planning probe: ONE column-pruned job computes
-        # every driver-side planning input for the whole batch — the
-        # DDL set (schema evolution), the touched bucket set (merge +
-        # history pruning), the distinct-key count (history broadcast
-        # gate) and the dead-row count (dead-letter skip).  These were
-        # three separate batch scans in round 2; per-batch planning jobs
-        # are pure Amdahl constant (they don't shrink with executors),
-        # so they are fused into one.
         valid = ~is_schema & failure.isNull()
-        probe = df.agg(
-            F.collect_set(F.when(is_schema, F.col("ddl"))).alias("ddls"),
-            F.collect_set(F.when(valid, self.target.bucket_of("doc_id"))).alias(
-                "bs"
-            ),
-            # HLL, not exact count_distinct: nd only gates the history
-            # broadcast decision (order-of-magnitude), and the exact
-            # version builds a per-partition hash set over every key —
-            # measured 18-21 s/batch at 8.3M events vs ~0 for the sketch
-            F.approx_count_distinct(
-                F.when(valid, F.col("doc_id")), 0.02
-            ).alias("nd"),
-            F.sum(
-                F.when(~is_schema & failure.isNotNull(), 1).otherwise(0)
-            ).alias("n_dead"),
-            F.sum(F.when(valid, 1).otherwise(0)).alias("n_valid"),
-        ).first()
-        _ph["probe"] = round(_time.perf_counter() - _t0, 3)
-        _ph["rows"] = int((probe["n_valid"] or 0) + (probe["n_dead"] or 0))
-        ddls = sorted(d for d in probe["ddls"] if d)
-        affected = [int(b) for b in probe["bs"]]
-        n_docs = int(probe["nd"] or 0)
-        n_dead = int(probe["n_dead"] or 0)
+        buckets = range(self.target.n_buckets)
+        # each apply builds its frame of the batch on its own pool
+        # thread (analysing a frame costs driver time), so the probe's
+        # job is not queued behind them
 
-        # -- 2. additive schema evolution (metadata-only) ----------
-        for ddl in ddls:
-            fields = list(parse_ddl(ddl))
-            self.target.add_columns(fields)
-            self.history.add_columns(fields)
-
-        non_schema = df.filter(~is_schema)
-        events = non_schema.filter(failure.isNull())
-        dead = non_schema.filter(failure.isNotNull())
+        def changes() -> DataFrame:
+            # the writers carry every payload column of their frame, so
+            # it holds the change columns only
+            return df.filter(valid).drop("ddl", "partition")
 
         # NOTE: no separate arrival-dedup pass — at-least-once duplicate
         # deliveries collapse inside the merge's max_by reduce and
@@ -200,13 +180,61 @@ class CdcPipeline:
         # exchange (first arrival wins in both), so the batch is
         # scanned rather than materialized into a 3×-copied cache.
 
-        # -- 4-6. four independent table applies, submitted from
-        # concurrent driver threads: each is its own chain of Spark jobs
-        # (plan → execute → commit) against a DIFFERENT LakeTable, so
-        # driver-side planning/codegen/commit latency overlaps with
-        # cluster compute instead of serializing after it.  Exactly-once
-        # stays per-table (each commit carries the batch manifest).
+        def _probe() -> dict:
+            # ONE column-pruned job computes every driver-side planning
+            # input of the batch — the DDL set (schema evolution), the
+            # distinct-key count (history broadcast gate) and the
+            # dead-row count (dead-letter skip).  Per-batch planning is
+            # a pure Amdahl constant (it does not shrink with
+            # executors), so the job runs on its own pool thread, while
+            # merge and history build their plans
+            row = df.agg(
+                F.collect_set(F.when(is_schema, F.col("ddl"))).alias("ddls"),
+                # HLL, not exact count_distinct: nd only gates the
+                # history broadcast decision (order-of-magnitude), and
+                # the exact version builds a per-partition hash set over
+                # every key — measured 18-21 s/batch at 8.3M events vs
+                # ~0 for the sketch.  rsd 0.05 (512 registers), not
+                # 0.02 (4096): the finer sketch added ≈0.1 s to this
+                # job on a 15k-event batch, and the writers wait for it
+                F.approx_count_distinct(
+                    F.when(valid, F.col("doc_id")), 0.05
+                ).alias("nd"),
+                F.sum(
+                    F.when(~is_schema & failure.isNotNull(), 1).otherwise(0)
+                ).alias("n_dead"),
+                F.sum(F.when(valid, 1).otherwise(0)).alias("n_valid"),
+            ).first()
+            n_valid = int(row["n_valid"] or 0)
+            n_dead = int(row["n_dead"] or 0)
+            _ph["rows"] = n_valid + n_dead
+            # -- 2. additive schema evolution (metadata-only), before
+            # either writer's wait returns: DDL commits land before
+            # data commits
+            for ddl in sorted(d for d in row["ddls"] if d):
+                fields = list(parse_ddl(ddl))
+                self.target.add_columns(fields)
+                self.history.add_columns(fields)
+            # 0 keys = no change row: the writers record the batch only
+            return {
+                "n_docs": max(int(row["nd"] or 0), 1) if n_valid else 0,
+                "n_dead": n_dead,
+            }
+
+        # -- 2-5. the probe and four independent table applies, on
+        # concurrent driver threads: each apply is its own chain of
+        # Spark jobs (plan → execute → commit) against a DIFFERENT
+        # LakeTable, so driver-side planning/codegen/commit latency
+        # overlaps with cluster compute instead of serializing after
+        # it.  Merge and history build their plans while the probe
+        # runs and wait for its verdict (``ready``) before their first
+        # Spark action; the dead-letter apply needs the verdict first.
+        # Exactly-once stays per-table (each commit carries the batch
+        # manifest).
         stats: dict = {"batch_id": batch_id}
+
+        def ready() -> int:
+            return probe.result()["n_docs"]  # the future submitted first below
 
         def _merge():
             # the merge's per-(bucket, key) max_by reduce IS the LWW:
@@ -215,27 +243,27 @@ class CdcPipeline:
             # merge shuffle — no separate lww_reduce pass needed.
             if not self.target.has_batch(bkey):
                 stats["merge"] = merge_into(
-                    self.target, events, batch_id, affected=affected
+                    self.target, changes(), batch_id, buckets, ready=ready
                 )
 
         def _history():
             if not self.history.has_batch(bkey):
                 stats["history"] = apply_history(
-                    self.history, events, batch_id,
+                    self.history, changes(), batch_id, buckets,
                     check_cols=self.scd2_check_cols,
-                    affected=affected,
-                    n_docs=n_docs,
+                    ready=ready,
                 )
 
         def _dead_letter():
             if self.dead_letter.has_batch(bkey):
                 return
-            if n_dead == 0:
+            if probe.result()["n_dead"] == 0:
                 # nothing to quarantine: record the epoch with a
                 # manifest-only commit — no Spark job (the common case
                 # on a healthy stream, and a per-batch constant saved)
                 self.dead_letter.record_batch(bkey, {"rows": 0})
                 return
+            dead = df.filter(~is_schema & failure.isNotNull())
             dl = dead.select(
                 F.lit(_stamp(batch_id)).cast("long").alias("batch_id"),
                 "doc_id",
@@ -253,7 +281,7 @@ class CdcPipeline:
             # one row per kafka partition; min/max_lsn span VALID rows
             # only: a quarantined row was not applied, so its lsn must
             # not extend the applied span the gap checks read
-            per_part = non_schema.groupBy("partition").agg(
+            per_part = df.filter(~is_schema).groupBy("partition").agg(
                 F.count("*").alias("_all"),
                 F.sum(F.when(failure.isNotNull(), 1).otherwise(0)).alias(
                     "rows_dead_letter"
@@ -280,8 +308,6 @@ class CdcPipeline:
             )
             self.lineage.append(lin, batch_key=bkey)
 
-        from concurrent.futures import ThreadPoolExecutor
-
         _tables = [self.target, self.history, self.lineage, self.dead_letter]
         _bytes0 = sum(t.bytes_written_total for t in _tables)
 
@@ -289,15 +315,16 @@ class CdcPipeline:
             def run():
                 s = _time.perf_counter()
                 try:
-                    fn()
+                    return fn()
                 finally:
                     _ph[fn.__name__.lstrip("_")] = round(
                         _time.perf_counter() - s, 3
                     )
             return run
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = [
+        with ThreadPoolExecutor(max_workers=5) as pool:
+            probe = pool.submit(_timed(_probe))
+            futures = [probe] + [
                 pool.submit(_timed(fn))
                 for fn in (_merge, _history, _dead_letter, _lineage)
             ]
@@ -305,7 +332,7 @@ class CdcPipeline:
                 f.result()  # re-raise the first failure
         _ph["applies"] = round(_time.perf_counter() - _t0, 3)
 
-        # -- 7. maintenance ----------------------------------------
+        # -- 6. maintenance ----------------------------------------
         self._batches_applied += 1
         cadence_due = bool(
             self.compact_every
@@ -329,33 +356,38 @@ class CdcPipeline:
         }
         if cadence_due or hot:
             _tc = _time.perf_counter()
-            # per table: the buckets each maintenance op rewrote
-            folded: dict = {}
-            compacted: dict = {}
-            if hot and not cadence_due:
-                # lane-BYTES trigger between cadences: try the O(lane)
-                # MINOR fold first (hot keys collapse to one survivor
-                # per id, no base rewrite); escalate to a full bucket
-                # rewrite only for buckets still over the threshold —
-                # i.e. lanes of genuinely distinct keys
-                for name, bs in hot.items():
-                    t = maintained[name]
-                    folded[name] = t.fold_delta_lane(buckets=bs)
-                    if _hot_buckets(t):
-                        compacted[name] = t.compact(
-                            10**9,
-                            max_delta_bytes_per_bucket=(
-                                self.max_delta_bytes_per_bucket
-                            ),
-                        )
-            if cadence_due:
-                for name, t in maintained.items():
-                    compacted[name] = t.compact(
+
+            def _maintain(name: str) -> tuple:
+                """One table's maintenance: the buckets it folded and
+                compacted (None for an op that did not run)."""
+                t = maintained[name]
+                if cadence_due:
+                    return None, t.compact(
                         self.max_files_per_bucket,
                         max_delta_bytes_per_bucket=(
                             self.max_delta_bytes_per_bucket
                         ),
                     )
+                # lane-BYTES trigger between cadences: try the O(lane)
+                # MINOR fold first (hot keys collapse to one survivor
+                # per id, no base rewrite); escalate to a full bucket
+                # rewrite only for buckets still over the threshold —
+                # i.e. lanes of genuinely distinct keys
+                folded = t.fold_delta_lane(buckets=hot[name])
+                if not _hot_buckets(t):
+                    return folded, None
+                return folded, t.compact(
+                    10**9,
+                    max_delta_bytes_per_bucket=self.max_delta_bytes_per_bucket,
+                )
+
+            # target and history share nothing: one thread per table
+            names = list(maintained) if cadence_due else list(hot)
+            with ThreadPoolExecutor(max_workers=len(names)) as pool:
+                done = dict(zip(names, pool.map(_maintain, names)))
+            # per table: the buckets each maintenance op rewrote
+            folded = {n: f for n, (f, _) in done.items() if f is not None}
+            compacted = {n: c for n, (_, c) in done.items() if c is not None}
             # compaction wall is reported separately: it is the MoR
             # lane's amortized rewrite cost, paid every compact_every
             # batches instead of every batch (BENCH.md steady-state)

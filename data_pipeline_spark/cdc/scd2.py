@@ -54,12 +54,14 @@ batch's own new versions:
 
 For enormous batches (more changed keys than is broadcastable) the
 ``BROADCAST_MAX_DOCS`` gate falls back to a shuffle-based variant of
-the same algorithm.
+the same algorithm; under ``CdcPipeline`` the broadcast variant is
+planned first and replaced once the probe's count is known, before
+any job runs.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -73,17 +75,18 @@ from .schema import END_OF_TIME
 BROADCAST_MAX_DOCS = 500_000
 
 
-def _attr_hash(df: DataFrame, check_cols: list[str] | None) -> list[Column]:
+def _attr_hash(check_cols: list[str] | None, present: list[str]) -> list[Column]:
     """The check-cols gate's attribute hash as ``[_h]`` (``[]`` when
     the gate is off; C4/J5, reference
     basic_orchestrator/dbt/macros/scd2/scd2_merge.sql:46-50).  A check
-    column missing on one side (pre-schema-evolution history rows)
-    hashes as null — identical to a present-but-null value, so
-    evolution does not spuriously open versions."""
+    column not in ``present`` (pre-schema-evolution history rows, or a
+    column the history does not hold yet) hashes as null — identical
+    to a present-but-null value, so evolution does not spuriously open
+    versions."""
     if not check_cols:
         return []
     null = F.lit(None).cast("string")
-    cols = [F.col(c) if c in df.columns else null for c in check_cols]
+    cols = [F.col(c) if c in present else null for c in check_cols]
     return [F.xxhash64(*cols).alias("_h")]
 
 
@@ -92,30 +95,48 @@ def apply_history(
     new_versions: DataFrame,
     batch_id: int | str,
     affected: Iterable[int],
-    n_docs: int,
+    n_docs: int | None = None,
     check_cols: list[str] | None = None,
+    ready: Callable[[], int] | None = None,
 ) -> dict:
     """Append this batch's versions and re-close affected keys, as one
     merge-on-read commit on a patch-mode history table.
 
-    affected/n_docs: the batch plan from the caller's fused probe —
-    touched buckets (a superset is fine) and distinct-key count; no
-    probe job runs here.  Only valid when the caller's bucket function
-    matches this table's (same key_col + n_buckets); CdcPipeline checks
-    that at construction.
+    affected: the buckets the commit may write — a superset is fine
+    (``CdcPipeline.apply_batch`` passes every bucket).  Only valid when
+    the caller's bucket function matches this table's (same key_col +
+    n_buckets); CdcPipeline checks that at construction.
 
-    `new_versions` is the RAW validated event stream — it may contain
-    at-least-once duplicate deliveries of a (doc_id, lsn) and replays of
-    versions already in the table; both collapse here (first arrival /
-    stored row wins) with no separate dedup pass: the closure window
-    drops duplicate copies by ``lag(lsn)``, and the surviving row is
-    the one written, payload included.
+    n_docs / ready: the batch's distinct-key count, which gates the
+    broadcast of the per-key planning frames (``BROADCAST_MAX_DOCS``);
+    no probe job runs here.  A direct caller passes ``n_docs``.
+    ``CdcPipeline.apply_batch`` passes ``ready`` instead, the wait for
+    its planning probe: the plan is built first, optimistically (the
+    broadcast variant), then ``ready()`` returns the count — 0 for a
+    batch with no change row, recorded without a write — after the
+    caller has applied the batch's schema changes.  Over the limit, the
+    shuffle variant is built in its place; no job has run yet, so
+    nothing is wasted.  The write selects the history's columns after
+    the wait, so a payload column the history still lacks is not
+    written (a column's values from batches before its DDL never are),
+    and ``LakeTable._stage`` casts to the evolved types.
+
+    `new_versions` is the RAW validated event stream (doc_id, lsn, op,
+    ingest_ts; every other column is carried as payload) — it may
+    contain at-least-once duplicate deliveries of a (doc_id, lsn) and
+    replays of versions already in the table; both collapse here (first
+    arrival / stored row wins) with no separate dedup pass: the closure
+    window drops duplicate copies by ``lag(lsn)``, and the surviving row
+    is the one written, payload included.
 
     check_cols: optional attr-change gate — when set, a new version
     whose tracked attributes hash-match its lsn predecessor (stored or
     new, late mid-chain arrivals included) opens NO history row (the
     reference's check-cols SCD2); deletes and versions following a
-    delete always open one, and stored rows are never dropped.  Off by
+    delete always open one, and stored rows are never dropped.  A check
+    column the history does not hold after the wait hashes as null; the
+    optimistic plan assumes the batch's DDLs add every check column the
+    frame carries, and is rebuilt when one is still missing.  Off by
     default: the lsn-versioned mode keeps every distinct (key, lsn).
 
     The write (Iceberg v2 equality-delete / Hudi MoR analogue;
@@ -143,9 +164,9 @@ def apply_history(
     key = history.key_col
     derived = (key, "lsn", "op", "valid_from_utc", "valid_to_utc", "is_current")
     payload_cols = [
-        f.name
-        for f in history.schema.fields
-        if f.name in new_versions.columns and f.name not in derived
+        c
+        for c in new_versions.columns
+        if c not in (*derived, "ingest_ts") and not c.startswith("_")
     ]
 
     nv = new_versions.select(
@@ -160,8 +181,6 @@ def apply_history(
         history.record_batch(str(batch_id), {"versions": 0})
         return {"buckets": []}
 
-    maybe_bcast = F.broadcast if n_docs <= BROADCAST_MAX_DOCS else (lambda df: df)
-
     # The closure input skips the delta-lane resolution join: patches
     # only ever rewrite DERIVED columns (valid_to_utc/is_current), and
     # the closure recomputes those from the immutable (lsn, valid_from)
@@ -173,6 +192,64 @@ def apply_history(
     # reduce + broadcast-exchange of the whole un-folded lane.
     existing = history.read(buckets=affected, with_deltas=False)
 
+    frame_check = [c for c in check_cols or () if c in payload_cols]
+
+    def verdict(n: int) -> tuple[bool, list[str]]:
+        have = {f.name for f in history.schema.fields}
+        return n <= BROADCAST_MAX_DOCS, [c for c in frame_check if c in have]
+
+    planned = verdict(n_docs) if ready is None else (True, frame_check)
+    closure = _closure(history, nv, existing, check_cols, *planned)
+    if ready is not None:
+        n_docs = ready()
+        if not n_docs:
+            history.record_batch(str(batch_id), {"versions": 0})
+            return {"buckets": []}
+        if verdict(n_docs) != planned:  # no job has run: rebuild
+            planned = verdict(n_docs)
+            closure = _closure(history, nv, existing, check_cols, *planned)
+
+    # write only rows whose validity actually changed — new versions
+    # and neighbours of inserts, O(batch) in an append-mostly stream.
+    # Stored validity is exact int64 µs (-1 for new rows).  A surviving
+    # NEW row is appended as a base row already carrying its final
+    # validity; a changed STORED row becomes a patch delta (stored rows
+    # are never re-inserted).  The select runs after the wait: it keeps
+    # the columns the history holds now
+    out = closure.filter(
+        F.col("_is_new")
+        | (F.unix_micros("valid_to_utc") != F.col("_stored_vt_us"))
+        | (F.col("is_current") != F.col("_stored_ic"))
+    ).select(
+        *[f.name for f in history.schema.fields if f.name in closure.columns],
+        BUCKET_COL,
+        F.when(F.col("_is_new"), "data").otherwise("delta").alias(LANE_COL),
+    )
+
+    history.merge_append(
+        out,
+        buckets=affected,
+        batch_key=str(batch_id),
+        batch_info={"buckets": sorted(affected)},
+    )
+    # changed_docs is an HLL estimate (±5%) from the caller's probe
+    return {"buckets": sorted(affected), "changed_docs": n_docs}
+
+
+def _closure(
+    history: LakeTable,
+    nv: DataFrame,
+    existing: DataFrame,
+    check_cols: list[str] | None,
+    bcast: bool,
+    hashed: list[str],
+) -> DataFrame:
+    """``apply_history``'s closure frame over the new versions ``nv``
+    and the stored rows ``existing``: the broadcast (``bcast``) or
+    shuffle variant of the planning joins, with the new versions
+    hashing the check columns in ``hashed``."""
+    key = history.key_col
+    maybe_bcast = F.broadcast if bcast else (lambda df: df)
     # CHAIN-SUFFIX pruning (round 4): the closure of a stored version
     # can only change if a version is inserted at-or-before it in lsn
     # order, so the closure needs, per key, only the rows with
@@ -197,7 +274,7 @@ def apply_history(
             ),
             F.coalesce(F.col("is_current"), F.lit(False)).alias("_stored_ic"),
             "_min_new",
-            *_attr_hash(existing, check_cols),
+            *_attr_hash(check_cols, existing.columns),
         )
     )
     pred = (
@@ -224,7 +301,7 @@ def apply_history(
             F.lit(-1).cast("long").alias("_stored_vt_us"),
             F.lit(False).alias("_stored_ic"),
             F.lit(True).alias("_is_new"),
-            *_attr_hash(nv, check_cols),
+            *_attr_hash(check_cols, hashed),
         )
         .unionByName(ex_narrow, allowMissingColumns=True)
         .repartition(BUCKET_COL)
@@ -256,31 +333,7 @@ def apply_history(
             | (F.col("_prev_op") == "D")
             | ~F.col("_prev_h").eqNullSafe(F.col("_h"))
         )
-    # write only rows whose validity actually changed — new versions
-    # and neighbours of inserts, O(batch) in an append-mostly stream.
-    # Stored validity is exact int64 µs (-1 for new rows).  A surviving
-    # NEW row is appended as a base row already carrying its final
-    # validity; a changed STORED row becomes a patch delta (stored rows
-    # are never re-inserted)
-    closure = scd2_close_windowed(versions, part, order, "valid_from_utc", "op")
-    out = closure.filter(
-        F.col("_is_new")
-        | (F.unix_micros("valid_to_utc") != F.col("_stored_vt_us"))
-        | (F.col("is_current") != F.col("_stored_ic"))
-    ).select(
-        *[f.name for f in history.schema.fields if f.name in closure.columns],
-        BUCKET_COL,
-        F.when(F.col("_is_new"), "data").otherwise("delta").alias(LANE_COL),
-    )
-
-    history.merge_append(
-        out,
-        buckets=affected,
-        batch_key=str(batch_id),
-        batch_info={"buckets": sorted(affected)},
-    )
-    # changed_docs is an HLL estimate (±2%) from the caller's probe
-    return {"buckets": sorted(affected), "changed_docs": n_docs}
+    return scd2_close_windowed(versions, part, order, "valid_from_utc", "op")
 
 
 def scd2_close_windowed(

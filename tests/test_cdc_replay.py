@@ -130,6 +130,119 @@ def test_schema_evolution_mid_stream(spark, log_dir, tmp_path):
     assert_tokens_equal(_final_pandas(pipe), expected)
 
 
+def test_probe_runs_beside_the_writers_plan_building(spark, tmp_path, monkeypatch):
+    """The planning probe runs on its own thread while merge and history
+    build their plans: its collect blocks until both writers have
+    reached their wait for its verdict.  A probe moved back in front of
+    the writers never sees them arrive, and the batch fails."""
+    import threading
+
+    from data_pipeline_spark.cdc import pipeline as pipeline_mod
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    waiting = {"merge": threading.Event(), "history": threading.Event()}
+
+    def at_wait(name, writer):
+        def wrapper(*args, ready, **kwargs):
+            def signalled():
+                waiting[name].set()
+                return ready()
+
+            return writer(*args, ready=signalled, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        pipeline_mod, "merge_into", at_wait("merge", pipeline_mod.merge_into)
+    )
+    monkeypatch.setattr(
+        pipeline_mod, "apply_history",
+        at_wait("history", pipeline_mod.apply_history),
+    )
+    batch = spark.createDataFrame(
+        [(f"d{i}", i, "I", [i], 1, None, None, 0, None) for i in range(10)],
+        CHANGE_EVENT_SCHEMA,
+    ).withColumn("ingest_ts", F.current_timestamp())
+    frame = type(batch)  # the session's DataFrame class, which the probe uses
+    first, probed = frame.first, []
+
+    def probe_first(self):
+        for name, reached in waiting.items():
+            assert reached.wait(timeout=60), f"{name} never reached its wait"
+        probed.append(self)
+        return first(self)
+
+    monkeypatch.setattr(frame, "first", probe_first)
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0)
+    pipe.apply_batch(batch, 0)
+    monkeypatch.undo()
+    assert len(probed) == 1
+    assert pipe.current_state().count() == 10
+    assert pipe.history_df().filter("is_current").count() == 10
+
+
+def test_ddl_batch_plans_once_and_projects_at_write(spark, tmp_path, monkeypatch):
+    """Both writers plan the batch before its SCHEMA record is applied
+    and drop, at write time, the payload columns the table still lacks:
+    `source` values sent before the column's DDL batch are never
+    written, the DDL batch's own are, and no batch is planned twice."""
+    import datetime
+
+    from data_pipeline_spark.cdc import pipeline as pipeline_mod
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    entered, batch = [], [0]
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            entered.append((name, batch[0]))
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        pipeline_mod, "merge_into", counted("merge", pipeline_mod.merge_into)
+    )
+    monkeypatch.setattr(
+        pipeline_mod, "apply_history",
+        counted("history", pipeline_mod.apply_history),
+    )
+    # one closure per plan the history apply builds
+    monkeypatch.setattr(
+        scd2, "scd2_close_windowed",
+        counted("closure", scd2.scd2_close_windowed),
+    )
+    ts = lambda s: datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=s)
+    pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0)
+    mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+    pipe.apply_batch(
+        mk([
+            ("a", 1, "I", [1], 1, "early", None, 0, ts(1)),
+            ("b", 1, "I", [2], 1, "early", None, 0, ts(1)),
+        ]),
+        0,
+    )
+    assert "source" not in pipe.target.schema.fieldNames()
+    batch[0] = 1
+    pipe.apply_batch(
+        mk([
+            ("__schema__", 2, "SCHEMA", None, None, None, "source:string", 0, ts(2)),
+            ("a", 3, "U", [3], 1, "late", None, 0, ts(3)),
+            ("c", 3, "I", [4], 1, "late", None, 0, ts(3)),
+        ]),
+        1,
+    )
+    assert sorted(entered, key=lambda e: e[::-1]) == [
+        (name, b) for b in (0, 1) for name in ("closure", "history", "merge")
+    ]
+    target = {r.doc_id: r.source for r in pipe.current_state().collect()}
+    assert target == {"a": "late", "b": None, "c": "late"}
+    history = {(r.doc_id, r.lsn): r.source for r in pipe.history_df().collect()}
+    assert history == {
+        ("a", 1): None, ("b", 1): None, ("a", 3): "late", ("c", 3): "late"
+    }
+
+
 def test_dead_letter_and_lineage(spark, tmp_path):
     from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
 
@@ -590,6 +703,35 @@ def test_check_cols_gate_reinsert_after_delete(spark, tmp_path):
     assert hist == {("k", 1, "I"), ("k", 2, "D"), ("k", 3, "I")}
     cur = [r.lsn for r in pipe.history_df().filter("is_current").collect()]
     assert cur == [3]
+
+
+def test_check_cols_gate_ignores_a_column_before_its_ddl(spark, tmp_path):
+    """A check column the history does not hold yet hashes as null,
+    though the batch frame carries its values: a@2 differs from a@1
+    only in a `source` sent before the column's SCHEMA record, so it
+    opens no version (the history apply re-plans its hash after the
+    probe finds no DDL for the column)."""
+    import datetime
+
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    ts = lambda s: datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=s)
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "wh"), n_buckets=2, compact_every=0,
+        scd2_check_cols=["tokens", "source"],
+    )
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                ("a", 1, "I", [1], 1, "x", None, 0, ts(1)),
+                ("a", 2, "U", [1], 1, "y", None, 0, ts(2)),  # source only
+                ("a", 3, "U", [2], 1, "y", None, 0, ts(3)),  # tokens change
+            ],
+            CHANGE_EVENT_SCHEMA,
+        ),
+        0,
+    )
+    assert {r.lsn for r in pipe.history_df().collect()} == {1, 3}
 
 
 def test_string_batch_id_stamps_deterministic_hash(spark, tmp_path):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
@@ -202,6 +203,48 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
     above, below = re.split(r"Exchange hashpartitioning\(_bucket#\d+.*\n", plan)
     assert "Exchange" not in above, f"exchange above the bucket exchange:\n{plan}"
     assert below.lstrip(" +-").startswith("Union"), plan
+
+
+@pytest.mark.parametrize("limit", ["default", "zero"])
+def test_history_gate_rebuild_after_probe(spark, tmp_path, monkeypatch, limit):
+    """Through the pipeline, the history apply plans the broadcast
+    variant before the probe's verdict.  Over ``BROADCAST_MAX_DOCS`` it
+    must rebuild the shuffle variant: the frame handed to the commit
+    plans no BroadcastExchange.  Size-based broadcasts are off, so a
+    broadcast here can only come from the gate's hint; the default
+    limit, which keeps the hint, shows the pin can see one."""
+    from data_pipeline_spark.cdc import scd2
+    from data_pipeline_spark.cdc.pipeline import CdcPipeline
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+    from data_pipeline_spark.table import LakeTable
+
+    if limit == "zero":
+        monkeypatch.setattr(scd2, "BROADCAST_MAX_DOCS", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, compact_every=0)
+        mk = lambda lsn: spark.createDataFrame(
+            [(f"d{i}", lsn, "U", [lsn], 1, None, None, 0, None) for i in range(20)],
+            CHANGE_EVENT_SCHEMA,
+        ).withColumn("ingest_ts", F.current_timestamp())
+        pipe.apply_batch(mk(1), 0)
+        seen = {}
+        merge_append = LakeTable.merge_append
+
+        def capture(self, rows, *args, **kwargs):
+            if self is pipe.history:
+                seen["rows"] = rows
+            return merge_append(self, rows, *args, **kwargs)
+
+        monkeypatch.setattr(LakeTable, "merge_append", capture)
+        pipe.apply_batch(mk(2), 1)
+        plan = _plan(seen["rows"])
+    finally:
+        spark.conf.set(key, old)
+    assert ("BroadcastExchange" in plan) == (limit == "default"), plan
+    assert pipe.history_df().filter("is_current").count() == 20
 
 
 def test_upsert_mor_read_reduces_its_lane_once(spark, tmp_path):
