@@ -53,7 +53,7 @@ def merge_into(
     changes: DataFrame,
     batch_id: int | str,
     affected: Iterable[int],
-    ready: Callable[[], int] | None = None,
+    ready: Callable[[], bool] | None = None,
 ) -> dict:
     """Apply a change set to an upsert-mode merge-on-read table as one
     delta commit; returns metrics.
@@ -73,13 +73,13 @@ def merge_into(
 
     ready: the wait for the caller's planning probe
     (``CdcPipeline.apply_batch``).  It is called once the plan is
-    built, before the first Spark action, and returns the batch's
-    distinct-key count — 0 for a batch with no change row, which is
-    recorded without a write.  The caller applies the batch's schema
-    changes before it returns.  The write then drops the payload
-    columns the table still lacks, so a column's values from batches
-    before its DDL are never written, and a DDL batch is planned once,
-    like any other.  Without ``ready`` the plan is written at once.
+    built, before the first Spark action, and returns whether the batch
+    has a change row — one without is recorded without a write.  The
+    caller applies the batch's schema changes before it returns.  The
+    write then drops the payload columns the table still lacks, so a
+    column's values from batches before its DDL are never written, and
+    a DDL batch is planned once, like any other.  Without ``ready`` the
+    plan is written at once.
 
     The reduce sees the batch's change rows only: whether a row
     replaces a stored one or is an insert is decided at read time

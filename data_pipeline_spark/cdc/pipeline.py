@@ -4,8 +4,8 @@ One micro-batch of raw change events goes through (SURVEY.md §3.2
 re-expression):
 
   1. validation split → dead_letter (T9; parsers.py:114-158 analogue)
-  2. one planning probe (DDL set, distinct-key and dead-row counts)
-     whose SCHEMA records → additive schema evolution on
+  2. one planning probe, one job computing the DDL set, ``n_valid``
+     and ``n_dead``; its SCHEMA records → additive schema evolution on
      target+history (C8)
   3. MERGE (C1/C9) whose per-(bucket, key) max_by IS both the arrival
      dedup (W1/T2) and the LWW reduce (W2) — map-side partial
@@ -17,11 +17,11 @@ re-expression):
 Steps 2-5 run on one thread pool: the probe is not a serial step in
 front of the writers.  Merge and history plan against every bucket,
 build their plans while the probe runs, and wait for its verdict
-before their first Spark action; the probe applies the DDLs before it
-returns, so DDL commits still land before data commits, and each
-writer drops, at write time, the payload columns its table still
-lacks.  Only the dead-letter apply waits for the probe before it
-starts.
+(``n_valid > 0``: the batch has a change row) before their first
+Spark action; the probe applies the DDLs before it returns, so DDL
+commits still land before data commits, and each writer drops, at
+write time, the payload columns its table still lacks.  Only the
+dead-letter apply waits for the probe (``n_dead``) before it starts.
 
 Exactly-once: every table commit carries the batch epoch as its
 batch_key inside the atomic snapshot commit (commit manifest, C3).  On
@@ -183,23 +183,13 @@ class CdcPipeline:
         def _probe() -> dict:
             # ONE column-pruned job computes every driver-side planning
             # input of the batch — the DDL set (schema evolution), the
-            # distinct-key count (history broadcast gate) and the
-            # dead-row count (dead-letter skip).  Per-batch planning is
-            # a pure Amdahl constant (it does not shrink with
-            # executors), so the job runs on its own pool thread, while
-            # merge and history build their plans
+            # valid-row count (a batch without change rows is recorded
+            # without a write) and the dead-row count (dead-letter
+            # skip).  Per-batch planning is a pure Amdahl constant (it
+            # does not shrink with executors), so the job runs on its
+            # own pool thread, while merge and history build their plans
             row = df.agg(
                 F.collect_set(F.when(is_schema, F.col("ddl"))).alias("ddls"),
-                # HLL, not exact count_distinct: nd only gates the
-                # history broadcast decision (order-of-magnitude), and
-                # the exact version builds a per-partition hash set over
-                # every key — measured 18-21 s/batch at 8.3M events vs
-                # ~0 for the sketch.  rsd 0.05 (512 registers), not
-                # 0.02 (4096): the finer sketch added ≈0.1 s to this
-                # job on a 15k-event batch, and the writers wait for it
-                F.approx_count_distinct(
-                    F.when(valid, F.col("doc_id")), 0.05
-                ).alias("nd"),
                 F.sum(
                     F.when(~is_schema & failure.isNotNull(), 1).otherwise(0)
                 ).alias("n_dead"),
@@ -215,11 +205,7 @@ class CdcPipeline:
                 fields = list(parse_ddl(ddl))
                 self.target.add_columns(fields)
                 self.history.add_columns(fields)
-            # 0 keys = no change row: the writers record the batch only
-            return {
-                "n_docs": max(int(row["nd"] or 0), 1) if n_valid else 0,
-                "n_dead": n_dead,
-            }
+            return {"n_valid": n_valid, "n_dead": n_dead}
 
         # -- 2-5. the probe and four independent table applies, on
         # concurrent driver threads: each apply is its own chain of
@@ -233,8 +219,9 @@ class CdcPipeline:
         # manifest).
         stats: dict = {"batch_id": batch_id}
 
-        def ready() -> int:
-            return probe.result()["n_docs"]  # the future submitted first below
+        def ready() -> bool:
+            # no change row: the writers record the batch only
+            return probe.result()["n_valid"] > 0  # submitted first below
 
         def _merge():
             # the merge's per-(bucket, key) max_by reduce IS the LWW:

@@ -19,7 +19,8 @@ history files.  Stored rows enter it narrow (no payload) and only as
 the CHAIN SUFFIX, so the full-width data shuffled per batch is the
 batch's own new versions:
 
-  1. per-key ``min(incoming lsn)`` (batch-sized, broadcast);
+  1. per-key ``min(incoming lsn)`` (batch-sized, broadcast while
+     under Spark's threshold);
   2. existing versions projected to (key, lsn, op, valid_from, stored
      validity) — a column-pruned scan — PRUNED to rows with
      lsn >= min(incoming lsn) plus the single insertion-predecessor
@@ -52,11 +53,20 @@ batch's own new versions:
      where rewriting every touched bucket (copy-on-write) is O(history)
      at uniformly-hashed CDC keys.
 
-For enormous batches (more changed keys than is broadcastable) the
-``BROADCAST_MAX_DOCS`` gate falls back to a shuffle-based variant of
-the same algorithm; under ``CdcPipeline`` the broadcast variant is
-planned first and replaced once the probe's count is known, before
-any job runs.
+The two planning joins (per-key min incoming lsn, insertion
+predecessor) carry no broadcast hint: Spark's size estimate against
+``spark.sql.autoBroadcastJoinThreshold`` (10 MB by default) and AQE's
+runtime join selection choose a broadcast or a sort-merge join.  The
+min-lsn frame's estimate follows the batch — ≈1.2 MB per 15k-event
+batch at the benchmark's shape, so batches up to ≈130k events
+broadcast it.  The predecessor frame's estimate follows the stored
+rows it is computed from (0.6–0.8 of the history base scan's estimate
+at that shape; 6.2 MB at 74k stored rows): past the threshold it plans
+a sort-merge join, which AQE turns into a broadcast join at run time
+once the frame's real size is known.  A larger session threshold
+moves both boundaries.  A batch Spark cannot size (one built from
+local rows or an RDD) counts as ``spark.sql.defaultSizeInBytes``, so
+its joins plan sort-merge.
 """
 
 from __future__ import annotations
@@ -69,10 +79,6 @@ from pyspark.sql import functions as F
 from ..table.laketable import BUCKET_COL, LANE_COL, LakeTable
 from ..table.mor import require_mode
 from .schema import END_OF_TIME
-
-#: distinct changed keys up to which the per-key planning frames
-#: (min incoming lsn, insertion predecessor) are broadcast
-BROADCAST_MAX_DOCS = 500_000
 
 
 def _attr_hash(check_cols: list[str] | None, present: list[str]) -> list[Column]:
@@ -95,9 +101,8 @@ def apply_history(
     new_versions: DataFrame,
     batch_id: int | str,
     affected: Iterable[int],
-    n_docs: int | None = None,
     check_cols: list[str] | None = None,
-    ready: Callable[[], int] | None = None,
+    ready: Callable[[], bool] | None = None,
 ) -> dict:
     """Append this batch's versions and re-close affected keys, as one
     merge-on-read commit on a patch-mode history table.
@@ -107,19 +112,16 @@ def apply_history(
     the caller's bucket function matches this table's (same key_col +
     n_buckets); CdcPipeline checks that at construction.
 
-    n_docs / ready: the batch's distinct-key count, which gates the
-    broadcast of the per-key planning frames (``BROADCAST_MAX_DOCS``);
-    no probe job runs here.  A direct caller passes ``n_docs``.
-    ``CdcPipeline.apply_batch`` passes ``ready`` instead, the wait for
-    its planning probe: the plan is built first, optimistically (the
-    broadcast variant), then ``ready()`` returns the count — 0 for a
-    batch with no change row, recorded without a write — after the
-    caller has applied the batch's schema changes.  Over the limit, the
-    shuffle variant is built in its place; no job has run yet, so
-    nothing is wasted.  The write selects the history's columns after
-    the wait, so a payload column the history still lacks is not
-    written (a column's values from batches before its DDL never are),
-    and ``LakeTable._stage`` casts to the evolved types.
+    ready: the wait for the caller's planning probe
+    (``CdcPipeline.apply_batch``).  It is called once the plan is
+    built, before the first Spark action, and returns whether the batch
+    has a change row — one without is recorded without a write.  The
+    caller applies the batch's schema changes before it returns.  The
+    write selects the history's columns after the wait, so a payload
+    column the history still lacks is not written (a column's values
+    from batches before its DDL never are), and ``LakeTable._stage``
+    casts to the evolved types.  Without ``ready`` the plan is written
+    at once.
 
     `new_versions` is the RAW validated event stream (doc_id, lsn, op,
     ingest_ts; every other column is carried as payload) — it may
@@ -193,21 +195,14 @@ def apply_history(
     existing = history.read(buckets=affected, with_deltas=False)
 
     frame_check = [c for c in check_cols or () if c in payload_cols]
-
-    def verdict(n: int) -> tuple[bool, list[str]]:
-        have = {f.name for f in history.schema.fields}
-        return n <= BROADCAST_MAX_DOCS, [c for c in frame_check if c in have]
-
-    planned = verdict(n_docs) if ready is None else (True, frame_check)
-    closure = _closure(history, nv, existing, check_cols, *planned)
-    if ready is not None:
-        n_docs = ready()
-        if not n_docs:
-            history.record_batch(str(batch_id), {"versions": 0})
-            return {"buckets": []}
-        if verdict(n_docs) != planned:  # no job has run: rebuild
-            planned = verdict(n_docs)
-            closure = _closure(history, nv, existing, check_cols, *planned)
+    closure = _closure(history, nv, existing, check_cols, frame_check)
+    if ready is not None and not ready():
+        history.record_batch(str(batch_id), {"versions": 0})
+        return {"buckets": []}
+    have = {f.name for f in history.schema.fields}
+    hashed = [c for c in frame_check if c in have]
+    if hashed != frame_check:  # no job has run: rebuild
+        closure = _closure(history, nv, existing, check_cols, hashed)
 
     # write only rows whose validity actually changed — new versions
     # and neighbours of inserts, O(batch) in an append-mostly stream.
@@ -232,8 +227,7 @@ def apply_history(
         batch_key=str(batch_id),
         batch_info={"buckets": sorted(affected)},
     )
-    # changed_docs is an HLL estimate (±5%) from the caller's probe
-    return {"buckets": sorted(affected), "changed_docs": n_docs}
+    return {"buckets": sorted(affected)}
 
 
 def _closure(
@@ -241,15 +235,12 @@ def _closure(
     nv: DataFrame,
     existing: DataFrame,
     check_cols: list[str] | None,
-    bcast: bool,
     hashed: list[str],
 ) -> DataFrame:
     """``apply_history``'s closure frame over the new versions ``nv``
-    and the stored rows ``existing``: the broadcast (``bcast``) or
-    shuffle variant of the planning joins, with the new versions
-    hashing the check columns in ``hashed``."""
+    and the stored rows ``existing``, with the new versions hashing the
+    check columns in ``hashed``."""
     key = history.key_col
-    maybe_bcast = F.broadcast if bcast else (lambda df: df)
     # CHAIN-SUFFIX pruning (round 4): the closure of a stored version
     # can only change if a version is inserted at-or-before it in lsn
     # order, so the closure needs, per key, only the rows with
@@ -263,7 +254,7 @@ def _closure(
     min_new = nv.groupBy(key).agg(F.min("lsn").alias("_min_new"))
     # stored rows hash after the join: only the batch keys' rows do
     ex_aff = (
-        existing.join(maybe_bcast(min_new), key, "inner")
+        existing.join(min_new, key, "inner")
         .select(
             key,
             "lsn",
@@ -283,7 +274,7 @@ def _closure(
         .agg(F.max("lsn").alias("_pred"))
     )
     ex_narrow = (
-        ex_aff.join(maybe_bcast(pred), key, "left")
+        ex_aff.join(pred, key, "left")
         .filter(
             (F.col("lsn") >= F.col("_min_new"))
             | F.col("lsn").eqNullSafe(F.col("_pred"))

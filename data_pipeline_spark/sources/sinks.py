@@ -1,11 +1,11 @@
-"""File sinks (SURVEY.md S11/S12).
+"""File sink (SURVEY.md S11).
 
 The reference's consumer extract writes a 7-day window as JSONL.gz (or
-Avro) to a bucket (orchestrator/orchestrator/extract.py:39-136) and
-failed rows as JSONL to a failed bucket (validator.py:428-449).  The
-Spark versions are plain distributed writes — no temp-table /
+Avro) to a bucket (orchestrator/orchestrator/extract.py:39-136).  The
+Spark version is a plain distributed write — no temp-table /
 extract-job choreography needed; the window filter is pushed into the
-scan.
+scan.  The quarantine of failed rows (S12, validator.py:428-449) is the
+CDC pipeline's dead-letter table (``cdc/pipeline.py``).
 """
 
 from __future__ import annotations
@@ -45,9 +45,3 @@ def write_extract(
     else:
         raise ValueError(f"unsupported extract format: {fmt}")
 
-
-def write_quarantine(df: DataFrame, out_dir: str) -> None:
-    """S12 — failed rows as JSONL (validator.py:428-449); the engine's
-    primary quarantine is the dead_letter LakeTable, this is the
-    file-drop variant for downstream pickup."""
-    df.write.mode("overwrite").json(out_dir)

@@ -430,7 +430,12 @@ class LakeTable:
             for e in fs
         ]
         if not dfiles or not with_deltas:
-            return base if paths else self.spark.createDataFrame([], snap.schema)
+            if paths:
+                return base
+            # limit(0) plans as an empty LocalRelation: Spark sizes it at
+            # 0 bytes and prunes joins over it, where a frame built from
+            # local rows counts as spark.sql.defaultSizeInBytes
+            return self.spark.createDataFrame([], snap.schema).limit(0)
         return resolve_deltas(
             self.spark, snap.schema, snap.merge_on_read, base, dfiles
         )

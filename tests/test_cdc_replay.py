@@ -38,14 +38,21 @@ def _final_pandas(pipeline):
     return df.toPandas()
 
 
-@pytest.mark.parametrize("plan", ["broadcast", "shuffle"])
-def test_replay_matches_oracle(spark, log_dir, tmp_path, monkeypatch, plan):
-    # shuffle: no batch is small enough to broadcast, so the history
-    # apply's planning frames and the MoR read's delta lane take their
-    # non-broadcast fallbacks
-    if plan == "shuffle":
-        monkeypatch.setattr(scd2, "BROADCAST_MAX_DOCS", 0)
+@pytest.fixture(params=["broadcast", "shuffle"])
+def plan(request, spark, monkeypatch):
+    """shuffle: Spark broadcasts no join by size, so the history
+    apply's planning joins plan sort-merge joins, and the MoR read's
+    delta lane takes its non-broadcast fallback."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if request.param == "shuffle":
         monkeypatch.setattr(mor, "BROADCAST_DELTA_MAX_BYTES", 0)
+        spark.conf.set(key, "-1")
+    yield request.param
+    spark.conf.set(key, old)
+
+
+def test_replay_matches_oracle(spark, log_dir, tmp_path, plan):
     # compact_every=2: a mid-replay lane fold
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2)
     n = replay_batches(spark, log_dir, pipe, files_per_batch=2)
@@ -58,17 +65,13 @@ def test_replay_matches_oracle(spark, log_dir, tmp_path, monkeypatch, plan):
     assert_history_equal(pipe, log)
 
 
-@pytest.mark.parametrize("plan", ["broadcast", "shuffle"])
 def test_replay_over_compacted_target_matches_oracle(
-    spark, log_dir, tmp_path, monkeypatch, plan
+    spark, log_dir, tmp_path, plan
 ):
     """Merges into a compacted target: with one file allowed per bucket,
     the compaction after batch 2 writes the target's base files, so
     batch 3 merges into 8 base files and the final read resolves base
     plus lane (8 delta files)."""
-    if plan == "shuffle":
-        monkeypatch.setattr(scd2, "BROADCAST_MAX_DOCS", 0)
-        monkeypatch.setattr(mor, "BROADCAST_DELTA_MAX_BYTES", 0)
     pipe = CdcPipeline(
         spark, str(tmp_path / "wh"), n_buckets=8, compact_every=2,
         max_files_per_bucket=1,
@@ -853,4 +856,4 @@ def test_non_mor_tables_are_refused(spark, tmp_path):
     with pytest.raises(ValueError, match="upsert-mode merge-on-read"):
         merge_into(target, changes, 0, range(2))
     with pytest.raises(ValueError, match="patch-mode merge-on-read"):
-        apply_history(history, changes, 0, range(2), 1)
+        apply_history(history, changes, 0, range(2))

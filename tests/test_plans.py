@@ -26,6 +26,20 @@ def _events(spark):
     return spark.read.parquet(os.path.join(SF, "events.parquet"))
 
 
+def _change_batch(spark, path, rows):
+    """A change batch as a file replay hands it to the pipeline: read
+    from parquet, so Spark sizes it from its files.  A frame built from
+    local rows has no size estimate (Spark assumes
+    ``spark.sql.defaultSizeInBytes``), and the history apply's planning
+    joins then plan as sort-merge joins at any threshold."""
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+
+    spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).write.parquet(path)
+    return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(path).withColumn(
+        "ingest_ts", F.current_timestamp()
+    )
+
+
 def test_filter_pushdown_reaches_scan(spark):
     df = _events(spark).filter(F.col("event_type") == "click").select("event_id")
     plan = _plan(df)
@@ -164,20 +178,16 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
     between the exchange and the write shuffles again — no join-back,
     no fixed-count (REPARTITION_BY_NUM) exchange."""
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
-    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.cdc.scd2 import apply_history
     from data_pipeline_spark.table import LakeTable
 
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4)
-    mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
-        "ingest_ts", F.current_timestamp()
-    )
+    mk = lambda rows: _change_batch(spark, str(tmp_path / f"b{rows[0][1]}"), rows)
     apply_history(
         pipe.history,
         mk([(f"d{i}", i, "I", [1, i], 2, None, None, 0, None) for i in range(50)]),
         0,
         range(4),
-        50,
     )
     # capture the frame the apply hands to its commit
     seen = {}
@@ -193,7 +203,6 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
         mk([(f"d{i}", 100 + i, "U", [2, i], 2, None, None, 0, None) for i in range(20)]),
         1,
         range(4),
-        20,
     )
     plan = _plan(seen["rows"])
     assert "SortMergeJoin" not in plan, plan
@@ -205,45 +214,49 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
     assert below.lstrip(" +-").startswith("Union"), plan
 
 
-@pytest.mark.parametrize("limit", ["default", "zero"])
-def test_history_gate_rebuild_after_probe(spark, tmp_path, monkeypatch, limit):
-    """Through the pipeline, the history apply plans the broadcast
-    variant before the probe's verdict.  Over ``BROADCAST_MAX_DOCS`` it
-    must rebuild the shuffle variant: the frame handed to the commit
-    plans no BroadcastExchange.  Size-based broadcasts are off, so a
-    broadcast here can only come from the gate's hint; the default
-    limit, which keeps the hint, shows the pin can see one."""
-    from data_pipeline_spark.cdc import scd2
+@pytest.mark.parametrize("threshold", ["default", "-1"])
+def test_history_joins_follow_broadcast_threshold(spark, tmp_path, monkeypatch, threshold):
+    """Through the pipeline, Spark chooses the history apply's planning
+    joins from its size estimate of the batch: at the session's default
+    ``autoBroadcastJoinThreshold`` the frame handed to the commit
+    broadcasts them (no sort-merge join); with size-based broadcasts
+    off it plans no BroadcastExchange.  The engine sets no hint.  The
+    first batch's history is empty, and its read plans as an empty
+    relation, which Spark prunes the joins over."""
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
-    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.table import LakeTable
 
-    if limit == "zero":
-        monkeypatch.setattr(scd2, "BROADCAST_MAX_DOCS", 0)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+    if threshold != "default":
+        spark.conf.set(key, threshold)
     try:
         pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, compact_every=0)
-        mk = lambda lsn: spark.createDataFrame(
+        mk = lambda lsn: _change_batch(
+            spark,
+            str(tmp_path / f"b{lsn}"),
             [(f"d{i}", lsn, "U", [lsn], 1, None, None, 0, None) for i in range(20)],
-            CHANGE_EVENT_SCHEMA,
-        ).withColumn("ingest_ts", F.current_timestamp())
-        pipe.apply_batch(mk(1), 0)
-        seen = {}
+        )
+        seen = []
         merge_append = LakeTable.merge_append
 
         def capture(self, rows, *args, **kwargs):
             if self is pipe.history:
-                seen["rows"] = rows
+                seen.append(_plan(rows))
             return merge_append(self, rows, *args, **kwargs)
 
         monkeypatch.setattr(LakeTable, "merge_append", capture)
+        pipe.apply_batch(mk(1), 0)
         pipe.apply_batch(mk(2), 1)
-        plan = _plan(seen["rows"])
+        first, plan = seen
     finally:
         spark.conf.set(key, old)
-    assert ("BroadcastExchange" in plan) == (limit == "default"), plan
+    assert "Join" not in first, first
+    if threshold == "default":
+        assert "BroadcastExchange" in plan, plan
+        assert "SortMergeJoin" not in plan, plan
+    else:
+        assert "BroadcastExchange" not in plan, plan
     assert pipe.history_df().filter("is_current").count() == 20
 
 
