@@ -19,8 +19,7 @@ history files.  Stored rows enter it narrow (no payload) and only as
 the CHAIN SUFFIX, so the full-width data shuffled per batch is the
 batch's own new versions:
 
-  1. per-key ``min(incoming lsn)`` (batch-sized, broadcast while
-     under Spark's threshold);
+  1. per-key ``min(incoming lsn)`` (batch-sized, broadcast);
   2. existing versions projected to (key, lsn, op, valid_from, stored
      validity) — a column-pruned scan — PRUNED to rows with
      lsn >= min(incoming lsn) plus the single insertion-predecessor
@@ -53,20 +52,18 @@ batch's own new versions:
      where rewriting every touched bucket (copy-on-write) is O(history)
      at uniformly-hashed CDC keys.
 
-The two planning joins (per-key min incoming lsn, insertion
-predecessor) carry no broadcast hint: Spark's size estimate against
-``spark.sql.autoBroadcastJoinThreshold`` (10 MB by default) and AQE's
-runtime join selection choose a broadcast or a sort-merge join.  The
-min-lsn frame's estimate follows the batch — ≈1.2 MB per 15k-event
-batch at the benchmark's shape, so batches up to ≈130k events
-broadcast it.  The predecessor frame's estimate follows the stored
-rows it is computed from (0.6–0.8 of the history base scan's estimate
-at that shape; 6.2 MB at 74k stored rows): past the threshold it plans
-a sort-merge join, which AQE turns into a broadcast join at run time
-once the frame's real size is known.  A larger session threshold
-moves both boundaries.  A batch Spark cannot size (one built from
-local rows or an RDD) counts as ``spark.sql.defaultSizeInBytes``, so
-its joins plan sort-merge.
+The two planning frames (per-key min incoming lsn, insertion
+predecessor) hold at most one row per distinct batch key, and both
+are always broadcast.  Spark's size estimates do not follow that
+content: the predecessor frame's grows with the stored history it is
+aggregated from (past ``spark.sql.autoBroadcastJoinThreshold`` after
+≈120k stored rows at the benchmark's shape), and a batch Spark cannot
+size — one built from local rows, or a streaming source that reports
+no statistics — counts as ``spark.sql.defaultSizeInBytes``.  Left to
+the estimate, either would plan a sort-merge join that shuffles the
+affected keys' stored rows every batch.  The scale boundary is the
+batch's distinct keys: both broadcasts must fit the driver and the
+executors' memory.
 """
 
 from __future__ import annotations
@@ -254,7 +251,7 @@ def _closure(
     min_new = nv.groupBy(key).agg(F.min("lsn").alias("_min_new"))
     # stored rows hash after the join: only the batch keys' rows do
     ex_aff = (
-        existing.join(min_new, key, "inner")
+        existing.join(F.broadcast(min_new), key, "inner")
         .select(
             key,
             "lsn",
@@ -274,7 +271,7 @@ def _closure(
         .agg(F.max("lsn").alias("_pred"))
     )
     ex_narrow = (
-        ex_aff.join(pred, key, "left")
+        ex_aff.join(F.broadcast(pred), key, "left")
         .filter(
             (F.col("lsn") >= F.col("_min_new"))
             | F.col("lsn").eqNullSafe(F.col("_pred"))

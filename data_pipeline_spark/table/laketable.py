@@ -430,12 +430,7 @@ class LakeTable:
             for e in fs
         ]
         if not dfiles or not with_deltas:
-            if paths:
-                return base
-            # limit(0) plans as an empty LocalRelation: Spark sizes it at
-            # 0 bytes and prunes joins over it, where a frame built from
-            # local rows counts as spark.sql.defaultSizeInBytes
-            return self.spark.createDataFrame([], snap.schema).limit(0)
+            return base if paths else self.spark.createDataFrame([], snap.schema)
         return resolve_deltas(
             self.spark, snap.schema, snap.merge_on_read, base, dfiles
         )

@@ -40,9 +40,9 @@ def _final_pandas(pipeline):
 
 @pytest.fixture(params=["broadcast", "shuffle"])
 def plan(request, spark, monkeypatch):
-    """shuffle: Spark broadcasts no join by size, so the history
-    apply's planning joins plan sort-merge joins, and the MoR read's
-    delta lane takes its non-broadcast fallback."""
+    """shuffle: Spark broadcasts no join by size, and the MoR read's
+    delta lane takes its non-broadcast fallback; only the history
+    apply's planning frames, broadcast by hint, are broadcast."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     if request.param == "shuffle":

@@ -26,20 +26,6 @@ def _events(spark):
     return spark.read.parquet(os.path.join(SF, "events.parquet"))
 
 
-def _change_batch(spark, path, rows):
-    """A change batch as a file replay hands it to the pipeline: read
-    from parquet, so Spark sizes it from its files.  A frame built from
-    local rows has no size estimate (Spark assumes
-    ``spark.sql.defaultSizeInBytes``), and the history apply's planning
-    joins then plan as sort-merge joins at any threshold."""
-    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
-
-    spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).write.parquet(path)
-    return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(path).withColumn(
-        "ingest_ts", F.current_timestamp()
-    )
-
-
 def test_filter_pushdown_reaches_scan(spark):
     df = _events(spark).filter(F.col("event_type") == "click").select("event_id")
     plan = _plan(df)
@@ -178,11 +164,14 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
     between the exchange and the write shuffles again — no join-back,
     no fixed-count (REPARTITION_BY_NUM) exchange."""
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.cdc.scd2 import apply_history
     from data_pipeline_spark.table import LakeTable
 
     pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4)
-    mk = lambda rows: _change_batch(spark, str(tmp_path / f"b{rows[0][1]}"), rows)
+    mk = lambda rows: spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).withColumn(
+        "ingest_ts", F.current_timestamp()
+    )
     apply_history(
         pipe.history,
         mk([(f"d{i}", i, "I", [1, i], 2, None, None, 0, None) for i in range(50)]),
@@ -215,15 +204,15 @@ def test_mor_history_apply_no_extra_exchange(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("threshold", ["default", "-1"])
-def test_history_joins_follow_broadcast_threshold(spark, tmp_path, monkeypatch, threshold):
-    """Through the pipeline, Spark chooses the history apply's planning
-    joins from its size estimate of the batch: at the session's default
-    ``autoBroadcastJoinThreshold`` the frame handed to the commit
-    broadcasts them (no sort-merge join); with size-based broadcasts
-    off it plans no BroadcastExchange.  The engine sets no hint.  The
-    first batch's history is empty, and its read plans as an empty
-    relation, which Spark prunes the joins over."""
+def test_history_joins_broadcast_at_any_threshold(spark, tmp_path, monkeypatch, threshold):
+    """Through the pipeline, the history apply broadcasts both planning
+    frames (min incoming lsn, insertion predecessor), whatever Spark's
+    ``autoBroadcastJoinThreshold`` and its size estimate say: the frame
+    handed to the commit plans every join as a broadcast hash join,
+    also with size-based broadcasts off.  The batches are built
+    from local rows, which Spark cannot size."""
     from data_pipeline_spark.cdc.pipeline import CdcPipeline
+    from data_pipeline_spark.cdc.schema import CHANGE_EVENT_SCHEMA
     from data_pipeline_spark.table import LakeTable
 
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -232,31 +221,26 @@ def test_history_joins_follow_broadcast_threshold(spark, tmp_path, monkeypatch, 
         spark.conf.set(key, threshold)
     try:
         pipe = CdcPipeline(spark, str(tmp_path / "wh"), n_buckets=4, compact_every=0)
-        mk = lambda lsn: _change_batch(
-            spark,
-            str(tmp_path / f"b{lsn}"),
+        mk = lambda lsn: spark.createDataFrame(
             [(f"d{i}", lsn, "U", [lsn], 1, None, None, 0, None) for i in range(20)],
-        )
-        seen = []
+            CHANGE_EVENT_SCHEMA,
+        ).withColumn("ingest_ts", F.current_timestamp())
+        pipe.apply_batch(mk(1), 0)
+        seen = {}
         merge_append = LakeTable.merge_append
 
         def capture(self, rows, *args, **kwargs):
             if self is pipe.history:
-                seen.append(_plan(rows))
+                seen["rows"] = rows
             return merge_append(self, rows, *args, **kwargs)
 
         monkeypatch.setattr(LakeTable, "merge_append", capture)
-        pipe.apply_batch(mk(1), 0)
         pipe.apply_batch(mk(2), 1)
-        first, plan = seen
+        plan = _plan(seen["rows"])
     finally:
         spark.conf.set(key, old)
-    assert "Join" not in first, first
-    if threshold == "default":
-        assert "BroadcastExchange" in plan, plan
-        assert "SortMergeJoin" not in plan, plan
-    else:
-        assert "BroadcastExchange" not in plan, plan
+    assert "BroadcastExchange" in plan, plan
+    assert set(re.findall(r"\w+Join\b", plan)) == {"BroadcastHashJoin"}, plan
     assert pipe.history_df().filter("is_current").count() == 20
 
 
